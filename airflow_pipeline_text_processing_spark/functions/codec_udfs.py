@@ -11,6 +11,14 @@ everything else is built-in Catalyst expressions.  Two design rules for
   ``decode_chunks`` reconstructs a whole document the same way, which lets
   the round-trip pipeline run with ZERO shuffles (chunks never leave their
   document's row until the caller explicitly asks for a chunk table).
+* **One Arrow pass per task for the round trip.**  The pipeline's
+  encode-then-verify (``make_encode_verify``) builds the chunks AND decodes
+  them back in the same Python call, returning ``struct(chunks,
+  reconstructed_text)``.  A pandas UDF costs a fixed ~50 ms per task on a
+  4-core host (worker hand-off, Arrow framing) whatever it computes, so two
+  chained UDFs paid that twice per partition.  ``decode_chunks`` and the
+  fused UDF share :func:`rebuild_text`, so there is one implementation of
+  the round trip.
 * **Fine-grained UDFs stay available** (``dna_encode`` etc.) and are SQL
   registered, because chunk-level relational work (validation filters,
   per-chunk sinks) composes better from small pieces.
@@ -129,6 +137,34 @@ def rs_repair(encoded: pd.Series) -> pd.Series:
     return encoded.map(_repair)
 
 
+def _as_tuples(records: list[dict]) -> list[tuple]:
+    """``chunker.build_chunks`` records as ``CHUNK_STRUCT``-ordered tuples."""
+    return [tuple(r[f.name] for f in CHUNK_FIELDS) for r in records]
+
+
+def rebuild_text(chunks) -> Optional[str]:
+    """Order-sensitive reassembly of one document (SURVEY.md op 21): sort by
+    index, decode each chunk to bytes at its original width, check its md5,
+    concatenate, decode UTF-8.  ``chunks`` is any sequence of mappings with
+    the chunk-struct field names.  Returns None when any chunk fails its
+    checksum or the bytes are not UTF-8 -- the pipeline routes that to the
+    DLQ."""
+    if chunks is None:
+        return None
+    try:
+        pieces = []
+        for c in sorted(chunks, key=lambda c: c["index"]):
+            raw = goldman.dna_to_bytes(
+                c["dna_sequence"], int(c["original_length_bytes"])
+            )
+            if hashlib.md5(raw).hexdigest() != c["checksum"]:
+                return None
+            pieces.append(raw)
+        return b"".join(pieces).decode("utf-8")
+    except Exception:  # a malformed chunk fails its document, not the task
+        return None
+
+
 def make_encode_chunks(chunk_size: int = chunker.DEFAULT_CHUNK_SIZE,
                        nsym: int = chunker.DEFAULT_RS_NSYM):
     """Build the fused text -> array<chunk struct> UDF for a given config."""
@@ -137,23 +173,9 @@ def make_encode_chunks(chunk_size: int = chunker.DEFAULT_CHUNK_SIZE,
     def _encode_chunks(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
         for texts in batches:
             yield pd.Series(
-                [
-                    None
-                    if t is None
-                    else [
-                        (
-                            r["chunk_id"],
-                            r["index"],
-                            r["dna_sequence"],
-                            r["original_length_bytes"],
-                            r["error_correction_code"],
-                            r["checksum"],
-                            r["chunk_size"],
-                        )
-                        for r in chunker.build_chunks(t, chunk_size, nsym)
-                    ]
-                    for t in texts
-                ]
+                [None if t is None
+                 else _as_tuples(chunker.build_chunks(t, chunk_size, nsym))
+                 for t in texts]
             )
 
     return _encode_chunks
@@ -161,35 +183,37 @@ def make_encode_chunks(chunk_size: int = chunker.DEFAULT_CHUNK_SIZE,
 
 encode_chunks = make_encode_chunks()
 
+ENCODE_VERIFY_STRUCT = StructType([
+    StructField("chunks", ArrayType(CHUNK_STRUCT)),
+    StructField("reconstructed_text", StringType()),
+])
+
+
+def make_encode_verify(chunk_size: int = chunker.DEFAULT_CHUNK_SIZE,
+                       nsym: int = chunker.DEFAULT_RS_NSYM):
+    """Build the fused encode-then-verify UDF: text -> ``struct(chunks,
+    reconstructed_text)``, where ``chunks`` equals ``make_encode_chunks``'s
+    output and ``reconstructed_text`` equals ``decode_chunks(chunks)``, both
+    computed in one Arrow pass."""
+
+    @pandas_udf(ENCODE_VERIFY_STRUCT)
+    def _encode_verify(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
+        for texts in batches:
+            chunks, rebuilt = [], []
+            for t in texts:
+                records = None if t is None else chunker.build_chunks(t, chunk_size, nsym)
+                chunks.append(None if records is None else _as_tuples(records))
+                rebuilt.append(rebuild_text(records))
+            yield pd.DataFrame({"chunks": chunks, "reconstructed_text": rebuilt})
+
+    return _encode_verify
+
 
 @pandas_udf(StringType())
 def decode_chunks(chunks: pd.Series) -> pd.Series:
-    """array<chunk struct> -> reconstructed document text.
-
-    Order-sensitive reassembly (SURVEY.md op 21): sort by index, decode each
-    chunk to bytes at its original width, concatenate bytes, decode UTF-8.
-    Returns None when any chunk fails checksum or UTF-8 validation, which
-    the pipeline routes to the DLQ.
-    """
-
-    def _rebuild(arr) -> Optional[str]:
-        if arr is None:
-            return None
-        try:
-            ordered = sorted(arr, key=lambda c: c["index"])
-            pieces = []
-            for c in ordered:
-                raw = goldman.dna_to_bytes(
-                    c["dna_sequence"], int(c["original_length_bytes"])
-                )
-                if hashlib.md5(raw).hexdigest() != c["checksum"]:
-                    return None
-                pieces.append(raw)
-            return b"".join(pieces).decode("utf-8")
-        except Exception:
-            return None
-
-    return pd.Series([_rebuild(a) for a in chunks])
+    """array<chunk struct> -> reconstructed document text
+    (:func:`rebuild_text` per row)."""
+    return pd.Series([rebuild_text(a) for a in chunks])
 
 
 def make_chunk_text_udtf():

@@ -5,7 +5,7 @@ re-expressed as ONE declarative Spark job (SURVEY.md §3.1, §7.2):
 
     docs      = read wholetext .txt + descriptor cols          (ops 1-2, 14)
     fresh     = docs LEFT ANTI JOIN tracking ON file_hash      (op 13)
-    encoded   = fresh + encode_chunks(text)                    (ops 23, 32-41)
+    encoded   = fresh + encode_verify(text)                    (ops 23, 32-41)
     validated = per-chunk checksum + round-trip md5 equality   (ops 43-44)
     rebuilt   = order-sensitive reassembly                     (ops 21-22)
     sinks     = processed text, chunk table, report, DLQ,
@@ -14,15 +14,30 @@ re-expressed as ONE declarative Spark job (SURVEY.md §3.1, §7.2):
 Scale design:
 
 * The hot path (`encode_documents`) never shuffles: chunking, encoding,
-  validation and reassembly all happen inside one Arrow pass per partition,
-  because chunks stay in an array column on their document's row.  The
-  reference's serial per-file loop (``dags/dag.py:723-733``) becomes
-  embarrassingly parallel partition work.
+  validation and reassembly all happen inside ONE fused Arrow pass per
+  task (``codec_udfs.make_encode_verify``), because chunks stay in an array
+  column on their document's row.  The reference's serial per-file loop
+  (``dags/dag.py:723-733``) becomes embarrassingly parallel partition work,
+  and each task pays the pandas-UDF fixed cost once, not once per UDF.
+* `run_pipeline` puts a ``rebalance`` hint on the fresh set before the
+  encode, so the encode's tasks are cut from the NEW rows, spread evenly
+  over ``spark.sql.shuffle.partitions`` tasks, rather than inheriting the
+  directory scan's partitions (a tick that lands 32 new files among 280
+  would otherwise run the UDF in all 9 scan partitions, each holding a few
+  new rows).  The hint is a shuffle, so it sits in the caller, outside
+  `encode_documents`, which stays shuffle-free for callers whose input is
+  already sized.
+* A tick runs only the Spark actions its result needs: the listed-file
+  count comes from ``inputFiles()`` (no job); one tally aggregate on the
+  cached encode gives the completed/failed counts; then one write per
+  non-empty sink (processed text, chunk table, report, DLQ) and the
+  tracking append.  A clean tick writes no DLQ; a tick with nothing new
+  writes nothing.
 * The chunk-level relational view (`chunk_table`) and the declarative
   groupBy reassembly (`reassemble_from_chunk_table`) exist for chunk sinks
   and for SQL users; they shuffle by document key only when asked for.
 * The tracking anti-join broadcasts only the key column of the tracking
-  table's current snapshot.
+  table.
 """
 
 from __future__ import annotations
@@ -30,14 +45,10 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 
 from ..codec.chunker import DEFAULT_CHUNK_SIZE, DEFAULT_RS_NSYM
-from ..functions.codec_udfs import (
-    decode_chunks,
-    dna_decode,
-    make_encode_chunks,
-)
+from ..functions.codec_udfs import dna_decode, make_encode_verify
 from ..sources.text_dir import read_text_dir
 from ..sources.tracking import TrackingTable
 
@@ -67,28 +78,25 @@ def encode_documents(
     ``chunks`` (array<struct>), ``dna_chunks_count``, ``total_dna_bases``,
     ``reconstructed_text``, ``reconstructed_checksum``, ``status``.
 
-    ``decode_chunks`` returns NULL on any chunk-checksum or UTF-8 failure
+    ``reconstructed_text`` is NULL on any chunk-checksum or UTF-8 failure
     (op 43); the md5 comparison reproduces the whole-document round-trip
     gate (op 44, ref ``plugins/utils/dna_encoding.py:448-456``).
     """
-    enc = make_encode_chunks(chunk_size, nsym)
-    out = (
-        docs.withColumn("chunks", enc(F.col("text")))
-        .withColumn("dna_chunks_count", F.size("chunks"))
-        .withColumn(
-            "total_dna_bases",
-            F.aggregate(
-                F.col("chunks"),
-                F.lit(0).cast("long"),
-                lambda acc, c: acc + F.length(c["dna_sequence"]),
-            ),
-        )
-        .withColumn("reconstructed_text", decode_chunks(F.col("chunks")))
-        .withColumn(
-            "reconstructed_checksum",
-            F.md5(F.encode("reconstructed_text", "UTF-8")),
-        )
-    )
+    enc = make_encode_verify(chunk_size, nsym)
+    chunks = F.col("_rt.chunks")
+    text = F.col("_rt.reconstructed_text")
+    out = docs.withColumn("_rt", enc(F.col("text"))).select(
+        "*",
+        chunks.alias("chunks"),
+        F.size(chunks).alias("dna_chunks_count"),
+        F.aggregate(
+            chunks,
+            F.lit(0).cast("long"),
+            lambda acc, c: acc + F.length(c["dna_sequence"]),
+        ).alias("total_dna_bases"),
+        text.alias("reconstructed_text"),
+        F.md5(F.encode(text, "UTF-8")).alias("reconstructed_checksum"),
+    ).drop("_rt")
     return out.withColumn(
         "status",
         F.when(
@@ -216,77 +224,89 @@ def document_report(encoded: DataFrame, config: PipelineConfig) -> DataFrame:
     )
 
 
+CHECKSUM_MISMATCH = "reconstruction checksum mismatch"
+
+
+def tracking_columns(output_file: Column) -> list:
+    """The tracking-record projection of an encoded frame (ops 9-10): one
+    row per document in ``TrackingTable.append_new``'s column set.  Shared
+    by the batch tick and the streaming micro-batch so both record a failed
+    document the same way; ``output_file`` is the processed-sink path, NULL
+    where no processed sink is written."""
+    return [
+        "file_hash",
+        F.col("path").alias("file_path"),
+        "file_size",
+        F.current_timestamp().alias("processed_at"),
+        "status",
+        output_file.cast("string").alias("output_file"),
+        F.when(F.col("status") != "completed", F.lit(CHECKSUM_MISMATCH)).alias(
+            "error_message"
+        ),
+        F.current_timestamp().alias("created_at"),
+    ]
+
+
 def run_pipeline(spark: SparkSession, config: PipelineConfig) -> dict:
     """One batch run == one reference DAG tick (30-min schedule, op 45).
 
     Returns run counters (processed / skipped-as-duplicate / failed).
+    ``skipped`` is every listed file that was neither processed nor failed:
+    already-tracked content, and files that yield no document row (an
+    empty ``.txt`` is listed but the wholetext reader gives it no row).
     """
     tracking = TrackingTable(spark, config.tracking_path)
 
     docs = read_text_dir(spark, config.input_dir)
-    if docs.isEmpty():  # skip-if-empty gate (op 15, ref dags/dag.py:816-821)
+    # the file index listed the directory when the frame was built:
+    # counting its files runs no Spark job
+    listed = len(docs.inputFiles())
+    if not listed:  # skip-if-empty gate (op 15, ref dags/dag.py:816-821)
         return {"processed": 0, "skipped": 0, "failed": 0, "status": "skipped"}
 
-    total = docs.count()
     fresh = docs.join(
         F.broadcast(tracking.processed_hashes()), "file_hash", "left_anti"
-    )
-
+    ).hint("rebalance")
     encoded = encode_documents(
         fresh, config.chunk_size, config.error_correction_symbols
     ).cache()
+    completed = F.col("status") == "completed"
+    n_ok, n = encoded.agg(F.count_if(completed), F.count("*")).first()
+    n_bad = n - n_ok
 
-    ok = encoded.filter(F.col("status") == "completed")
-    bad = encoded.filter(F.col("status") != "completed")
-
-    # sinks (ops 5-8): processed text, chunk table, report
-    ok.select("path", "filename", F.col("reconstructed_text").alias("text")).write.mode(
-        "append"
-    ).json(f"{config.output_dir}/processed")
-    # batch=-1 keeps the chunk table's on-disk layout IDENTICAL to the
-    # streaming ingest's `batch=<id>` partitioning (streaming/ingest.py):
-    # a shared output_dir would otherwise mix partitioned and flat files
-    # under one root and fail Spark partition discovery, and readers
-    # would see a `batch` column on one path but not the other (ADVICE
-    # r15).  -1 is reserved: real micro-batch ids are non-negative.
-    chunk_table(ok).withColumn("batch", F.lit(-1)).write.mode(
-        "append"
-    ).partitionBy("batch").parquet(f"{config.output_dir}/chunks")
-    document_report(encoded, config).write.mode("append").json(
-        f"{config.output_dir}/reports"
-    )
-
-    # DLQ (ops 11, 50): failed docs with error metadata
-    bad.select(
-        F.col("path").alias("original_file"),
-        F.lit("reconstruction checksum mismatch").alias("error_message"),
-        F.current_timestamp().alias("timestamp"),
-        F.lit(config.run_id).alias("run_id"),
-        "text",
-    ).write.mode("append").json(config.dlq_dir)
-
-    # tracking upsert (ops 9-10)
-    n_ok = ok.count()
-    n_bad = bad.count()
-    tracking.append_new(
-        encoded.select(
-            "file_hash",
-            F.col("path").alias("file_path"),
-            "file_size",
-            F.current_timestamp().alias("processed_at"),
-            "status",
-            F.concat(F.lit(f"{config.output_dir}/processed/"), F.col("filename")).alias(
-                "output_file"
-            ),
-            F.when(F.col("status") != "completed",
-                   F.lit("reconstruction checksum mismatch")).alias("error_message"),
-            F.current_timestamp().alias("created_at"),
+    if n_ok:  # sinks (ops 5-8): processed text, chunk table
+        ok = encoded.filter(completed)
+        ok.select(
+            "path", "filename", F.col("reconstructed_text").alias("text")
+        ).write.mode("append").json(f"{config.output_dir}/processed")
+        # batch=-1 keeps the chunk table's on-disk layout IDENTICAL to the
+        # streaming ingest's `batch=<id>` partitioning (streaming/ingest.py):
+        # a shared output_dir would otherwise mix partitioned and flat files
+        # under one root and fail Spark partition discovery, and readers
+        # would see a `batch` column on one path but not the other (ADVICE
+        # r15).  -1 is reserved: real micro-batch ids are non-negative.
+        chunk_table(ok).withColumn("batch", F.lit(-1)).write.mode(
+            "append"
+        ).partitionBy("batch").parquet(f"{config.output_dir}/chunks")
+    if n_bad:  # DLQ (ops 11, 50): failed docs with error metadata
+        encoded.filter(~completed).select(
+            F.col("path").alias("original_file"),
+            F.lit(CHECKSUM_MISMATCH).alias("error_message"),
+            F.current_timestamp().alias("timestamp"),
+            F.lit(config.run_id).alias("run_id"),
+            "text",
+        ).write.mode("append").json(config.dlq_dir)
+    if n:  # report and tracking upsert (ops 8-10)
+        document_report(encoded, config).write.mode("append").json(
+            f"{config.output_dir}/reports"
         )
-    )
+        tracking.append_new(encoded.select(*tracking_columns(F.concat(
+            F.lit(f"{config.output_dir}/processed/"), F.col("filename")
+        ))))
     encoded.unpersist()
     return {
         "processed": n_ok,
         "failed": n_bad,
-        "skipped": total - n_ok - n_bad,
+        "skipped": listed - n,
         "status": "success",
     }

@@ -46,7 +46,9 @@ class TrackingTable:
     def _raw(self) -> DataFrame:
         if not self._exists():
             return self.spark.createDataFrame([], TRACKING_SCHEMA)
-        return self.spark.read.parquet(self.path)
+        # every writer below appends exactly these columns; a declared
+        # schema spares the footer-reading job of schema inference
+        return self.spark.read.schema(TRACKING_SCHEMA).parquet(self.path)
 
     def _exists(self) -> bool:
         # URI-aware probe through the Hadoop filesystem API (r14
@@ -83,8 +85,12 @@ class TrackingTable:
         )
 
     def processed_hashes(self) -> DataFrame:
-        """Just the key column -- small, broadcastable side of the anti-join."""
-        return self.current().select("file_hash")
+        """Just the key column -- small, broadcastable side of the anti-join.
+
+        Read from the raw version rows, not ``current()``: every version row
+        carries its hash and an anti-join needs only existence, so the
+        latest-version window (a shuffle) would change nothing."""
+        return self._raw().select("file_hash")
 
     def count(self) -> int:
         return self.current().count()

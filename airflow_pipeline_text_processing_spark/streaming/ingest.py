@@ -21,7 +21,12 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql.streaming import StreamingQuery
 
-from ..plans.pipeline import PipelineConfig, encode_documents, chunk_table
+from ..plans.pipeline import (
+    PipelineConfig,
+    chunk_table,
+    encode_documents,
+    tracking_columns,
+)
 from ..sources.text_dir import with_descriptor
 from ..sources.tracking import TrackingTable
 
@@ -69,18 +74,8 @@ def process_batch(
     ).write.mode("overwrite").option(
         "partitionOverwriteMode", "dynamic"
     ).partitionBy("batch").parquet(f"{config.output_dir}/chunks")
-    tracking.append_new(
-        encoded.select(
-            "file_hash",
-            F.col("path").alias("file_path"),
-            "file_size",
-            F.current_timestamp().alias("processed_at"),
-            "status",
-            F.lit(None).cast("string").alias("output_file"),
-            F.lit(None).cast("string").alias("error_message"),
-            F.current_timestamp().alias("created_at"),
-        )
-    )
+    # no processed-text sink on this path: output_file stays NULL
+    tracking.append_new(encoded.select(*tracking_columns(F.lit(None))))
 
 
 def streaming_ingest(

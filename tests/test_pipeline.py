@@ -65,21 +65,97 @@ def test_chunk_table_and_declarative_reassembly(spark):
     assert joined.filter(F.col("reconstructed_text") != F.col("text")).count() == 0
 
 
+# appending a base multiplies the decoded bignum by 3 -- a real value
+# corruption (prepending T's would only add leading zeros)
+CORRUPT_SUFFIX = "A"
+
+
 def test_corrupted_chunk_fails_document(spark):
     encoded = encode_documents(_docs(spark, ["good text here"]))
     corrupted = encoded.withColumn(
         "chunks",
         F.transform(
             "chunks",
-            # appending a base multiplies the decoded bignum by 3 -- a real
-            # value corruption (prepending T's would only add leading zeros)
-            lambda c: c.withField("dna_sequence", F.concat(c["dna_sequence"], F.lit("A"))),
+            lambda c: c.withField(
+                "dna_sequence", F.concat(c["dna_sequence"], F.lit(CORRUPT_SUFFIX))
+            ),
         ),
     ).drop("reconstructed_text", "reconstructed_checksum", "status")
     from airflow_pipeline_text_processing_spark.functions.codec_udfs import decode_chunks
 
     res = corrupted.withColumn("rebuilt", decode_chunks("chunks")).collect()
     assert res[0].rebuilt is None
+
+
+def test_rebuild_text_rejects_altered_chunk():
+    """The rebuild shared by ``decode_chunks`` and the fused encode UDF
+    returns None for a chunk whose DNA was altered (same mutation as
+    above), and the original text for the untouched chunks."""
+    from airflow_pipeline_text_processing_spark.codec.chunker import build_chunks
+    from airflow_pipeline_text_processing_spark.functions.codec_udfs import (
+        rebuild_text,
+    )
+
+    chunks = build_chunks("good text here")
+    assert rebuild_text(chunks) == "good text here"
+    altered = [dict(c, dna_sequence=c["dna_sequence"] + CORRUPT_SUFFIX) for c in chunks]
+    assert rebuild_text(altered) is None
+
+
+def test_fused_encode_matches_encode_then_decode(spark):
+    """``encode_documents``' single fused pass gives chunks bit-identical to
+    the stand-alone encode UDF and the text ``decode_chunks`` rebuilds."""
+    from airflow_pipeline_text_processing_spark.functions.codec_udfs import (
+        decode_chunks,
+        make_encode_chunks,
+    )
+
+    fused = encode_documents(_docs(spark)).select("path", "chunks", "reconstructed_text")
+    chained = (
+        _docs(spark)
+        .select("path", make_encode_chunks()(F.col("text")).alias("chunks"))
+        .withColumn("decoded", decode_chunks("chunks"))
+    )
+    got = {r.path: r for r in fused.collect()}
+    want = {r.path: r for r in chained.collect()}
+    assert got.keys() == want.keys() and len(got) == len(TEXTS)
+    for path, r in want.items():
+        assert got[path].chunks == r.chunks
+        assert got[path].reconstructed_text == r.decoded
+
+
+def test_tracking_columns_record_failed_document(spark):
+    """One projection builds the tracking rows of the batch tick and the
+    stream: a failed document carries the checksum-mismatch reason on both
+    paths, and ``output_file`` is whatever the caller passes (NULL on the
+    stream, which writes no processed sink)."""
+    from airflow_pipeline_text_processing_spark.plans.pipeline import (
+        CHECKSUM_MISMATCH,
+        tracking_columns,
+    )
+
+    encoded = spark.createDataFrame(
+        [("h_bad", "file:///in/bad.txt", 7, "failed"),
+         ("h_ok", "file:///in/ok.txt", 5, "completed")],
+        "file_hash string, path string, file_size long, status string",
+    )
+    stream_rows = {
+        r.file_hash: r
+        for r in encoded.select(*tracking_columns(F.lit(None))).collect()
+    }
+    assert stream_rows["h_bad"].error_message == CHECKSUM_MISMATCH
+    assert stream_rows["h_bad"].status == "failed"
+    assert stream_rows["h_bad"].file_path == "file:///in/bad.txt"
+    assert stream_rows["h_bad"].output_file is None
+    assert stream_rows["h_ok"].error_message is None
+    batch = encoded.select(*tracking_columns(F.concat(F.lit("/out/"), F.col("path"))))
+    assert batch.columns == [
+        "file_hash", "file_path", "file_size", "processed_at", "status",
+        "output_file", "error_message", "created_at",
+    ]
+    bad = batch.filter(F.col("file_hash") == "h_bad").first()
+    assert bad.output_file == "/out/file:///in/bad.txt"
+    assert bad.error_message == CHECKSUM_MISMATCH
 
 
 def test_repair_recovers_corrupted_chunks(spark):
@@ -177,6 +253,89 @@ def test_run_pipeline_idempotent(spark, tmp_path):
     assert reports.filter(F.col("status") != "completed").count() == 0
     chunks = spark.read.parquet(str(tmp_path / "out" / "chunks"))
     assert chunks.count() >= 4
+
+
+def _tick_cfg(tmp_path, files: dict) -> PipelineConfig:
+    in_dir = tmp_path / "input"
+    in_dir.mkdir(exist_ok=True)
+    for name, text in files.items():
+        (in_dir / name).write_text(text, encoding="utf-8")
+    return PipelineConfig(
+        input_dir=str(in_dir),
+        output_dir=str(tmp_path / "out"),
+        tracking_path=str(tmp_path / "tracking"),
+        dlq_dir=str(tmp_path / "dlq"),
+    )
+
+
+def test_within_tick_duplicates_processed_twice_tracked_once(spark, tmp_path):
+    """Two files with the same new content in one tick are both processed
+    (as the reference's per-file loop does), and tracking keeps the hash
+    once (its INSERT ... ON CONFLICT DO NOTHING): ``append_new``'s
+    dropDuplicates."""
+    cfg = _tick_cfg(tmp_path, {"a.txt": "same words", "b.txt": "same words",
+                               "c.txt": "other words"})
+    res = run_pipeline(spark, cfg)
+    assert res == {"processed": 3, "failed": 0, "skipped": 0, "status": "success"}
+    raw = spark.read.parquet(cfg.tracking_path).select("file_hash").collect()
+    dup = hashlib.md5(b"same words").hexdigest()
+    assert sorted(r.file_hash for r in raw) == sorted(
+        {dup, hashlib.md5(b"other words").hexdigest()}
+    )
+    out = spark.read.json(f"{cfg.output_dir}/processed")
+    assert out.filter(F.col("text") == "same words").count() == 2
+
+
+# Spark jobs of one tick that lands new files beside tracked ones: 1
+# tracking broadcast, 1 rebalance exchange, 3 for the tally (cache stage,
+# partial and final aggregate), 3 sink writes, 3 for the tracking append.
+TICK_JOBS = 11
+
+
+def test_tick_spark_job_count(spark, tmp_path):
+    cfg = _tick_cfg(tmp_path, {f"old{i}.txt": f"old document {i} " * 50 for i in range(6)})
+    run_pipeline(spark, cfg)
+    for i in range(3):
+        (tmp_path / "input" / f"new{i}.txt").write_text(f"new document {i} é " * 60)
+    sc = spark.sparkContext
+    group = f"tick-shape-{os.getpid()}"
+    sc.setJobGroup(group, group)
+    try:
+        res = run_pipeline(spark, cfg)
+    finally:
+        sc.setJobGroup("", "")
+    assert res == {"processed": 3, "failed": 0, "skipped": 6, "status": "success"}
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= TICK_JOBS, len(jobs)
+
+
+def _rows(spark, path: str) -> int:
+    return spark.read.json(path).count() if os.path.isdir(path) else 0
+
+
+def test_rerun_of_tracked_files_writes_nothing(spark, tmp_path):
+    cfg = _tick_cfg(tmp_path, {f"f{i}.txt": f"body {i}" for i in range(4)})
+    assert run_pipeline(spark, cfg)["processed"] == 4
+    before = [_rows(spark, f"{cfg.output_dir}/{s}") for s in ("processed", "reports")]
+    tracked = spark.read.parquet(cfg.tracking_path).count()
+
+    res = run_pipeline(spark, cfg)
+    assert res == {"processed": 0, "failed": 0, "skipped": 4, "status": "success"}
+    after = [_rows(spark, f"{cfg.output_dir}/{s}") for s in ("processed", "reports")]
+    assert after == before == [4, 4]
+    assert not os.path.exists(cfg.dlq_dir)
+    assert spark.read.parquet(cfg.tracking_path).count() == tracked
+
+
+def test_empty_file_counts_as_skipped(spark, tmp_path):
+    """An empty ``.txt`` is listed (``inputFiles()``) but the wholetext
+    reader gives it no row, so nothing encodes or tracks it: it lands in
+    ``skipped``, the counter for every listed file that was neither
+    processed nor failed."""
+    cfg = _tick_cfg(tmp_path, {"a.txt": "alpha", "b.txt": "bravo", "empty.txt": ""})
+    res = run_pipeline(spark, cfg)
+    assert res == {"processed": 2, "failed": 0, "skipped": 1, "status": "success"}
+    assert spark.read.parquet(cfg.tracking_path).count() == 2
 
 
 def test_bootstrap_sample_only_when_empty(tmp_path):

@@ -19,7 +19,7 @@ Scale design:
   column on their document's row.  The reference's serial per-file loop
   (``dags/dag.py:723-733``) becomes embarrassingly parallel partition work,
   and each task pays the pandas-UDF fixed cost once, not once per UDF.
-* `run_pipeline` puts a ``rebalance`` hint on the fresh set before the
+* `run_tick` puts a ``rebalance`` hint on the fresh set before the
   encode, so the encode's tasks are cut from the NEW rows, spread evenly
   over ``spark.sql.shuffle.partitions`` tasks, rather than inheriting the
   directory scan's partitions (a tick that lands 32 new files among 280
@@ -27,12 +27,20 @@ Scale design:
   new rows).  The hint is a shuffle, so it sits in the caller, outside
   `encode_documents`, which stays shuffle-free for callers whose input is
   already sized.
-* A tick runs only the Spark actions its result needs: the listed-file
-  count comes from ``inputFiles()`` (no job); one tally aggregate on the
-  cached encode gives the completed/failed counts; then one write per
-  non-empty sink (processed text, chunk table, report, DLQ) and the
-  tracking append.  A clean tick writes no DLQ; a tick with nothing new
-  writes nothing.
+* There is one tick, `run_tick`; the batch run (`run_pipeline`) and the
+  stream (``streaming/ingest.py::process_batch``) only build its input.
+  It runs the Spark actions its result needs: ``inputFiles()`` counts the
+  listed files (no job), one tally aggregate on the cached encode, one
+  write per non-empty sink, and the tracking append.
+* Re-running a tick is safe.  `_write_sink` writes every sink (processed,
+  chunks, reports, DLQ) by overwriting its ``batch=<key>`` partition
+  directory, so readers of the JSON sinks see a ``batch`` column too.  The
+  key is ``bit_xor(xxhash64(file_hash, path))`` over the fresh rows, an
+  order-independent fingerprint of the fresh set taken in the tally (no
+  extra job).  Until tracking commits, a re-run after a crash sees the same
+  set, so the same key, and replaces its own partial output.  Two fresh
+  sets share a key with probability 2^-64.  Blind spot: files that land
+  between a crash and its re-run change the key; the partial output stays.
 * The chunk-level relational view (`chunk_table`) and the declarative
   groupBy reassembly (`reassemble_from_chunk_table`) exist for chunk sinks
   and for SQL users; they shuffle by document key only when asked for.
@@ -229,10 +237,9 @@ CHECKSUM_MISMATCH = "reconstruction checksum mismatch"
 
 def tracking_columns(output_file: Column) -> list:
     """The tracking-record projection of an encoded frame (ops 9-10): one
-    row per document in ``TrackingTable.append_new``'s column set.  Shared
-    by the batch tick and the streaming micro-batch so both record a failed
-    document the same way; ``output_file`` is the processed-sink path, NULL
-    where no processed sink is written."""
+    row per document in ``TrackingTable.append_new``'s column set, with the
+    checksum-mismatch reason on a failed one.  `run_tick` passes the
+    document's ``processed/batch=<key>/`` path as ``output_file``."""
     return [
         "file_hash",
         F.col("path").alias("file_path"),
@@ -247,6 +254,62 @@ def tracking_columns(output_file: Column) -> list:
     ]
 
 
+def _write_sink(df: DataFrame, path: str, fmt: str, key: int) -> None:
+    """Replace the ``batch=<key>`` partition of one sink, leaving every
+    other partition alone: the one writer of every tick sink.  Overwriting
+    the partition's directory gives the layout and re-run semantics of a
+    ``partitionBy`` dynamic overwrite without its slower partitioned
+    writer."""
+    df.write.mode("overwrite").format(fmt).save(f"{path}/batch={key}")
+
+
+def run_tick(
+    spark: SparkSession, config: PipelineConfig, docs: DataFrame
+) -> tuple[int, int]:
+    """One tick over ``docs`` (``read_text_dir``'s schema): skip tracked
+    content, encode, write the sinks under the fresh set's key (module
+    docstring), then track.  Returns the (completed, failed) counts."""
+    tracking = TrackingTable(spark, config.tracking_path)
+    fresh = docs.join(
+        F.broadcast(tracking.processed_hashes()), "file_hash", "left_anti"
+    ).hint("rebalance")
+    encoded = encode_documents(
+        fresh, config.chunk_size, config.error_correction_symbols
+    ).cache()
+    try:
+        completed = F.col("status") == "completed"
+        n_ok, n, key = encoded.agg(
+            F.count_if(completed),
+            F.count("*"),
+            F.bit_xor(F.xxhash64("file_hash", "path")),
+        ).first()
+        if not n:  # nothing new: no sink, no tracking write
+            return 0, 0
+        out = config.output_dir
+        if n_ok:  # sinks (ops 5-8): processed text, chunk table
+            ok = encoded.filter(completed)
+            _write_sink(ok.select(
+                "path", "filename", F.col("reconstructed_text").alias("text")
+            ), f"{out}/processed", "json", key)
+            _write_sink(chunk_table(ok), f"{out}/chunks", "parquet", key)
+        if n > n_ok:  # DLQ (ops 11, 50): failed docs with error metadata
+            _write_sink(encoded.filter(~completed).select(
+                F.col("path").alias("original_file"),
+                F.lit(CHECKSUM_MISMATCH).alias("error_message"),
+                F.current_timestamp().alias("timestamp"),
+                F.lit(config.run_id).alias("run_id"),
+                "text",
+            ), config.dlq_dir, "json", key)
+        # report and tracking upsert (ops 8-10); tracking is the commit
+        _write_sink(document_report(encoded, config), f"{out}/reports", "json", key)
+        tracking.append_new(encoded.select(*tracking_columns(F.concat(
+            F.lit(f"{out}/processed/batch={key}/"), F.col("filename")
+        ))))
+    finally:
+        encoded.unpersist()
+    return n_ok, n - n_ok
+
+
 def run_pipeline(spark: SparkSession, config: PipelineConfig) -> dict:
     """One batch run == one reference DAG tick (30-min schedule, op 45).
 
@@ -255,58 +318,16 @@ def run_pipeline(spark: SparkSession, config: PipelineConfig) -> dict:
     already-tracked content, and files that yield no document row (an
     empty ``.txt`` is listed but the wholetext reader gives it no row).
     """
-    tracking = TrackingTable(spark, config.tracking_path)
-
     docs = read_text_dir(spark, config.input_dir)
     # the file index listed the directory when the frame was built:
     # counting its files runs no Spark job
     listed = len(docs.inputFiles())
     if not listed:  # skip-if-empty gate (op 15, ref dags/dag.py:816-821)
         return {"processed": 0, "skipped": 0, "failed": 0, "status": "skipped"}
-
-    fresh = docs.join(
-        F.broadcast(tracking.processed_hashes()), "file_hash", "left_anti"
-    ).hint("rebalance")
-    encoded = encode_documents(
-        fresh, config.chunk_size, config.error_correction_symbols
-    ).cache()
-    completed = F.col("status") == "completed"
-    n_ok, n = encoded.agg(F.count_if(completed), F.count("*")).first()
-    n_bad = n - n_ok
-
-    if n_ok:  # sinks (ops 5-8): processed text, chunk table
-        ok = encoded.filter(completed)
-        ok.select(
-            "path", "filename", F.col("reconstructed_text").alias("text")
-        ).write.mode("append").json(f"{config.output_dir}/processed")
-        # batch=-1 keeps the chunk table's on-disk layout IDENTICAL to the
-        # streaming ingest's `batch=<id>` partitioning (streaming/ingest.py):
-        # a shared output_dir would otherwise mix partitioned and flat files
-        # under one root and fail Spark partition discovery, and readers
-        # would see a `batch` column on one path but not the other (ADVICE
-        # r15).  -1 is reserved: real micro-batch ids are non-negative.
-        chunk_table(ok).withColumn("batch", F.lit(-1)).write.mode(
-            "append"
-        ).partitionBy("batch").parquet(f"{config.output_dir}/chunks")
-    if n_bad:  # DLQ (ops 11, 50): failed docs with error metadata
-        encoded.filter(~completed).select(
-            F.col("path").alias("original_file"),
-            F.lit(CHECKSUM_MISMATCH).alias("error_message"),
-            F.current_timestamp().alias("timestamp"),
-            F.lit(config.run_id).alias("run_id"),
-            "text",
-        ).write.mode("append").json(config.dlq_dir)
-    if n:  # report and tracking upsert (ops 8-10)
-        document_report(encoded, config).write.mode("append").json(
-            f"{config.output_dir}/reports"
-        )
-        tracking.append_new(encoded.select(*tracking_columns(F.concat(
-            F.lit(f"{config.output_dir}/processed/"), F.col("filename")
-        ))))
-    encoded.unpersist()
+    n_ok, n_bad = run_tick(spark, config, docs)
     return {
         "processed": n_ok,
         "failed": n_bad,
-        "skipped": listed - n,
+        "skipped": listed - n_ok - n_bad,
         "status": "success",
     }

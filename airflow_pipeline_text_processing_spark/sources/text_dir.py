@@ -17,6 +17,20 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 
+def text_files(reader, input_dir: str, glob: str = "*.txt") -> DataFrame:
+    """The whole-file scan of a directory as ``path, text``, one row per
+    file.  ``reader`` is ``spark.read`` or ``spark.readStream`` (both take
+    ``format``/``option``/``load``), so the batch and streaming sources are
+    built, and list files, the same way."""
+    return (
+        reader.format("text")
+        .option("wholetext", "true")
+        .option("pathGlobFilter", glob)
+        .load(input_dir)
+        .select(F.input_file_name().alias("path"), F.col("value").alias("text"))
+    )
+
+
 def read_text_dir(
     spark: SparkSession,
     input_dir: str,
@@ -28,17 +42,7 @@ def read_text_dir(
     ``file_hash`` is md5 of the UTF-8 bytes (ref ``dags/dag.py:456``) and
     ``file_size`` the byte length (ref ``:457``).
     """
-    raw = (
-        spark.read.format("text")
-        .option("wholetext", "true")
-        .option("pathGlobFilter", glob)
-        .load(input_dir)
-        .select(
-            F.input_file_name().alias("path"),
-            F.col("value").alias("text"),
-        )
-    )
-    return with_descriptor(raw)
+    return with_descriptor(text_files(spark.read, input_dir, glob))
 
 
 BOOTSTRAP_TEXT = (

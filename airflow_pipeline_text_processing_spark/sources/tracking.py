@@ -17,6 +17,11 @@ Spark-first redesign for scale:
 * ``error_message`` is included, fixing the reference's documented-but-
   dropped column (SURVEY.md §1.3).
 * A periodic ``compact()`` folds version history down to current rows.
+* ``append_new`` is the commit of the pipeline's one tick (batch run and
+  stream alike).  The sinks before it go to a ``batch=<key>`` partition
+  keyed by a fingerprint of the fresh ``(file_hash, path)`` set (2^-64
+  collision bound), so a re-run after a crash overwrites its own partial
+  output, unless files landed in between, which changes the key.
 """
 
 from __future__ import annotations
@@ -99,20 +104,14 @@ class TrackingTable:
 
     def append_new(self, records: DataFrame) -> None:
         """ON CONFLICT (file_hash) DO NOTHING (ref dags/dag.py:740-759):
-        anti-join against existing keys, then append."""
-        cols = [
-            "file_hash",
-            "file_path",
-            "file_size",
-            "processed_at",
-            "status",
-            "output_file",
-            "error_message",
-            "created_at",
-        ]
+        one row per hash -- the min ``file_path``, whatever the partitioning
+        -- anti-joined against existing keys, then appended."""
+        rest = ["file_path", "file_size", "processed_at", "status",
+                "output_file", "error_message", "created_at"]
         fresh = (
-            records.select(*[F.col(c) for c in cols])
-            .dropDuplicates(["file_hash"])
+            records.groupBy("file_hash")
+            .agg(F.min_by(F.struct(*rest), "file_path").alias("_r"))
+            .select("file_hash", "_r.*")
             .join(F.broadcast(self.processed_hashes()), "file_hash", "left_anti")
             .withColumn("version", F.lit(0).cast("long"))
         )

@@ -7,6 +7,7 @@ import os
 
 import pyspark.sql.functions as F
 import pytest
+from pyspark.sql import DataFrameWriter
 
 from airflow_pipeline_text_processing_spark.plans.pipeline import (
     PipelineConfig,
@@ -18,6 +19,7 @@ from airflow_pipeline_text_processing_spark.plans.pipeline import (
 )
 from airflow_pipeline_text_processing_spark.sources.text_dir import with_descriptor
 from airflow_pipeline_text_processing_spark.sources.tracking import TrackingTable
+from airflow_pipeline_text_processing_spark.streaming.ingest import process_batch
 
 TEXTS = [
     "hello world",
@@ -125,10 +127,10 @@ def test_fused_encode_matches_encode_then_decode(spark):
 
 
 def test_tracking_columns_record_failed_document(spark):
-    """One projection builds the tracking rows of the batch tick and the
-    stream: a failed document carries the checksum-mismatch reason on both
-    paths, and ``output_file`` is whatever the caller passes (NULL on the
-    stream, which writes no processed sink)."""
+    """One projection builds the tracking rows of every tick: a failed
+    document carries the checksum-mismatch reason, and ``output_file`` is
+    whatever the caller passes (a NULL stays NULL; the tick passes the
+    processed-sink path, on the batch run and the stream alike)."""
     from airflow_pipeline_text_processing_spark.plans.pipeline import (
         CHECKSUM_MISMATCH,
         tracking_columns,
@@ -271,8 +273,8 @@ def _tick_cfg(tmp_path, files: dict) -> PipelineConfig:
 def test_within_tick_duplicates_processed_twice_tracked_once(spark, tmp_path):
     """Two files with the same new content in one tick are both processed
     (as the reference's per-file loop does), and tracking keeps the hash
-    once (its INSERT ... ON CONFLICT DO NOTHING): ``append_new``'s
-    dropDuplicates."""
+    once (its INSERT ... ON CONFLICT DO NOTHING), with the lexicographic-min
+    path: ``append_new``'s ``min_by``."""
     cfg = _tick_cfg(tmp_path, {"a.txt": "same words", "b.txt": "same words",
                                "c.txt": "other words"})
     res = run_pipeline(spark, cfg)
@@ -282,6 +284,8 @@ def test_within_tick_duplicates_processed_twice_tracked_once(spark, tmp_path):
     assert sorted(r.file_hash for r in raw) == sorted(
         {dup, hashlib.md5(b"other words").hexdigest()}
     )
+    assert TrackingTable(spark, cfg.tracking_path).current().filter(
+        F.col("file_hash") == dup).first().file_path.endswith("/a.txt")
     out = spark.read.json(f"{cfg.output_dir}/processed")
     assert out.filter(F.col("text") == "same words").count() == 2
 
@@ -307,6 +311,79 @@ def test_tick_spark_job_count(spark, tmp_path):
     assert res == {"processed": 3, "failed": 0, "skipped": 6, "status": "success"}
     jobs = sc.statusTracker().getJobIdsForGroup(group)
     assert 0 < len(jobs) <= TICK_JOBS, len(jobs)
+
+
+class InjectedCrash(RuntimeError):
+    pass
+
+
+def _crash_writes(monkeypatch, target: str, before: bool) -> None:
+    """Make the DataFrame write to ``target`` (or a partition under it)
+    raise: before it runs (``before``), or after it has landed."""
+    for name in ("save", "json", "parquet"):
+        real = getattr(DataFrameWriter, name)
+
+        def write(self, path=None, *args, _real=real, **kwargs):
+            hit = path == target or str(path).startswith(target + "/")
+            if before and hit:
+                raise InjectedCrash(path)
+            _real(self, path, *args, **kwargs)
+            if hit:
+                raise InjectedCrash(path)
+
+        monkeypatch.setattr(DataFrameWriter, name, write)
+
+
+@pytest.mark.parametrize("crash_at", ["processed", "chunks", "reports", "tracking"])
+def test_crash_then_rerun_writes_each_file_once(spark, tmp_path, monkeypatch, crash_at):
+    """A tick that dies after one of its sink writes, or inside
+    ``append_new`` before the tracking write lands, is repaired by running
+    it again: every sink then holds each ``(file_hash, file)`` exactly once
+    and tracking holds each hash once."""
+    texts = {f"f{i}.txt": f"crash test body {i}" for i in range(4)}  # 1 chunk each
+    cfg = _tick_cfg(tmp_path, texts)
+    tracking_write = crash_at == "tracking"
+    target = cfg.tracking_path if tracking_write else f"{cfg.output_dir}/{crash_at}"
+    _crash_writes(monkeypatch, target, before=tracking_write)
+    with pytest.raises(InjectedCrash):
+        run_pipeline(spark, cfg)
+    monkeypatch.undo()
+
+    assert run_pipeline(spark, cfg)["processed"] == 4
+    want = sorted((hashlib.md5(t.encode()).hexdigest(), n) for n, t in texts.items())
+
+    def base(c):
+        return F.element_at(F.split(c, "/"), -1)
+
+    sinks = {
+        "processed": spark.read.json(f"{cfg.output_dir}/processed").select(
+            F.md5(F.encode("text", "UTF-8")), base("path")),
+        "reports": spark.read.json(f"{cfg.output_dir}/reports").select(
+            "original_checksum", base("file_path")),
+        "chunks": spark.read.parquet(f"{cfg.output_dir}/chunks").select(
+            "file_hash", base("file_path")),
+    }
+    for sink, df in sinks.items():
+        assert sorted(tuple(r) for r in df.collect()) == want, sink
+    tracked = spark.read.parquet(cfg.tracking_path).select("file_hash").collect()
+    assert sorted(r.file_hash for r in tracked) == sorted(h for h, _ in want)
+
+
+def test_stream_batch_writes_every_sink(spark, tmp_path):
+    """A micro-batch runs the batch run's tick: the processed and report
+    sinks hold its documents and tracking points at the processed sink."""
+    cfg = _tick_cfg(tmp_path, {})
+    paths = ["file:///in/s0.txt", "file:///in/s1.txt"]
+    batch = spark.createDataFrame(
+        [(p, f"stream body {i}") for i, p in enumerate(paths)], "path string, text string"
+    )
+    process_batch(spark, cfg, batch, batch_id=3)
+    processed = spark.read.json(f"{cfg.output_dir}/processed").collect()
+    assert sorted(r.path for r in processed) == paths
+    reports = spark.read.json(f"{cfg.output_dir}/reports").collect()
+    assert sorted(r.file_path for r in reports) == paths
+    tracked = spark.read.parquet(cfg.tracking_path).collect()
+    assert len(tracked) == 2 and all(r.output_file for r in tracked)
 
 
 def _rows(spark, path: str) -> int:

@@ -85,7 +85,8 @@ def test_ingest_batch_replay_is_idempotent(spark, tmp_path):
 
 def test_ingest_within_batch_content_dedup(spark, tmp_path):
     # two same-content files in ONE batch: neither hash is tracked yet,
-    # so only the within-batch rule can keep the chunk table single-copy
+    # so both are processed (the reference's per-file loop) and tracking
+    # keeps the hash once, from the lexicographic-min path
     from airflow_pipeline_text_processing_spark.plans.pipeline import (
         PipelineConfig,
     )

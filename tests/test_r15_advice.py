@@ -5,8 +5,8 @@
    deadline re-arms after each steal check: starved contenders can no
    longer delete a live holder's freshly-created lock.
 2. low -- the batch pipeline's chunk sink writes the same
-   ``batch=<id>``-partitioned layout as the streaming ingest sink
-   (``batch=-1`` reserved for batch runs), so a shared output_dir keeps
+   ``batch=<key>``-partitioned layout as the streaming ingest sink (both
+   run one tick, keyed by its fresh set), so a shared output_dir keeps
    a single discoverable partitioned table instead of a mixed
    flat/partitioned layout that fails partition discovery.
 3. low -- ivfpq_index_rebuild_if_stale tolerates a concurrent healer
@@ -121,13 +121,14 @@ def test_batch_and_streaming_chunk_sinks_share_one_layout(spark, tmp_path):
     q = streaming_ingest(spark, cfg, str(tmp_path / "ckpt"))
     q.awaitTermination()
 
-    # one discoverable partitioned table: batch rows under batch=-1,
-    # streaming rows under their micro-batch id
+    # one discoverable partitioned table: the batch run's rows and the
+    # stream's rows each under their own tick's batch partition
     chunks = spark.read.parquet(f"{cfg.output_dir}/chunks")
     assert "batch" in chunks.columns
-    batches = {r["batch"] for r in chunks.select("batch").distinct().collect()}
-    assert -1 in batches
-    assert any(b >= 0 for b in batches)
+    files = chunks.groupBy("batch").agg(
+        F.collect_set(F.element_at(F.split("file_path", "/"), -1)).alias("f")
+    )
+    assert sorted(r["f"] for r in files.collect()) == [["a.txt"], ["b.txt"]]
 
 
 # ---------------------------------------------------------------- #3

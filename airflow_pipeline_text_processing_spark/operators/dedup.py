@@ -667,12 +667,31 @@ def _star_round(edges: DataFrame) -> DataFrame:
     return edges.sparkSession.sql(_STAR_ROUND_SQL, E=edges)
 
 
+# The star-forest test: every edge u -> v leaves a node with no other
+# out-edge and lands on a node with no out-edge.  One GROUP BY over the
+# u-rows and v-rows of the edge set lists the nodes that break it.
+_STAR_FOREST_SQL = """
+SELECT node FROM (
+  SELECT u AS node, 1 AS o, 0 AS i FROM {E}
+  UNION ALL
+  SELECT v AS node, 0 AS o, 1 AS i FROM {E}
+) GROUP BY node
+HAVING sum(o) > 1 OR (sum(o) > 0 AND sum(i) > 0)
+"""
+
+
+def _is_star_forest(edges: DataFrame) -> bool:
+    """True when no node of ``edges`` has out-degree above 1 and no node
+    has both in- and out-edges: every component is one root with its
+    members pointing straight at it.  One action."""
+    return edges.sparkSession.sql(_STAR_FOREST_SQL, E=edges).isEmpty()
+
+
 def connected_components(
     pairs: DataFrame,
     id_a: str = "doc_a",
     id_b: str = "doc_b",
     max_iter: int = 20,
-    on_nonconverge: str = "raise",
 ) -> DataFrame:
     """Cluster near-dup pairs into components: (node, cluster_id) where
     ``cluster_id`` is the minimum node id reachable through the pair graph.
@@ -680,98 +699,52 @@ def connected_components(
     The step that turns pairwise dedup output into "keep one doc per
     duplicate CLUSTER" (A~B, B~C => drop two of {A,B,C} even though A~C was
     never emitted).  Alternates large-star and small-star rounds (Kiveris
-    et al.), which converge in O(log n) rounds *independent of graph
-    diameter* -- a duplicate chain of length 10^6 still closes within
+    et al., SoCC 2014), which converge in O(log n) rounds *independent of
+    graph diameter* -- a duplicate chain of length 10^6 still closes within
     ``max_iter=20`` -- and, unlike plain min-label propagation, shrink hot
     components round over round instead of re-shuffling the full edge list
-    every round.  Each round is two groupBy/join shuffles partitioned by
-    node id; ``localCheckpoint`` truncates lineage between rounds.
+    every round.  Each round is one fused alternation (:func:`_star_round`);
+    ``localCheckpoint`` truncates lineage between rounds.
 
-    Convergence is detected by edge-set stability (small-star output is
-    canonically large->small).  If ``max_iter`` iterations pass without
-    stability the result would silently under-merge, so the default is to
-    ``raise``; pass ``on_nonconverge="warn"`` to log and return the
-    partial merge instead.
+    The loop stops at the first round whose output is a star forest
+    (:func:`_is_star_forest`), the shape the final ``members`` + ``roots``
+    projection reads labels from.  The test is exact, not a heuristic:
+    star rounds preserve connectivity and small-star edges all point
+    large -> small, so each star's root is its component minimum, and a
+    star forest is a fixed point of the alternation.  Stopping there
+    gives the labels fixed-point detection gives, one round sooner (a
+    12-node chain closes in 4 rounds, not 5).  ``max_iter`` counts star
+    rounds; when they run out before a star forest forms, the clusters
+    would be under-merged, so the call raises ``RuntimeError``.
 
-    r12 round-latency cut (verdict ask #2): each iteration runs one FUSED
-    large/small alternation (``_star_round`` -- the redundant inter-star
-    distinct elided), and the per-round stability probe is a one-action
-    fingerprint -- ``(count, sum of xxhash64(u, v))`` computed in a single
-    aggregate -- with the exact ``exceptAll`` set-equality check run ONCE,
-    only when the fingerprint matches (a fingerprint match is confirmed,
-    never trusted).  A two-alternations-per-checkpoint variant was
-    measured and REJECTED: without a materialization barrier the second
-    alternation re-derives the first's plan ~4x (edges is referenced four
-    times per star round), 1.6 s -> 4.4 s at sf0.1, and real inputs here
-    converge in ~2 iterations anyway (in-session A/B, PROFILE_r12)."""
-    # every checkpoint in the loop is LAZY (eager=False): the fingerprint
-    # aggregate right after it materializes the checkpoint in the same
-    # action, so each round costs ONE driver action, not two -- at toy
-    # scale the rounds are pure scheduler latency, so action count is
-    # the cost model (in-session A/B, PROFILE_r12).  r16: the INPUT
-    # fingerprint no longer pays its own action either -- round 1
-    # computes fp(edges) and fp(after) in one tagged-union aggregate
-    # (both sides are checkpointed scans, so the extra pass over edges
-    # is a cache-local re-read, not a pipeline re-execution).
+    A two-alternations-per-checkpoint variant was measured and rejected:
+    without a materialization barrier the second alternation re-derives
+    the first's plan ~4x (edges is referenced four times per star round),
+    1.6 s -> 4.4 s at sf0.1 (PROFILE_r12)."""
+    # every checkpoint is LAZY: the star-forest test right after it
+    # materializes it in the same action, so a round costs one action
     edges = (
         pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
         .filter(F.col("u") != F.col("v"))
         .distinct()
         .localCheckpoint(eager=False)
     )
-    # decimal(38,0) accumulator: a long sum of 64-bit hashes overflows
-    # under ANSI mode; decimal38 holds ~10^18 edges' worth of headroom
-    _FP_EXPRS = (
-        "count(*) AS n",
-        "sum(CAST(xxhash64(u, v) AS DECIMAL(38,0))) AS h",
-    )
-    converged = False
-    fp = None
     for _ in range(max_iter):
-        after = _star_round(edges).localCheckpoint(eager=False)
-        if fp is None:
-            # one action for BOTH fingerprints: materializes edges and
-            # after, and a missing tag group is an empty side (0, None)
-            by_tag = {
-                r["_t"]: (r["n"], r["h"])
-                for r in edges.selectExpr("0 AS _t", "u", "v")
-                .unionByName(after.selectExpr("1 AS _t", "u", "v"))
-                .groupBy("_t")
-                .agg(F.expr(_FP_EXPRS[0]), F.expr(_FP_EXPRS[1]))
-                .collect()
-            }
-            fp = by_tag.get(0, (0, None))
-            fp_after = by_tag.get(1, (0, None))
-        else:
-            fp_after = tuple(after.selectExpr(*_FP_EXPRS).first())
-        # a converged star is a fixed point of the alternation, so the
-        # fingerprint goes stable exactly at convergence; both sides are
-        # DISTINCT relations, so equal counts + empty exceptAll IS set
-        # equality -- and that exact check runs once per call, not once
-        # per round (both relations are checkpointed, so it is cheap)
-        if fp_after == fp and after.exceptAll(edges).isEmpty():
-            converged = True
-            edges = after
+        edges = _star_round(edges).localCheckpoint(eager=False)
+        if _is_star_forest(edges):
             break
-        edges = after
-        fp = fp_after
-    if not converged:
-        msg = (
-            f"connected_components: edge set not stable after {max_iter} "
-            "large-star/small-star rounds; clusters may be under-merged"
+    else:
+        raise RuntimeError(
+            f"connected_components: no star forest after {max_iter} "
+            "large-star/small-star rounds; clusters would be under-merged"
         )
-        if on_nonconverge == "raise":
-            raise RuntimeError(msg)
-        import logging
-
-        logging.getLogger(__name__).warning(msg)
-    # at convergence every component is a star: each node points straight at
-    # the component minimum, and the minimum itself labels itself
+    # each member points at its root, and the roots label themselves; in a
+    # star forest the two sets are disjoint and each is already distinct
     members = edges.select(F.col("u").alias("doc_id"), F.col("v").alias("cluster_id"))
     roots = edges.select(F.col("v").alias("doc_id")).distinct().withColumn(
         "cluster_id", F.col("doc_id")
     )
-    return members.union(roots).distinct()
+    return members.union(roots)
 
 
 def ngram_novelty(
@@ -809,6 +782,22 @@ def ngram_novelty(
     )
 
 
+def cluster_membership(docs: DataFrame, pairs: DataFrame) -> DataFrame:
+    """``docs`` with its duplicate cluster added: ``cluster_id`` from
+    :func:`connected_components` over ``pairs`` (a document in no pair is a
+    singleton cluster of itself) and ``n_members``, the number of ``docs``
+    rows in that cluster.  The size is a window count over the cluster
+    partition, so a caller's own cluster-partitioned window shares its
+    exchange."""
+    return (
+        docs.join(connected_components(pairs), "doc_id", "left")
+        .withColumn("cluster_id", F.coalesce("cluster_id", F.col("doc_id")))
+        .withColumn(
+            "n_members", F.count("*").over(Window.partitionBy("cluster_id"))
+        )
+    )
+
+
 def canonical_pick(
     docs: DataFrame,
     pairs: DataFrame,
@@ -823,7 +812,7 @@ def canonical_pick(
     Survivor = argmax over the cluster of ``(quality_ppm DESC, doc_id
     ASC)`` where ``quality_ppm = floor(1e6 * quality_score)`` -- the
     integer projection of the shared heuristic in
-    ``operators/text.py::quality_score``, so the pick and its tiebreak are
+    ``operators/text.py::quality_ppm``, so the pick and its tiebreak are
     bit-identical across engines.  This is what pair/cluster output is
     FOR: ``dedup_clusters`` says who is whose duplicate; this operator
     says which copy the training set keeps (keep-best-quality is the
@@ -832,35 +821,16 @@ def canonical_pick(
 
     Per-doc output: ``(doc_id, cluster_id, n_members, quality_ppm,
     is_kept)``.  Scale shape: CC's star-contraction rounds (the existing
-    O(log n) story) + one hash-agg for cluster sizes + one
-    cluster-partitioned window -- nothing quadratic, no new shuffle
-    class."""
-    from .text import quality_score
+    O(log n) story) + one cluster-partitioned pass that computes the
+    cluster size and the survivor side by side -- nothing quadratic, no
+    new shuffle class."""
+    from .text import quality_ppm
 
-    cc = connected_components(pairs)
-    membership = (
-        docs.select("doc_id")
-        .join(cc, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce("cluster_id", F.col("doc_id")).alias("cluster_id"),
-        )
-    )
-    q = quality_score(docs, text_col).select(
-        "doc_id",
-        F.floor(F.col("quality") * F.lit(1_000_000.0))
-        .cast("long")
-        .alias("quality_ppm"),
-    )
-    sizes = membership.groupBy("cluster_id").agg(
-        F.count("*").alias("n_members")
-    )
     w = Window.partitionBy("cluster_id").orderBy(
         F.col("quality_ppm").desc(), F.col("doc_id")
     )
     return (
-        membership.join(q, "doc_id")
-        .join(sizes, "cluster_id")
+        cluster_membership(quality_ppm(docs, text_col), pairs)
         .withColumn(
             "is_kept",
             F.when(F.row_number().over(w) == 1, F.lit(1))

@@ -110,6 +110,19 @@ def quality_score(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
+def quality_ppm(docs: DataFrame, text_col: str = "text") -> DataFrame:
+    """``(doc_id, quality_ppm)``: :func:`quality_score` as an integer,
+    ``floor(quality * 1e6)`` -- the ranking key of canonical_pick,
+    domain_cap and token_budget_select, so every pick and tiebreak is
+    bit-identical across engines."""
+    return quality_score(docs, text_col).select(
+        "doc_id",
+        F.floor(F.col("quality") * F.lit(1_000_000.0))
+        .cast("long")
+        .alias("quality_ppm"),
+    )
+
+
 def lang_hits_exprs(text_col) -> dict:
     """Per-language marker-hit count expressions -- the marker policy's
     single source (lang_id here, the curation pipeline's single-scan

@@ -317,7 +317,7 @@ def domain_cap(
     dominates the training mix regardless of its raw volume.
 
     Ranking is ``(quality_ppm DESC, doc_id ASC)`` with ``quality_ppm``
-    the shared integer projection of operators/text.py::quality_score
+    the shared integer projection operators/text.py::quality_ppm
     (the same tiebreak canonical_pick uses), so the kept set is
     deterministic and bit-identical across engines.  Output: kept rows
     ``(doc_id, source, quality_ppm, rk)``.
@@ -331,14 +331,9 @@ def domain_cap(
     the partial top-N is admissible because rank <= per_source in the
     full order implies rank <= per_source within every subset.
     """
-    from ..operators.text import quality_score
+    from ..operators.text import quality_ppm
 
-    q = quality_score(docs, text_col).select(
-        "doc_id",
-        F.floor(F.col("quality") * F.lit(1_000_000.0))
-        .cast("long")
-        .alias("quality_ppm"),
-    )
+    q = quality_ppm(docs, text_col)
     w = Window.partitionBy(source_col).orderBy(
         F.col("quality_ppm").desc(), F.col("doc_id").asc()
     )
@@ -371,26 +366,14 @@ def leakage_safe_split(
     Output: ``(doc_id, cluster_id, n_members, split)``.  By
     construction no cluster straddles splits -- the property is
     structural (split is a pure function of cluster_id), not sampled.
-    Scale shape: CC's star-contraction rounds + one hash-agg for sizes
-    + a narrow md5 projection; nothing new shuffles."""
-    from ..operators.dedup import connected_components
+    Scale shape: CC's star-contraction rounds + one cluster-partitioned
+    window for sizes + a narrow md5 projection; nothing new shuffles."""
+    from ..operators.dedup import cluster_membership
     from ..operators.sampling import hash_split
 
-    cc = connected_components(pairs)
-    membership = (
-        docs.select("doc_id")
-        .join(cc, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce("cluster_id", F.col("doc_id")).alias("cluster_id"),
-        )
-    )
-    sizes = membership.groupBy("cluster_id").agg(
-        F.count("*").alias("n_members")
-    )
     return (
         hash_split(
-            membership.join(sizes, "cluster_id"),
+            cluster_membership(docs.select("doc_id"), pairs),
             F.col("cluster_id"),
             fractions,
         )
@@ -422,14 +405,9 @@ def token_budget_select(
     rank and running sum.  Hot domains bound the window sort exactly as
     in :func:`domain_cap` (and the same two-pass partial-rank rewrite
     applies when a budget implies a rank bound)."""
-    from ..operators.text import quality_score, tokens
+    from ..operators.text import quality_ppm, tokens
 
-    q = quality_score(docs, text_col).select(
-        "doc_id",
-        F.floor(F.col("quality") * F.lit(1_000_000.0))
-        .cast("long")
-        .alias("quality_ppm"),
-    )
+    q = quality_ppm(docs, text_col)
     base = docs.select(
         "doc_id",
         source_col,

@@ -40,6 +40,22 @@ TRACKING_SCHEMA = (
 # ProcessingStatus state machine (ref dags/dag.py:103-110)
 STATUSES = ("pending", "processing", "completed", "failed", "retrying", "dead_letter")
 
+#: the columns a writer supplies; ``version`` is stamped on append
+_RECORD_COLUMNS = ("file_hash", "file_path", "file_size", "processed_at",
+                   "status", "output_file", "error_message", "created_at")
+
+
+def _min_path_per_hash(records: DataFrame) -> DataFrame:
+    """One row per ``file_hash``: the one with the min ``file_path``,
+    whatever the partitioning -- the deterministic stand-in for the row
+    an ``INSERT ... ON CONFLICT DO NOTHING`` would keep."""
+    rest = [c for c in records.columns if c != "file_hash"]
+    return (
+        records.groupBy("file_hash")
+        .agg(F.min_by(F.struct(*rest), "file_path").alias("_r"))
+        .select("file_hash", "_r.*")
+    )
+
 
 class TrackingTable:
     def __init__(self, spark: SparkSession, path: str):
@@ -104,14 +120,10 @@ class TrackingTable:
 
     def append_new(self, records: DataFrame) -> None:
         """ON CONFLICT (file_hash) DO NOTHING (ref dags/dag.py:740-759):
-        one row per hash -- the min ``file_path``, whatever the partitioning
-        -- anti-joined against existing keys, then appended."""
-        rest = ["file_path", "file_size", "processed_at", "status",
-                "output_file", "error_message", "created_at"]
+        one row per hash (:func:`_min_path_per_hash`) anti-joined against
+        existing keys, then appended."""
         fresh = (
-            records.groupBy("file_hash")
-            .agg(F.min_by(F.struct(*rest), "file_path").alias("_r"))
-            .select("file_hash", "_r.*")
+            _min_path_per_hash(records.select(*_RECORD_COLUMNS))
             .join(F.broadcast(self.processed_hashes()), "file_hash", "left_anti")
             .withColumn("version", F.lit(0).cast("long"))
         )
@@ -239,13 +251,10 @@ class TrackingTable:
         read failure -- auth, network, driver error -- propagates: treating
         it as "absent" would silently append duplicates and void the
         ON CONFLICT DO NOTHING parity."""
+        fresh = _min_path_per_hash(records)
         if self._jdbc_table_exists(url, table, properties):
             existing = self.read_jdbc(url, table, properties).select("file_hash")
-            fresh = records.dropDuplicates(["file_hash"]).join(
-                F.broadcast(existing), "file_hash", "left_anti"
-            )
-        else:
-            fresh = records.dropDuplicates(["file_hash"])
+            fresh = fresh.join(F.broadcast(existing), "file_hash", "left_anti")
         writer = fresh.write.format("jdbc").option("url", url).option(
             "dbtable", table
         )

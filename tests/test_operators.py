@@ -287,14 +287,25 @@ def test_connected_components_long_chain_converges(spark):
 def test_connected_components_deep_chain_beyond_iter_budget(spark):
     """A 100-node path has diameter 99 -- plain min-label propagation needs
     ~99 rounds and would blow the max_iter=20 budget (silently, per the r2
-    advice).  Large-star/small-star closes it in O(log n) rounds; the
-    default on_nonconverge='raise' makes any residual under-merge loud."""
+    advice).  Large-star/small-star closes it in O(log n) rounds, and a
+    residual under-merge raises instead of returning."""
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(99)], "doc_a long, doc_b long"
     )
     got = D.connected_components(pairs).collect()
     assert {r.cluster_id for r in got} == {0}
     assert len(got) == 100
+
+
+def test_connected_components_raises_past_round_budget(spark):
+    """A 100-node path needs 7 star rounds; with a budget of 3 the loop
+    ends before a star forest forms, and the call must raise rather than
+    return under-merged clusters."""
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(99)], "doc_a long, doc_b long"
+    )
+    with pytest.raises(RuntimeError, match="under-merged"):
+        D.connected_components(pairs, max_iter=3)
 
 
 def test_connected_components_skewed_hub_and_shapes(spark):

@@ -455,19 +455,18 @@ def test_tracking_status_update(spark, tmp_path):
     assert {r.file_hash: r.status for r in t.current().collect()} == cur
 
 
-@pytest.mark.skipif(
-    not os.path.isdir("/root/reference/data/input"), reason="reference absent"
-)
 def test_jdbc_tracking_roundtrip(spark, tmp_path):
     """Op-4 JDBC parity path (ref init-scripts.sql:5-14, dags/dag.py:446):
     real spark.read/write.jdbc round trip against embedded Derby (the JDBC
-    engine Spark ships), including ON-CONFLICT-DO-NOTHING idempotency."""
+    engine Spark ships), including ON-CONFLICT-DO-NOTHING idempotency and
+    the min-path pick among same-hash twins, as in ``append_new``."""
     url = f"jdbc:derby:{tmp_path}/trackdb;create=true"
     props = {"driver": "org.apache.derby.jdbc.EmbeddedDriver"}
     tt = TrackingTable(spark, str(tmp_path / "unused_parquet"))
 
     recs = spark.createDataFrame(
         [
+            ("h1", "/in/b.txt", 11, "completed", "/out/b.txt"),  # twin of a.txt
             ("h1", "/in/a.txt", 11, "completed", "/out/a.txt"),
             ("h2", "/in/b.txt", 22, "completed", "/out/b.txt"),
         ],
@@ -484,6 +483,9 @@ def test_jdbc_tracking_roundtrip(spark, tmp_path):
     assert back.count() == 2
     assert set(r.FILE_HASH if hasattr(r, "FILE_HASH") else r.file_hash
                for r in back.select("file_hash").collect()) == {"h1", "h2"}
+    assert {r.file_hash: r.file_path
+            for r in back.select("file_hash", "file_path").collect()} == {
+        "h1": "/in/a.txt", "h2": "/in/b.txt"}
 
     # idempotent append: re-writing the same keys inserts nothing
     tt.write_jdbc(recs, url, properties=props)

@@ -16,8 +16,9 @@ keeping results bit-identical:
 * ``dedup._star_round`` -- one parameterized ``spark.sql`` text
   replaced the ~35-py4j-call DataFrame chain; the pin replays the old
   DataFrame formulation (and the unfused ``_small_star(_large_star())``
-  reference) over adversarial graphs, and checks the folded round-1
-  fingerprint loop end to end via ``connected_components``.
+  reference) over adversarial graphs, and checks the loop end to end via
+  ``connected_components``: it stops at the first round whose output is
+  a star forest, and its labels match a pure-Python union-find.
 """
 
 from __future__ import annotations
@@ -151,9 +152,13 @@ def test_star_round_sql_matches_dataframe_formulation(spark):
         assert new == old == ref, f"star round diverges on {g}: {new} vs {old}"
 
 
-def test_connected_components_folded_fingerprint_loop(spark):
-    from airflow_pipeline_text_processing_spark.operators.dedup import (
-        connected_components,
+def test_connected_components_folded_fingerprint_loop(spark, monkeypatch):
+    from airflow_pipeline_text_processing_spark.operators import dedup
+
+    rounds = []
+    star_round = dedup._star_round
+    monkeypatch.setattr(
+        dedup, "_star_round", lambda e: rounds.append(1) or star_round(e)
     )
 
     # chain: one component rooted at the minimum
@@ -162,21 +167,69 @@ def test_connected_components_folded_fingerprint_loop(spark):
     )
     got = {
         (r.doc_id, r.cluster_id)
-        for r in connected_components(pairs).collect()
+        for r in dedup.connected_components(pairs).collect()
     }
     assert got == {(1, 1), (2, 1), (3, 1), (4, 1), (10, 10), (11, 10)}
 
-    # already-converged star input: round 1's folded fingerprint pair
-    # must detect the fixed point without extra rounds
+    # a 12-node chain closes in 4 star rounds: the loop stops at the
+    # first star forest instead of re-deriving it in a 5th round
+    rounds.clear()
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(1, 12)], "doc_a long, doc_b long"
+    )
+    got = dedup.connected_components(chain).collect()
+    assert {r.cluster_id for r in got} == {1} and len(got) == 12
+    assert len(rounds) == 4
+
+    # already-converged star input: the first round's output is already
+    # a star forest, so one round ends the loop
+    rounds.clear()
     star = spark.createDataFrame([(2, 1), (3, 1)], "doc_a long, doc_b long")
     got = {
-        (r.doc_id, r.cluster_id) for r in connected_components(star).collect()
+        (r.doc_id, r.cluster_id)
+        for r in dedup.connected_components(star).collect()
     }
     assert got == {(1, 1), (2, 1), (3, 1)}
+    assert len(rounds) == 1
 
-    # empty edge set: both tag groups absent -> (0, None) fingerprints
+    # empty edge set: an empty round output is a (trivial) star forest
     empty = spark.createDataFrame([], "doc_a long, doc_b long")
-    assert connected_components(empty).count() == 0
+    assert dedup.connected_components(empty).count() == 0
+
+
+def _union_find_labels(edges):
+    """Minimum node id per component, for every node on a non-loop edge."""
+    parent = {}
+
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        if a != b:
+            ra, rb = find(a), find(b)
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in list(parent)}
+
+
+@pytest.mark.parametrize("seed", range(1, 6))
+def test_connected_components_matches_union_find(spark, seed):
+    import random
+
+    from airflow_pipeline_text_processing_spark.operators.dedup import (
+        connected_components,
+    )
+
+    # 300 nodes, 250 edges: 230 random, 10 self-loops, 10 reversed copies
+    rng = random.Random(seed)
+    edges = [(rng.randrange(300), rng.randrange(300)) for _ in range(230)]
+    edges += [(a, a) for a in rng.sample(range(300), 10)]
+    edges += [(b, a) for a, b in rng.sample(edges[:230], 10)]
+    pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
+    got = [(r.doc_id, r.cluster_id) for r in connected_components(pairs).collect()]
+    assert sorted(got) == sorted(_union_find_labels(edges).items())
 
 
 def test_assign_top_cells_literal_path_matches_collect_path(spark):

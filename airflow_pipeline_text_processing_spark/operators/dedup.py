@@ -67,7 +67,14 @@ def exact_dedup(docs: DataFrame, text_col: str = "text") -> DataFrame:
 
 
 def word_shingles(text_col: Column, n: int = 3) -> Column:
-    """Distinct word n-gram shingles of a text column.
+    """Distinct word n-gram shingles of a text column; NULL for a NULL text.
+
+    A text of fewer than ``n`` tokens is the one shingle of all its tokens.
+    A text with no token at all (empty, or only characters outside
+    ``[a-z0-9]``, e.g. CJK) is the one shingle ``""``, so any two such
+    texts are Jaccard-1.0 duplicates of each other; the DuckDB oracles and
+    the benchmark's ``word_jaccard`` assume the same.  A NULL text has no
+    shingles: it gets no signature, candidate or pair.
 
     The token array is bound as a lambda VARIABLE (transform over a
     one-element array) so it is computed once per row: referencing the
@@ -78,21 +85,35 @@ def word_shingles(text_col: Column, n: int = 3) -> Column:
     behavior).  Identical output."""
     return F.transform(
         F.array(tokens(text_col)),
-        lambda toks: F.array_distinct(
-            F.transform(
-                F.sequence(
-                    F.lit(1), F.greatest(F.size(toks) - (n - 1), F.lit(1))
-                ),
-                lambda i: F.array_join(F.slice(toks, i, n), " "),
-            )
+        lambda toks: F.when(
+            toks.isNotNull(),
+            F.array_distinct(
+                F.transform(
+                    F.sequence(
+                        F.lit(1), F.greatest(F.size(toks) - (n - 1), F.lit(1))
+                    ),
+                    lambda i: F.array_join(F.slice(toks, i, n), " "),
+                )
+            ),
         ),
     )[0]
 
 
 def shingle_table(docs: DataFrame, text_col: str = "text", n: int = 3) -> DataFrame:
-    """(doc_id, shingle) inverted-index rows + per-doc shingle counts."""
+    """(doc_id, shingle) inverted-index rows: one per distinct shingle of a
+    document."""
     return docs.select(
         "doc_id", F.explode(word_shingles(F.col(text_col), n)).alias("shingle")
+    )
+
+
+def _shingle_sets(docs: DataFrame, text_col: str = "text", n: int = 3) -> DataFrame:
+    """(doc_id, sh_set): each document's distinct shingles as one array, on
+    the document's own row.  NULL-text documents have no row."""
+    # filter on the text, not on sh_set: a predicate on the alias is pushed
+    # below the projection as a second copy of the whole shingle expression
+    return docs.filter(F.col(text_col).isNotNull()).select(
+        "doc_id", word_shingles(F.col(text_col), n).alias("sh_set")
     )
 
 
@@ -173,68 +194,53 @@ def jaccard_pairs(
 # ----------------------------------------------------------- minhash + lsh
 
 
-def minhash_signatures(
-    docs: DataFrame,
-    num_perm: int = 16,
-    text_col: str = "text",
-    n: int = 3,
-) -> DataFrame:
-    """(doc_id, perm, minhash): lexicographic min of md5(perm || '|' || shingle)
-    per permutation -- a portable MinHash (md5 exists in every engine).
+def _signature_sql(num_perm: int) -> str:
+    """The MinHash signature of a ``sh_set`` row: an array whose element
+    ``p`` is the lexicographic min of ``md5(p || '|' || shingle)`` over the
+    document's distinct shingles -- a portable MinHash (md5 exists in every
+    engine).
 
-    All ``num_perm`` minima are computed as separate aggregates of ONE
-    groupBy(doc_id) pass: the shingle table shuffles once at its own size
-    and every min is map-side combined.  (The naive formulation -- explode
-    a perm column then groupBy(doc, perm) -- shuffles ``num_perm`` x the
-    shingle volume; at 16 permutations that is 16x the bytes for identical
-    results.)  The wide row then unpivots to (doc_id, perm, minhash) with a
-    narrow posexplode."""
-    sh = shingle_table(docs, text_col, n)
-    # expression strings, not Column chains (r15): the per-perm Column
-    # construction cost ~100 py4j round trips per call (~320 ms of
-    # driver chatter, paid per build by every minhash consumer); the
-    # parsed SQL is the identical expression in two round trips.
-    mins = [
-        F.expr(f"min(md5(concat('{p}|', shingle))) AS _mh{p}")
+    One ``aggregate`` fold per permutation, on the document's own row: no
+    shingle row and no shuffle exist.  An expression string, not a Column
+    chain (r15): the per-perm Column construction cost ~100 py4j round
+    trips per call."""
+    mins = ", ".join(
+        "aggregate(sh_set, CAST(NULL AS STRING), "
+        f"(m, s) -> least(m, md5(concat('{p}|', s))))"
         for p in range(num_perm)
-    ]
-    wide = sh.groupBy("doc_id").agg(*mins)
-    arr = ",".join(f"_mh{p}" for p in range(num_perm))
-    return wide.selectExpr(
-        "doc_id", f"posexplode(array({arr})) AS (perm, minhash)"
+    )
+    return f"array({mins})"
+
+
+def _band_rows(sigs: DataFrame, band_size: int) -> DataFrame:
+    """(doc_id, band, band_sig) from (doc_id, sig): band ``b`` joins the
+    minima of perms ``[b * band_size, (b + 1) * band_size)`` in perm order
+    with ``','``.  The last band is short when ``band_size`` does not
+    divide the signature length."""
+    return sigs.selectExpr(
+        "doc_id",
+        f"posexplode(transform(sequence(0, (size(sig) - 1) div {band_size}), "
+        f"b -> array_join(slice(sig, b * {band_size} + 1, {band_size}), ','))) "
+        "AS (band, band_sig)",
     )
 
 
-def band_signatures(signatures: DataFrame, band_size: int = 4) -> DataFrame:
-    """(doc_id, band, band_sig): the signature matrix cut into bands of
-    ``band_size`` rows, each band serialized to one join key."""
-    banded = signatures.withColumn("band", (F.col("perm") / band_size).cast("int"))
-    return banded.groupBy("doc_id", "band").agg(
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("perm", "minhash"))),
-                lambda c: c["minhash"],
-            ),
-            ",",
-        ).alias("band_sig")
+def _minhash_bands(sets: DataFrame, num_perm: int, band_size: int) -> DataFrame:
+    """(doc_id, band, band_sig) straight from ``_shingle_sets`` rows: the
+    signature and its bands on each document's own row, no exchange."""
+    return _band_rows(
+        sets.selectExpr("doc_id", f"{_signature_sql(num_perm)} AS sig"), band_size
     )
 
 
-def lsh_candidate_pairs(
-    signatures: DataFrame,
-    band_size: int = 4,
-) -> DataFrame:
-    """Band the signature matrix; a pair is a candidate iff it collides in
-    at least one band (the classic banding trick)."""
+def _band_pairs(bands: DataFrame) -> DataFrame:
+    """Candidate (doc_a < doc_b) pairs: documents that collide in at least
+    one band (the classic banding trick)."""
     # the band table feeds both self-join sides; without a cut the whole
-    # signature pipeline (shingle explode + 16-min aggregate + banding)
-    # executes twice -- Spark does not recognize the aliased subtrees as
-    # one exchange (r15; the dedup_simhash plan showed the same class of
-    # duplication as doubled parquet scans)
-    band_sigs = band_signatures(signatures, band_size).localCheckpoint(
-        eager=False
-    )
-    a, b = band_sigs.alias("a"), band_sigs.alias("b")
+    # signature pipeline executes twice -- Spark does not recognize the
+    # aliased subtrees as one exchange (r15)
+    bands = bands.localCheckpoint(eager=False)
+    a, b = bands.alias("a"), bands.alias("b")
     return (
         a.join(
             b,
@@ -249,6 +255,51 @@ def lsh_candidate_pairs(
     )
 
 
+def minhash_signatures(
+    docs: DataFrame,
+    num_perm: int = 16,
+    text_col: str = "text",
+    n: int = 3,
+) -> DataFrame:
+    """(doc_id, perm, minhash): the MinHash signatures in long format, one
+    row per document and permutation (see ``_signature_sql``).
+
+    Each signature is computed on its document's row and unpivoted by a
+    narrow posexplode: the plan holds no exchange.  The near-dup pipelines
+    use the per-row signatures directly; this long form is for callers that
+    inspect or band the signature matrix themselves."""
+    # the signature is the generator's own input, not a ``sig`` column: a
+    # generator over a column gets an inferred ``size(sig) > 0`` filter,
+    # which is pushed below the projection as 16 more signature folds
+    return _shingle_sets(docs, text_col, n).selectExpr(
+        "doc_id", f"posexplode({_signature_sql(num_perm)}) AS (perm, minhash)"
+    )
+
+
+def band_signatures(signatures: DataFrame, band_size: int = 4) -> DataFrame:
+    """(doc_id, band, band_sig) from long-format ``(doc_id, perm, minhash)``
+    rows with perms ``0..k-1`` per document, as ``minhash_signatures``
+    emits them: each document's minima are gathered in perm order and cut
+    by the same band expression the per-row pipelines use."""
+    sigs = signatures.groupBy("doc_id").agg(
+        F.expr(
+            "transform(array_sort(collect_list(struct(perm, minhash))), "
+            "c -> c.minhash) AS sig"
+        )
+    )
+    return _band_rows(sigs, band_size)
+
+
+def lsh_candidate_pairs(
+    signatures: DataFrame,
+    band_size: int = 4,
+) -> DataFrame:
+    """Candidate (doc_a < doc_b) pairs from long-format signatures: a pair
+    is a candidate iff it collides in at least one band of
+    ``band_signatures``."""
+    return _band_pairs(band_signatures(signatures, band_size))
+
+
 def jaccard_for_pairs(
     docs: DataFrame,
     pairs: DataFrame,
@@ -260,11 +311,17 @@ def jaccard_for_pairs(
     Cost is O(|pairs| * shingles-per-doc) -- independent of how many
     unrelated documents share a hot shingle, unlike the full inverted-index
     self-join in ``jaccard_pairs``."""
-    sets = docs.select(
-        "doc_id", word_shingles(F.col(text_col), n).alias("sh_set")
-    )
-    a = sets.select(F.col("doc_id").alias("doc_a"), F.col("sh_set").alias("sh_a"))
-    b = sets.select(F.col("doc_id").alias("doc_b"), F.col("sh_set").alias("sh_b"))
+    sets = _shingle_sets(docs, text_col, n)
+    return _jaccard_from_sets(pairs, sets, sets)
+
+
+def _jaccard_from_sets(
+    pairs: DataFrame, sets_a: DataFrame, sets_b: DataFrame
+) -> DataFrame:
+    """``jaccard_for_pairs`` over ``_shingle_sets`` tables: ``doc_a`` is
+    looked up in ``sets_a`` and ``doc_b`` in ``sets_b``."""
+    a = sets_a.select(F.col("doc_id").alias("doc_a"), F.col("sh_set").alias("sh_a"))
+    b = sets_b.select(F.col("doc_id").alias("doc_b"), F.col("sh_set").alias("sh_b"))
     return (
         pairs.join(a, "doc_a")
         .join(b, "doc_b")
@@ -422,17 +479,20 @@ def minhash_dedup_pairs(
     text_col: str = "text",
     n: int = 3,
 ) -> DataFrame:
-    """Full MinHash-LSH near-dup pipeline: signatures -> banded candidates
-    -> exact-Jaccard verification >= threshold.
+    """Full MinHash-LSH near-dup pipeline: per-row signatures -> LSH bands
+    -> band self-join -> exact-Jaccard verification >= threshold.
 
-    Verification runs only over the candidate pairs (``jaccard_for_pairs``),
-    never the full shingle self-join: at 100 TB the all-sharing-pairs
-    product is exactly the blow-up LSH exists to avoid."""
-    candidates = lsh_candidate_pairs(
-        minhash_signatures(docs, num_perm, text_col, n), band_size
-    )
+    Every document's shingle array is built once (behind a lazy
+    localCheckpoint) and feeds both its signature and the verification.
+    Signature and bands are computed on the document's own row, so no
+    exchange sits between the document scan and the band self-join.
+    Verification runs only over the candidate pairs, never the full
+    shingle self-join: at 100 TB the all-sharing-pairs product is exactly
+    the blow-up LSH exists to avoid."""
+    sets = _shingle_sets(docs, text_col, n).localCheckpoint(eager=False)
+    candidates = _band_pairs(_minhash_bands(sets, num_perm, band_size))
     return (
-        jaccard_for_pairs(docs, candidates, text_col, n)
+        _jaccard_from_sets(candidates, sets, sets)
         .filter(F.col("jaccard") >= threshold)
         .select("doc_a", "doc_b", "jaccard")
         .orderBy("doc_a", "doc_b")
@@ -452,11 +512,11 @@ def simhash_signatures(
     occurrences is positive.
 
     All ``bits`` vote sums are separate aggregates of ONE groupBy(doc_id)
-    pass over the token table (same rewrite as ``minhash_signatures``): the
-    md5 is computed once per token row, each bit's +-1 vote is a cheap
-    projection of it, and every sum is map-side combined -- vs the naive
-    explode-per-bit form that shuffles ``bits`` x the token volume.  Both
-    groupBys (votes, then signature assembly) collapse into one."""
+    pass over the token table: the md5 is computed once per token row, each
+    bit's +-1 vote is a cheap projection of it, and every sum is map-side
+    combined -- vs the naive explode-per-bit form that shuffles ``bits`` x
+    the token volume.  Both groupBys (votes, then signature assembly)
+    collapse into one."""
 
     # expression strings, not Column chains (r15): the 32 per-bit vote
     # columns cost ~900 ms of py4j round trips per build (x3 builds per
@@ -1078,39 +1138,30 @@ def incremental_minhash_dedup(
     This is how dedup actually runs at 100 TB: the corpus band table is
     computed once and kept materialized (here it is derived inline because
     the driver query is self-contained; a production pipeline reads it back
-    from parquet), and each arriving batch shuffles only its OWN shingles --
-    corpus work per batch is one hash join probe.  With ``broadcast_new``
-    (batches are small relative to the corpus) even that join is
-    broadcast, so the corpus side never reshuffles at all.  Exact-Jaccard
-    verification then touches candidate pairs only.  Doc ids must be
-    globally unique across both sides.
+    from parquet).  Both band tables come from per-row signatures, as in
+    ``minhash_dedup_pairs``, so neither side shuffles to build them; with
+    ``broadcast_new`` (batches are small relative to the corpus) the
+    candidate join is a broadcast probe, so the corpus side never
+    reshuffles at all.  Exact-Jaccard verification then touches candidate
+    pairs only, looking each new id up in the batch and each existing id in
+    the corpus.  Doc ids must be globally unique across both sides.
     """
-    nb = band_signatures(
-        minhash_signatures(new_docs, num_perm, text_col, n), band_size
-    ).select(F.col("doc_id").alias("new_id"), "band", "band_sig")
+    new_sets = _shingle_sets(new_docs, text_col, n)
+    old_sets = _shingle_sets(existing_docs, text_col, n)
+    nb = _minhash_bands(new_sets, num_perm, band_size).select(
+        F.col("doc_id").alias("new_id"), "band", "band_sig"
+    )
     if broadcast_new:
         nb = F.broadcast(nb)
-    eb = band_signatures(
-        minhash_signatures(existing_docs, num_perm, text_col, n), band_size
-    )
+    eb = _minhash_bands(old_sets, num_perm, band_size)
     pairs = (
         nb.join(eb, ["band", "band_sig"])
-        .select("new_id", F.col("doc_id").alias("existing_id"))
+        .select(F.col("new_id").alias("doc_a"), F.col("doc_id").alias("doc_b"))
         .distinct()
     )
-    corpus = new_docs.select("doc_id", text_col).unionAll(
-        existing_docs.select("doc_id", text_col)
-    )
-    scored = jaccard_for_pairs(
-        corpus,
-        pairs.select(
-            F.col("new_id").alias("doc_a"), F.col("existing_id").alias("doc_b")
-        ),
-        text_col,
-        n,
-    )
     return (
-        scored.filter(F.col("jaccard") >= threshold)
+        _jaccard_from_sets(pairs, new_sets, old_sets)
+        .filter(F.col("jaccard") >= threshold)
         .select(
             F.col("doc_a").alias("new_id"),
             F.col("doc_b").alias("existing_id"),

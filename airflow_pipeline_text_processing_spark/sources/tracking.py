@@ -77,22 +77,18 @@ class TrackingTable:
         # an hdfs:///s3a:// tracking table would always read as absent
         # -- voiding the idempotent-insert semantics exactly on the
         # cluster deployments this class targets.  Local paths resolve
-        # through the same API (fs.defaultFS=file:/// in local mode).
-        try:
-            jvm = self.spark._jvm
-            jpath = jvm.org.apache.hadoop.fs.Path(self.path)
-            fs = jpath.getFileSystem(
-                self.spark._jsc.hadoopConfiguration()
-            )
-            if not fs.exists(jpath):
-                return False
-            it = fs.listFiles(jpath, True)  # recursive
-            while it.hasNext():
-                if it.next().getPath().getName().endswith(".parquet"):
-                    return True
+        # through the same API (fs.defaultFS=file:/// in local mode).  Only
+        # a missing path means "no table": any other error (an unknown
+        # scheme, no permission) propagates before the tick writes a sink.
+        jpath = self.spark._jvm.org.apache.hadoop.fs.Path(self.path)
+        fs = jpath.getFileSystem(self.spark._jsc.hadoopConfiguration())
+        if not fs.exists(jpath):
             return False
-        except Exception:  # noqa: BLE001 -- absent table, not an error
-            return False
+        it = fs.listFiles(jpath, True)  # recursive
+        while it.hasNext():
+            if it.next().getPath().getName().endswith(".parquet"):
+                return True
+        return False
 
     def current(self) -> DataFrame:
         """Latest version per file_hash (the logical table the reference

@@ -17,9 +17,11 @@ from airflow_pipeline_text_processing_spark.operators.dedup import (
     CDC_ROLL_MOD,
     CDC_THRESHOLD,
     CDC_WINDOW,
+    band_signatures,
     cdc_chunks,
     cdc_chunks_rolling,
     minhash_dedup_pairs,
+    minhash_signatures,
 )
 
 VOCAB = [f"w{i}" for i in range(10)]
@@ -41,22 +43,24 @@ def _mk_docs(spark, texts):
     )
 
 
+def _py_signature(text, num_perm=16):
+    return [
+        min(hashlib.md5(f"{p}|{s}".encode()).hexdigest() for s in _py_shingles(text))
+        for p in range(num_perm)
+    ]
+
+
+def _py_bands(sig, band_size=4):
+    """Band strings in band order; the last band is short when
+    ``band_size`` does not divide the signature length."""
+    return [",".join(sig[b : b + band_size]) for b in range(0, len(sig), band_size)]
+
+
 def _py_minhash_pairs(texts, threshold=0.5, num_perm=16, band_size=4):
     sh = {i: _py_shingles(t) for i, t in enumerate(texts)}
-    sigs = {
-        i: [
-            min(
-                hashlib.md5(f"{p}|{s}".encode()).hexdigest()
-                for s in shingles
-            )
-            for p in range(num_perm)
-        ]
-        for i, shingles in sh.items()
-    }
     buckets = {}
-    for i, sig in sigs.items():
-        for band in range(num_perm // band_size):
-            key = (band, ",".join(sig[band * band_size : (band + 1) * band_size]))
+    for i, t in enumerate(texts):
+        for key in enumerate(_py_bands(_py_signature(t, num_perm), band_size)):
             buckets.setdefault(key, []).append(i)
     cands = set()
     for members in buckets.values():
@@ -71,6 +75,37 @@ def _py_minhash_pairs(texts, threshold=0.5, num_perm=16, band_size=4):
         if jac >= threshold:
             out[(a, b)] = jac
     return out
+
+
+def test_minhash_signatures_and_bands_match_python_reference(spark):
+    texts = [
+        "",  # no token: the one shingle ""
+        "solo",  # one token: the one shingle "solo"
+        "a b c a b c a b c a b c",  # repeated shingles count once
+        "Hello, World! hello world -- again and AGAIN",
+        "a b",
+    ]
+    rng = random.Random(5)
+    texts += [" ".join(rng.choice(VOCAB) for _ in range(rng.randint(3, 30)))
+              for _ in range(6)]
+    docs = _mk_docs(spark, texts)
+    for num_perm, band_size in ((16, 4), (10, 4)):
+        sigs = minhash_signatures(docs, num_perm=num_perm)
+        got = {}
+        for r in sigs.collect():
+            got.setdefault(r.doc_id, {})[r.perm] = r.minhash
+        want = {i: _py_signature(t, num_perm) for i, t in enumerate(texts)}
+        assert {i: [g[p] for p in sorted(g)] for i, g in got.items()} == want
+        assert all(sorted(g) == list(range(num_perm)) for g in got.values())
+        bands = {
+            (r.doc_id, r.band): r.band_sig
+            for r in band_signatures(sigs, band_size).collect()
+        }
+        assert bands == {
+            (i, b): s
+            for i, sig in want.items()
+            for b, s in enumerate(_py_bands(sig, band_size))
+        }, (num_perm, band_size)
 
 
 def test_minhash_lsh_matches_python_reference(spark):
@@ -94,6 +129,15 @@ def test_minhash_lsh_matches_python_reference(spark):
         }
         want = _py_minhash_pairs(texts)
         assert got == want, f"seed {seed}"
+        # 10 permutations in bands of 4: the short last band (perms 8-9)
+        # is a band of its own
+        got = {
+            (r.doc_a, r.doc_b): r.jaccard
+            for r in minhash_dedup_pairs(
+                _mk_docs(spark, texts), num_perm=10
+            ).collect()
+        }
+        assert got == _py_minhash_pairs(texts, num_perm=10), f"seed {seed}"
 
 
 def _py_cdc(text, boundary_fn, window=CDC_WINDOW):

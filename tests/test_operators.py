@@ -71,6 +71,22 @@ def test_minhash_lsh_candidates_include_dups(spark, corpus):
     assert (0, 2) not in pairs
 
 
+def test_minhash_null_texts_are_not_duplicates(spark):
+    """A NULL text has no shingles: no signature rows and no pairs, and
+    ``canonical_pick`` keeps each NULL document as its own singleton."""
+    docs = spark.createDataFrame(
+        [(1, None), (4, "word"), (6, None)], "doc_id long, text string"
+    )
+    pairs = D.minhash_dedup_pairs(docs)
+    assert pairs.collect() == []
+    assert {r.doc_id for r in D.minhash_signatures(docs).collect()} == {4}
+    pick = {
+        r.doc_id: (r.cluster_id, r.n_members, r.is_kept)
+        for r in D.canonical_pick(docs, pairs).collect()
+    }
+    assert pick == {1: (1, 1, 1), 4: (4, 1, 1), 6: (6, 1, 1)}
+
+
 def test_simhash_banded_equals_allpairs(spark, corpus):
     """Pigeonhole banding is lossless: identical pairs to the O(n^2) join."""
     banded = D.simhash_pairs(corpus, max_hamming=6).collect()

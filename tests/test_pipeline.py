@@ -415,6 +415,18 @@ def test_empty_file_counts_as_skipped(spark, tmp_path):
     assert spark.read.parquet(cfg.tracking_path).count() == 2
 
 
+def test_unreachable_tracking_path_fails_before_any_sink(spark, tmp_path):
+    """A tracking path whose filesystem cannot be used is an error, not an
+    empty table: the tick fails before it encodes or writes any sink."""
+    cfg = _tick_cfg(tmp_path, {"a.txt": "alpha", "b.txt": "bravo"})
+    cfg.tracking_path = "nosuchfs://bucket/tracking"
+    with pytest.raises(Exception, match="nosuchfs"):
+        run_pipeline(spark, cfg)
+    out = tmp_path / "out"
+    assert not out.exists() or not any(out.iterdir())
+    assert not (tmp_path / "dlq").exists()
+
+
 def test_bootstrap_sample_only_when_empty(tmp_path):
     from airflow_pipeline_text_processing_spark.sources.text_dir import (
         bootstrap_sample,

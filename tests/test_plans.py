@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import contextlib
 import io
+import os
 
 import pyspark.sql.functions as F
 
@@ -165,9 +166,11 @@ def test_sessionize_single_shuffle(spark):
 
 
 def test_minhash_signatures_single_shuffle(spark):
-    """All 16 permutation-mins must come from ONE groupBy(doc_id) pass over
-    the shingle table: exactly one hash exchange, with partial (map-side)
-    aggregation before it -- the perm-exploded form would shuffle 16x."""
+    """The 16 permutation minima of a document are folds over its own
+    shingle array, on its own row: the signature plan holds no exchange at
+    all -- neither the 16x shuffle of the perm-exploded form nor the 1x
+    shuffle of a groupBy over exploded shingles -- never explodes the
+    document into per-shingle rows, and tokenizes each document once."""
     from airflow_pipeline_text_processing_spark.operators.dedup import (
         minhash_signatures,
     )
@@ -175,12 +178,46 @@ def test_minhash_signatures_single_shuffle(spark):
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").select(
         "doc_id", "text"
     )
-    plan = plan_of(minhash_signatures(docs, num_perm=16), mode="simple")
-    assert plan.count("Exchange hashpartitioning") == 1
-    assert "partial_min" in plan
-    # printed top-down: the (doc, perm, minhash) unpivot sits ABOVE the
-    # exchange (after the shuffle), the shingle explode below (before it)
-    assert plan.index("posexplode") < plan.index("Exchange hashpartitioning")
+    sigs = minhash_signatures(docs, num_perm=16)
+    plan = plan_of(sigs, mode="simple")
+    assert "Exchange" not in plan
+    # the one generator is the (doc, perm, minhash) unpivot of the
+    # signature array: no row per shingle exists
+    assert plan.count("Generate ") == 1
+    assert "Generate posexplode(array(aggregate(" in plan
+    # word_shingles' inlining trap: the tokenizer must run once per
+    # document, not once per shingle, permutation or pushed-down filter
+    optimized = sigs._jdf.queryExecution().optimizedPlan().toString()
+    assert optimized.count("regexp_extract_all") == 1
+
+
+# Spark jobs of one minhash_dedup_pairs(...).localCheckpoint() on a small
+# corpus: the band self-join's two scan stages, its distinct, the two
+# verification joins and the orderBy's sample, shuffle and checkpoint write
+MINHASH_PAIRS_JOBS = 8
+
+
+def test_minhash_dedup_pairs_spark_job_count(spark):
+    from airflow_pipeline_text_processing_spark.operators.dedup import (
+        minhash_dedup_pairs,
+    )
+
+    base = "the quick brown fox jumps over the lazy dog near the river bank today"
+    texts = [base, base + " again", "entirely other words in one more line",
+             base.replace("lazy", "sleepy"), "", None, "one"]
+    docs = spark.createDataFrame(
+        list(enumerate(texts)), "doc_id long, text string"
+    )
+    sc = spark.sparkContext
+    group = f"minhash-shape-{os.getpid()}"
+    sc.setJobGroup(group, group)
+    try:
+        pairs = minhash_dedup_pairs(docs).localCheckpoint()
+    finally:
+        sc.setJobGroup("", "")
+    assert [(r.doc_a, r.doc_b) for r in pairs.collect()] == [(0, 1), (0, 3)]
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= MINHASH_PAIRS_JOBS, len(jobs)
 
 
 def test_range_join_is_equi_not_cartesian(spark):

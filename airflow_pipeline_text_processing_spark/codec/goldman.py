@@ -15,23 +15,28 @@ Matches the observable behavior of the reference encoder
   first trit indexes ``A/C/G``; every later trit indexes the three bases
   distinct from the previous one (in ``ACGT`` order), so the output never
   contains two equal adjacent bases (homopolymer-free invariant).
-* ``dna_to_trits`` (ref ``:165-194``): exact inverse; unrecognised bases
-  decode as trit 0.
+* ``dna_to_trits`` (ref ``:165-194``): inverse over ``seq.upper()``;
+  unrecognised bases decode as trit 0.
 
-Implementation is numpy-vectorized for Arrow pandas-UDF throughput
-(the codec is the engine's hottest Python kernel at scale):
+Each conversion has one numpy-vectorized implementation, whatever the
+input (the codec is the engine's hottest Python kernel at scale):
 
-* base-3 digit extraction peels 24-digit limbs per bignum divmod, then
-  expands every limb to digits in one vectorized ``//`` / ``%`` pass;
+* int -> base-3 digits (:func:`_int_to_trits`) peels 24-digit limbs per
+  bignum divmod, then expands every limb to digits in one vectorized
+  ``//`` / ``%`` pass; digits -> int (:func:`_trits_to_int`) is the
+  same limb split run backwards;
 * the rotation code has a closed form: with base indices ``A..T=0..3``
   the next index is ``t + (t >= prev)``, and the carry bit ``c_i``
   satisfies ``c_i = (t_i > t_{i-1})`` at trit-change points and flips on
   runs of equal trits -- so the whole automaton is a vectorized
   run-parity computation instead of a per-base Python loop;
-* the inverse is fully data-parallel: ``t_i = n_i - (n_i > n_{i-1})``.
-
-Non-ACGT input (impossible on the validated hot path) falls back to a
-loop that reproduces the reference's unknown-base behavior exactly.
+* the inverse is one lookup per base, ``_TRIT[prev_code, code]``, with
+  codes 0-3 for ``ACGT``, 4 for any other character and 5 as the
+  virtual predecessor of the first base.  The table's rows are the
+  reference loop's candidate lists, so corrupted or user-supplied DNA
+  decodes exactly as the reference decodes it: a base equal to its
+  predecessor or outside ``ACGT`` is trit 0, a leading ``T`` is trit 0,
+  and after an unknown base nothing is excluded, so ``T`` is trit 3.
 """
 
 from __future__ import annotations
@@ -40,15 +45,6 @@ from typing import List, Sequence
 
 import numpy as np
 
-_BASES = "ACGT"
-
-# first trit indexes "ACG" (ref :132-163); equivalently the rotation rule
-# with a virtual previous base T (index 3): t + (t >= 3) == t for t in 0..2.
-_FIRST = "ACG"
-_NEXT = {p: "".join(b for b in _BASES if b != p) for p in _BASES}
-_INV_FIRST = {b: i for i, b in enumerate(_FIRST)}
-_INV_NEXT = {p: {b: i for i, b in enumerate(_NEXT[p])} for p in _BASES}
-
 # 24 base-3 digits per limb: 3**24 < 2**39 fits comfortably in int64 and
 # lets the digit expansion run as one vectorized divide per digit column.
 _TRITS_PER_LIMB = 24
@@ -56,11 +52,24 @@ _LIMB = 3**_TRITS_PER_LIMB
 _POW3_DESC = (3 ** np.arange(_TRITS_PER_LIMB - 1, -1, -1)).astype(np.int64)
 
 _BASE_CODES = np.frombuffer(b"ACGT", dtype=np.uint8)
-# char code -> base index; 255 marks non-ACGT (fallback path)
-_CODE_TO_IDX = np.full(256, 255, dtype=np.uint8)
-for _i, _b in enumerate(_BASES):
-    _CODE_TO_IDX[ord(_b)] = _i
-    _CODE_TO_IDX[ord(_b.lower())] = _i
+
+# ASCII byte -> base code: 0-3 for ACGT, 4 for anything else
+_CODE = np.full(256, 4, dtype=np.intp)
+_CODE[_BASE_CODES] = np.arange(4)
+
+# _TRIT[prev_code, code]: the index of ``code`` among the candidate bases
+# that follow ``prev_code`` (ref :165-194), 0 when it is not a candidate
+_TRIT = np.array(
+    [
+        [0, 0, 1, 2, 0],  # after A: C G T
+        [0, 0, 1, 2, 0],  # after C: A G T
+        [0, 1, 0, 2, 0],  # after G: A C T
+        [0, 1, 2, 0, 0],  # after T: A C G
+        [0, 1, 2, 3, 0],  # after an unknown base: A C G T
+        [0, 1, 2, 0, 0],  # first base: A C G
+    ],
+    dtype=np.int8,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -68,13 +77,10 @@ for _i, _b in enumerate(_BASES):
 # ---------------------------------------------------------------------------
 
 
-def _bytes_to_trits_arr(data: bytes) -> np.ndarray:
-    """Minimal base-3 digits of the big-endian bignum, MSD first (int8)."""
-    if not data:
-        return np.zeros(1, dtype=np.int8)
-    value = int.from_bytes(data, "big")
-    if value == 0:
-        return np.zeros(1, dtype=np.int8)
+def _int_to_trits(value: int) -> np.ndarray:
+    """Minimal base-3 digits of ``value``, MSD first (int8); 0 -> [0]."""
+    if value <= 0:  # a negative (binary_to_trits("-1")) has no digits
+        return np.zeros(int(value == 0), dtype=np.int8)
     limbs: List[int] = []  # least-significant limb first
     while value > 0:
         value, rem = divmod(value, _LIMB)
@@ -82,26 +88,22 @@ def _bytes_to_trits_arr(data: bytes) -> np.ndarray:
     arr = np.array(limbs[::-1], dtype=np.int64)  # MSD limb first
     digits = (arr[:, None] // _POW3_DESC[None, :]) % 3
     flat = digits.ravel().astype(np.int8)
-    first = int(np.argmax(flat != 0))  # minimal representation: strip leading 0s
-    return flat[first:]
+    return flat[int(np.argmax(flat != 0)):]  # minimal: strip leading 0s
 
 
 def bytes_to_trits(data: bytes) -> List[int]:
     """Big-endian bignum -> minimal base-3 digits (MSD first); b''/0 -> [0]."""
-    return _bytes_to_trits_arr(data).tolist()
+    return _int_to_trits(int.from_bytes(data, "big")).tolist()
 
 
-def _trits_to_int(trits: np.ndarray) -> int:
+def _trits_to_int(trits: Sequence[int]) -> int:
     """Horner-accumulate base-3 digits (MSD first) into a Python bignum."""
-    n = len(trits)
-    if n == 0:
-        return 0
-    pad = (-n) % _TRITS_PER_LIMB
+    arr = np.asarray(trits, dtype=np.int64)
+    pad = (-len(arr)) % _TRITS_PER_LIMB
     if pad:
-        trits = np.concatenate([np.zeros(pad, dtype=trits.dtype), trits])
-    limbs = trits.reshape(-1, _TRITS_PER_LIMB).astype(np.int64) @ _POW3_DESC
+        arr = np.concatenate([np.zeros(pad, dtype=np.int64), arr])
     value = 0
-    for limb in limbs.tolist():
+    for limb in (arr.reshape(-1, _TRITS_PER_LIMB) @ _POW3_DESC).tolist():
         value = value * _LIMB + limb
     return value
 
@@ -118,15 +120,11 @@ def trits_to_bytes(trits: Sequence[int], target_length_bytes: int) -> bytes:
     predicate (op 43) can flag them row-wise and the opt-in RS repair path
     can attempt correction, instead of one poison row failing the whole
     Spark stage with an exception."""
-    arr = np.asarray(trits, dtype=np.int64)
-    value = _trits_to_int(arr)
-    width = max(1, target_length_bytes)
-    data = value.to_bytes(max(width, (value.bit_length() + 7) // 8 or 1), "big")
-    if len(data) < target_length_bytes:
-        data = b"\x00" * (target_length_bytes - len(data)) + data
-    elif len(data) > target_length_bytes:
-        data = data[-target_length_bytes:]
-    return data
+    value = _trits_to_int(trits)
+    width = max(1, target_length_bytes, (value.bit_length() + 7) // 8)
+    # left-padded to at least the target, so keeping the rightmost bytes
+    # is the whole rule
+    return value.to_bytes(width, "big")[-target_length_bytes:]
 
 
 # ---------------------------------------------------------------------------
@@ -159,49 +157,21 @@ def trits_to_dna(trits: Sequence[int]) -> str:
     return _trits_to_dna_arr(np.asarray(trits, dtype=np.int8))
 
 
-def _dna_to_trits_slow(seq: str) -> List[int]:
-    """Reference-exact fallback for sequences containing non-ACGT bases."""
-    trits: List[int] = []
-    prev = None
-    for base in seq.upper():
-        if prev is None:
-            trits.append(_INV_FIRST.get(base, 0))
-        elif prev in _INV_NEXT:
-            trits.append(_INV_NEXT[prev].get(base, 0))
-        else:
-            # unknown previous base: nothing is excluded, so the candidate
-            # list is all four bases (ref filters ``b != previous_base``)
-            trits.append(_BASES.index(base) if base in _BASES else 0)
-        prev = base
-    return trits
-
-
 def _dna_to_trits_arr(seq: str) -> np.ndarray:
-    """Vectorized inverse rotation for valid codec output (ACGT, first base
-    in ACG, no adjacent repeats): t_i = n_i - (n_i > n_{i-1})."""
-    raw = np.frombuffer(seq.encode("ascii"), dtype=np.uint8)
-    b = _CODE_TO_IDX[raw].astype(np.int8)
-    prev = np.empty(len(b), dtype=np.int8)
-    prev[0] = 3
-    prev[1:] = b[:-1]
-    return (b - (b > prev)).astype(np.int8)
-
-
-def _is_fast_decodable(seq: str) -> bool:
-    if not seq or not seq.isascii():
-        return False
-    raw = np.frombuffer(seq.encode("ascii"), dtype=np.uint8)
-    b = _CODE_TO_IDX[raw]
-    if b[0] == 3 or np.any(b == 255):  # leading T or non-ACGT: ref quirk paths
-        return False
-    return not np.any(b[1:] == b[:-1])  # adjacent repeat decodes as trit 0
+    """Inverse rotation by table lookup (int8).  ``"replace"`` turns each
+    non-ASCII character into one ``?`` byte, so the codes stay one per
+    character of ``seq.upper()``, as in the reference's loop."""
+    raw = np.frombuffer(seq.upper().encode("ascii", "replace"), dtype=np.uint8)
+    code = _CODE[raw]
+    prev = np.empty_like(code)
+    prev[:1] = 5
+    prev[1:] = code[:-1]
+    return _TRIT[prev, code]
 
 
 def dna_to_trits(seq: str) -> List[int]:
     """Inverse rotation decode; unknown bases map to trit 0."""
-    if _is_fast_decodable(seq):
-        return _dna_to_trits_arr(seq).tolist()
-    return _dna_to_trits_slow(seq)
+    return _dna_to_trits_arr(seq).tolist()
 
 
 # ---------------------------------------------------------------------------
@@ -211,23 +181,12 @@ def dna_to_trits(seq: str) -> List[int]:
 
 def bytes_to_dna(data: bytes) -> str:
     """bytes -> trits -> DNA (ref ``:196-199``)."""
-    return _trits_to_dna_arr(_bytes_to_trits_arr(data))
+    return _trits_to_dna_arr(_int_to_trits(int.from_bytes(data, "big")))
 
 
 def dna_to_bytes(seq: str, target_length_bytes: int) -> bytes:
     """DNA -> trits -> fixed-width bytes (ref ``:201-204``)."""
-    if _is_fast_decodable(seq):
-        trits = _dna_to_trits_arr(seq)
-    else:
-        trits = np.asarray(_dna_to_trits_slow(seq), dtype=np.int8)
-    value = _trits_to_int(trits)
-    width = max(1, target_length_bytes)
-    data = value.to_bytes(max(width, (value.bit_length() + 7) // 8 or 1), "big")
-    if len(data) < target_length_bytes:
-        data = b"\x00" * (target_length_bytes - len(data)) + data
-    elif len(data) > target_length_bytes:
-        data = data[-target_length_bytes:]
-    return data
+    return trits_to_bytes(_dna_to_trits_arr(seq), target_length_bytes)
 
 
 def has_homopolymer(seq: str) -> bool:
@@ -253,15 +212,7 @@ def binary_to_trits(binary_string: str) -> List[int]:
     (plans/queries.py::codec_trit_bridge), not this Python kernel; this
     function is the semantics pin the parity tests check both against.
     """
-    value = int(binary_string, 2)
-    if value == 0:
-        return [0]
-    trits: List[int] = []
-    while value > 0:
-        trits.append(value % 3)
-        value //= 3
-    trits.reverse()
-    return trits
+    return _int_to_trits(int(binary_string, 2)).tolist()
 
 
 def trits_to_binary(trits: Sequence[int], target_bit_length: int | None = None) -> str:
@@ -271,10 +222,7 @@ def trits_to_binary(trits: Sequence[int], target_bit_length: int | None = None) 
     renders via ``bin()`` (minimal digits, so ``[0]`` -> ``"0"``), then
     ``zfill`` -- exactly the reference's padding rule, which only ever
     PADS (a too-long string is returned unchanged)."""
-    value = 0
-    for t in trits:
-        value = value * 3 + int(t)
-    out = bin(value)[2:]
+    out = bin(_trits_to_int(trits))[2:]
     if target_bit_length is not None and len(out) < target_bit_length:
         out = out.zfill(target_bit_length)
     return out

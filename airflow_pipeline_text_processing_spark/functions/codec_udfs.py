@@ -248,7 +248,4 @@ def register_all(spark: SparkSession) -> None:
     spark.udf.register("rs_repair", rs_repair)
     spark.udf.register("encode_chunks", encode_chunks)
     spark.udf.register("decode_chunks", decode_chunks)
-    try:
-        spark.udtf.register("chunk_text", make_chunk_text_udtf())
-    except Exception:
-        pass  # pyspark < 3.5: UDTFs unavailable; the pandas-UDF path covers it
+    spark.udtf.register("chunk_text", make_chunk_text_udtf())

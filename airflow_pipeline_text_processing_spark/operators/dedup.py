@@ -782,11 +782,12 @@ def connected_components(
     the first's plan ~4x (edges is referenced four times per star round),
     1.6 s -> 4.4 s at sf0.1 (PROFILE_r12)."""
     # every checkpoint is LAZY: the star-forest test right after it
-    # materializes it in the same action, so a round costs one action
+    # materializes it in the same action, so a round costs one action.
+    # Duplicate pairs need no distinct(): a star round ends in DISTINCT.  The
+    # filter also drops NULL ids.
     edges = (
         pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
         .filter(F.col("u") != F.col("v"))
-        .distinct()
         .localCheckpoint(eager=False)
     )
     for _ in range(max_iter):

@@ -43,7 +43,6 @@ def curate_documents(
     langs: Optional[Sequence[str]] = None,
     token_budget: Optional[int] = None,
     text_col: str = "text",
-    persist_intermediate: bool = True,
 ) -> DataFrame:
     """Curated training subset with per-doc analytics.
 
@@ -90,16 +89,15 @@ def curate_documents(
     if langs is not None:
         kept = kept.filter(F.col("predicted_lang").isin(list(langs)))
 
-    if persist_intermediate:
-        # ordered_running_sum range-partitions on the selection order, and
-        # range partitioning SAMPLES its input to pick boundaries -- without
-        # a materialization the whole regexp/HOF analytics pass above runs
-        # twice (sample + real).  A lazy localCheckpoint materializes the
-        # post-filter 5-column projection once (tiny relative to the corpus,
-        # spills to disk) and, unlike persist(), its blocks are released by
-        # the ContextCleaner when this DataFrame is garbage-collected -- no
-        # session-lifetime cache registry to manage.  Measured 2x end-to-end.
-        kept = kept.localCheckpoint(eager=False)
+    # ordered_running_sum range-partitions on the selection order, and
+    # range partitioning SAMPLES its input to pick boundaries -- without
+    # a materialization the whole regexp/HOF analytics pass above runs
+    # twice (sample + real).  A lazy localCheckpoint materializes the
+    # post-filter 5-column projection once (tiny relative to the corpus,
+    # spills to disk) and, unlike persist(), its blocks are released by
+    # the ContextCleaner when this DataFrame is garbage-collected -- no
+    # session-lifetime cache registry to manage.  Measured 2x end-to-end.
+    kept = kept.localCheckpoint(eager=False)
 
     ranked = ordered_running_sum(
         kept,
@@ -188,7 +186,7 @@ def curate_full(
     # registry session running many queries would otherwise carry these
     # cached blocks for its lifetime.  localCheckpoint blocks are released
     # by the ContextCleaner when the DataFrame is garbage-collected (same
-    # rationale as curate()'s persist_intermediate path above).
+    # rationale as curate_documents()'s checkpoint above).
     deduped = exact_dedup(
         docs.select("doc_id", text_col), text_col
     ).localCheckpoint(eager=False)

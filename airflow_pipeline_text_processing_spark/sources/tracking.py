@@ -26,8 +26,6 @@ Spark-first redesign for scale:
 
 from __future__ import annotations
 
-import os
-
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
@@ -71,24 +69,21 @@ class TrackingTable:
         # schema spares the footer-reading job of schema inference
         return self.spark.read.schema(TRACKING_SCHEMA).parquet(self.path)
 
+    def _fs(self, path: str):
+        """``(FileSystem, Path)`` of ``path`` through the Hadoop API, so
+        hdfs:// and s3a:// tables resolve as local ones do (local mode
+        has fs.defaultFS=file:///).  An unknown scheme raises here."""
+        jpath = self.spark._jvm.org.apache.hadoop.fs.Path(path)
+        return jpath.getFileSystem(self.spark._jsc.hadoopConfiguration()), jpath
+
     def _exists(self) -> bool:
-        # URI-aware probe through the Hadoop filesystem API (r14
-        # review): an os.walk probe only sees the LOCAL filesystem, so
-        # an hdfs:///s3a:// tracking table would always read as absent
-        # -- voiding the idempotent-insert semantics exactly on the
-        # cluster deployments this class targets.  Local paths resolve
-        # through the same API (fs.defaultFS=file:/// in local mode).  Only
-        # a missing path means "no table": any other error (an unknown
+        # Only a missing path means "no table": any other error (an unknown
         # scheme, no permission) propagates before the tick writes a sink.
-        jpath = self.spark._jvm.org.apache.hadoop.fs.Path(self.path)
-        fs = jpath.getFileSystem(self.spark._jsc.hadoopConfiguration())
-        if not fs.exists(jpath):
-            return False
-        it = fs.listFiles(jpath, True)  # recursive
-        while it.hasNext():
-            if it.next().getPath().getName().endswith(".parquet"):
-                return True
-        return False
+        # A directory that holds no parquet file (only _SUCCESS or
+        # _temporary/ residue) needs no listing: the declared-schema read
+        # of it returns 0 rows.
+        fs, jpath = self._fs(self.path)
+        return fs.exists(jpath)
 
     def current(self) -> DataFrame:
         """Latest version per file_hash (the logical table the reference
@@ -174,9 +169,7 @@ class TrackingTable:
         for small control tables."""
         reader = self.spark.read.format("jdbc").option("url", url).option(
             "dbtable", table
-        )
-        for k, v in (properties or {}).items():
-            reader = reader.option(k, v)
+        ).options(**(properties or {}))
         if partition_column is not None:
             # quote the identifier: Spark's JDBC writer creates columns with
             # quoted (case-exact) names, so unquoted refs fail on engines
@@ -185,9 +178,7 @@ class TrackingTable:
             bounds = self.spark.read.format("jdbc").option("url", url).option(
                 "query",
                 f"SELECT MIN({qcol}) AS lo, MAX({qcol}) AS hi FROM {table}",
-            )
-            for k, v in (properties or {}).items():
-                bounds = bounds.option(k, v)
+            ).options(**(properties or {}))
             row = bounds.load().collect()[0]
             lo, hi = row[0], row[1]  # positional: alias case folding varies by dialect
             if lo is not None:
@@ -217,9 +208,7 @@ class TrackingTable:
         treating every exception as 'table absent'."""
         probe = self.spark.read.format("jdbc").option("url", url).option(
             "query", f"SELECT 1 AS one FROM {table} WHERE 1=0"
-        )
-        for k, v in (properties or {}).items():
-            probe = probe.option(k, v)
+        ).options(**(properties or {}))
         try:
             probe.load().schema  # schema resolution forces the remote probe
             return True
@@ -251,12 +240,9 @@ class TrackingTable:
         if self._jdbc_table_exists(url, table, properties):
             existing = self.read_jdbc(url, table, properties).select("file_hash")
             fresh = fresh.join(F.broadcast(existing), "file_hash", "left_anti")
-        writer = fresh.write.format("jdbc").option("url", url).option(
+        fresh.write.format("jdbc").option("url", url).option(
             "dbtable", table
-        )
-        for k, v in (properties or {}).items():
-            writer = writer.option(k, v)
-        writer.mode("append").save()
+        ).options(**(properties or {})).mode("append").save()
 
     def compact(self) -> None:
         """Fold version history to current rows (maintenance operation).
@@ -272,10 +258,8 @@ class TrackingTable:
         self.spark.read.parquet(staging).write.mode("overwrite").parquet(
             self.path
         )
-        try:  # URI-aware cleanup (same filesystem API as _exists)
-            jpath = self.spark._jvm.org.apache.hadoop.fs.Path(staging)
-            jpath.getFileSystem(
-                self.spark._jsc.hadoopConfiguration()
-            ).delete(jpath, True)
+        try:  # URI-aware cleanup
+            fs, jpath = self._fs(staging)
+            fs.delete(jpath, True)
         except Exception:  # noqa: BLE001 -- residue, not a failure
             pass

@@ -7,6 +7,7 @@ the golden identity pairs shipped in the reference's own data directory.
 
 import hashlib
 import os
+import random
 
 import pytest
 from hypothesis import given, settings, strategies as st
@@ -77,6 +78,40 @@ def test_unknown_base_decodes_as_zero():
     assert dna_to_trits("XT") == [0, 3]
     assert dna_to_trits("AX") == [0, 0]
     assert dna_to_trits("ac") == dna_to_trits("AC")  # case-insensitive
+
+
+def _reference_dna_to_trits(dna_sequence):
+    # the reference's per-base decode loop (dna_encoding.py:165-194)
+    trits = []
+    previous_base = None
+    for base in dna_sequence.upper():
+        if previous_base is None:
+            available = ["A", "C", "G"]
+        else:
+            available = [b for b in ["A", "C", "G", "T"] if b != previous_base]
+        if base in available:
+            trits.append(available.index(base))
+        else:
+            trits.append(0)
+        previous_base = base
+    return trits
+
+
+def test_decode_matches_reference_loop_on_any_string():
+    # lowercase, unknown and non-ASCII characters ('ß' upper-cases to
+    # 'SS'), leading T, adjacent repeats: every path of the reference loop
+    rng = random.Random(7)
+    alphabet = "ACGTacgtNX?ß é"
+    for _ in range(600):
+        seq = "".join(rng.choice(alphabet) for _ in range(rng.randint(0, 60)))
+        trits = _reference_dna_to_trits(seq)
+        assert dna_to_trits(seq) == trits, seq
+        value = 0
+        for t in trits:
+            value = value * 3 + t
+        n = rng.randint(1, 12)
+        # fixed width, rightmost bytes kept when the value is wider
+        assert dna_to_bytes(seq, n) == (value % 256**n).to_bytes(n, "big"), seq
 
 
 @given(st.lists(st.integers(0, 2), min_size=1, max_size=2000))

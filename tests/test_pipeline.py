@@ -427,6 +427,22 @@ def test_unreachable_tracking_path_fails_before_any_sink(spark, tmp_path):
     assert not (tmp_path / "dlq").exists()
 
 
+def test_tracking_dir_without_parquet_reads_empty(spark, tmp_path):
+    """A tracking directory that holds no parquet file, only the
+    ``_SUCCESS`` marker and an empty ``_temporary/`` an interrupted write
+    leaves, is an empty table: the tick processes every file and tracking
+    holds each hash once."""
+    cfg = _tick_cfg(tmp_path, {"a.txt": "alpha", "b.txt": "bravo", "c.txt": "alpha"})
+    os.makedirs(os.path.join(cfg.tracking_path, "_temporary"))
+    open(os.path.join(cfg.tracking_path, "_SUCCESS"), "w").close()
+    res = run_pipeline(spark, cfg)
+    assert res == {"processed": 3, "failed": 0, "skipped": 0, "status": "success"}
+    raw = spark.read.parquet(cfg.tracking_path).select("file_hash").collect()
+    assert sorted(r.file_hash for r in raw) == sorted(
+        hashlib.md5(t).hexdigest() for t in (b"alpha", b"bravo")
+    )
+
+
 def test_bootstrap_sample_only_when_empty(tmp_path):
     from airflow_pipeline_text_processing_spark.sources.text_dir import (
         bootstrap_sample,

@@ -220,6 +220,36 @@ def test_minhash_dedup_pairs_spark_job_count(spark):
     assert 0 < len(jobs) <= MINHASH_PAIRS_JOBS, len(jobs)
 
 
+# Spark jobs of one connected_components(...).collect() on a small graph
+# with duplicate, reversed and self-loop pairs: the star rounds and their
+# star-forest tests, with no shuffle of its own to dedup the input (the
+# first star round ends in DISTINCT)
+CC_JOBS = 20
+
+
+def test_connected_components_spark_job_count(spark):
+    from airflow_pipeline_text_processing_spark.operators.dedup import (
+        connected_components,
+    )
+
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (2, 1), (1, 2), (3, 3), (5, 6), (6, 7), (7, 8), (10, 11)],
+        "doc_a long, doc_b long",
+    )
+    sc = spark.sparkContext
+    group = f"cc-shape-{os.getpid()}"
+    sc.setJobGroup(group, group)
+    try:
+        rows = connected_components(pairs).collect()
+    finally:
+        sc.setJobGroup("", "")
+    assert sorted((r.doc_id, r.cluster_id) for r in rows) == [
+        (1, 1), (2, 1), (3, 1), (5, 5), (6, 5), (7, 5), (8, 5), (10, 10), (11, 10)
+    ]
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= CC_JOBS, len(jobs)
+
+
 def test_range_join_is_equi_not_cartesian(spark):
     """The bucketed range join must compile to an equi-join on
     (key, bucket) -- never a nested-loop/cartesian theta join."""

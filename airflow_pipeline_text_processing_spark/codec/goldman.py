@@ -121,10 +121,10 @@ def trits_to_bytes(trits: Sequence[int], target_length_bytes: int) -> bytes:
     can attempt correction, instead of one poison row failing the whole
     Spark stage with an exception."""
     value = _trits_to_int(trits)
-    width = max(1, target_length_bytes, (value.bit_length() + 7) // 8)
+    width = max(target_length_bytes, (value.bit_length() + 7) // 8)
     # left-padded to at least the target, so keeping the rightmost bytes
     # is the whole rule
-    return value.to_bytes(width, "big")[-target_length_bytes:]
+    return value.to_bytes(width, "big")[width - target_length_bytes:]
 
 
 # ---------------------------------------------------------------------------
@@ -221,7 +221,10 @@ def trits_to_binary(trits: Sequence[int], target_bit_length: int | None = None) 
     35, dead in the reference, live here).  Horner-accumulates base 3,
     renders via ``bin()`` (minimal digits, so ``[0]`` -> ``"0"``), then
     ``zfill`` -- exactly the reference's padding rule, which only ever
-    PADS (a too-long string is returned unchanged)."""
+    PADS (a too-long string is returned unchanged).  Negative digits raise;
+    digit 3 (``dna_to_trits`` after an unknown base) is accepted."""
+    if min(trits, default=0) < 0:
+        raise ValueError(f"negative base-3 digit in {list(trits)!r}")
     out = bin(_trits_to_int(trits))[2:]
     if target_bit_length is not None and len(out) < target_bit_length:
         out = out.zfill(target_bit_length)

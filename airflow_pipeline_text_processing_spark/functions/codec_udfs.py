@@ -14,9 +14,10 @@ everything else is built-in Catalyst expressions.  Two design rules for
 * **One Arrow pass per task for the round trip.**  The pipeline's
   encode-then-verify (``make_encode_verify``) builds the chunks AND decodes
   them back in the same Python call, returning ``struct(chunks,
-  reconstructed_text)``.  A pandas UDF costs a fixed ~50 ms per task on a
-  4-core host (worker hand-off, Arrow framing) whatever it computes, so two
-  chained UDFs paid that twice per partition.  ``decode_chunks`` and the
+  reconstructed_text)`` from the document's bytes, decoded once per row.
+  A pandas UDF costs a fixed ~50 ms per task on a 4-core host (worker
+  hand-off, Arrow framing) whatever it computes, so two chained UDFs paid
+  that twice per partition.  ``decode_chunks`` and the
   fused UDF share :func:`rebuild_text`, so there is one implementation of
   the round trip.
 * **Fine-grained UDFs stay available** (``dna_encode`` etc.) and are SQL
@@ -191,16 +192,20 @@ ENCODE_VERIFY_STRUCT = StructType([
 
 def make_encode_verify(chunk_size: int = chunker.DEFAULT_CHUNK_SIZE,
                        nsym: int = chunker.DEFAULT_RS_NSYM):
-    """Build the fused encode-then-verify UDF: text -> ``struct(chunks,
+    """Build the fused encode-then-verify UDF: bytes -> ``struct(chunks,
     reconstructed_text)``, where ``chunks`` equals ``make_encode_chunks``'s
     output and ``reconstructed_text`` equals ``decode_chunks(chunks)``, both
-    computed in one Arrow pass."""
+    computed in one Arrow pass; both NULL when the bytes are not UTF-8."""
 
     @pandas_udf(ENCODE_VERIFY_STRUCT)
     def _encode_verify(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-        for texts in batches:
+        for docs in batches:
             chunks, rebuilt = [], []
-            for t in texts:
+            for raw in docs:
+                try:  # NULL or not UTF-8: this row fails, not the Arrow batch
+                    t = None if raw is None else raw.decode("utf-8")
+                except UnicodeDecodeError:
+                    t = None
                 records = None if t is None else chunker.build_chunks(t, chunk_size, nsym)
                 chunks.append(None if records is None else _as_tuples(records))
                 rebuilt.append(rebuild_text(records))

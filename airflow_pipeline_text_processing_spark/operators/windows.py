@@ -13,9 +13,9 @@ helpers here express the same semantics as a two-level computation:
    O(parallelism) rows, not O(data)) whose prefix sums become additive
    offsets, broadcast-joined back.
 
-Because both branches hang off the same range exchange, Spark materializes
-the shuffle once and reuses it (ReusedExchange) -- the input is scanned a
-single time.
+The branches do not share one exchange: the totals branch prunes columns
+before its range partitioning, so the plan holds two ``rangepartitioning``
+exchanges and each scans the input (``curate_documents`` checkpoints it).
 """
 
 from __future__ import annotations

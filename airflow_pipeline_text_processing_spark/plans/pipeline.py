@@ -5,11 +5,15 @@ re-expressed as ONE declarative Spark job (SURVEY.md §3.1, §7.2):
 
     docs      = read wholetext .txt + descriptor cols          (ops 1-2, 14)
     fresh     = docs LEFT ANTI JOIN tracking ON file_hash      (op 13)
-    encoded   = fresh + encode_verify(text)                    (ops 23, 32-41)
+    encoded   = fresh + encode_verify(text bytes)              (ops 23, 32-41)
     validated = per-chunk checksum + round-trip md5 equality   (ops 43-44)
     rebuilt   = order-sensitive reassembly                     (ops 21-22)
     sinks     = processed text, chunk table, report, DLQ,
                 tracking upsert                                (ops 5-11)
+
+A document is its raw bytes: ``file_hash`` is their md5, and the encode
+UDF decodes them as UTF-8 once.  A document that fails goes alone to the
+DLQ with its ``error_message``, `NOT_UTF8` or `CHECKSUM_MISMATCH`.
 
 Scale design:
 
@@ -41,9 +45,9 @@ Scale design:
   set, so the same key, and replaces its own partial output.  Two fresh
   sets share a key with probability 2^-64.  Blind spot: files that land
   between a crash and its re-run change the key; the partial output stays.
-* The chunk-level relational view (`chunk_table`) and the declarative
-  groupBy reassembly (`reassemble_from_chunk_table`) exist for chunk sinks
-  and for SQL users; they shuffle by document key only when asked for.
+* The chunk-level relational view (`chunk_table`) and the groupBy
+  reassembly (`reassemble_from_chunk_table`) exist for chunk sinks and for
+  SQL users; they shuffle by document key only when asked for.
 * The tracking anti-join broadcasts only the key column of the tracking
   table.
 """
@@ -56,7 +60,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession
 
 from ..codec.chunker import DEFAULT_CHUNK_SIZE, DEFAULT_RS_NSYM
-from ..functions.codec_udfs import dna_decode, make_encode_verify
+from ..functions.codec_udfs import decode_chunks, dna_decode, make_encode_verify
 from ..sources.text_dir import read_text_dir
 from ..sources.tracking import TrackingTable
 
@@ -75,6 +79,10 @@ class PipelineConfig:
     run_id: str = "manual"
 
 
+NOT_UTF8 = "not valid UTF-8"
+CHECKSUM_MISMATCH = "reconstruction checksum mismatch"
+
+
 def encode_documents(
     docs: DataFrame,
     chunk_size: int = DEFAULT_CHUNK_SIZE,
@@ -84,16 +92,18 @@ def encode_documents(
 
     Input needs ``text`` and ``file_hash`` columns.  Adds:
     ``chunks`` (array<struct>), ``dna_chunks_count``, ``total_dna_bases``,
-    ``reconstructed_text``, ``reconstructed_checksum``, ``status``.
+    ``reconstructed_text``, ``reconstructed_checksum``, ``status``,
+    ``error_message`` (a failed document's reason).
 
-    ``reconstructed_text`` is NULL on any chunk-checksum or UTF-8 failure
+    ``chunks`` is NULL when ``text``'s bytes are not UTF-8;
+    ``reconstructed_text`` is NULL then and on any chunk-checksum failure
     (op 43); the md5 comparison reproduces the whole-document round-trip
     gate (op 44, ref ``plugins/utils/dna_encoding.py:448-456``).
     """
     enc = make_encode_verify(chunk_size, nsym)
     chunks = F.col("_rt.chunks")
     text = F.col("_rt.reconstructed_text")
-    out = docs.withColumn("_rt", enc(F.col("text"))).select(
+    out = docs.withColumn("_rt", enc(F.col("text").cast("binary"))).select(
         "*",
         chunks.alias("chunks"),
         F.size(chunks).alias("dna_chunks_count"),
@@ -103,13 +113,14 @@ def encode_documents(
             lambda acc, c: acc + F.length(c["dna_sequence"]),
         ).alias("total_dna_bases"),
         text.alias("reconstructed_text"),
-        F.md5(F.encode(text, "UTF-8")).alias("reconstructed_checksum"),
+        F.md5(text).alias("reconstructed_checksum"),
     ).drop("_rt")
-    return out.withColumn(
-        "status",
-        F.when(
-            F.col("reconstructed_checksum") == F.col("file_hash"), F.lit("completed")
-        ).otherwise(F.lit("failed")),
+    completed = F.col("reconstructed_checksum") == F.col("file_hash")
+    return out.select(
+        "*",
+        F.when(completed, "completed").otherwise("failed").alias("status"),
+        F.when(completed, None).when(F.col("chunks").isNull(), NOT_UTF8)
+        .otherwise(CHECKSUM_MISMATCH).alias("error_message"),
     )
 
 
@@ -179,29 +190,16 @@ def validate_chunk_table(chunks: DataFrame, repair: bool = False) -> DataFrame:
 
 def reassemble_from_chunk_table(chunks: DataFrame) -> DataFrame:
     """Order-sensitive reassembly from an (unordered) chunk table -- the
-    SURVEY.md op-21 signature aggregate, in pure built-in expressions:
-    per-chunk decode, then sort-by-index inside the group and concatenate.
-
-    ``array_sort`` on ``struct(index, piece)`` sorts by ``index`` first, so
-    the concatenation order is deterministic under shuffle (SURVEY.md §7.4).
-    """
-    decoded = chunks.withColumn(
-        "piece",
-        F.decode(
-            dna_decode(F.col("dna_sequence"), F.col("original_length_bytes")),
-            "UTF-8",
-        ),
-    )
+    SURVEY.md op-21 signature aggregate: each document's chunks go through
+    ``rebuild_text``, which sorts by ``index`` (deterministic under
+    shuffle, SURVEY.md §7.4) and decodes UTF-8 after joining the bytes.
+    Any chunk failing its checksum nulls its document's text."""
     return (
-        decoded.groupBy("file_hash")
+        chunks.groupBy("file_hash")
         .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("index", "piece"))),
-                    lambda c: c["piece"],
-                ),
-                "",
-            ).alias("reconstructed_text"),
+            decode_chunks(F.collect_list(F.struct(
+                "index", "dna_sequence", "original_length_bytes", "checksum"
+            ))).alias("reconstructed_text"),
             F.count("*").alias("dna_chunks_count"),
             F.sum(F.length("dna_sequence")).alias("total_dna_bases"),
         )
@@ -232,14 +230,11 @@ def document_report(encoded: DataFrame, config: PipelineConfig) -> DataFrame:
     )
 
 
-CHECKSUM_MISMATCH = "reconstruction checksum mismatch"
-
-
 def tracking_columns(output_file: Column) -> list:
     """The tracking-record projection of an encoded frame (ops 9-10): one
-    row per document in ``TrackingTable.append_new``'s column set, with the
-    checksum-mismatch reason on a failed one.  `run_tick` passes the
-    document's ``processed/batch=<key>/`` path as ``output_file``."""
+    row per document in ``TrackingTable.append_new``'s column set, with
+    its ``error_message``.  `run_tick` passes the document's
+    ``processed/batch=<key>/`` path as ``output_file``."""
     return [
         "file_hash",
         F.col("path").alias("file_path"),
@@ -247,9 +242,7 @@ def tracking_columns(output_file: Column) -> list:
         F.current_timestamp().alias("processed_at"),
         "status",
         output_file.cast("string").alias("output_file"),
-        F.when(F.col("status") != "completed", F.lit(CHECKSUM_MISMATCH)).alias(
-            "error_message"
-        ),
+        "error_message",
         F.current_timestamp().alias("created_at"),
     ]
 
@@ -295,7 +288,7 @@ def run_tick(
         if n > n_ok:  # DLQ (ops 11, 50): failed docs with error metadata
             _write_sink(encoded.filter(~completed).select(
                 F.col("path").alias("original_file"),
-                F.lit(CHECKSUM_MISMATCH).alias("error_message"),
+                "error_message",
                 F.current_timestamp().alias("timestamp"),
                 F.lit(config.run_id).alias("run_id"),
                 "text",

@@ -1,9 +1,12 @@
 """Document ingestion sources.
 
 Reference semantics (SURVEY.md ops 1-2, 12, 14): list a directory, keep
-``*.txt`` regular files, read each whole file as one UTF-8 string, and build
-the file descriptor ``{file_path, file_hash, file_size, filename}``
+``*.txt`` regular files, read each whole file, and build the file
+descriptor ``{file_path, file_hash, file_size, filename}``
 (``/root/reference/dags/dag.py:421-424``, ``:452-470``).
+
+A document is its raw bytes: the ``text`` scan passes them on unchecked,
+and only the pipeline's encode UDF decodes them (``plans/pipeline.py``).
 
 Spark-first design: the directory listing, extension filter and whole-file
 read are one distributed ``text`` scan with ``wholetext`` +
@@ -39,8 +42,8 @@ def read_text_dir(
     """Whole-file read of a directory into the canonical documents schema:
     ``path, filename, text, file_hash, file_size``.
 
-    ``file_hash`` is md5 of the UTF-8 bytes (ref ``dags/dag.py:456``) and
-    ``file_size`` the byte length (ref ``:457``).
+    ``file_hash`` is md5 of the file's raw bytes (ref ``dags/dag.py:456``)
+    and ``file_size`` their length (ref ``:457``).
     """
     return with_descriptor(text_files(spark.read, input_dir, glob))
 
@@ -72,12 +75,12 @@ def bootstrap_sample(input_dir: str, filename: str = "sample_input.txt"):
 
 
 def with_descriptor(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Attach the reference's file-descriptor columns to any text DataFrame."""
-    utf8 = F.encode(F.col(text_col), "UTF-8")
+    """Attach the reference's file-descriptor columns to any text DataFrame.
+    A string column hashes as its bytes, undecoded: the bytes Spark read."""
     return df.select(
         "*",
         F.element_at(F.split(F.col("path"), "/"), -1).alias("filename"),
-        F.md5(utf8).alias("file_hash"),
+        F.md5(F.col(text_col)).alias("file_hash"),
         F.octet_length(F.col(text_col)).cast("long").alias("file_size"),
     )
 
@@ -95,15 +98,11 @@ def documents_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spread_small_scan(
         spark, spark.read.parquet(f"{sf_dir}/documents.parquet")
     )
-    return docs.select(
+    return with_descriptor(docs.select(
         F.concat(F.lit("doc://"), F.col("doc_id").cast("string")).alias("path"),
         "text",
         "doc_id",
         "lang",
         "source",
         "n_chars",
-    ).transform(lambda d: d.select(
-        "*",
-        F.md5(F.encode("text", "UTF-8")).alias("file_hash"),
-        F.octet_length("text").cast("long").alias("file_size"),
-    ))
+    )).drop("filename")

@@ -57,6 +57,9 @@ def test_trit_edge_cases():
     assert bytes_to_trits(b"\x00\x00") == [0]
     assert trits_to_bytes([0], 1) == b"\x00"
     assert trits_to_bytes([0], 3) == b"\x00\x00\x00"
+    # a zero width is exactly zero bytes, whatever the value
+    assert trits_to_bytes([1, 2], 0) == b""
+    assert dna_to_bytes("CG", 0) == b""
     assert trits_to_dna([]) == ""
     assert dna_to_trits("") == []
 

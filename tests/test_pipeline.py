@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import DataFrameWriter
 
 from airflow_pipeline_text_processing_spark.plans.pipeline import (
+    NOT_UTF8,
     PipelineConfig,
     chunk_table,
     encode_documents,
@@ -17,7 +18,10 @@ from airflow_pipeline_text_processing_spark.plans.pipeline import (
     run_pipeline,
     validate_chunk_table,
 )
-from airflow_pipeline_text_processing_spark.sources.text_dir import with_descriptor
+from airflow_pipeline_text_processing_spark.sources.text_dir import (
+    text_files,
+    with_descriptor,
+)
 from airflow_pipeline_text_processing_spark.sources.tracking import TrackingTable
 from airflow_pipeline_text_processing_spark.streaming.ingest import process_batch
 
@@ -70,6 +74,28 @@ def test_chunk_table_and_declarative_reassembly(spark):
 # appending a base multiplies the decoded bignum by 3 -- a real value
 # corruption (prepending T's would only add leading zeros)
 CORRUPT_SUFFIX = "A"
+
+MULTIBYTE = ["a数据b", "plain ascii text", "éàçùñ déjà vu 数据 🙂 " * 3, "x🙂"]
+
+
+@pytest.mark.parametrize("chunk_size", [1, 2, 3, 1000])
+def test_chunk_table_reassembly_splits_code_points(spark, chunk_size):
+    """The chunk-table regroup joins each document's chunk bytes before it
+    decodes UTF-8, so chunks that cut a code point (every multibyte
+    character at sizes 1-3) rebuild the original text; one altered chunk
+    nulls its own document and no other."""
+    chunks = chunk_table(encode_documents(_docs(spark, MULTIBYTE), chunk_size=chunk_size))
+    want = {hashlib.md5(t.encode()).hexdigest(): t for t in MULTIBYTE}
+    rebuilt = reassemble_from_chunk_table(chunks).collect()
+    assert {r.file_hash: r.reconstructed_text for r in rebuilt} == want
+
+    victim = hashlib.md5(MULTIBYTE[0].encode()).hexdigest()
+    hit = (F.col("file_hash") == victim) & (F.col("index") == 0)
+    altered = chunks.withColumn("dna_sequence", F.when(
+        hit, F.concat("dna_sequence", F.lit(CORRUPT_SUFFIX))
+    ).otherwise(F.col("dna_sequence")))
+    rebuilt = reassemble_from_chunk_table(altered).collect()
+    assert {r.file_hash: r.reconstructed_text for r in rebuilt} == dict(want, **{victim: None})
 
 
 def test_corrupted_chunk_fails_document(spark):
@@ -128,19 +154,22 @@ def test_fused_encode_matches_encode_then_decode(spark):
 
 def test_tracking_columns_record_failed_document(spark):
     """One projection builds the tracking rows of every tick: a failed
-    document carries the checksum-mismatch reason, and ``output_file`` is
-    whatever the caller passes (a NULL stays NULL; the tick passes the
-    processed-sink path, on the batch run and the stream alike)."""
+    document carries ``encode_documents``' reason (here a round trip that
+    does not reproduce the recorded hash: the checksum mismatch), and
+    ``output_file`` is whatever the caller passes (a NULL stays NULL; the
+    tick passes the processed-sink path, on the batch run and the stream
+    alike)."""
     from airflow_pipeline_text_processing_spark.plans.pipeline import (
         CHECKSUM_MISMATCH,
         tracking_columns,
     )
 
-    encoded = spark.createDataFrame(
-        [("h_bad", "file:///in/bad.txt", 7, "failed"),
-         ("h_ok", "file:///in/ok.txt", 5, "completed")],
-        "file_hash string, path string, file_size long, status string",
-    )
+    h_ok = hashlib.md5(b"ok body").hexdigest()
+    encoded = encode_documents(spark.createDataFrame(
+        [("h_bad", "file:///in/bad.txt", 7, "bad body"),
+         (h_ok, "file:///in/ok.txt", 5, "ok body")],
+        "file_hash string, path string, file_size long, text string",
+    ))
     stream_rows = {
         r.file_hash: r
         for r in encoded.select(*tracking_columns(F.lit(None))).collect()
@@ -149,7 +178,8 @@ def test_tracking_columns_record_failed_document(spark):
     assert stream_rows["h_bad"].status == "failed"
     assert stream_rows["h_bad"].file_path == "file:///in/bad.txt"
     assert stream_rows["h_bad"].output_file is None
-    assert stream_rows["h_ok"].error_message is None
+    assert stream_rows[h_ok].status == "completed"
+    assert stream_rows[h_ok].error_message is None
     batch = encoded.select(*tracking_columns(F.concat(F.lit("/out/"), F.col("path"))))
     assert batch.columns == [
         "file_hash", "file_path", "file_size", "processed_at", "status",
@@ -413,6 +443,54 @@ def test_empty_file_counts_as_skipped(spark, tmp_path):
     res = run_pipeline(spark, cfg)
     assert res == {"processed": 2, "failed": 0, "skipped": 1, "status": "success"}
     assert spark.read.parquet(cfg.tracking_path).count() == 2
+
+
+RAW_FILES = {
+    "good.txt": b"good document",
+    "bom.txt": b"\xef\xbb\xbfhello bom",
+    "bad.txt": b"hello \xff\xfe world",
+    "empty.txt": b"",
+}
+
+
+def test_undecodable_file_fails_alone_in_batch_and_stream(spark, tmp_path):
+    """A file that is not UTF-8 fails alone: tracking records it as failed
+    under the md5 of its raw bytes with the decode reason, it is the DLQ's
+    one row, and the tick completes for every other file.  The stream's
+    micro-batch over the same files gives the same tracking rows."""
+    cfg = _tick_cfg(tmp_path, {})
+    for name, raw in RAW_FILES.items():
+        (tmp_path / "input" / name).write_bytes(raw)
+    res = run_pipeline(spark, cfg)
+    assert res == {"processed": 2, "failed": 1, "skipped": 1, "status": "success"}
+
+    def tracked(c):
+        return sorted(
+            (r.file_hash, os.path.basename(r.file_path), r.file_size, r.status,
+             r.error_message)
+            for r in spark.read.parquet(c.tracking_path).collect()
+        )
+
+    want = sorted(
+        (hashlib.md5(raw).hexdigest(), name, len(raw),
+         "failed" if name == "bad.txt" else "completed",
+         NOT_UTF8 if name == "bad.txt" else None)
+        for name, raw in RAW_FILES.items() if raw
+    )
+    assert tracked(cfg) == want
+    dlq = spark.read.json(cfg.dlq_dir).collect()
+    assert [(os.path.basename(r.original_file), r.error_message) for r in dlq] == [
+        ("bad.txt", NOT_UTF8)
+    ]
+
+    stream_cfg = PipelineConfig(
+        input_dir=cfg.input_dir,
+        output_dir=str(tmp_path / "stream_out"),
+        tracking_path=str(tmp_path / "stream_tracking"),
+        dlq_dir=str(tmp_path / "stream_dlq"),
+    )
+    process_batch(spark, stream_cfg, text_files(spark.read, cfg.input_dir), batch_id=0)
+    assert tracked(stream_cfg) == want
 
 
 def test_unreachable_tracking_path_fails_before_any_sink(spark, tmp_path):

@@ -376,6 +376,8 @@ def test_binary_trits_reference_semantics():
     # pins the reference's exact dead-code semantics
     # (dna_encoding.py:78-130): big-endian int, zero -> [0], zfill pads
     # but never truncates
+    import pytest
+
     from airflow_pipeline_text_processing_spark.codec.goldman import (
         binary_to_trits,
         trits_to_binary,
@@ -389,6 +391,12 @@ def test_binary_trits_reference_semantics():
     assert trits_to_binary([1, 1, 2, 0]) == "101010"
     # target shorter than the minimal rendering: returned unchanged
     assert trits_to_binary([1, 1, 2, 0], 3) == "101010"
+    # a negative digit is rejected; digit 3 (dna_to_trits after an
+    # unknown base, as in "XT" -> [0, 3]) is accepted: 1*3 + 3 = 6
+    for bad in ([-1, 2], [1, -1]):
+        with pytest.raises(ValueError):
+            trits_to_binary(bad)
+    assert trits_to_binary([1, 3]) == "110"
 
 
 def test_binary_trits_roundtrip_property():

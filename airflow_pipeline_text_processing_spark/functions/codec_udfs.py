@@ -230,7 +230,9 @@ def make_chunk_text_udtf():
 
     Emits the text piece per chunk (not the DNA -- that is what
     ``encode_chunks`` fuses); useful for any byte-budget splitting, not
-    just the codec path."""
+    just the codec path.  A budget smaller than a character's UTF-8
+    width cuts it into pieces that are not UTF-8 on their own: such a
+    piece has a NULL ``chunk_text`` and keeps its id, index and size."""
     from pyspark.sql.functions import udtf
 
     @udtf(returnType="chunk_id string, index int, chunk_text string, n_bytes int")
@@ -239,7 +241,11 @@ def make_chunk_text_udtf():
             if text is None:
                 return
             for i, piece in enumerate(chunker.chunk_utf8_bytes(text, chunk_size)):
-                yield (f"dna_chunk_{i:03d}", i, piece.decode("utf-8"), len(piece))
+                try:
+                    piece_text = piece.decode("utf-8")
+                except UnicodeDecodeError:
+                    piece_text = None
+                yield (f"dna_chunk_{i:03d}", i, piece_text, len(piece))
 
     return ChunkText
 

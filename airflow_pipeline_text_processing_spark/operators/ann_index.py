@@ -252,7 +252,7 @@ def _heal_crashed_rebuild(spark: SparkSession, path: str) -> None:
     both.)"""
     import shutil
 
-    from ..sources.manifest import read_manifest, repoint_files
+    from ..sources.manifest import _read_state, repoint_files
 
     base = path.rstrip("/")
     tmp, old = base + ".rebuild", base + ".old"
@@ -265,8 +265,7 @@ def _heal_crashed_rebuild(spark: SparkSession, path: str) -> None:
             os.rename(tmp, base)
         if os.path.exists(base):
             rows_path = os.path.join(base, _ROWS)
-            man = read_manifest(spark, rows_path).collect()
-            if any(tmp + "/" in r.file for r in man):
+            if any(tmp + "/" in r["file"] for r in _read_state(rows_path)[1]):
                 # crashed before the repoint commit: replay it
                 repoint_files(spark, rows_path, tmp, base)
         if os.path.exists(old) and os.path.exists(base):

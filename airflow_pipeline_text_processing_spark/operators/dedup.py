@@ -781,8 +781,10 @@ def connected_components(
     without a materialization barrier the second alternation re-derives
     the first's plan ~4x (edges is referenced four times per star round),
     1.6 s -> 4.4 s at sf0.1 (PROFILE_r12)."""
-    # every checkpoint is LAZY: the star-forest test right after it
-    # materializes it in the same action, so a round costs one action.
+    # every checkpoint is LAZY, yet under AQE the call itself runs the
+    # star round's shuffle stages while it plans its input (7 jobs per
+    # round on two chains of 12 and 3 nodes); the star-forest test after it
+    # reads the checkpoint in 2 more.
     # Duplicate pairs need no distinct(): a star round ends in DISTINCT.  The
     # filter also drops NULL ids.
     edges = (

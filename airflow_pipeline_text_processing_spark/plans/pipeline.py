@@ -152,10 +152,16 @@ def validate_chunk_table(chunks: DataFrame, repair: bool = False) -> DataFrame:
     ``decode_with_error_correction`` at ``plugins/utils/dna_encoding.py:
     250-268``, made live here as an opt-in branch): chunks whose raw decode
     fails the checksum get a Reed-Solomon correction pass over
-    decoded_bytes || parity_tail -- up to nsym/2 corrupted bytes per chunk
-    are recoverable.  Adds ``repaired_ok`` (repair succeeded) and
-    ``data_bytes`` (best-known payload: raw when clean, corrected when
-    repaired, raw-decode otherwise) columns."""
+    decoded_bytes || error_correction_code.  The stored code is the
+    reference's artifact, the tail of the interleaved ``rs_encode`` stream
+    past the payload, and that tail is the payload's parity only when the
+    payload fits one RS block (at most 255 - nsym = 245 bytes).  So up to
+    nsym/2 corrupted bytes are recoverable in a chunk of at most 245 bytes;
+    a longer chunk, every full chunk at the default 1000-byte size
+    included, is detected but not repaired (``rs_repair`` yields NULL, or
+    a payload that fails the checksum).  Adds ``repaired_ok`` (repair
+    succeeded) and ``data_bytes`` (best-known payload: raw when clean,
+    corrected when repaired, raw-decode otherwise) columns."""
     decoded = dna_decode(F.col("dna_sequence"), F.col("original_length_bytes"))
     if not repair:
         return chunks.withColumn("valid", F.md5(decoded) == F.col("checksum"))
@@ -286,12 +292,14 @@ def run_tick(
             ), f"{out}/processed", "json", key)
             _write_sink(chunk_table(ok), f"{out}/chunks", "parquet", key)
         if n > n_ok:  # DLQ (ops 11, 50): failed docs with error metadata
+            # the file's raw bytes as binary, which JSON stores as base64:
+            # a string column would turn invalid UTF-8 into U+FFFD
             _write_sink(encoded.filter(~completed).select(
                 F.col("path").alias("original_file"),
                 "error_message",
                 F.current_timestamp().alias("timestamp"),
                 F.lit(config.run_id).alias("run_id"),
-                "text",
+                F.col("text").cast("binary").alias("content"),
             ), config.dlq_dir, "json", key)
         # report and tracking upsert (ops 8-10); tracking is the commit
         _write_sink(document_report(encoded, config), f"{out}/reports", "json", key)

@@ -3,7 +3,7 @@ pruning, copy-on-write MERGE (upsert), snapshot reads (time travel),
 and vacuum -- on plain parquet.
 
 This is the table-format layer (what Delta/Iceberg provide) rebuilt on
-primitives available in this container: a ``_manifest`` parquet sidecar
+primitives available in this container: a JSON manifest (``_log``)
 records, for every data file, its row count, the min/max of the cluster
 key, and its [added_epoch, removed_epoch) lifetime.  Reads prune at
 FILE granularity before Spark ever opens a footer; MERGE rewrites only
@@ -18,10 +18,10 @@ every mutation commits by atomically claiming the next slot in a
 ``_log`` directory of JSON manifest versions (``O_CREAT|O_EXCL``
 put-if-absent -- the Delta-protocol primitive), so racing writers get
 exactly one winner per version; the loser raises
-:class:`ManifestConflict` (``merge_upsert`` retries against the
-winner's state automatically).  The parquet ``_manifest`` dir is a read
-CACHE of the newest log entry, self-healed by every reader, so a crash
-between log append and cache refresh loses nothing.
+:class:`ManifestConflict`, and every mutator retries against the
+winner's state (``_retry_conflicts``).  The newest log entry IS the
+table state: readers load it on the driver (``_read_state``), so there
+is no second copy to heal and no Spark job to plan a read.
 
 Honest caveats, by design not omission:
 * The put-if-absent primitive is local-filesystem ``O_EXCL`` (plus
@@ -45,7 +45,7 @@ import logging
 import os
 import shutil
 import uuid
-from typing import List, Optional, Tuple
+from typing import List, Optional, Set, Tuple
 
 _LOGGER = logging.getLogger(__name__)
 
@@ -53,9 +53,8 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 _DATA = "data"
-_MANIFEST = "_manifest"
+_MANIFEST = "_manifest"  # pre-r12 tables: the parquet manifest, no log
 _LOG = "_log"
-_SEQ_MARKER = "_seq"  # '_'-prefixed: invisible to Spark's parquet reader
 LIVE = -1  # removed_epoch sentinel: file is current (parquet-friendly non-null)
 _MERGE_RETRIES = 5  # optimistic-concurrency attempts before giving up
 
@@ -69,23 +68,67 @@ def _log_dir(path: str) -> str:
     return os.path.join(path, _LOG)
 
 
-def _latest_log(path: str) -> Tuple[int, Optional[str]]:
-    """Newest committed ``(seq, log file path)``; ``(-1, None)`` for a
-    table from before the commit log existed (or none yet)."""
+def _claimed_slots(path: str) -> List[Tuple[int, str]]:
+    """Every claimed log slot as ``(seq, log file path)``, newest first;
+    empty for a table from before the commit log existed."""
     d = _log_dir(path)
     if not os.path.isdir(d):
-        return -1, None
-    best = -1
-    best_name = None
+        return []
+    slots = []
     for name in os.listdir(d):
         if name.endswith(".json"):
             try:
-                seq = int(name[: -len(".json")])
+                slots.append((int(name[: -len(".json")]), os.path.join(d, name)))
             except ValueError:
                 continue
-            if seq > best:
-                best, best_name = seq, name
-    return best, (os.path.join(d, best_name) if best_name else None)
+    return sorted(slots, reverse=True)
+
+
+def _latest_log(path: str) -> Tuple[int, Optional[str]]:
+    """Newest committed ``(seq, log file path)``; ``(-1, None)`` for a
+    table from before the commit log existed (or none yet)."""
+    slots = _claimed_slots(path)
+    return slots[0] if slots else (-1, None)
+
+
+def _read_state(path: str) -> Tuple[int, List[dict]]:
+    """The committed table state, read on the driver: ``(top claimed
+    seq, manifest rows of the newest parsable log entry)``.  A mutator
+    commits its derived rows at ``seq + 1``.  A table from before the
+    log existed reads its parquet ``_manifest`` at seq -1, so its first
+    mutation starts the log at slot 0.
+
+    Unparsable log entries are SKIPPED, not fatal: the r13 commit path
+    (tmp + fsync + link) can never produce one, but a pre-r13 writer
+    crash between O_EXCL-claim and write could leave a claimed slot
+    with no content.  Such a slot is permanently dead -- nobody can
+    ever fill it (the claim and the content are now one atomic link) --
+    so the state is the newest entry that parses, and the seq stays the
+    TOP claimed one, so the next commit lands above the dead slot."""
+    slots = _claimed_slots(path)
+    if not slots:
+        import pyarrow.parquet as pq
+
+        return -1, pq.read_table(os.path.join(path, _MANIFEST)).to_pylist()
+    for entry_seq, log_file in slots:
+        try:
+            with open(log_file) as fh:
+                return slots[0][0], json.load(fh)["rows"]
+        except (OSError, ValueError, KeyError):
+            # dead slot (pre-r13 truncated claim): skip -- but say so,
+            # or a masked dead slot is undiagnosable (ADVICE r13)
+            _LOGGER.warning(
+                "manifest %s: log slot %d is unparsable (pre-r13 "
+                "truncated claim); reading the next older entry",
+                path,
+                entry_seq,
+            )
+    # EVERY claimed entry was unparsable: the table's history is gone.
+    # Fail loudly rather than hand readers some other state as current.
+    raise ValueError(
+        f"manifest {path}: all {len(slots)} commit-log entries are "
+        "unparsable; cannot read the table state from the log"
+    )
 
 
 def _build_stats(
@@ -117,123 +160,6 @@ def _build_stats(
     return out
 
 
-_CACHE_FILE = "part-00000.parquet"
-_SEQ_META = b"spark_graft_commit_seq"
-
-
-def _refresh_cache(path: str, rows: List[dict], seq: int) -> None:
-    """(Re)write the parquet manifest CACHE from committed rows.  The
-    cache is what readers scan (``read_manifest``); the commit log is
-    authoritative.  The cache is ONE parquet file swapped in by ONE
-    atomic rename, with the commit seq embedded in the parquet footer
-    metadata -- so concurrent refreshers (two committed writers, or a
-    writer and a healing reader) can interleave arbitrarily and a
-    reader still always sees a complete file whose content and seq
-    agree; a stale last-rename-wins winner is detected and re-healed
-    by the next ``_sync_cache``.  Any writer may redo this
-    idempotently."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    man_dir = os.path.join(path, _MANIFEST)
-    cols = [
-        "file", "n_rows", "k_min", "k_max",
-        "added_epoch", "removed_epoch", "cols",
-    ]
-    # optional secondary-column stats (written by optimize_zorder); rows
-    # from before the rewrite carry None and readers treat them as
-    # "no stats -> keep conservatively"
-    cols += [
-        c for c in ("k2_col", "k2_min", "k2_max")
-        if any(c in r and r[c] is not None for r in rows)
-    ]
-    # column-wise dicts; pyarrow infers types from values, so
-    # non-integer cluster keys work too
-    table = pa.table({c: [r.get(c) for r in rows] for c in cols})
-    table = table.replace_schema_metadata({_SEQ_META: str(seq).encode()})
-    os.makedirs(man_dir, exist_ok=True)
-    # dot-prefixed tmp name: hidden from Spark's file listing mid-write
-    tmp = os.path.join(man_dir, f".{_CACHE_FILE}.{uuid.uuid4().hex[:8]}")
-    pq.write_table(table, tmp)
-    os.rename(tmp, os.path.join(man_dir, _CACHE_FILE))  # atomic replace
-    # drop a pre-r12 layout's separate seq marker so it cannot shadow
-    # the footer seq
-    try:
-        os.unlink(os.path.join(man_dir, _SEQ_MARKER))
-    except OSError:
-        pass
-
-
-def _cache_seq(path: str) -> int:
-    import pyarrow.parquet as pq
-
-    cache = os.path.join(path, _MANIFEST, _CACHE_FILE)
-    try:
-        meta = pq.read_schema(cache).metadata or {}
-        if _SEQ_META in meta:
-            return int(meta[_SEQ_META])
-    except (OSError, ValueError):
-        return -1
-    # pre-r12 cache layouts: a separate marker file, else unknown
-    try:
-        with open(os.path.join(path, _MANIFEST, _SEQ_MARKER)) as fh:
-            return int(fh.read().strip())
-    except (OSError, ValueError):
-        return -1
-
-
-def _sync_cache(path: str) -> None:
-    """Self-heal the parquet cache from the commit log: a crash between
-    the log append and the cache refresh (or a racing stale refresh)
-    leaves the cache behind; every reader repairs it before trusting
-    it.  Tables from before the log existed (no ``_log`` dir) read the
-    cache as-is.
-
-    Unparsable log entries are SKIPPED, not fatal: the r13 commit path
-    (tmp + fsync + link) can never produce one, but a pre-r13 writer
-    crash between O_EXCL-claim and write could leave a claimed slot
-    with no content.  Such a slot is permanently dead -- nobody can
-    ever fill it (the claim and the content are now one atomic link) --
-    so readers heal from the newest entry that parses and stamp the
-    cache with the TOP claimed seq, making the skip a one-time cost
-    rather than a per-read re-heal."""
-    seq, log_file = _latest_log(path)
-    if log_file is None or _cache_seq(path) >= seq:
-        return
-    d = _log_dir(path)
-    claimed = []
-    for name in os.listdir(d):
-        if name.endswith(".json"):
-            try:
-                claimed.append((int(name[: -len(".json")]), name))
-            except ValueError:
-                continue
-    for entry_seq, name in sorted(claimed, reverse=True):
-        try:
-            with open(os.path.join(d, name)) as fh:
-                rows = json.load(fh)["rows"]
-        except (OSError, ValueError, KeyError):
-            # dead slot (pre-r13 truncated claim): skip -- but say so,
-            # or a masked dead slot is undiagnosable (ADVICE r13)
-            _LOGGER.warning(
-                "manifest %s: log slot %d is unparsable (pre-r13 "
-                "truncated claim); healing from the next older entry",
-                path,
-                entry_seq,
-            )
-            continue
-        _refresh_cache(path, rows, seq)
-        return
-    # EVERY claimed entry was unparsable: the table's history is gone
-    # and the cache is stale with no way to repair it.  Silently
-    # returning here would hand readers the stale cache as if it were
-    # current (ADVICE r13) -- fail loudly instead.
-    raise ValueError(
-        f"manifest {path}: all {len(claimed)} commit-log entries are "
-        "unparsable; cannot heal the read cache from the log"
-    )
-
-
 def _write_manifest(
     spark: SparkSession,
     path: str,
@@ -242,21 +168,19 @@ def _write_manifest(
 ) -> None:
     """COMMIT a new manifest version: atomically claim log slot
     ``commit_seq`` (``O_CREAT|O_EXCL`` put-if-absent on
-    ``_log/{seq}.json`` -- the Delta-protocol primitive), then refresh
-    the parquet read cache.  Raises :class:`ManifestConflict` when the
-    slot is taken: a concurrent writer committed against the same base
-    state, and this writer's derived manifest is stale -- re-read and
-    retry (``merge_upsert`` does).  A crash after the log append is
-    safe: the log entry IS the commit; the next reader re-derives the
-    cache from it (``_sync_cache``).
+    ``_log/{seq}.json`` -- the Delta-protocol primitive).  Raises
+    :class:`ManifestConflict` when the slot is taken: a concurrent
+    writer committed against the same base state, and this writer's
+    derived manifest is stale -- re-read and retry
+    (``_retry_conflicts`` does).  The log entry IS the commit: readers
+    load it directly, so there is nothing to refresh after it.
 
-    The commit is DRIVER-SIDE (json + pyarrow): the manifest is
-    file-count-sized metadata (a real table format's commit log), and a
-    Spark job here costs ~15 task launches plus a Python-worker
-    round-trip per commit -- measured at seconds of pure overhead on
-    the MERGE bench query.  Readers still go through
-    ``spark.read.parquet`` unchanged.  Manifest values must be
-    JSON-representable (int/str/float cluster keys)."""
+    The commit is DRIVER-SIDE (json): the manifest is file-count-sized
+    metadata (a real table format's commit log), and a Spark job here
+    costs ~15 task launches plus a Python-worker round-trip per commit
+    -- measured at seconds of pure overhead on the MERGE bench query.
+    Manifest values must be JSON-representable (int/str/float cluster
+    keys)."""
     if commit_seq is None:
         commit_seq = _latest_log(path)[0] + 1
     log_dir = _log_dir(path)
@@ -268,9 +192,9 @@ def _write_manifest(
     # it), fsync, then hard-link it to the final name.  link(2) fails
     # with EEXIST when the slot is claimed -- the same put-if-absent
     # primitive as O_EXCL -- but unlike open+write the entry can never
-    # be observed empty/partial by a concurrent _sync_cache, and a
-    # writer crash before the link leaves only an invisible temp file,
-    # never a claimed-but-truncated slot.
+    # be observed empty/partial by a concurrent reader, and a writer
+    # crash before the link leaves only an invisible temp file, never a
+    # claimed-but-truncated slot.
     tmp = os.path.join(log_dir, f".{commit_seq:020d}.{uuid.uuid4().hex[:8]}.tmp")
     fd = os.open(tmp, os.O_WRONLY | os.O_CREAT | os.O_EXCL, 0o644)
     try:
@@ -289,17 +213,108 @@ def _write_manifest(
             os.unlink(tmp)
         except OSError:
             pass
-    _refresh_cache(path, rows, commit_seq)
+
+
+def _retry_conflicts(attempt):
+    """Run one optimistic-commit ``attempt`` up to ``_MERGE_RETRIES``
+    times: the one retry loop of every mutator.  Each attempt re-reads
+    the table state (``_read_state``) and derives its plan from it, so
+    retrying after :class:`ManifestConflict` rebuilds against the
+    winning writer's manifest."""
+    last_conflict: Optional[ManifestConflict] = None
+    for _try in range(_MERGE_RETRIES):
+        try:
+            return attempt()
+        except ManifestConflict as exc:
+            last_conflict = exc
+    raise last_conflict
+
+
+def _rewrite(
+    spark: SparkSession,
+    path: str,
+    seq: int,
+    rows: List[dict],
+    replaced: Set[str],
+    new_df: DataFrame,
+    prefix: str,
+    key_col: str,
+    key2_col: Optional[str] = None,
+    bucket_col: Optional[str] = None,
+) -> int:
+    """The copy-on-write step of MERGE and both OPTIMIZEs: stage
+    ``new_df``, move its parquet files into ``data/`` as
+    ``<prefix>-<epoch>-<token>-<n>.parquet``, tombstone the ``replaced``
+    files at the new epoch, stamp stats rows for the new files, and
+    commit on top of state ``(seq, rows)``.  Returns the number of files
+    written.  With ``bucket_col`` the staging write is partitioned by
+    that integer column, and its ``<bucket_col>=<n>`` directories are
+    moved in bucket order.
+
+    A lost commit race unlinks the new files -- they never became
+    visible, reads are manifest-driven -- and re-raises
+    :class:`ManifestConflict` for ``_retry_conflicts``."""
+    epoch = 1 + max(r["added_epoch"] for r in rows)
+    # unique per attempt: uncommitted files from a lost race must
+    # never collide with the winner's (or a retry's) names
+    token = uuid.uuid4().hex[:8]
+    staging = os.path.join(path, f"_staging_{token}")
+    writer = new_df.write
+    if bucket_col is not None:
+        writer = writer.partitionBy(bucket_col)
+    writer.parquet(staging)
+    dirs = [staging]
+    if bucket_col is not None:
+        dirs = [
+            os.path.join(staging, d)
+            for d in sorted(
+                (d for d in os.listdir(staging) if d.startswith(bucket_col + "=")),
+                key=lambda d: int(d.split("=", 1)[1]),
+            )
+        ]
+    moved = []
+    for d in dirs:
+        for name in sorted(os.listdir(d)):
+            if name.endswith(".parquet"):
+                n = len(moved)
+                dst = os.path.join(
+                    path, _DATA, f"{prefix}-{epoch:05d}-{token}-{n:05d}.parquet"
+                )
+                os.rename(os.path.join(d, name), dst)
+                moved.append(dst)
+    shutil.rmtree(staging)
+
+    out_rows = [
+        dict(r, removed_epoch=epoch)
+        if r["file"] in replaced and r["removed_epoch"] == LIVE
+        else r
+        for r in rows
+    ]
+    cols = ",".join(c for c in new_df.columns if c != bucket_col)
+    for d in _build_stats(spark, moved, key_col, key2_col):
+        d.update(added_epoch=epoch, removed_epoch=LIVE, cols=cols)
+        out_rows.append(d)
+    try:
+        _write_manifest(spark, path, out_rows, commit_seq=seq + 1)
+    except ManifestConflict:
+        for f in moved:
+            try:
+                os.unlink(f)
+            except OSError:
+                pass
+        raise
+    return len(moved)
 
 
 def write_manifest_table(
     df: DataFrame, path: str, key_col: str, n_files: int
 ) -> None:
     """(Re)write ``df`` as ``n_files`` range-partitioned parquet files
-    under ``path/data`` plus the ``path/_manifest`` stats sidecar
-    (epoch 0).  OVERWRITE semantics: an existing table at ``path`` --
-    including its commit log -- is removed first, so the new table
-    starts a fresh history (CREATE OR REPLACE, not an append)."""
+    under ``path/data`` plus the manifest (per-file stats, epoch 0) as
+    the first commit-log entry.  OVERWRITE semantics: an existing table
+    at ``path`` -- including its commit log -- is removed first, so the
+    new table starts a fresh history (CREATE OR REPLACE, not an
+    append)."""
     if os.path.exists(path):
         shutil.rmtree(path)
     spark = df.sparkSession
@@ -323,34 +338,53 @@ def write_manifest_table(
 
 
 def read_manifest(spark: SparkSession, path: str) -> DataFrame:
-    _sync_cache(path)  # heal a cache left behind by a crashed commit
-    return spark.read.parquet(os.path.join(path, _MANIFEST))
+    """The committed manifest, one row per data file, as a DataFrame
+    built on the driver from ``_read_state``'s rows (no Spark job)."""
+    import pyarrow as pa
+
+    rows = _read_state(path)[1]
+    cols = [
+        "file", "n_rows", "k_min", "k_max",
+        "added_epoch", "removed_epoch", "cols",
+    ]
+    # optional secondary-column stats (written by optimize_zorder); rows
+    # from before the rewrite carry None and readers treat them as
+    # "no stats -> keep conservatively"
+    cols += [
+        c for c in ("k2_col", "k2_min", "k2_max")
+        if any(r.get(c) is not None for r in rows)
+    ]
+    # column-wise lists; pyarrow infers types from values, so
+    # non-integer cluster keys work too
+    return spark.createDataFrame(
+        pa.table({c: [r.get(c) for r in rows] for c in cols})
+    )
 
 
 def current_epoch(spark: SparkSession, path: str) -> int:
-    return read_manifest(spark, path).agg(
-        F.max("added_epoch")
-    ).collect()[0][0]
+    return max((r["added_epoch"] for r in _read_state(path)[1]), default=None)
 
 
-def _files_at(man_rows, epoch: Optional[int]) -> List[str]:
+def _files_at(man_rows: List[dict], epoch: Optional[int]) -> List[str]:
     """Files visible at ``epoch`` (None = live view)."""
     if epoch is None:
-        return [r.file for r in man_rows if r.removed_epoch == LIVE]
+        return [r["file"] for r in man_rows if r["removed_epoch"] == LIVE]
     return [
-        r.file
+        r["file"]
         for r in man_rows
-        if r.added_epoch <= epoch
-        and (r.removed_epoch == LIVE or r.removed_epoch > epoch)
+        if r["added_epoch"] <= epoch
+        and (r["removed_epoch"] == LIVE or r["removed_epoch"] > epoch)
     ]
 
 
-def _read_files(spark: SparkSession, man_rows, files: List[str]) -> DataFrame:
+def _read_files(
+    spark: SparkSession, man_rows: List[dict], files: List[str]
+) -> DataFrame:
     """Open ``files`` with mergeSchema ONLY when their recorded column
     lists actually differ: the merged-footer pass is a distributed job
     over every footer, a 4x overhead measured on the MERGE bench query
     -- paid here exactly when schema evolution makes it necessary."""
-    by_file = {r.file: getattr(r, "cols", None) for r in man_rows}
+    by_file = {r["file"]: r.get("cols") for r in man_rows}
     schemas = {by_file.get(f) for f in files}
     reader = spark.read
     if len(schemas) > 1 or None in schemas:
@@ -362,7 +396,7 @@ def read_live(spark: SparkSession, path: str) -> DataFrame:
     """The current table contents: the union of live manifest files
     (NEVER a raw directory read -- tombstoned files still sit on disk
     until vacuum)."""
-    man_rows = read_manifest(spark, path).collect()
+    man_rows = _read_state(path)[1]
     # files written before a schema evolution lack the new columns; the
     # (conditionally) merged schema surfaces them as NULL
     return _read_files(spark, man_rows, _files_at(man_rows, None))
@@ -372,7 +406,7 @@ def read_snapshot(spark: SparkSession, path: str, epoch: int) -> DataFrame:
     """Time travel: the table exactly as of ``epoch`` (0 = initial
     write, k = after the k-th merge), reconstructed purely from file
     lifetimes -- valid until ``vacuum`` reclaims the tombstones."""
-    man_rows = read_manifest(spark, path).collect()
+    man_rows = _read_state(path)[1]
     return _read_files(spark, man_rows, _files_at(man_rows, epoch))
 
 
@@ -388,10 +422,10 @@ def read_pruned(
     the live view or a snapshot), with the residual row filter applied
     on top (pruning is file-level).  Returns ``(df, files_read,
     files_total)`` so callers -- and tests -- can see the skipping."""
-    man_rows = read_manifest(spark, path).collect()  # file-count-sized
+    man_rows = _read_state(path)[1]  # file-count-sized
     vis = set(_files_at(man_rows, epoch))  # once -- not once per row
-    visible = [r for r in man_rows if r.file in vis]
-    keep = [r.file for r in visible if r.k_max >= lo and r.k_min <= hi]
+    visible = [r for r in man_rows if r["file"] in vis]
+    keep = [r["file"] for r in visible if r["k_max"] >= lo and r["k_min"] <= hi]
     total = len(visible)
     if not keep:
         empty = read_live(spark, path).limit(0)
@@ -417,18 +451,12 @@ def merge_upsert(
     keys (keyed shuffle bounded by touched-file volume, not table
     volume); untouched files are never opened.
     """
-    data_dir = os.path.join(path, _DATA)
     upd = updates.localCheckpoint(eager=True)  # stable across all uses
     has_updates = upd.limit(1).count() != 0
 
-    last_conflict: Optional[ManifestConflict] = None
-    for _attempt in range(_MERGE_RETRIES):
-        # re-read table state each attempt: a lost optimistic commit
-        # means the plan below was derived from a stale manifest
-        _sync_cache(path)
-        base_seq = _latest_log(path)[0]
-        man_rows = read_manifest(spark, path).collect()
-        live = [r for r in man_rows if r.removed_epoch == LIVE]
+    def attempt() -> Tuple[int, int]:
+        seq, man_rows = _read_state(path)
+        live = [r for r in man_rows if r["removed_epoch"] == LIVE]
         if not has_updates:
             return 0, len(live)
 
@@ -437,7 +465,7 @@ def merge_upsert(
         # DataFrame type inference cannot handle
         live_df = spark.createDataFrame(
             [
-                {"file": r.file, "k_min": r.k_min, "k_max": r.k_max}
+                {"file": r["file"], "k_min": r["k_min"], "k_max": r["k_max"]}
                 for r in live
             ]
         )
@@ -467,56 +495,12 @@ def merge_upsert(
             # (updates take NULL) -- Delta's mergeSchema semantics on
             # plain parquet
             new_parts = survivors.unionByName(upd, allowMissingColumns=True)
-
-        epoch = 1 + max(r.added_epoch for r in man_rows)
-        # unique per attempt: uncommitted files from a lost race must
-        # never collide with the winner's (or a retry's) names
-        token = uuid.uuid4().hex[:8]
-        staging = os.path.join(path, f"_staging_{token}")
-        new_parts.write.parquet(staging)
-
-        moved = []
-        seq = 0
-        for name in sorted(os.listdir(staging)):
-            if not name.endswith(".parquet"):
-                continue
-            dst = os.path.join(
-                data_dir, f"merge-{epoch:05d}-{token}-{seq:05d}.parquet"
-            )
-            os.rename(os.path.join(staging, name), dst)
-            moved.append(dst)
-            seq += 1
-        shutil.rmtree(staging)
-
-        hit_set = set(hit_files)
-        out_rows = []
-        for r in man_rows:
-            d = r.asDict()
-            if r.file in hit_set and r.removed_epoch == LIVE:
-                d["removed_epoch"] = epoch
-            out_rows.append(d)
-        new_stats = _build_stats(spark, moved, key_col)
-        for d in new_stats:
-            d["added_epoch"] = epoch
-            d["removed_epoch"] = LIVE
-            d["cols"] = ",".join(new_parts.columns)
-        try:
-            _write_manifest(
-                spark, path, out_rows + new_stats, commit_seq=base_seq + 1
-            )
-        except ManifestConflict as exc:
-            # lost the race: data files were written but never became
-            # visible (reads are manifest-driven); remove them and
-            # rebuild against the winner's state
-            for f in moved:
-                try:
-                    os.unlink(f)
-                except OSError:
-                    pass
-            last_conflict = exc
-            continue
+        _rewrite(
+            spark, path, seq, man_rows, set(hit_files), new_parts, "merge", key_col
+        )
         return len(hit_files), len(live)
-    raise last_conflict
+
+    return _retry_conflicts(attempt)
 
 
 def repoint_files(
@@ -525,23 +509,17 @@ def repoint_files(
     """After the table DIRECTORY itself moved (e.g. the ANN index's
     build-beside-then-swap rebuild renames ``idx.rebuild`` -> ``idx``):
     rewrite the manifest's absolute file paths and COMMIT the result as
-    a new log version.  Poking only the parquet cache would be undone
-    at the next read -- the renamed-along commit log still holds the
-    old prefix and ``_sync_cache`` would faithfully heal the cache back
-    to it -- so the repoint must go through the log like every other
-    mutation.  File-count-sized, driver-side.  A lost commit race is
-    retried against the winner's state (metadata-only, so a retry just
+    a new log version, like every other mutation -- the renamed-along
+    commit log still holds the old prefix, and readers read the log.
+    File-count-sized, driver-side.  A lost commit race is retried
+    against the winner's state (metadata-only, so a retry just
     re-derives the path rewrite)."""
 
     def attempt() -> None:
-        _sync_cache(path)
-        base_seq = _latest_log(path)[0]
-        rows = []
-        for r in read_manifest(spark, path).collect():
-            d = r.asDict()
-            d["file"] = d["file"].replace(old_prefix, new_prefix, 1)
-            rows.append(d)
-        _write_manifest(spark, path, rows, commit_seq=base_seq + 1)
+        seq, rows = _read_state(path)
+        for r in rows:
+            r["file"] = r["file"].replace(old_prefix, new_prefix, 1)
+        _write_manifest(spark, path, rows, commit_seq=seq + 1)
 
     _retry_conflicts(attempt)
 
@@ -564,85 +542,29 @@ def optimize_compact(
     A lost optimistic commit is retried against the winner's state like
     merge_upsert (the attempt's rewrite files are unlinked first).
     """
-    return _retry_conflicts(
-        lambda: _optimize_compact_once(spark, path, key_col, target_rows)
-    )
 
-
-def _retry_conflicts(attempt):
-    """Run one optimistic-commit ``attempt`` up to ``_MERGE_RETRIES``
-    times; each attempt re-derives its plan from the synced table state,
-    so retrying after :class:`ManifestConflict` rebuilds against the
-    winning writer's manifest."""
-    last_conflict: Optional[ManifestConflict] = None
-    for _try in range(_MERGE_RETRIES):
-        try:
-            return attempt()
-        except ManifestConflict as exc:
-            last_conflict = exc
-    raise last_conflict
-
-
-def _optimize_compact_once(
-    spark: SparkSession, path: str, key_col: str, target_rows: int
-) -> Tuple[int, int]:
-    _sync_cache(path)
-    base_seq = _latest_log(path)[0]
-    man_rows = read_manifest(spark, path).collect()
-    live = [r for r in man_rows if r.removed_epoch == LIVE]
-    small = [r for r in live if r.n_rows < target_rows]
-    if len(small) < 2:
-        return 0, 0  # nothing to gain: 0 or 1 undersized file
-
-    total = sum(r.n_rows for r in small)
-    n_out = max(1, -(-total // target_rows))  # ceil-div bins
-    if n_out >= len(small):
-        return 0, 0  # packing would not reduce the file count
-
-    data_dir = os.path.join(path, _DATA)
-    epoch = 1 + max(r.added_epoch for r in man_rows)
-    token = uuid.uuid4().hex[:8]
-    staging = os.path.join(path, f"_staging_{token}")
-    compacted_df = _read_files(
-        spark, man_rows, [r.file for r in small]
-    ).repartitionByRange(n_out, key_col)
-    compacted_df.write.parquet(staging)
-
-    moved = []
-    seq = 0
-    for name in sorted(os.listdir(staging)):
-        if not name.endswith(".parquet"):
-            continue
-        dst = os.path.join(
-            data_dir, f"compact-{epoch:05d}-{token}-{seq:05d}.parquet"
+    def attempt() -> Tuple[int, int]:
+        seq, man_rows = _read_state(path)
+        small = [
+            r for r in man_rows
+            if r["removed_epoch"] == LIVE and r["n_rows"] < target_rows
+        ]
+        if len(small) < 2:
+            return 0, 0  # nothing to gain: 0 or 1 undersized file
+        total = sum(r["n_rows"] for r in small)
+        n_out = max(1, -(-total // target_rows))  # ceil-div bins
+        if n_out >= len(small):
+            return 0, 0  # packing would not reduce the file count
+        files = [r["file"] for r in small]
+        compacted = _read_files(spark, man_rows, files).repartitionByRange(
+            n_out, key_col
         )
-        os.rename(os.path.join(staging, name), dst)
-        moved.append(dst)
-        seq += 1
-    shutil.rmtree(staging)
+        written = _rewrite(
+            spark, path, seq, man_rows, set(files), compacted, "compact", key_col
+        )
+        return len(small), written
 
-    small_set = {r.file for r in small}
-    out_rows = []
-    for r in man_rows:
-        d = r.asDict()
-        if r.file in small_set and r.removed_epoch == LIVE:
-            d["removed_epoch"] = epoch
-        out_rows.append(d)
-    new_stats = _build_stats(spark, moved, key_col)
-    for d in new_stats:
-        d["added_epoch"] = epoch
-        d["removed_epoch"] = LIVE
-        d["cols"] = ",".join(compacted_df.columns)
-    try:
-        _write_manifest(spark, path, out_rows + new_stats, commit_seq=base_seq + 1)
-    except ManifestConflict:
-        for f in moved:  # never became visible: reads are manifest-driven
-            try:
-                os.unlink(f)
-            except OSError:
-                pass
-        raise
-    return len(small), len(moved)
+    return _retry_conflicts(attempt)
 
 
 def optimize_zorder(
@@ -669,118 +591,64 @@ def optimize_zorder(
     ``(files_rewritten, files_written)``.  A lost optimistic commit is
     retried against the winner's state like merge_upsert.
     """
-    return _retry_conflicts(
-        lambda: _optimize_zorder_once(spark, path, key_col, col_b, bits, n_files)
-    )
-
-
-def _optimize_zorder_once(
-    spark: SparkSession,
-    path: str,
-    key_col: str,
-    col_b: str,
-    bits: int,
-    n_files: int,
-) -> Tuple[int, int]:
     from .tabular import zorder_key
 
-    _sync_cache(path)
-    base_seq = _latest_log(path)[0]
-    man_rows = read_manifest(spark, path).collect()
-    live = [r for r in man_rows if r.removed_epoch == LIVE]
-    if not live:
-        return 0, 0
-    data_dir = os.path.join(path, _DATA)
-    epoch = 1 + max(r.added_epoch for r in man_rows)
-    token = uuid.uuid4().hex[:8]
-    staging = os.path.join(path, f"_staging_{token}")
-
-    df = _read_files(spark, man_rows, [r.file for r in live])
-    lo_a, hi_a, lo_b, hi_b = df.agg(
-        F.min(key_col).cast("long"),
-        F.max(key_col).cast("long"),
-        F.min(col_b).cast("long"),
-        F.max(col_b).cast("long"),
-    ).first()
-    if lo_a is None or hi_a is None or lo_b is None or hi_b is None:
-        # An all-NULL (or non-castable) column has no min/max: there is no
-        # Z-order to lay out along, so surface a clear error instead of the
-        # TypeError that int(None) would raise mid-rewrite.
-        null_cols = [
-            c for c, v in ((key_col, lo_a), (col_b, lo_b)) if v is None
-        ]
-        raise ValueError(
-            "optimize_zorder: column(s) %s have no non-NULL long values; "
-            "cannot compute a Z-order layout" % ", ".join(sorted(set(null_cols)))
-        )
-
-    def norm(col: str, lo: int, hi: int) -> str:
-        span = max(int(hi) - int(lo), 0) + 1
-        return f"(({col} - {int(lo)}) * {1 << bits}L) div {span}"
-
-    keyed = df.withColumn(
-        "_zkey",
-        zorder_key(norm(key_col, lo_a, hi_a), norm(col_b, lo_b, hi_b), bits),
-    )
-    # Deterministic file split: equal-width z-ranges, NOT the sampled
-    # boundaries of repartitionByRange (whose sampling made the file count
-    # per z-range run-order-dependent).  Each bucket is a contiguous slice
-    # of the Morton curve, so each file is tight in BOTH dimensions by
-    # construction; repartition-on-bucket puts a bucket's rows in exactly
-    # one task and partitionBy splits colliding buckets into separate
-    # files, so the layout is one pass and fully reproducible.
-    keyed = keyed.withColumn(
-        "_zbucket",
-        F.expr(f"CAST((_zkey * {n_files}) div {1 << (2 * bits)}L AS INT)"),
-    )
-    (
-        keyed.repartition(n_files, "_zbucket")
-        .sortWithinPartitions("_zbucket", "_zkey")
-        .drop("_zkey")
-        .write.partitionBy("_zbucket")
-        .parquet(staging)
-    )
-
-    moved = []
-    seq = 0
-    bucket_dirs = sorted(
-        (d for d in os.listdir(staging) if d.startswith("_zbucket=")),
-        key=lambda d: int(d.split("=", 1)[1]),
-    )
-    for bdir in bucket_dirs:
-        for name in sorted(os.listdir(os.path.join(staging, bdir))):
-            if not name.endswith(".parquet"):
-                continue
-            dst = os.path.join(
-                data_dir, f"zorder-{epoch:05d}-{token}-{seq:05d}.parquet"
+    def attempt() -> Tuple[int, int]:
+        seq, man_rows = _read_state(path)
+        live = _files_at(man_rows, None)
+        if not live:
+            return 0, 0
+        df = _read_files(spark, man_rows, live)
+        lo_a, hi_a, lo_b, hi_b = df.agg(
+            F.min(key_col).cast("long"),
+            F.max(key_col).cast("long"),
+            F.min(col_b).cast("long"),
+            F.max(col_b).cast("long"),
+        ).first()
+        if lo_a is None or hi_a is None or lo_b is None or hi_b is None:
+            # An all-NULL (or non-castable) column has no min/max: there is no
+            # Z-order to lay out along, so surface a clear error instead of the
+            # TypeError that int(None) would raise mid-rewrite.
+            null_cols = [
+                c for c, v in ((key_col, lo_a), (col_b, lo_b)) if v is None
+            ]
+            raise ValueError(
+                "optimize_zorder: column(s) %s have no non-NULL long values; "
+                "cannot compute a Z-order layout" % ", ".join(sorted(set(null_cols)))
             )
-            os.rename(os.path.join(staging, bdir, name), dst)
-            moved.append(dst)
-            seq += 1
-    shutil.rmtree(staging)
 
-    live_set = {r.file for r in live}
-    out_rows = []
-    for r in man_rows:
-        d = r.asDict()
-        if r.file in live_set and r.removed_epoch == LIVE:
-            d["removed_epoch"] = epoch
-        out_rows.append(d)
-    new_stats = _build_stats(spark, moved, key_col, key2_col=col_b)
-    for d in new_stats:
-        d["added_epoch"] = epoch
-        d["removed_epoch"] = LIVE
-        d["cols"] = ",".join(df.columns)
-    try:
-        _write_manifest(spark, path, out_rows + new_stats, commit_seq=base_seq + 1)
-    except ManifestConflict:
-        for f in moved:  # never became visible: reads are manifest-driven
-            try:
-                os.unlink(f)
-            except OSError:
-                pass
-        raise
-    return len(live), len(moved)
+        def norm(col: str, lo: int, hi: int) -> str:
+            span = max(int(hi) - int(lo), 0) + 1
+            return f"(({col} - {int(lo)}) * {1 << bits}L) div {span}"
+
+        keyed = df.withColumn(
+            "_zkey",
+            zorder_key(norm(key_col, lo_a, hi_a), norm(col_b, lo_b, hi_b), bits),
+        )
+        # Deterministic file split: equal-width z-ranges, NOT the sampled
+        # boundaries of repartitionByRange (whose sampling made the file count
+        # per z-range run-order-dependent).  Each bucket is a contiguous slice
+        # of the Morton curve, so each file is tight in BOTH dimensions by
+        # construction; repartition-on-bucket puts a bucket's rows in exactly
+        # one task and the bucket-partitioned staging write splits colliding
+        # buckets into separate files, so the layout is one pass and fully
+        # reproducible.
+        keyed = keyed.withColumn(
+            "_zbucket",
+            F.expr(f"CAST((_zkey * {n_files}) div {1 << (2 * bits)}L AS INT)"),
+        )
+        laid_out = (
+            keyed.repartition(n_files, "_zbucket")
+            .sortWithinPartitions("_zbucket", "_zkey")
+            .drop("_zkey")
+        )
+        written = _rewrite(
+            spark, path, seq, man_rows, set(live), laid_out, "zorder", key_col,
+            key2_col=col_b, bucket_col="_zbucket",
+        )
+        return len(live), written
+
+    return _retry_conflicts(attempt)
 
 
 def read_pruned2(
@@ -799,19 +667,19 @@ def read_pruned2(
     overlaps [lo2, hi2]; files without secondary stats are kept
     conservatively.  The residual row filter applies on top.  Returns
     ``(df, files_read, files_total)``."""
-    man_rows = read_manifest(spark, path).collect()
-    visible = [r for r in man_rows if r.removed_epoch == LIVE]
+    man_rows = _read_state(path)[1]
+    visible = [r for r in man_rows if r["removed_epoch"] == LIVE]
     keep = []
     for r in visible:
-        if r.k_max < lo or r.k_min > hi:
+        if r["k_max"] < lo or r["k_min"] > hi:
             continue
         if (
-            getattr(r, "k2_col", None) == col_b
-            and getattr(r, "k2_min", None) is not None
-            and (r.k2_max < lo2 or r.k2_min > hi2)
+            r.get("k2_col") == col_b
+            and r.get("k2_min") is not None
+            and (r["k2_max"] < lo2 or r["k2_min"] > hi2)
         ):
             continue
-        keep.append(r.file)
+        keep.append(r["file"])
     total = len(visible)
     if not keep:
         empty = read_live(spark, path).limit(0)
@@ -836,29 +704,23 @@ def vacuum(spark: SparkSession, path: str, before_epoch: int) -> int:
     winning manifest would still point at files already unlinked.  A
     crash between commit and delete merely orphans unreferenced files
     (Delta's contract too)."""
-    last_conflict: Optional[ManifestConflict] = None
-    for _attempt in range(_MERGE_RETRIES):
-        _sync_cache(path)
-        base_seq = _latest_log(path)[0]
-        man_rows = read_manifest(spark, path).collect()
+
+    def attempt() -> int:
+        seq, man_rows = _read_state(path)
         gone, keep = [], []
         for r in man_rows:
-            if r.removed_epoch != LIVE and r.removed_epoch < before_epoch:
-                gone.append(r)
+            if r["removed_epoch"] != LIVE and r["removed_epoch"] < before_epoch:
+                gone.append(r["file"])
             else:
-                keep.append(r.asDict())
-        try:
-            _write_manifest(spark, path, keep, commit_seq=base_seq + 1)
-        except ManifestConflict as exc:
-            last_conflict = exc
-            continue
-        for r in gone:
-            f = r.file
+                keep.append(r)
+        _write_manifest(spark, path, keep, commit_seq=seq + 1)
+        for f in gone:
             local = f[len("file://"):] if f.startswith("file://") else f
             if os.path.exists(local):
                 os.remove(local)
         return len(gone)
-    raise last_conflict
+
+    return _retry_conflicts(attempt)
 
 
 # ---------------------------------------------------------------------
@@ -890,7 +752,7 @@ def build_bloom_index(
     build is one narrow scan (file + column), a per-row mask expression,
     and a map-side-combinable ``bit_or`` groupBy -- no Python, no
     shuffle wider than (file, word)."""
-    man_rows = read_manifest(spark, path).collect()
+    man_rows = _read_state(path)[1]
     live = _files_at(man_rows, None)
     src = _read_files(spark, man_rows, live).select(
         F.input_file_name().alias("file"), F.col(col).cast("string").alias("v")
@@ -931,8 +793,7 @@ def read_by_value(
     bitmap has BOTH of the value's bits set (no false negatives; false
     positives bounded by the bloom rate), then apply the exact filter.
     Returns ``(df, files_read, files_total)``."""
-    man_rows = read_manifest(spark, path).collect()
-    live = set(_files_at(man_rows, None))
+    live = set(_files_at(_read_state(path)[1], None))
     pos = _bloom_positions(value)
     words = {p // 64: [] for p in pos}
     for p in pos:

@@ -123,7 +123,9 @@ def test_crash_between_log_and_cache_self_heals(spark, tmp_path):
 
 def test_pre_log_tables_still_read(spark, tmp_path):
     path = _table(spark, tmp_path)
-    # simulate a table written before the commit log existed
+    # simulate a table written before the commit log existed: its
+    # manifest is a parquet directory, and there is no log
+    read_manifest(spark, path).write.parquet(os.path.join(path, "_manifest"))
     shutil.rmtree(os.path.join(path, "_log"))
     assert read_live(spark, path).count() == 400
     # the first mutation starts the log at slot 0
@@ -131,6 +133,23 @@ def test_pre_log_tables_still_read(spark, tmp_path):
     merge_upsert(spark, path, upd, "k")
     assert _latest_log(path)[0] == 0
     assert read_live(spark, path).filter("k = 1").collect()[0].v == 5
+
+
+def test_manifest_reads_run_no_spark_job(spark, tmp_path):
+    # the table state is the newest log entry, read on the driver: the
+    # manifest frame and the current epoch plan no Spark job
+    path = _table(spark, tmp_path)
+    merge_upsert(spark, path, spark.createDataFrame([(0, 1)], "k long, v long"), "k")
+    sc = spark.sparkContext
+    group = f"manifest-reads-{os.getpid()}"
+    sc.setJobGroup(group, group)
+    try:
+        rows = read_manifest(spark, path).collect()
+        epoch = current_epoch(spark, path)
+    finally:
+        sc.setJobGroup("", "")
+    assert epoch == 1 and [r.removed_epoch for r in rows].count(1) == 1
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
 
 
 def test_readers_stay_consistent_under_concurrent_merges(spark, tmp_path):
@@ -194,8 +213,6 @@ def test_truncated_legacy_slot_is_skipped_not_fatal(spark, tmp_path):
     seq, _ = _latest_log(path)
     dead = os.path.join(path, "_log", f"{seq + 1:020d}.json")
     open(dead, "w").close()  # zero-byte claimed slot
-    # force a heal: drop the parquet cache so the reader must go to the log
-    shutil.rmtree(os.path.join(path, "_manifest"))
     assert read_live(spark, path).count() == 400  # healed from slot `seq`
     # the dead slot stays claimed: the next commit lands above it
     upd = spark.createDataFrame([(1, 42)], "k long, v long")

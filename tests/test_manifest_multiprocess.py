@@ -61,7 +61,6 @@ def _mp_append_worker(args):
             attempts += 1
             if attempts > 200:
                 return (proc_id, "gave up")
-            m._sync_cache(path)
             seq, log_file = m._latest_log(path)
             with open(log_file) as fh:
                 rows = json.load(fh)["rows"]

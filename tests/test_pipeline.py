@@ -2,6 +2,7 @@
 idempotency, DLQ routing -- the reference's runtime self-verification
 (SURVEY.md §5) as a test suite."""
 
+import base64
 import hashlib
 import os
 
@@ -241,6 +242,21 @@ def test_repair_recovers_corrupted_chunks(spark):
         validate_chunk_table(hopeless, repair=True).filter(F.col("valid")).count()
         == 0
     )
+
+    # the stored code is parity only for a payload of one RS block: one
+    # flipped byte in a full 1000-byte chunk is detected, not repaired,
+    # and never falsely repaired
+    big = chunk_table(encode_documents(_docs(spark, ["abcdefghij" * 100]))).collect()
+    assert [r.original_length_bytes for r in big] == [1000]
+    bad = bytearray(goldman.dna_to_bytes(big[0].dna_sequence, 1000))
+    bad[500] ^= 0xFF
+    d = big[0].asDict()
+    d["dna_sequence"] = goldman.bytes_to_dna(bytes(bad))
+    flipped = spark.createDataFrame([d], corrupted.schema)
+    assert [
+        (r.valid, r.repaired_ok)
+        for r in validate_chunk_table(flipped, repair=True).collect()
+    ] == [(False, False)]
 
 
 def test_run_pipeline_idempotent(spark, tmp_path):
@@ -482,6 +498,12 @@ def test_undecodable_file_fails_alone_in_batch_and_stream(spark, tmp_path):
     assert [(os.path.basename(r.original_file), r.error_message) for r in dlq] == [
         ("bad.txt", NOT_UTF8)
     ]
+    # the DLQ keeps the file's bytes (base64 in JSON), so the payload is
+    # recoverable and still hashes to its tracked file_hash
+    content = base64.b64decode(dlq[0].content)
+    assert content == RAW_FILES["bad.txt"]
+    bad_hash = [h for h, name, *_ in tracked(cfg) if name == "bad.txt"]
+    assert [hashlib.md5(content).hexdigest()] == bad_hash
 
     stream_cfg = PipelineConfig(
         input_dir=cfg.input_dir,
@@ -661,3 +683,22 @@ def test_sql_registered_udf_surface(spark):
         by_doc.setdefault(r.doc_id, []).append(r.chunk_text)
     originals = {r.doc_id: r.text for r in spark.table("sql_docs").collect()}
     assert {d: "".join(ps) for d, ps in by_doc.items()} == originals
+
+    # a budget narrower than a character cuts it into bytes that are not
+    # UTF-8 alone: each such piece has a NULL text and keeps its id, index
+    # and size; a budget of one character's width keeps every character
+    spark.createDataFrame(
+        [(1, "数据")], "doc_id long, text string"
+    ).createOrReplaceTempView("sql_cjk")
+
+    def pieces(width):
+        return [tuple(r) for r in spark.sql(
+            f"SELECT c.* FROM sql_cjk d, LATERAL chunk_text(d.text, {width}) c"
+        ).collect()]
+
+    assert sorted(pieces(1), key=lambda p: p[1]) == [
+        (f"dna_chunk_{i:03d}", i, None, 1) for i in range(6)
+    ]
+    assert sorted(pieces(3), key=lambda p: p[1]) == [
+        ("dna_chunk_000", 0, "数", 3), ("dna_chunk_001", 1, "据", 3)
+    ]

@@ -133,7 +133,6 @@ def test_all_dead_log_slots_raise_instead_of_silent_stale_cache(
     log_dir = os.path.join(path, "_log")
     for name in os.listdir(log_dir):  # every claimed entry dies
         open(os.path.join(log_dir, name), "w").close()
-    shutil.rmtree(os.path.join(path, "_manifest"))  # force a heal
     with pytest.raises(ValueError, match="unparsable"):
         read_live(spark, path).count()
     assert _latest_log(path)[1] is not None  # the claims still exist
@@ -156,7 +155,6 @@ def test_healing_past_a_dead_slot_warns(spark, tmp_path, caplog):
     seq, _ = _latest_log(path)
     dead = os.path.join(path, "_log", f"{seq + 1:020d}.json")
     open(dead, "w").close()  # claimed, contentless (pre-r13 shape)
-    shutil.rmtree(os.path.join(path, "_manifest"))
     with caplog.at_level(
         logging.WARNING,
         logger="airflow_pipeline_text_processing_spark.sources.manifest",

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, Window
 
 from ..operators.windows import ordered_running_sum
 from ..operators.text import (
+    LANG_MARKERS,
     PUNCT_CLASS,
     STOPWORDS,
     bpe_tokens,
@@ -64,14 +65,24 @@ def curate_documents(
         n_toks,
         F.length(text_col),
     )
-    pred = lang_argmax(lang_hits_exprs(F.col(text_col)))
-
+    # the marker hits are staged in their own columns, as in text.lang_id:
+    # inline, each language's filter would run once in the argmax's
+    # greatest and again in every when branch
+    hits = lang_hits_exprs(F.col(text_col))
     base = docs.select(
         "doc_id",
         F.md5(F.col(text_col)).alias("content_hash"),
         F.size(bpe_tokens(F.col(text_col))).alias("n_bpe_tokens"),
         quality.alias("quality"),
-        pred.alias("predicted_lang"),
+        *[hits[lang].alias(f"hits_{lang}") for lang in LANG_MARKERS],
+    ).select(
+        "doc_id",
+        "content_hash",
+        "n_bpe_tokens",
+        "quality",
+        lang_argmax({lang: F.col(f"hits_{lang}") for lang in LANG_MARKERS}).alias(
+            "predicted_lang"
+        ),
     )
     deduped = (
         base.withColumn(
@@ -364,8 +375,9 @@ def leakage_safe_split(
     Output: ``(doc_id, cluster_id, n_members, split)``.  By
     construction no cluster straddles splits -- the property is
     structural (split is a pure function of cluster_id), not sampled.
-    Scale shape: CC's star-contraction rounds + one cluster-partitioned
-    window for sizes + a narrow md5 projection; nothing new shuffles."""
+    Scale shape: CC (driver union-find or star-contraction rounds) + one
+    cluster-partitioned window for sizes + a narrow md5 projection;
+    nothing new shuffles."""
     from ..operators.dedup import cluster_membership
     from ..operators.sampling import hash_split
 

@@ -5,7 +5,7 @@ Delta-primitive claim is cross-process — ``O_EXCL``/``link(2)``
 put-if-absent is a kernel-level primitive whose guarantee threads
 cannot fully witness (they share the CPython process and the GIL).
 Here N OS processes append data files to ONE table concurrently, each
-through the real commit path (``_sync_cache`` → read latest log →
+through the real commit path (``_read_state`` reads the latest log →
 derive → ``_write_manifest`` → retry on :class:`ManifestConflict`).
 
 The commit layer is deliberately Spark-free (json + pyarrow,

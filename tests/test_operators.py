@@ -313,10 +313,12 @@ def test_connected_components_deep_chain_beyond_iter_budget(spark):
     assert len(got) == 100
 
 
-def test_connected_components_raises_past_round_budget(spark):
+def test_connected_components_raises_past_round_budget(spark, broadcast_threshold):
     """A 100-node path needs 7 star rounds; with a budget of 3 the loop
     ends before a star forest forms, and the call must raise rather than
-    return under-merged clusters."""
+    return under-merged clusters.  Broadcast is off, so the graph takes
+    the star path (``max_iter`` does not bound the driver path)."""
+    broadcast_threshold(-1)
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(99)], "doc_a long, doc_b long"
     )

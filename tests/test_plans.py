@@ -221,10 +221,10 @@ def test_minhash_dedup_pairs_spark_job_count(spark):
 
 
 # Spark jobs of one connected_components(...).collect() on a small graph
-# with duplicate, reversed and self-loop pairs: the star rounds and their
-# star-forest tests, with no shuffle of its own to dedup the input (the
-# first star round ends in DISTINCT)
-CC_JOBS = 20
+# with duplicate, reversed and self-loop pairs: the edge list fits the
+# session's broadcast threshold, so one job reads it to the driver, and
+# collecting the Arrow-built labels (a LocalRelation) runs none
+CC_JOBS = 2
 
 
 def test_connected_components_spark_job_count(spark):
@@ -248,6 +248,28 @@ def test_connected_components_spark_job_count(spark):
     ]
     jobs = sc.statusTracker().getJobIdsForGroup(group)
     assert 0 < len(jobs) <= CC_JOBS, len(jobs)
+
+
+def test_curate_documents_runs_each_marker_filter_once(spark, monkeypatch):
+    """The language-marker hits are staged in their own columns before the
+    argmax, so each marker list's filter is in the optimized plan once --
+    not once in ``greatest`` and again in every ``when`` branch.  The
+    lineage cut is patched out so the plan shows the analytics select."""
+    from airflow_pipeline_text_processing_spark.operators.text import LANG_MARKERS
+    from airflow_pipeline_text_processing_spark.plans.curation import (
+        curate_documents,
+    )
+
+    docs = spark.createDataFrame(
+        [(1, "the cat and the dog"), (2, "der Hund und die Katze")],
+        "doc_id long, text string",
+    )
+    monkeypatch.setattr(
+        type(docs), "localCheckpoint", lambda self, eager=True: self
+    )
+    plan = curate_documents(docs)._jdf.queryExecution().optimizedPlan().toString()
+    for lang, markers in LANG_MARKERS.items():
+        assert plan.count(f"IN ({','.join(markers)})") == 1, lang
 
 
 def test_range_join_is_equi_not_cartesian(spark):

@@ -6,9 +6,9 @@
    the whole Arrow stage).
 2. low -- persisted-slot GC probes pid liveness portably with
    os.kill(pid, 0) instead of /proc/<pid>.
-3. low -- _sync_cache raises when EVERY log entry is unparsable (stale
-   cache must not be handed out silently) and warns when healing skips
-   a dead slot.
+3. low -- reading the table state (``_read_state``) raises when EVERY
+   log entry is unparsable (a stale state must not be handed out
+   silently) and warns when it skips a dead slot.
 4. low -- the checkpoint-residue sweep is an engine API
    (session.sweep_persistent_rdds), not a bench-harness private.
 """
@@ -17,7 +17,6 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import struct
 import subprocess
 import sys

@@ -19,9 +19,15 @@ keeping results bit-identical:
   reference) over adversarial graphs, and checks the loop end to end via
   ``connected_components``: it stops at the first round whose output is
   a star forest, and its labels match a pure-Python union-find.
+* ``dedup.connected_components``'s driver path -- an edge list within the
+  broadcast threshold is labeled by a union-find on the driver in one
+  Spark job; the pins check the job count, the path boundary, edge cases
+  against the star path, and union-find agreement on both paths.
 """
 
 from __future__ import annotations
+
+import os
 
 import pyspark.sql.functions as F
 import pytest
@@ -152,7 +158,7 @@ def test_star_round_sql_matches_dataframe_formulation(spark):
         assert new == old == ref, f"star round diverges on {g}: {new} vs {old}"
 
 
-def test_connected_components_folded_fingerprint_loop(spark, monkeypatch):
+def _count_star_rounds(monkeypatch):
     from airflow_pipeline_text_processing_spark.operators import dedup
 
     rounds = []
@@ -160,6 +166,21 @@ def test_connected_components_folded_fingerprint_loop(spark, monkeypatch):
     monkeypatch.setattr(
         dedup, "_star_round", lambda e: rounds.append(1) or star_round(e)
     )
+    return rounds
+
+
+def _labels(df):
+    return sorted((r.doc_id, r.cluster_id) for r in df.collect())
+
+
+def test_connected_components_folded_fingerprint_loop(
+    spark, monkeypatch, broadcast_threshold
+):
+    from airflow_pipeline_text_processing_spark.operators import dedup
+
+    # broadcast off: every graph below takes the star rounds being counted
+    broadcast_threshold(-1)
+    rounds = _count_star_rounds(monkeypatch)
 
     # chain: one component rooted at the minimum
     pairs = spark.createDataFrame(
@@ -215,7 +236,7 @@ def _union_find_labels(edges):
 
 
 @pytest.mark.parametrize("seed", range(1, 6))
-def test_connected_components_matches_union_find(spark, seed):
+def test_connected_components_matches_union_find(spark, seed, broadcast_threshold):
     import random
 
     from airflow_pipeline_text_processing_spark.operators.dedup import (
@@ -228,8 +249,112 @@ def test_connected_components_matches_union_find(spark, seed):
     edges += [(a, a) for a in rng.sample(range(300), 10)]
     edges += [(b, a) for a, b in rng.sample(edges[:230], 10)]
     pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
-    got = [(r.doc_id, r.cluster_id) for r in connected_components(pairs).collect()]
-    assert sorted(got) == sorted(_union_find_labels(edges).items())
+    want = sorted(_union_find_labels(edges).items())
+    # the session's threshold (driver path), then broadcast off (star path)
+    for threshold in (None, -1):
+        if threshold is not None:
+            broadcast_threshold(threshold)
+        got = [
+            (r.doc_id, r.cluster_id) for r in connected_components(pairs).collect()
+        ]
+        assert sorted(got) == want, threshold
+
+
+def test_connected_components_driver_path_runs_one_spark_job(spark, monkeypatch):
+    """An edge list under the broadcast threshold is read to the driver by
+    one job and labeled there: no star round, and the Arrow-built result
+    is a LocalRelation whose collect runs no further job."""
+    from airflow_pipeline_text_processing_spark.operators.dedup import (
+        connected_components,
+    )
+
+    rounds = _count_star_rounds(monkeypatch)
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(1, 12)] + [(20, 21)], "doc_a long, doc_b long"
+    )
+    sc = spark.sparkContext
+    group = f"cc-driver-{os.getpid()}"
+    sc.setJobGroup(group, group)
+    try:
+        got = _labels(connected_components(pairs))
+    finally:
+        sc.setJobGroup("", "")
+    assert got == [(i, 1) for i in range(1, 13)] + [(20, 20), (21, 20)]
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    assert rounds == []
+
+
+def test_connected_components_path_boundary(spark, monkeypatch, broadcast_threshold):
+    """A threshold of 80 bytes makes the driver cap 80 // 16 = 5 edges: a
+    5-edge graph takes the driver path, the same graph plus a reversed
+    duplicate edge (6 edges) the star rounds, and both label alike."""
+    from airflow_pipeline_text_processing_spark.operators.dedup import (
+        connected_components,
+    )
+
+    rounds = _count_star_rounds(monkeypatch)
+    broadcast_threshold(80)
+    five = [(1, 2), (2, 3), (3, 4), (7, 8), (9, 8)]
+    want = [(1, 1), (2, 1), (3, 1), (4, 1), (7, 7), (8, 7), (9, 7)]
+    schema = "doc_a long, doc_b long"
+    assert _labels(connected_components(spark.createDataFrame(five, schema))) == want
+    assert rounds == []
+    six = five + [(2, 1)]
+    assert _labels(connected_components(spark.createDataFrame(six, schema))) == want
+    assert len(rounds) >= 1
+
+
+@pytest.mark.parametrize(
+    "edges, schema, want",
+    [
+        # NULL ids: a pair with a NULL end is no edge
+        (
+            [(1, None), (None, 2), (None, None), (3, 4), (4, 5)],
+            "doc_a long, doc_b long",
+            [(3, 3), (4, 3), (5, 3)],
+        ),
+        # string ids: the label is the smallest id in Spark's string order
+        (
+            [("b", "a"), ("c", "b"), ("é", "z"), ("Z", "z")],
+            "doc_a string, doc_b string",
+            [("Z", "Z"), ("a", "a"), ("b", "a"), ("c", "a"), ("z", "Z"), ("é", "Z")],
+        ),
+        # self-loops: a node on a self-loop alone is in no component
+        (
+            [(1, 1), (2, 2), (2, 3), (3, 3)],
+            "doc_a long, doc_b long",
+            [(2, 2), (3, 2)],
+        ),
+        # reversed duplicate edges label each node once
+        (
+            [(5, 6), (6, 5), (5, 6), (7, 6), (6, 7)],
+            "doc_a int, doc_b int",
+            [(5, 5), (6, 5), (7, 5)],
+        ),
+        # empty edge set
+        ([], "doc_a long, doc_b long", []),
+    ],
+    ids=["null_ids", "string_ids", "self_loops", "reversed_duplicates", "empty"],
+)
+def test_connected_components_driver_path_cases(
+    spark, monkeypatch, broadcast_threshold, edges, schema, want
+):
+    """Driver-path edge cases, each checked against the star path too."""
+    from airflow_pipeline_text_processing_spark.operators.dedup import (
+        connected_components,
+    )
+
+    rounds = _count_star_rounds(monkeypatch)
+    pairs = spark.createDataFrame(edges, schema)
+    driver = connected_components(pairs)
+    assert rounds == []
+    assert driver.schema == spark.createDataFrame([], schema).toDF(
+        "doc_id", "cluster_id"
+    ).schema
+    assert _labels(driver) == want
+    broadcast_threshold(-1)
+    assert _labels(connected_components(pairs)) == want
+    assert rounds
 
 
 def test_assign_top_cells_literal_path_matches_collect_path(spark):

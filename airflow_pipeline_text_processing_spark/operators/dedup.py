@@ -752,22 +752,31 @@ def _min_labels(edges) -> "pyarrow.Table":
     ``(u, v)`` with no NULL id and no self-loop: union-find over numpy
     index arrays, no Python object per edge.
 
-    The nodes are sorted, so a node's index orders like its id and the
-    component minimum is its smallest index.  Each pass hooks the larger
-    root of every edge that still spans two roots onto the smaller one,
-    then jumps pointers until every node points at a root.  A root only
-    ever points lower, so no cycle forms, every pass merges roots, and
-    the component minimum is the last root left.  A randomly numbered
-    path of 2 M nodes closes in 13 passes."""
+    One sort of all edge ends numbers the nodes: a node's index is its
+    rank among the distinct ids, so it orders like its id and the
+    component minimum is its smallest index.  (A sort, not Arrow's hash
+    kernels: at 4 M edges their tables took 1 GB against the sort's
+    0.4 GB.)  Each pass hooks the larger root of every edge that still
+    spans two roots onto the smaller one, then jumps pointers until every
+    node points at a root.  A root only ever points lower, so no cycle
+    forms, every pass merges roots, and the component minimum is the last
+    root left.  A randomly numbered path of 2 M nodes closes in 13
+    passes."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
 
     u, v = edges.column("u"), edges.column("v")
-    nodes = pc.unique(pa.chunked_array(u.chunks + v.chunks, type=u.type))
-    nodes = nodes.take(pc.array_sort_indices(nodes))
-    a = pc.index_in(u, value_set=nodes).to_numpy()
-    b = pc.index_in(v, value_set=nodes).to_numpy()
+    ends = pa.chunked_array(u.chunks + v.chunks, type=u.type).combine_chunks()
+    order = pc.array_sort_indices(ends).to_numpy()
+    ends = ends.take(order)
+    # first of its run in the sorted ends = a node
+    first = np.ones(len(ends), dtype=bool)
+    first[1:] = pc.not_equal(ends[1:], ends[:-1]).to_numpy(zero_copy_only=False)
+    index = np.empty(len(ends), dtype=np.int64)
+    index[order] = np.cumsum(first) - 1
+    nodes = ends.filter(pa.array(first))
+    a, b = index[: len(u)], index[len(u) :]
     root = np.arange(len(nodes))
     while True:
         ra, rb = root[a], root[b]
@@ -793,14 +802,21 @@ def connected_components(
     never emitted).  Self-loops and pairs with a NULL id are dropped first.
     Two paths give the same labels:
 
-    * **Driver path**, for an edge list Spark would broadcast anyway: one
+    * **Driver path**, for an edge list the planner would size within
+      ``spark.sql.autoBroadcastJoinThreshold``: one
       ``limit(cap + 1).toArrow()`` reads at most ``cap + 1`` edges, where
-      ``cap`` is ``spark.sql.autoBroadcastJoinThreshold`` over 16 bytes
-      per id pair.  When ``cap`` or fewer come back, :func:`_min_labels`
-      labels them on the driver and the result is a ``LocalRelation``
-      built from Arrow (exact statistics, no Python worker).  Over a
+      ``cap`` is the threshold over the id pair's default size (16 bytes
+      for two longs, 40 for two strings, as the planner sizes a row; a
+      string id longer than 20 bytes makes the read larger than the
+      threshold).  When ``cap`` or fewer come back, :func:`_min_labels`
+      labels them on the driver and the result is built from Arrow, which
+      starts no Python worker: a ``LocalRelation`` with exact statistics
+      up to ``spark.sql.execution.arrow.localRelationThreshold`` (48 MB
+      of labels), an RDD of Arrow batches beyond it.  Over a
       materialized edge list the read is the call's one Spark job,
-      however many rounds the graph would need.
+      however many rounds the graph would need.  When more come back,
+      the read has cached the edge list for the star path, so the input
+      is computed once either way.
     * **Star path**, for larger edge lists or a threshold of ``-1``:
       large-star and small-star rounds (Kiveris et al., SoCC 2014), which
       converge in O(log n) rounds *independent of graph diameter* -- a
@@ -827,23 +843,27 @@ def connected_components(
     the first's plan ~4x (edges is referenced four times per star round),
     1.6 s -> 4.4 s at sf0.1 (PROFILE_r12)."""
     spark = pairs.sparkSession
-    # the filter also drops NULL ids
-    edges = pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v")).filter(
-        F.col("u") != F.col("v")
-    )
-    # the threshold in bytes over 16 bytes per id pair; a threshold of -1
-    # (broadcast off) floors to a cap of -1, which skips the driver path
-    cap = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold() // 16
-    if cap >= 0:
-        head = edges.limit(cap + 1).toArrow()
-        if head.num_rows <= cap:
-            return spark.createDataFrame(_min_labels(head))
     # every checkpoint is LAZY, yet under AQE the call itself runs the
     # star round's shuffle stages while it plans its input (7 jobs per
     # round on two chains of 12 and 3 nodes); the star-forest test after it
     # reads the checkpoint in 2 more.
-    # Duplicate pairs need no distinct(): a star round ends in DISTINCT.
-    edges = edges.localCheckpoint(eager=False)
+    # Duplicate pairs need no distinct(): a star round ends in DISTINCT.  The
+    # filter also drops NULL ids.
+    edges = (
+        pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
+        .filter(F.col("u") != F.col("v"))
+        .localCheckpoint(eager=False)
+    )
+    # the threshold in bytes over the planner's size of one id pair (8 per
+    # long, 20 per string); a threshold of -1 (broadcast off) floors to a
+    # cap of -1, which skips the driver path.  The read materializes the
+    # checkpoint, so a star path after it starts from the cached edges.
+    threshold = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    cap = threshold // edges._jdf.schema().defaultSize()
+    if cap >= 0:
+        head = edges.limit(cap + 1).toArrow()
+        if head.num_rows <= cap:
+            return spark.createDataFrame(_min_labels(head))
     for _ in range(max_iter):
         edges = _star_round(edges).localCheckpoint(eager=False)
         if _is_star_forest(edges):

@@ -123,46 +123,37 @@ def quality_ppm(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def lang_hits_exprs(text_col) -> dict:
-    """Per-language marker-hit count expressions -- the marker policy's
-    single source (lang_id here, the curation pipeline's single-scan
-    select; r14 review)."""
-    toks = tokens(text_col)
-    return {
-        lang: F.size(F.filter(toks, lambda t: t.isin(markers)))
-        for lang, markers in LANG_MARKERS.items()
-    }
+def predict_lang(docs: DataFrame, text_col: str, *cols) -> DataFrame:
+    """``docs`` projected to ``cols`` plus one ``hits_<lang>`` marker-hit
+    count per language and their argmax ``predicted_lang`` -- the marker
+    policy's single source (lang_id here, the curation pipeline's
+    single-scan select; r14 review).  Zero hits -> 'unknown', exact ties
+    break on LANG_MARKERS order.
 
-
-def lang_argmax(hits: dict):
-    """Deterministic argmax over a ``lang -> hit-count Column`` map:
-    zero hits -> 'unknown', exact ties break on LANG_MARKERS order."""
+    The hits are staged in their own select and the argmax reads the
+    staged columns (projection boundary): inline, each language's filter
+    would run once in ``greatest`` and again in every ``when`` branch."""
+    toks = tokens(F.col(text_col))
+    staged = docs.select(
+        *cols,
+        *[
+            F.size(F.filter(toks, lambda t: t.isin(markers))).alias(f"hits_{lang}")
+            for lang, markers in LANG_MARKERS.items()
+        ],
+    )
+    hits = {lang: F.col(f"hits_{lang}") for lang in LANG_MARKERS}
     best = F.greatest(*hits.values())
     pred = F.when(best == 0, F.lit("unknown"))
     for lang in LANG_MARKERS:  # fixed order = deterministic tiebreak
         pred = pred.when(hits[lang] == best, F.lit(lang))
-    return pred
+    return staged.select("*", pred.alias("predicted_lang"))
 
 
 def lang_id(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Marker-word language heuristic with deterministic argmax
-    (``lang_hits_exprs`` + ``lang_argmax``)."""
-    hits = lang_hits_exprs(F.col(text_col))
-    base = docs.select(
-        "doc_id",
-        F.col("lang").alias("labeled_lang"),
-        *[hits[lang].alias(f"hits_{lang}") for lang in LANG_MARKERS],
-    )
-    # argmax over the STAGED hit columns (projection boundary: the
-    # per-branch compares must not re-tokenize the document)
-    pred = lang_argmax(
-        {lang: F.col(f"hits_{lang}") for lang in LANG_MARKERS}
-    )
-    return base.select(
-        "doc_id",
-        "labeled_lang",
-        *[f"hits_{lang}" for lang in LANG_MARKERS],
-        pred.alias("predicted_lang"),
+    (:func:`predict_lang`)."""
+    return predict_lang(
+        docs, text_col, "doc_id", F.col("lang").alias("labeled_lang")
     )
 
 

@@ -31,8 +31,7 @@ from ..operators.text import (
     PUNCT_CLASS,
     STOPWORDS,
     bpe_tokens,
-    lang_argmax,
-    lang_hits_exprs,
+    predict_lang,
     quality_combine,
     tokens,
 )
@@ -51,8 +50,8 @@ def curate_documents(
     ordered by selection priority (quality desc).
     """
     # the quality formula and the marker-argmax come from their single
-    # sources in operators/text.py (quality_combine / lang_hits_exprs /
-    # lang_argmax) composed into this one-scan select -- a tuned weight
+    # sources in operators/text.py (quality_combine / predict_lang)
+    # composed into this one-scan select -- a tuned weight
     # or marker list lands here and in the dedup survivor pick at once
     # (r14 review: the previous inline copies could silently drift)
     toks = tokens(F.col(text_col))
@@ -65,25 +64,14 @@ def curate_documents(
         n_toks,
         F.length(text_col),
     )
-    # the marker hits are staged in their own columns, as in text.lang_id:
-    # inline, each language's filter would run once in the argmax's
-    # greatest and again in every when branch
-    hits = lang_hits_exprs(F.col(text_col))
-    base = docs.select(
+    base = predict_lang(
+        docs,
+        text_col,
         "doc_id",
         F.md5(F.col(text_col)).alias("content_hash"),
         F.size(bpe_tokens(F.col(text_col))).alias("n_bpe_tokens"),
         quality.alias("quality"),
-        *[hits[lang].alias(f"hits_{lang}") for lang in LANG_MARKERS],
-    ).select(
-        "doc_id",
-        "content_hash",
-        "n_bpe_tokens",
-        "quality",
-        lang_argmax({lang: F.col(f"hits_{lang}") for lang in LANG_MARKERS}).alias(
-            "predicted_lang"
-        ),
-    )
+    ).drop(*[f"hits_{lang}" for lang in LANG_MARKERS])
     deduped = (
         base.withColumn(
             "_rn",

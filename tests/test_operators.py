@@ -289,28 +289,44 @@ def test_connected_components_transitive(spark):
     assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
 
 
-def test_connected_components_long_chain_converges(spark):
+# the session's broadcast threshold (the driver union-find), then broadcast
+# off (the large/small-star rounds)
+CC_THRESHOLDS = (None, -1)
+
+
+def test_connected_components_long_chain_converges(spark, broadcast_threshold):
     """A 12-node path graph needs multiple propagation rounds; the loop
-    must keep iterating past the first round and stop at the fixpoint."""
+    must keep iterating past the first round and stop at the fixpoint.
+    Checked on both paths."""
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(12)], "doc_a long, doc_b long"
     )
-    got = D.connected_components(pairs).collect()
-    assert {r.cluster_id for r in got} == {0}
-    assert len(got) == 13
+    for threshold in CC_THRESHOLDS:
+        if threshold is not None:
+            broadcast_threshold(threshold)
+        got = D.connected_components(pairs).collect()
+        assert {r.cluster_id for r in got} == {0}, threshold
+        assert len(got) == 13, threshold
 
 
-def test_connected_components_deep_chain_beyond_iter_budget(spark):
+def test_connected_components_deep_chain_beyond_iter_budget(
+    spark, broadcast_threshold
+):
     """A 100-node path has diameter 99 -- plain min-label propagation needs
     ~99 rounds and would blow the max_iter=20 budget (silently, per the r2
     advice).  Large-star/small-star closes it in O(log n) rounds, and a
-    residual under-merge raises instead of returning."""
+    residual under-merge raises instead of returning.  Checked on both
+    paths; with broadcast off the star rounds must close it within
+    ``max_iter=20``."""
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(99)], "doc_a long, doc_b long"
     )
-    got = D.connected_components(pairs).collect()
-    assert {r.cluster_id for r in got} == {0}
-    assert len(got) == 100
+    for threshold in CC_THRESHOLDS:
+        if threshold is not None:
+            broadcast_threshold(threshold)
+        got = D.connected_components(pairs).collect()
+        assert {r.cluster_id for r in got} == {0}, threshold
+        assert len(got) == 100, threshold
 
 
 def test_connected_components_raises_past_round_budget(spark, broadcast_threshold):
@@ -326,9 +342,10 @@ def test_connected_components_raises_past_round_budget(spark, broadcast_threshol
         D.connected_components(pairs, max_iter=3)
 
 
-def test_connected_components_skewed_hub_and_shapes(spark):
+def test_connected_components_skewed_hub_and_shapes(spark, broadcast_threshold):
     """Hot-hub star (one node in every pair) + chain + triangle + isolated
-    pair, with shuffled input order and both id orientations."""
+    pair, with shuffled input order and both id orientations.  Checked on
+    both paths."""
     hub = [(500, i) for i in range(1, 41)]           # star centered off-min
     chain = [(100 + i, 101 + i) for i in range(10)]  # 100..110
     tri = [(200, 201), (201, 202), (200, 202)]
@@ -336,14 +353,19 @@ def test_connected_components_skewed_hub_and_shapes(spark):
     bridge = [(40, 110)]                             # star touches chain? no: 40 is hub leaf
     edges = hub + chain + tri + pair + bridge
     pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
-    got = {r.doc_id: r.cluster_id for r in D.connected_components(pairs).collect()}
     star_chain = {500, *range(1, 41), *range(100, 111)}  # bridged via (40,110)
-    for n in star_chain:
-        assert got[n] == 1, (n, got[n])
-    for n in (200, 201, 202):
-        assert got[n] == 200
-    assert got[300] == 300 and got[301] == 300
-    assert len(got) == len(star_chain) + 3 + 2
+    for threshold in CC_THRESHOLDS:
+        if threshold is not None:
+            broadcast_threshold(threshold)
+        got = {
+            r.doc_id: r.cluster_id for r in D.connected_components(pairs).collect()
+        }
+        for n in star_chain:
+            assert got[n] == 1, (threshold, n, got[n])
+        for n in (200, 201, 202):
+            assert got[n] == 200, threshold
+        assert got[300] == 300 and got[301] == 300, threshold
+        assert len(got) == len(star_chain) + 3 + 2, threshold
 
 
 def test_stratified_sample_rates_and_determinism(spark):

@@ -250,6 +250,36 @@ def test_connected_components_spark_job_count(spark):
     assert 0 < len(jobs) <= CC_JOBS, len(jobs)
 
 
+# the same graph and call with broadcast off, so it takes the star rounds
+# and their star-forest tests, with no shuffle of its own to dedup the
+# input (the first star round ends in DISTINCT)
+CC_STAR_JOBS = 20
+
+
+def test_connected_components_star_path_spark_job_count(spark, broadcast_threshold):
+    from airflow_pipeline_text_processing_spark.operators.dedup import (
+        connected_components,
+    )
+
+    broadcast_threshold(-1)
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (2, 1), (1, 2), (3, 3), (5, 6), (6, 7), (7, 8), (10, 11)],
+        "doc_a long, doc_b long",
+    )
+    sc = spark.sparkContext
+    group = f"cc-star-shape-{os.getpid()}"
+    sc.setJobGroup(group, group)
+    try:
+        rows = connected_components(pairs).collect()
+    finally:
+        sc.setJobGroup("", "")
+    assert sorted((r.doc_id, r.cluster_id) for r in rows) == [
+        (1, 1), (2, 1), (3, 1), (5, 5), (6, 5), (7, 5), (8, 5), (10, 10), (11, 10)
+    ]
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= CC_STAR_JOBS, len(jobs)
+
+
 def test_curate_documents_runs_each_marker_filter_once(spark, monkeypatch):
     """The language-marker hits are staged in their own columns before the
     argmax, so each marker list's filter is in the optimized plan once --

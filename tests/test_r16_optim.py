@@ -21,8 +21,9 @@ keeping results bit-identical:
   a star forest, and its labels match a pure-Python union-find.
 * ``dedup.connected_components``'s driver path -- an edge list within the
   broadcast threshold is labeled by a union-find on the driver in one
-  Spark job; the pins check the job count, the path boundary, edge cases
-  against the star path, and union-find agreement on both paths.
+  Spark job; the pins check the job count, the path boundary (sized by
+  the id types), a single read of an over-cap input, edge cases against
+  the star path, and union-find agreement on both paths.
 """
 
 from __future__ import annotations
@@ -285,9 +286,12 @@ def test_connected_components_driver_path_runs_one_spark_job(spark, monkeypatch)
 
 
 def test_connected_components_path_boundary(spark, monkeypatch, broadcast_threshold):
-    """A threshold of 80 bytes makes the driver cap 80 // 16 = 5 edges: a
-    5-edge graph takes the driver path, the same graph plus a reversed
-    duplicate edge (6 edges) the star rounds, and both label alike."""
+    """A threshold of 80 bytes makes the driver cap 80 // 16 = 5 edges of
+    long ids: a 5-edge graph takes the driver path, the same graph plus a
+    reversed duplicate edge (6 edges) the star rounds, and both label
+    alike.  A string id pair is sized at the planner's 2 x 20 bytes, so
+    the cap is 80 // 40 = 2 string edges: 3 string edges, within the long
+    cap, take the star rounds."""
     from airflow_pipeline_text_processing_spark.operators.dedup import (
         connected_components,
     )
@@ -302,6 +306,47 @@ def test_connected_components_path_boundary(spark, monkeypatch, broadcast_thresh
     six = five + [(2, 1)]
     assert _labels(connected_components(spark.createDataFrame(six, schema))) == want
     assert len(rounds) >= 1
+
+    rounds.clear()
+    strings = [("b", "a"), ("c", "b")]
+    schema = "doc_a string, doc_b string"
+    want = [("a", "a"), ("b", "a"), ("c", "a")]
+    assert _labels(connected_components(spark.createDataFrame(strings, schema))) == want
+    assert rounds == []
+    strings += [("x", "y")]
+    want += [("x", "x"), ("y", "x")]
+    assert _labels(connected_components(spark.createDataFrame(strings, schema))) == want
+    assert len(rounds) >= 1
+
+
+def test_connected_components_over_cap_reads_input_once(
+    spark, monkeypatch, broadcast_threshold
+):
+    """An edge list over the cap is read once: the driver-path read
+    materializes the edge checkpoint, and the star rounds start from it
+    instead of computing the input again.  An accumulator counts the rows
+    the input produces."""
+    from airflow_pipeline_text_processing_spark.operators.dedup import (
+        connected_components,
+    )
+
+    rounds = _count_star_rounds(monkeypatch)
+    broadcast_threshold(80)  # cap: 5 edges of long ids
+    edges = [(1, 2), (2, 3), (3, 4), (7, 8), (9, 8), (2, 1)]
+    sc = spark.sparkContext
+    reads = sc.accumulator(0)
+
+    def count(row):
+        reads.add(1)
+        return row
+
+    pairs = spark.createDataFrame(
+        sc.parallelize(edges, 2).map(count), "doc_a long, doc_b long"
+    )
+    got = _labels(connected_components(pairs))
+    assert got == [(1, 1), (2, 1), (3, 1), (4, 1), (7, 7), (8, 7), (9, 7)]
+    assert len(rounds) >= 1
+    assert reads.value == len(edges)
 
 
 @pytest.mark.parametrize(

@@ -127,7 +127,7 @@ def predict_lang(docs: DataFrame, text_col: str, *cols) -> DataFrame:
     """``docs`` projected to ``cols`` plus one ``hits_<lang>`` marker-hit
     count per language and their argmax ``predicted_lang`` -- the marker
     policy's single source (lang_id here, the curation pipeline's
-    single-scan select; r14 review).  Zero hits -> 'unknown', exact ties
+    single-scan select).  Zero hits -> 'unknown', exact ties
     break on LANG_MARKERS order.
 
     The hits are staged in their own select and the argmax reads the

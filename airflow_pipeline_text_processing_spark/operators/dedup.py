@@ -949,7 +949,9 @@ def canonical_pick(
     ASC)`` where ``quality_ppm = floor(1e6 * quality_score)`` -- the
     integer projection of the shared heuristic in
     ``operators/text.py::quality_ppm``, so the pick and its tiebreak are
-    bit-identical across engines.  This is what pair/cluster output is
+    bit-identical across engines.  A document with no token has a NULL
+    ``quality_ppm`` that ranks last, so among zero-token twins the min
+    ``doc_id`` survives.  This is what pair/cluster output is
     FOR: ``dedup_clusters`` says who is whose duplicate; this operator
     says which copy the training set keeps (keep-best-quality is the
     standard choice over keep-first in corpus curation, since truncated or

@@ -53,73 +53,77 @@ def bpe_tokens(col: Column) -> Column:
 
 
 def token_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Per-document token counting (whitespace/punct tokenizer)."""
+    """Per-document token counting (whitespace/punct tokenizer); a
+    document with no token has a NULL ``avg_token_len``."""
     toks = tokens(F.col(text_col))
+    n_chars = F.aggregate(toks, F.lit(0).cast("long"), lambda a, t: a + F.length(t))
     return docs.select(
         "doc_id",
         F.size(toks).alias("n_tokens"),
         F.size(F.array_distinct(toks)).alias("n_unique_tokens"),
-        (
-            F.aggregate(toks, F.lit(0).cast("long"), lambda a, t: a + F.length(t))
-            .cast("double")
-            / F.size(toks)
-        ).alias("avg_token_len"),
+        F.try_divide(n_chars.cast("double"), F.size(toks)).alias("avg_token_len"),
     )
 
 
 def quality_combine(stop_hits, n_unique, punct_count, n_tokens, n_chars):
     """THE quality formula (0.4 stopword ratio + 0.4 unique-token ratio
-    - 0.2 punctuation density) as one column expression -- the single
-    source every consumer composes (quality_score here, the curation
-    pipeline's single-scan select, the dedup survivor pick), so a tuned
-    weight lands everywhere at once (r14 review)."""
+    - 0.2 punctuation density) as one column expression.  A zero token
+    or character count gives NULL (``try_divide``), as ``/`` does with
+    ANSI mode off and in DuckDB, instead of raising DIVIDE_BY_ZERO."""
     return (
-        (stop_hits.cast("double") / n_tokens) * 0.4
-        + (n_unique.cast("double") / n_tokens) * 0.4
-        - (punct_count.cast("double") / n_chars) * 0.2
+        F.try_divide(stop_hits.cast("double"), n_tokens) * 0.4
+        + F.try_divide(n_unique.cast("double"), n_tokens) * 0.4
+        - F.try_divide(punct_count.cast("double"), n_chars) * 0.2
     )
+
+
+def quality_inputs(text: Column) -> dict:
+    """The five inputs of :func:`quality_combine` over a text column,
+    named as :func:`quality_score` emits them: the one definition of
+    document quality that every consumer selects."""
+    toks = tokens(text)
+    return {
+        "n_chars_q": F.length(text),
+        "n_tokens": F.size(toks),
+        "stop_hits": F.size(F.filter(toks, lambda t: t.isin(STOPWORDS))),
+        "punct_count": F.length(text)
+        - F.length(F.regexp_replace(text, PUNCT_CLASS, "")),
+        "n_unique_tokens": F.size(F.array_distinct(toks)),
+    }
+
+
+def quality_col(text: Column) -> Column:
+    """Document quality of a text column (NULL when it has no token)."""
+    q = quality_inputs(text)
+    return quality_combine(
+        q["stop_hits"], q["n_unique_tokens"], q["punct_count"],
+        q["n_tokens"], q["n_chars_q"],
+    )
+
+
+def quality_ppm_col(text: Column) -> Column:
+    """``floor(quality * 1e6)`` as a long: the ranking key of
+    canonical_pick, domain_cap and token_budget_select, so every pick
+    and tiebreak is bit-identical across engines."""
+    return F.floor(quality_col(text) * F.lit(1_000_000.0)).cast("long")
 
 
 def quality_score(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Heuristic document quality: stopword ratio, punctuation density,
     unique-token ratio combined into one deterministic score
-    (``quality_combine``)."""
-    toks = tokens(F.col(text_col))
-    n_tokens = F.size(toks)
-    stop_hits = F.size(F.filter(toks, lambda t: t.isin(STOPWORDS)))
-    punct_count = F.length(text_col) - F.length(
-        F.regexp_replace(F.col(text_col), PUNCT_CLASS, "")
-    )
-    base = docs.select(
+    (:func:`quality_inputs`, :func:`quality_col`)."""
+    text = F.col(text_col)
+    return docs.select(
         "doc_id",
-        F.length(text_col).alias("n_chars_q"),
-        n_tokens.alias("n_tokens"),
-        stop_hits.alias("stop_hits"),
-        punct_count.alias("punct_count"),
-        F.size(F.array_distinct(toks)).alias("n_unique_tokens"),
-    )
-    return base.select(
-        "*",
-        quality_combine(
-            F.col("stop_hits"),
-            F.col("n_unique_tokens"),
-            F.col("punct_count"),
-            F.col("n_tokens"),
-            F.col("n_chars_q"),
-        ).alias("quality"),
+        *[c.alias(name) for name, c in quality_inputs(text).items()],
+        quality_col(text).alias("quality"),
     )
 
 
 def quality_ppm(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """``(doc_id, quality_ppm)``: :func:`quality_score` as an integer,
-    ``floor(quality * 1e6)`` -- the ranking key of canonical_pick,
-    domain_cap and token_budget_select, so every pick and tiebreak is
-    bit-identical across engines."""
-    return quality_score(docs, text_col).select(
-        "doc_id",
-        F.floor(F.col("quality") * F.lit(1_000_000.0))
-        .cast("long")
-        .alias("quality_ppm"),
+    """``(doc_id, quality_ppm)`` by :func:`quality_ppm_col`."""
+    return docs.select(
+        "doc_id", quality_ppm_col(F.col(text_col)).alias("quality_ppm")
     )
 
 

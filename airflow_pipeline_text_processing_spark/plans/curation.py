@@ -28,11 +28,10 @@ from pyspark.sql import DataFrame, Window
 from ..operators.windows import ordered_running_sum
 from ..operators.text import (
     LANG_MARKERS,
-    PUNCT_CLASS,
-    STOPWORDS,
     bpe_tokens,
     predict_lang,
-    quality_combine,
+    quality_col,
+    quality_ppm_col,
     tokens,
 )
 
@@ -49,28 +48,16 @@ def curate_documents(
     Returns ``doc_id, predicted_lang, n_bpe_tokens, quality, cum_tokens``
     ordered by selection priority (quality desc).
     """
-    # the quality formula and the marker-argmax come from their single
-    # sources in operators/text.py (quality_combine / predict_lang)
-    # composed into this one-scan select -- a tuned weight
-    # or marker list lands here and in the dedup survivor pick at once
-    # (r14 review: the previous inline copies could silently drift)
-    toks = tokens(F.col(text_col))
-    n_toks = F.size(toks)
-    quality = quality_combine(
-        F.size(F.filter(toks, lambda t: t.isin(STOPWORDS))),
-        F.size(F.array_distinct(toks)),
-        F.length(text_col)
-        - F.length(F.regexp_replace(F.col(text_col), PUNCT_CLASS, "")),
-        n_toks,
-        F.length(text_col),
-    )
+    # quality and the marker-argmax come from their single sources in
+    # operators/text.py, composed into this one-scan select; a NULL
+    # quality (no token) fails the quality floor
     base = predict_lang(
         docs,
         text_col,
         "doc_id",
         F.md5(F.col(text_col)).alias("content_hash"),
         F.size(bpe_tokens(F.col(text_col))).alias("n_bpe_tokens"),
-        quality.alias("quality"),
+        quality_col(F.col(text_col)).alias("quality"),
     ).drop(*[f"hits_{lang}" for lang in LANG_MARKERS])
     deduped = (
         base.withColumn(
@@ -314,7 +301,7 @@ def domain_cap(
     dominates the training mix regardless of its raw volume.
 
     Ranking is ``(quality_ppm DESC, doc_id ASC)`` with ``quality_ppm``
-    the shared integer projection operators/text.py::quality_ppm
+    the shared integer column operators/text.py::quality_ppm_col
     (the same tiebreak canonical_pick uses), so the kept set is
     deterministic and bit-identical across engines.  Output: kept rows
     ``(doc_id, source, quality_ppm, rk)``.
@@ -328,15 +315,15 @@ def domain_cap(
     the partial top-N is admissible because rank <= per_source in the
     full order implies rank <= per_source within every subset.
     """
-    from ..operators.text import quality_ppm
-
-    q = quality_ppm(docs, text_col)
     w = Window.partitionBy(source_col).orderBy(
         F.col("quality_ppm").desc(), F.col("doc_id").asc()
     )
     return (
-        docs.select("doc_id", source_col)
-        .join(q, "doc_id")
+        docs.select(
+            "doc_id",
+            source_col,
+            quality_ppm_col(F.col(text_col)).alias("quality_ppm"),
+        )
         .withColumn("rk", F.row_number().over(w).cast("long"))
         .filter(F.col("rk") <= per_source)
         .select("doc_id", source_col, "quality_ppm", "rk")
@@ -403,14 +390,12 @@ def token_budget_select(
     rank and running sum.  Hot domains bound the window sort exactly as
     in :func:`domain_cap` (and the same two-pass partial-rank rewrite
     applies when a budget implies a rank bound)."""
-    from ..operators.text import quality_ppm, tokens
-
-    q = quality_ppm(docs, text_col)
     base = docs.select(
         "doc_id",
         source_col,
         F.size(tokens(F.col(text_col))).cast("long").alias("n_tokens"),
-    ).join(q, "doc_id")
+        quality_ppm_col(F.col(text_col)).alias("quality_ppm"),
+    )
     w = Window.partitionBy(source_col).orderBy(
         F.col("quality_ppm").desc(), F.col("doc_id").asc()
     )

@@ -113,6 +113,8 @@ def test_strip_boilerplate_matches_python_reference(spark):
 def _py_quality_ppm(t):
     tk = _py_tokens(t)
     n = len(tk)
+    if n == 0:
+        return None  # no token: NULL quality, as SQL's x / 0 with ANSI off
     stop = sum(1 for x in tk if x in STOPWORDS)
     uniq = len(set(tk))
     punct = len(t) - len(re.sub(r"[.,;:!?]", "", t))
@@ -121,7 +123,7 @@ def _py_quality_ppm(t):
 
 
 def test_canonical_pick_matches_python_reference(spark):
-    for seed in range(5):
+    for seed in range(6):
         rng = random.Random(200 + seed)
         texts = [
             " ".join(
@@ -136,6 +138,12 @@ def test_canonical_pick_matches_python_reference(spark):
                 for _ in range(rng.randint(0, 8))
             }
         )
+        if seed == 5:
+            # zero-token docs (empty, CJK-only, punctuation-only): a
+            # cluster mixing them with a scored doc, and one of only them
+            zero = {3: "", 7: "中文文本", 11: "?!", 12: "中文 文本"}
+            texts = [zero.get(i, t) for i, t in enumerate(texts)]
+            pairs = sorted(set(pairs) | {(3, 7), (7, 9), (11, 12)})
         # python reference: union-find + quality argmax
         parent = list(range(15))
 
@@ -154,8 +162,8 @@ def test_canonical_pick_matches_python_reference(spark):
         members = {}
         for i, c in cluster.items():
             members.setdefault(c, []).append(i)
-        keep = {
-            c: min(ms, key=lambda i: (-qual[i], i))
+        keep = {  # NULL quality ranks last, then doc_id
+            c: min(ms, key=lambda i: (qual[i] is None, -(qual[i] or 0), i))
             for c, ms in members.items()
         }
         want = {

@@ -166,23 +166,16 @@ def rebuild_text(chunks) -> Optional[str]:
         return None
 
 
-def make_encode_chunks(chunk_size: int = chunker.DEFAULT_CHUNK_SIZE,
-                       nsym: int = chunker.DEFAULT_RS_NSYM):
-    """Build the fused text -> array<chunk struct> UDF for a given config."""
+@pandas_udf(ArrayType(CHUNK_STRUCT))
+def encode_chunks(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
+    """The fused text -> array<chunk struct> UDF at the default chunk size
+    and Reed-Solomon parity (:func:`chunker.build_chunks`)."""
+    for texts in batches:
+        yield pd.Series(
+            [None if t is None else _as_tuples(chunker.build_chunks(t))
+             for t in texts]
+        )
 
-    @pandas_udf(ArrayType(CHUNK_STRUCT))
-    def _encode_chunks(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        for texts in batches:
-            yield pd.Series(
-                [None if t is None
-                 else _as_tuples(chunker.build_chunks(t, chunk_size, nsym))
-                 for t in texts]
-            )
-
-    return _encode_chunks
-
-
-encode_chunks = make_encode_chunks()
 
 ENCODE_VERIFY_STRUCT = StructType([
     StructField("chunks", ArrayType(CHUNK_STRUCT)),
@@ -193,7 +186,7 @@ ENCODE_VERIFY_STRUCT = StructType([
 def make_encode_verify(chunk_size: int = chunker.DEFAULT_CHUNK_SIZE,
                        nsym: int = chunker.DEFAULT_RS_NSYM):
     """Build the fused encode-then-verify UDF: bytes -> ``struct(chunks,
-    reconstructed_text)``, where ``chunks`` equals ``make_encode_chunks``'s
+    reconstructed_text)``, where ``chunks`` equals ``encode_chunks``'s
     output and ``reconstructed_text`` equals ``decode_chunks(chunks)``, both
     computed in one Arrow pass; both NULL when the bytes are not UTF-8."""
 

@@ -52,15 +52,25 @@ def exact_dedup_groups(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
+def keep_least(df: DataFrame, key: str, order: str) -> DataFrame:
+    """One row per ``key`` value: the one with the least ``order``.
+
+    The keep rule of every exact dedup -- the deterministic stand-in for
+    the row an ``INSERT ... ON CONFLICT DO NOTHING`` would keep.  A NULL
+    ``order`` sorts last (``min_by``'s rule and DuckDB's default), and all
+    NULL ``key`` rows are one group.  One window exchange on ``key``."""
+    w = Window.partitionBy(key).orderBy(F.col(order).asc_nulls_last())
+    return (
+        df.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
+        .drop("_rn")
+    )
+
+
 def exact_dedup(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Keep exactly one row per distinct content (the min-doc_id winner)."""
-    ranked = docs.select(
-        "*", F.md5(F.col(text_col)).alias("content_hash")
-    ).withColumn(
-        "_rn",
-        F.row_number().over(Window.partitionBy("content_hash").orderBy("doc_id")),
-    )
-    return ranked.filter(F.col("_rn") == 1).drop("_rn", "content_hash")
+    hashed = docs.select("*", F.md5(F.col(text_col)).alias("content_hash"))
+    return keep_least(hashed, "content_hash", "doc_id").drop("content_hash")
 
 
 # ------------------------------------------------------- shingles / jaccard
@@ -117,6 +127,29 @@ def _shingle_sets(docs: DataFrame, text_col: str = "text", n: int = 3) -> DataFr
     )
 
 
+def _pairs_sharing(rows: DataFrame, *keys: str) -> DataFrame:
+    """Candidate (doc_a < doc_b) pairs: two documents pair when a row of
+    each agrees on every one of ``keys`` -- a shared shingle (inverted
+    index), prefix shingle or LSH band (the classic banding trick).
+    ``rows`` carries ``doc_id`` and ``keys``.
+
+    ``rows`` feeds both self-join sides, so it is cut first with a lazy
+    ``localCheckpoint``: without the cut its whole upstream (shingle
+    explode, df-count join, signature pipeline) executes once per side --
+    Spark does not recognize the aliased subtrees as one exchange (r15)."""
+    rows = rows.localCheckpoint(eager=False)
+    a, b = rows.alias("a"), rows.alias("b")
+    on = [F.col(f"a.{k}") == F.col(f"b.{k}") for k in keys]
+    on.append(F.col("a.doc_id") < F.col("b.doc_id"))
+    return (
+        a.join(b, reduce(lambda x, y: x & y, on))
+        .select(
+            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
+        )
+        .distinct()
+    )
+
+
 def jaccard_candidate_pairs(
     docs: DataFrame,
     text_col: str = "text",
@@ -148,21 +181,7 @@ def jaccard_candidate_pairs(
             sh.join(df_counts.filter(F.col("df") <= max_df), "shingle")
             .select("doc_id", "shingle")
         )
-    # cut before the self-join: both sides otherwise re-run the shingle
-    # explode (and, when capped, the df-count join) -- r15
-    sh = sh.localCheckpoint(eager=False)
-    a, b = sh.alias("a"), sh.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .distinct()
-    )
+    return _pairs_sharing(sh, "shingle")
 
 
 def jaccard_pairs(
@@ -233,26 +252,6 @@ def _minhash_bands(sets: DataFrame, num_perm: int, band_size: int) -> DataFrame:
     )
 
 
-def _band_pairs(bands: DataFrame) -> DataFrame:
-    """Candidate (doc_a < doc_b) pairs: documents that collide in at least
-    one band (the classic banding trick)."""
-    # the band table feeds both self-join sides; without a cut the whole
-    # signature pipeline executes twice -- Spark does not recognize the
-    # aliased subtrees as one exchange (r15)
-    bands = bands.localCheckpoint(eager=False)
-    a, b = bands.alias("a"), bands.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_sig") == F.col("b.band_sig"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .distinct()
-    )
 
 
 def minhash_signatures(
@@ -297,7 +296,9 @@ def lsh_candidate_pairs(
     """Candidate (doc_a < doc_b) pairs from long-format signatures: a pair
     is a candidate iff it collides in at least one band of
     ``band_signatures``."""
-    return _band_pairs(band_signatures(signatures, band_size))
+    return _pairs_sharing(
+        band_signatures(signatures, band_size), "band", "band_sig"
+    )
 
 
 def jaccard_for_pairs(
@@ -388,25 +389,8 @@ def prefix_filter_pairs(
         - F.expr(f"({t_num} * sz + {t_den} - 1) div {t_den}")
         + 1
     )
-    # cut before the self-join: both sides otherwise re-run the df-count
-    # join + per-doc rarity window (r15)
-    prefix = (
-        pos.filter(F.col("pos") <= plen)
-        .select("doc_id", "shingle")
-        .localCheckpoint(eager=False)
-    )
-    a, b = prefix.alias("a"), prefix.alias("b")
-    cands = (
-        a.join(
-            b,
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-        )
-        .distinct()
+    cands = _pairs_sharing(
+        pos.filter(F.col("pos") <= plen).select("doc_id", "shingle"), "shingle"
     )
     verified = jaccard_for_pairs(docs, cands, text_col, n)
     keep = F.col("n_common") * t_den >= t_num * (
@@ -490,7 +474,9 @@ def minhash_dedup_pairs(
     shingle self-join: at 100 TB the all-sharing-pairs product is exactly
     the blow-up LSH exists to avoid."""
     sets = _shingle_sets(docs, text_col, n).localCheckpoint(eager=False)
-    candidates = _band_pairs(_minhash_bands(sets, num_perm, band_size))
+    candidates = _pairs_sharing(
+        _minhash_bands(sets, num_perm, band_size), "band", "band_sig"
+    )
     return (
         _jaccard_from_sets(candidates, sets, sets)
         .filter(F.col("jaccard") >= threshold)

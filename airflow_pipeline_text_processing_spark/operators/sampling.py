@@ -37,13 +37,6 @@ def rate_threshold(rate: float) -> str:
     return format(scaled, "016x") + "0" * 16
 
 
-def deterministic_sample(
-    df: DataFrame, rate: float, key: Column
-) -> DataFrame:
-    """Keep ~rate of rows, chosen by hash of ``key`` (reproducible)."""
-    return df.filter(F.md5(key.cast("string")) < F.lit(rate_threshold(rate)))
-
-
 def stratified_sample(
     df: DataFrame,
     stratum_col: str,

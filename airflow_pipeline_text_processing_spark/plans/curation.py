@@ -25,6 +25,7 @@ from typing import Optional, Sequence
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
+from ..operators.dedup import keep_least
 from ..operators.windows import ordered_running_sum
 from ..operators.text import (
     LANG_MARKERS,
@@ -59,16 +60,7 @@ def curate_documents(
         F.size(bpe_tokens(F.col(text_col))).alias("n_bpe_tokens"),
         quality_col(F.col(text_col)).alias("quality"),
     ).drop(*[f"hits_{lang}" for lang in LANG_MARKERS])
-    deduped = (
-        base.withColumn(
-            "_rn",
-            F.row_number().over(
-                Window.partitionBy("content_hash").orderBy("doc_id")
-            ),
-        )
-        .filter(F.col("_rn") == 1)
-        .drop("_rn", "content_hash")
-    )
+    deduped = keep_least(base, "content_hash", "doc_id").drop("content_hash")
     kept = deduped.filter(
         (F.col("n_bpe_tokens") >= min_tokens) & (F.col("quality") >= min_quality)
     )
@@ -245,12 +237,11 @@ def curate_incremental(
     # boundary (batch rows only, never the corpus) truncates the plan the
     # same way curate_full's boundaries do; blocks are swept by the
     # registry's residue scope / ContextCleaner.
-    w = Window.partitionBy("_h").orderBy("doc_id")
+    hashed = new_docs.select(
+        "doc_id", text_col, F.md5(F.col(text_col)).alias("_h")
+    )
     batch1 = (
-        new_docs.select("doc_id", text_col)
-        .withColumn("_h", F.md5(F.col(text_col)))
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
+        keep_least(hashed, "_h", "doc_id")
         .join(
             corpus_docs.select(F.md5(F.col(text_col)).alias("_h")).distinct(),
             "_h",

@@ -29,6 +29,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from ..operators.dedup import keep_least
+
 TRACKING_SCHEMA = (
     "file_hash string, file_path string, file_size long, "
     "processed_at timestamp, status string, output_file string, "
@@ -41,18 +43,6 @@ STATUSES = ("pending", "processing", "completed", "failed", "retrying", "dead_le
 #: the columns a writer supplies; ``version`` is stamped on append
 _RECORD_COLUMNS = ("file_hash", "file_path", "file_size", "processed_at",
                    "status", "output_file", "error_message", "created_at")
-
-
-def _min_path_per_hash(records: DataFrame) -> DataFrame:
-    """One row per ``file_hash``: the one with the min ``file_path``,
-    whatever the partitioning -- the deterministic stand-in for the row
-    an ``INSERT ... ON CONFLICT DO NOTHING`` would keep."""
-    rest = [c for c in records.columns if c != "file_hash"]
-    return (
-        records.groupBy("file_hash")
-        .agg(F.min_by(F.struct(*rest), "file_path").alias("_r"))
-        .select("file_hash", "_r.*")
-    )
 
 
 class TrackingTable:
@@ -111,10 +101,11 @@ class TrackingTable:
 
     def append_new(self, records: DataFrame) -> None:
         """ON CONFLICT (file_hash) DO NOTHING (ref dags/dag.py:740-759):
-        one row per hash (:func:`_min_path_per_hash`) anti-joined against
-        existing keys, then appended."""
+        one row per hash, the one with the min ``file_path``
+        (:func:`keep_least`), anti-joined against existing keys, then
+        appended."""
         fresh = (
-            _min_path_per_hash(records.select(*_RECORD_COLUMNS))
+            keep_least(records.select(*_RECORD_COLUMNS), "file_hash", "file_path")
             .join(F.broadcast(self.processed_hashes()), "file_hash", "left_anti")
             .withColumn("version", F.lit(0).cast("long"))
         )
@@ -236,7 +227,7 @@ class TrackingTable:
         read failure -- auth, network, driver error -- propagates: treating
         it as "absent" would silently append duplicates and void the
         ON CONFLICT DO NOTHING parity."""
-        fresh = _min_path_per_hash(records)
+        fresh = keep_least(records, "file_hash", "file_path")
         if self._jdbc_table_exists(url, table, properties):
             existing = self.read_jdbc(url, table, properties).select("file_hash")
             fresh = fresh.join(F.broadcast(existing), "file_hash", "left_anti")

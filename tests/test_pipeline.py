@@ -136,13 +136,13 @@ def test_fused_encode_matches_encode_then_decode(spark):
     the stand-alone encode UDF and the text ``decode_chunks`` rebuilds."""
     from airflow_pipeline_text_processing_spark.functions.codec_udfs import (
         decode_chunks,
-        make_encode_chunks,
+        encode_chunks,
     )
 
     fused = encode_documents(_docs(spark)).select("path", "chunks", "reconstructed_text")
     chained = (
         _docs(spark)
-        .select("path", make_encode_chunks()(F.col("text")).alias("chunks"))
+        .select("path", encode_chunks(F.col("text")).alias("chunks"))
         .withColumn("decoded", decode_chunks("chunks"))
     )
     got = {r.path: r for r in fused.collect()}
@@ -320,7 +320,7 @@ def test_within_tick_duplicates_processed_twice_tracked_once(spark, tmp_path):
     """Two files with the same new content in one tick are both processed
     (as the reference's per-file loop does), and tracking keeps the hash
     once (its INSERT ... ON CONFLICT DO NOTHING), with the lexicographic-min
-    path: ``append_new``'s ``min_by``."""
+    path: ``append_new`` keeps it through ``keep_least``."""
     cfg = _tick_cfg(tmp_path, {"a.txt": "same words", "b.txt": "same words",
                                "c.txt": "other words"})
     res = run_pipeline(spark, cfg)

@@ -27,6 +27,7 @@ from functools import reduce
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 
+from ..session import broadcast_sized
 from .similarity import (
     cosine_from_norms,
     hyperplane_signatures,
@@ -790,20 +791,15 @@ def connected_components(
     Two paths give the same labels:
 
     * **Driver path**, for an edge list the planner would size within
-      ``spark.sql.autoBroadcastJoinThreshold``: one
-      ``limit(cap + 1).toArrow()`` reads at most ``cap + 1`` edges, where
-      ``cap`` is the threshold over the id pair's default size (16 bytes
-      for two longs, 40 for two strings, as the planner sizes a row; a
-      string id longer than 20 bytes makes the read larger than the
-      threshold).  When ``cap`` or fewer come back, :func:`_min_labels`
-      labels them on the driver and the result is built from Arrow, which
-      starts no Python worker: a ``LocalRelation`` with exact statistics
-      up to ``spark.sql.execution.arrow.localRelationThreshold`` (48 MB
-      of labels), an RDD of Arrow batches beyond it.  Over a
-      materialized edge list the read is the call's one Spark job,
-      however many rounds the graph would need.  When more come back,
-      the read has cached the edge list for the star path, so the input
-      is computed once either way.
+      ``spark.sql.autoBroadcastJoinThreshold``
+      (:func:`..session.broadcast_sized`: 16 bytes an edge of two longs,
+      40 of two strings; a string id longer than 20 bytes makes the read
+      larger than the threshold).  :func:`_min_labels` labels the edges
+      on the driver and the result is built from Arrow, which starts no
+      Python worker.  Over a materialized edge list the read is the
+      call's one Spark job, however many rounds the graph would need.
+      Over the cap, the read has cached the edge list for the star path,
+      so the input is computed once either way.
     * **Star path**, for larger edge lists or a threshold of ``-1``:
       large-star and small-star rounds (Kiveris et al., SoCC 2014), which
       converge in O(log n) rounds *independent of graph diameter* -- a
@@ -841,16 +837,11 @@ def connected_components(
         .filter(F.col("u") != F.col("v"))
         .localCheckpoint(eager=False)
     )
-    # the threshold in bytes over the planner's size of one id pair (8 per
-    # long, 20 per string); a threshold of -1 (broadcast off) floors to a
-    # cap of -1, which skips the driver path.  The read materializes the
-    # checkpoint, so a star path after it starts from the cached edges.
-    threshold = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
-    cap = threshold // edges._jdf.schema().defaultSize()
-    if cap >= 0:
-        head = edges.limit(cap + 1).toArrow()
-        if head.num_rows <= cap:
-            return spark.createDataFrame(_min_labels(head))
+    # the read materializes the checkpoint, so a star path after it
+    # starts from the cached edges
+    head = broadcast_sized(edges)
+    if head is not None:
+        return spark.createDataFrame(_min_labels(head))
     for _ in range(max_iter):
         edges = _star_round(edges).localCheckpoint(eager=False)
         if _is_star_forest(edges):
@@ -944,17 +935,24 @@ def canonical_pick(
     boilerplate-padded twins should lose to the clean original).
 
     Per-doc output: ``(doc_id, cluster_id, n_members, quality_ppm,
-    is_kept)``.  Scale shape: CC (a driver union-find for an edge list
-    within the broadcast threshold, O(log n) star-contraction rounds
-    beyond it) + one cluster-partitioned pass that computes the
-    cluster size and the survivor side by side -- nothing quadratic, no
-    new shuffle class."""
+    is_kept)``, in ``doc_id`` order.  Scale shape: CC (a driver
+    union-find for an edge list within the broadcast threshold, O(log n)
+    star-contraction rounds beyond it) + one cluster-partitioned pass
+    that computes the cluster size and the survivor side by side --
+    nothing quadratic, no new shuffle class.  The call runs Spark jobs:
+    CC's, and a lazily checkpointed pick that
+    :func:`..session.broadcast_sized` reads.  A pick within the
+    broadcast threshold comes back as a ``LocalRelation`` with exact
+    statistics, so a join of the documents to its kept ids broadcasts
+    the pick (the planner sizes the unread pick at the product of its
+    join's inputs: 7.5 GB for 750 documents); a larger pick is the
+    checkpoint, sorted."""
     from .text import quality_ppm
 
     w = Window.partitionBy("cluster_id").orderBy(
         F.col("quality_ppm").desc(), F.col("doc_id")
     )
-    return (
+    picks = (
         cluster_membership(quality_ppm(docs, text_col), pairs)
         .withColumn(
             "is_kept",
@@ -965,8 +963,13 @@ def canonical_pick(
         .select(
             "doc_id", "cluster_id", "n_members", "quality_ppm", "is_kept"
         )
+        .localCheckpoint(eager=False)
         .orderBy("doc_id")
     )
+    table = broadcast_sized(picks)
+    if table is None:
+        return picks
+    return picks.sparkSession.createDataFrame(table)
 
 
 # -------------------------------------------------- embedding near-dup

@@ -13,9 +13,16 @@ helpers here express the same semantics as a two-level computation:
    O(parallelism) rows, not O(data)) whose prefix sums become additive
    offsets, broadcast-joined back.
 
-The branches do not share one exchange: the totals branch prunes columns
-before its range partitioning, so the plan holds two ``rangepartitioning``
-exchanges and each scans the input (``curate_documents`` checkpoints it).
+Both branches read one materialized split.  Two ``rangepartitioning``
+exchanges sample their input with different seeds, and when the planner
+does not reuse one for the other (it did not over a checkpoint of
+``spark.range`` rows) their boundaries can differ: a row then counts in
+one partition's local sum and in another's total.
+
+An input the planner would size within the broadcast threshold skips all
+of this: :func:`ordered_running_sum` reads it to the driver
+(``session.broadcast_sized``) and runs the naive window over the one
+partition of the ``LocalRelation`` it builds from the rows.
 """
 
 from __future__ import annotations
@@ -24,6 +31,8 @@ from typing import Optional, Sequence
 
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
+
+from ..session import broadcast_sized
 
 
 def ordered_running_sum(
@@ -40,12 +49,44 @@ def ordered_running_sum(
     tie straddling a partition boundary would make the split ambiguous.
     Result is identical to
     ``F.sum(value_col).over(Window.orderBy(*order_by))`` -- the naive
-    single-partition form -- for any partition count.
+    single-partition form -- for any partition count, NULL values
+    included.  (A sum of doubles can differ in its last bits: the
+    two-level form adds partition totals in another association.)
+
+    Scale shape: the call runs Spark jobs.  It checkpoints ``df`` lazily
+    and :func:`..session.broadcast_sized` reads it; rows within the
+    broadcast threshold get the naive form over a ``LocalRelation``, and
+    ``num_partitions`` does not apply.  Larger inputs take the two-level
+    form over ``num_partitions`` range partitions (default: the default
+    parallelism), whose split is checkpointed too.
     """
+    # one materialization of the input for both paths: the size probe
+    # below computes it, and range partitioning SAMPLES its input to pick
+    # boundaries, which would otherwise run the input's plan twice.  The
+    # ContextCleaner frees the blocks once the result is collected as
+    # garbage, unlike persist()'s session-lifetime cache.
+    df = df.localCheckpoint(eager=False)
     spark = df.sparkSession
+    table = broadcast_sized(df)
+    if table is not None:
+        # the naive form over the rows on the driver; coalesce(1) puts the
+        # LocalRelation's slices in the one partition the window needs
+        # without a shuffle, so a collect is one Spark job
+        return (
+            spark.createDataFrame(table)
+            .coalesce(1)
+            .withColumn(
+                out_col, F.sum(F.col(value_col)).over(Window.orderBy(*order_by))
+            )
+        )
     n = num_partitions or spark.sparkContext.defaultParallelism
-    parted = df.repartitionByRange(n, *order_by).withColumn(
-        "_pid", F.spark_partition_id()
+    # both branches below must see the same split: two range exchanges
+    # sample with different seeds and can place a boundary differently,
+    # so the split is materialized once and each branch reads it
+    parted = (
+        df.repartitionByRange(n, *order_by)
+        .withColumn("_pid", F.spark_partition_id())
+        .localCheckpoint(eager=False)
     )
     local_w = Window.partitionBy("_pid").orderBy(*order_by)
     local = parted.withColumn("_local", F.sum(F.col(value_col)).over(local_w))
@@ -57,11 +98,13 @@ def ordered_running_sum(
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     offsets = totals.withColumn(
-        "_offset", F.coalesce(F.sum("_ptotal").over(off_w), F.lit(0))
+        "_offset", F.sum("_ptotal").over(off_w)
     ).select("_pid", "_offset")
+    # a sum is NULL until its first non-NULL value, on either level, so a
+    # row whose partition prefix is all NULL carries the offset alone
     return (
         local.join(F.broadcast(offsets), "_pid")
-        .withColumn(out_col, F.col("_local") + F.col("_offset"))
+        .withColumn(out_col, F.expr("coalesce(_local + _offset, _local, _offset)"))
         .drop("_pid", "_local", "_offset")
     )
 

@@ -13,9 +13,14 @@ One declarative job over a raw document corpus:
 
 Scale notes: stages 1-3 are hash-partition + narrow work.  The budget cut
 (stage 4) is a global running sum expressed via
-``operators.windows.ordered_running_sum`` -- range-partition on the
-selection order, per-partition windows in parallel, broadcast prefix
-offsets -- so no single-partition window ever forms, at any scale.
+``operators.windows.ordered_running_sum``.  It checkpoints the filtered
+5-column projection and reads it once: within the broadcast threshold
+the rows come to the driver and the running sum is one window over their
+``LocalRelation``, so ``curate_documents`` runs its analytics in the
+size probe, in the partitions of its input.  Beyond the threshold it
+range-partitions on the selection order, runs per-partition windows in
+parallel and broadcasts prefix offsets, so no single-partition window
+forms over data of that size.
 """
 
 from __future__ import annotations
@@ -66,16 +71,6 @@ def curate_documents(
     )
     if langs is not None:
         kept = kept.filter(F.col("predicted_lang").isin(list(langs)))
-
-    # ordered_running_sum range-partitions on the selection order, and
-    # range partitioning SAMPLES its input to pick boundaries -- without
-    # a materialization the whole regexp/HOF analytics pass above runs
-    # twice (sample + real).  A lazy localCheckpoint materializes the
-    # post-filter 5-column projection once (tiny relative to the corpus,
-    # spills to disk) and, unlike persist(), its blocks are released by
-    # the ContextCleaner when this DataFrame is garbage-collected -- no
-    # session-lifetime cache registry to manage.  Measured 2x end-to-end.
-    kept = kept.localCheckpoint(eager=False)
 
     ranked = ordered_running_sum(
         kept,

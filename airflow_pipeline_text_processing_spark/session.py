@@ -12,7 +12,7 @@ import functools
 import os
 import threading
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(app_name: str = "airflow-pipeline-text-processing-spark") -> SparkSession:
@@ -49,6 +49,37 @@ def get_spark(app_name: str = "airflow-pipeline-text-processing-spark") -> Spark
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def broadcast_sized(df: DataFrame) -> "pyarrow.Table | None":
+    """``df``'s rows as an Arrow table when the planner would size them
+    within ``spark.sql.autoBroadcastJoinThreshold``, else None.
+
+    ``cap`` is the threshold over the planner's size of one row
+    (``schema.defaultSize``: 8 bytes per long, 20 per string), and one
+    ``limit(cap + 1).toArrow()`` reads at most ``cap + 1`` rows; a
+    threshold of ``-1`` (broadcast off) floors to a cap of ``-1`` and
+    reads nothing.  A ``limit`` over a sort is a top-k, so the table
+    keeps ``df``'s order.  Over the cap the rows read are dropped: give
+    ``df`` a lazy ``localCheckpoint`` and the read computes it once for
+    the caller's distributed path.
+
+    ``spark.createDataFrame(table)`` turns the table back into a
+    DataFrame without a Python worker: a ``LocalRelation`` with exact
+    statistics, so a join broadcasts it (its scan is cut into up to
+    default-parallelism slices).  Spark builds that relation only for a
+    table up to ``spark.sql.execution.arrow.localRelationThreshold``
+    (48 MB of Arrow data); a larger one comes back as an RDD with one
+    partition per 10,000-row Arrow batch.  Under the session's 64 MB
+    threshold a table passes 48 MB when its Arrow rows take more than
+    three quarters of the planner's size (longs take all of it)."""
+    spark = df.sparkSession
+    threshold = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    cap = threshold // df._jdf.schema().defaultSize()
+    if cap < 0:
+        return None
+    head = df.limit(cap + 1).toArrow()
+    return head if head.num_rows <= cap else None
 
 
 _SWEEP_LOCK = threading.Lock()

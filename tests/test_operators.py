@@ -247,10 +247,12 @@ def test_decode_media_stub_raises():
         MM.decode_media(b"payload", "image", fake=False)
 
 
-def test_ordered_running_sum_equals_global_window(spark):
+def test_ordered_running_sum_equals_global_window(spark, broadcast_threshold):
     """The range-partitioned two-level running sum must equal the naive
     single-partition Window.orderBy form exactly, for any partition count
-    (including n > distinct keys and n = 1)."""
+    (including n > distinct keys and n = 1).  Broadcast is off: within
+    the threshold the input is read to the driver and the partition count
+    does not apply."""
     import random
 
     from pyspark.sql import Window
@@ -269,6 +271,7 @@ def test_ordered_running_sum_equals_global_window(spark):
             "cum", F.sum("v").over(Window.orderBy(*order))
         ).collect()
     }
+    broadcast_threshold(-1)
     for n in (1, 4, 32, 1000):
         got = {
             r.id: r.cum

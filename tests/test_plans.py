@@ -280,11 +280,16 @@ def test_connected_components_star_path_spark_job_count(spark, broadcast_thresho
     assert 0 < len(jobs) <= CC_STAR_JOBS, len(jobs)
 
 
-def test_curate_documents_runs_each_marker_filter_once(spark, monkeypatch):
+def test_curate_documents_runs_each_marker_filter_once(
+    spark, monkeypatch, broadcast_threshold
+):
     """The language-marker hits are staged in their own columns before the
     argmax, so each marker list's filter is in the optimized plan once --
     not once in ``greatest`` and again in every ``when`` branch.  The
-    lineage cut is patched out so the plan shows the analytics select."""
+    lineage cut is patched out and broadcast is off, so the running sum
+    takes its distributed path and the plan shows the analytics select
+    (within the threshold they run in the size probe, and the plan reads
+    a ``LocalRelation``)."""
     from airflow_pipeline_text_processing_spark.operators.text import LANG_MARKERS
     from airflow_pipeline_text_processing_spark.plans.curation import (
         curate_documents,
@@ -297,9 +302,71 @@ def test_curate_documents_runs_each_marker_filter_once(spark, monkeypatch):
     monkeypatch.setattr(
         type(docs), "localCheckpoint", lambda self, eager=True: self
     )
+    broadcast_threshold(-1)
     plan = curate_documents(docs)._jdf.queryExecution().optimizedPlan().toString()
     for lang, markers in LANG_MARKERS.items():
         assert plan.count(f"IN ({','.join(markers)})") == 1, lang
+
+
+def test_kept_docs_join_broadcasts_the_pick(spark, tmp_path):
+    """Within the broadcast threshold ``canonical_pick`` returns a
+    ``LocalRelation`` with exact statistics, so joining the documents to
+    its kept ids broadcasts the pick and streams the documents in their
+    own partitions (a join's product-sized estimate would otherwise
+    broadcast the documents and run the curation on one task)."""
+    from airflow_pipeline_text_processing_spark.operators.dedup import (
+        canonical_pick,
+    )
+
+    texts = [f"document {i} " + "lorem ipsum dolor sit amet " * 40 for i in range(40)]
+    spark.createDataFrame(
+        list(enumerate(texts)), "doc_id long, text string"
+    ).write.parquet(str(tmp_path / "docs"))
+    docs = spark.read.parquet(str(tmp_path / "docs"))
+    pairs = spark.createDataFrame([(0, 1), (1, 2), (5, 6)], "doc_a long, doc_b long")
+    pick = canonical_pick(docs, pairs)
+    kept = docs.join(pick.filter("is_kept = 1").select("doc_id"), "doc_id")
+    plan = plan_of(kept, mode="simple")
+    joins = [line for line in plan.splitlines() if "BroadcastHashJoin" in line]
+    assert len(joins) == 1 and "BuildRight" in joins[0], plan
+    assert kept.count() == 37
+
+
+# Spark jobs of the curate flow on a small corpus: minhash_dedup_pairs
+# (checkpointed), canonical_pick, and curate_documents over the kept
+# documents, collected.  The pick and the ranked rows are read to the
+# driver within the broadcast threshold; it was 25 jobs while the pick
+# was planned at the product of its join's inputs and every running sum
+# took the two-level path
+CURATE_FLOW_JOBS = 16
+
+
+def test_curate_flow_spark_job_count(spark):
+    from airflow_pipeline_text_processing_spark.operators.dedup import (
+        canonical_pick,
+        minhash_dedup_pairs,
+    )
+    from airflow_pipeline_text_processing_spark.plans.curation import (
+        curate_documents,
+    )
+
+    base = "the quick brown fox jumps over the lazy dog near the river bank today"
+    texts = [base, base + " again", "entirely other words in one more line",
+             base.replace("lazy", "sleepy"), "", None, "one"] * 3
+    docs = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    sc = spark.sparkContext
+    group = f"curate-flow-{os.getpid()}"
+    sc.setJobGroup(group, group)
+    try:
+        pairs = minhash_dedup_pairs(docs).localCheckpoint()
+        pick = canonical_pick(docs, pairs)
+        kept = docs.join(pick.filter("is_kept = 1").select("doc_id"), "doc_id")
+        rows = curate_documents(kept, min_tokens=1, min_quality=0.0).collect()
+    finally:
+        sc.setJobGroup("", "")
+    assert [r.doc_id for r in rows] == [2, 0, 6]
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= CURATE_FLOW_JOBS, len(jobs)
 
 
 def test_range_join_is_equi_not_cartesian(spark):
@@ -427,23 +494,31 @@ def test_kmv_partial_state_is_bounded(spark):
         assert got[g].n_in_sketch == k
 
 
-def test_pack_sequences_reuses_range_exchange(spark):
+def test_pack_sequences_reads_one_range_split(spark, broadcast_threshold):
     """The two-level prefix sum must scan/shuffle the corpus once: the
-    per-partition branch and the totals branch hang off one reused range
-    exchange, and no single-partition window forms."""
+    per-partition branch and the totals branch both read one materialized
+    range split (two range exchanges sample apart and can cut the order
+    at different rows), and no single-partition window forms.  Broadcast
+    is off, so the prefix sum takes its distributed path."""
+    import re
+
     from airflow_pipeline_text_processing_spark.operators.text import (
         pack_sequences,
     )
 
+    broadcast_threshold(-1)
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     df = pack_sequences(docs, budget=500)
-    df.collect()  # AQE only materializes exchange reuse in the FINAL plan
+    df.collect()
     plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange rangepartitioning" in plan
-    assert "ReusedExchange" in plan
+    final = plan.split("== Initial Plan ==")[0]
+    # both branches scan the checkpointed split, partition ids included
+    assert len(re.findall(r"Scan ExistingRDD\[[^\]]*_pid#", final)) == 2
+    # the one range exchange left sorts the output by doc_id
+    assert final.count("Exchange rangepartitioning") == 1
     # the totals branch shuffles one row per partition; the only
     # single-partition exchange is that O(parallelism) offsets table
-    assert "Exchange SinglePartition" in plan
+    assert final.count("Exchange SinglePartition") == 1
 
 
 def test_range_aggregate_is_single_shuffle(spark):
@@ -789,30 +864,41 @@ def test_cdc_dedup_stats_single_hash_shuffle(spark):
     assert plan.count(CDC_THRESHOLD) == 1
 
 
-def test_shuffle_shards_no_global_window_and_balanced(spark):
+def test_shuffle_shards_no_global_window_and_balanced(spark, broadcast_threshold):
     """curation_shuffle_shards: the global rank must come from the
     range-partitioned two-level prefix sum -- the executed plan may not
     contain a single-partition Exchange feeding a Window over the data
     (the ntile shape).  Shards must be balanced to within one document
-    and positions dense from 0 within each shard."""
+    and positions dense from 0 within each shard.  The plan is read with
+    broadcast off: within the threshold the rank is a window over rows
+    read to the driver."""
+    import re
+
     from airflow_pipeline_text_processing_spark.plans.queries_ext import (
         curation_shuffle_shards,
     )
 
-    df = curation_shuffle_shards(spark, "/root/testdata/sf0.001")
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    # rangepartitioning on the shuffle key exists; the only
-    # SinglePartition exchange allowed is for the O(parallelism)
-    # offsets relation (feeds a Window over _pid rows, not data rows)
-    assert "rangepartitioning(skey" in plan
-    rows = df.collect()
-    by_shard = {}
-    for r in rows:
-        by_shard.setdefault(r.shard, []).append(r.pos)
-    sizes = {s: len(p) for s, p in by_shard.items()}
-    assert max(sizes.values()) - min(sizes.values()) <= 1
-    for s, poss in by_shard.items():
-        assert sorted(poss) == list(range(len(poss))), s
+    default = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    broadcast_threshold(-1)
+    plan = curation_shuffle_shards(
+        spark, SF_DIR
+    )._jdf.queryExecution().executedPlan().toString()
+    # both prefix-sum branches read the range split on the shuffle key,
+    # materialized once with its partition ids; the SinglePartition
+    # exchanges are the O(parallelism) offsets relation (feeds a Window
+    # over _pid rows, not data rows) and the one-row document count
+    assert len(re.findall(r"Scan ExistingRDD\[[^\]]*skey#[^\]]*_pid#", plan)) == 2
+    assert plan.count("Exchange SinglePartition") == 2
+    for threshold in (-1, default):
+        broadcast_threshold(threshold)
+        rows = curation_shuffle_shards(spark, SF_DIR).collect()
+        by_shard = {}
+        for r in rows:
+            by_shard.setdefault(r.shard, []).append(r.pos)
+        sizes = {s: len(p) for s, p in by_shard.items()}
+        assert max(sizes.values()) - min(sizes.values()) <= 1
+        for s, poss in by_shard.items():
+            assert sorted(poss) == list(range(len(poss))), s
 
 
 def test_join_strategy_hints_are_honored(spark):

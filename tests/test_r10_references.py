@@ -122,68 +122,79 @@ def _py_quality_ppm(t):
     return math.floor(q * 1_000_000.0)
 
 
-def test_canonical_pick_matches_python_reference(spark):
-    for seed in range(6):
-        rng = random.Random(200 + seed)
-        texts = [
-            " ".join(
-                rng.choice(VOCAB + STOPWORDS + ["x.", "y!"])
-                for _ in range(rng.randint(2, 10))
-            )
-            for _ in range(15)
-        ]
-        pairs = sorted(
-            {
-                tuple(sorted(rng.sample(range(15), 2)))
-                for _ in range(rng.randint(0, 8))
-            }
-        )
-        if seed == 5:
-            # zero-token docs (empty, CJK-only, punctuation-only): a
-            # cluster mixing them with a scored doc, and one of only them
-            zero = {3: "", 7: "中文文本", 11: "?!", 12: "中文 文本"}
-            texts = [zero.get(i, t) for i, t in enumerate(texts)]
-            pairs = sorted(set(pairs) | {(3, 7), (7, 9), (11, 12)})
-        # python reference: union-find + quality argmax
-        parent = list(range(15))
+def test_canonical_pick_matches_python_reference(spark, broadcast_threshold):
+    """Checked at the session's threshold (the pick read to the driver)
+    and with broadcast off (the distributed path); rows in doc_id order."""
+    for threshold in (None, -1):
+        if threshold is not None:
+            broadcast_threshold(threshold)
+        for seed in range(6):
+            _check_canonical_pick_seed(spark, seed, threshold)
 
-        def find(x):
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
 
-        for a, b in pairs:
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
-        cluster = {i: find(i) for i in range(15)}
-        qual = {i: _py_quality_ppm(t) for i, t in enumerate(texts)}
-        members = {}
-        for i, c in cluster.items():
-            members.setdefault(c, []).append(i)
-        keep = {  # NULL quality ranks last, then doc_id
-            c: min(ms, key=lambda i: (qual[i] is None, -(qual[i] or 0), i))
-            for c, ms in members.items()
-        }
-        want = {
-            i: (
-                cluster[i], len(members[cluster[i]]), qual[i],
-                1 if keep[cluster[i]] == i else 0,
-            )
-            for i in range(15)
-        }
-        pairs_df = spark.createDataFrame(
-            pairs or [(-1, -2)], "doc_a long, doc_b long"
+def _check_canonical_pick_seed(spark, seed, threshold):
+    rng = random.Random(200 + seed)
+    texts = [
+        " ".join(
+            rng.choice(VOCAB + STOPWORDS + ["x.", "y!"])
+            for _ in range(rng.randint(2, 10))
         )
-        got = {
-            r.doc_id: (r.cluster_id, r.n_members, r.quality_ppm, r.is_kept)
-            for r in canonical_pick(_mk_docs(spark, texts), pairs_df).collect()
-            if r.doc_id >= 0
+        for _ in range(15)
+    ]
+    pairs = sorted(
+        {
+            tuple(sorted(rng.sample(range(15), 2)))
+            for _ in range(rng.randint(0, 8))
         }
-        # ghost -1/-2 sentinel nodes (empty-pairs case) form their own
-        # cluster but are not in docs, so they never appear in output
-        assert got == want, f"seed {seed}"
+    )
+    if seed == 5:
+        # zero-token docs (empty, CJK-only, punctuation-only): a
+        # cluster mixing them with a scored doc, and one of only them
+        zero = {3: "", 7: "中文文本", 11: "?!", 12: "中文 文本"}
+        texts = [zero.get(i, t) for i, t in enumerate(texts)]
+        pairs = sorted(set(pairs) | {(3, 7), (7, 9), (11, 12)})
+    # python reference: union-find + quality argmax
+    parent = list(range(15))
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    cluster = {i: find(i) for i in range(15)}
+    qual = {i: _py_quality_ppm(t) for i, t in enumerate(texts)}
+    members = {}
+    for i, c in cluster.items():
+        members.setdefault(c, []).append(i)
+    keep = {  # NULL quality ranks last, then doc_id
+        c: min(ms, key=lambda i: (qual[i] is None, -(qual[i] or 0), i))
+        for c, ms in members.items()
+    }
+    want = {
+        i: (
+            cluster[i], len(members[cluster[i]]), qual[i],
+            1 if keep[cluster[i]] == i else 0,
+        )
+        for i in range(15)
+    }
+    pairs_df = spark.createDataFrame(
+        pairs or [(-1, -2)], "doc_a long, doc_b long"
+    )
+    rows = canonical_pick(_mk_docs(spark, texts), pairs_df).collect()
+    assert [r.doc_id for r in rows] == sorted(r.doc_id for r in rows)
+    got = {
+        r.doc_id: (r.cluster_id, r.n_members, r.quality_ppm, r.is_kept)
+        for r in rows
+        if r.doc_id >= 0
+    }
+    # ghost -1/-2 sentinel nodes (empty-pairs case) form their own
+    # cluster but are not in docs, so they never appear in output
+    assert got == want, f"seed {seed}, threshold {threshold}"
 
 
 def _py_mmr(query, cands, k, pool, lam_num=7, lam_den=10):

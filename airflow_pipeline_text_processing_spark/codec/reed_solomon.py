@@ -25,6 +25,7 @@ from typing import List
 import numpy as np
 
 _PRIM = 0x11D
+_NSIZE = 255  # bytes per codeword block, parity included
 _GF_EXP = [0] * 512
 _GF_LOG = [0] * 256
 
@@ -134,11 +135,11 @@ def _encode_block(msg: bytes, nsym: int) -> bytes:
     return msg + rem.tobytes()
 
 
-def rs_encode(data: bytes, nsym: int = 10, nsize: int = 255) -> bytes:
-    """Systematic encode; payloads are chunked into ``nsize``-byte codewords."""
+def rs_encode(data: bytes, nsym: int = 10) -> bytes:
+    """Systematic encode; payloads are chunked into 255-byte codewords."""
     if nsym <= 0:
         return bytes(data)
-    step = nsize - nsym
+    step = _NSIZE - nsym
     if not data:
         return _encode_block(b"", nsym)
     out = bytearray()
@@ -147,9 +148,9 @@ def rs_encode(data: bytes, nsym: int = 10, nsize: int = 255) -> bytes:
     return bytes(out)
 
 
-def rs_parity_tail(data: bytes, nsym: int = 10, nsize: int = 255) -> bytes:
+def rs_parity_tail(data: bytes, nsym: int = 10) -> bytes:
     """The reference's stored artifact: ``rs_encode(data)[len(data):]``."""
-    return rs_encode(data, nsym, nsize)[len(data):]
+    return rs_encode(data, nsym)[len(data):]
 
 
 # ---------------------------------------------------------------------------
@@ -258,11 +259,11 @@ def _correct_block(codeword: bytes, nsym: int) -> bytes:
     return bytes(buf[:-nsym])
 
 
-def rs_decode(encoded: bytes, nsym: int = 10, nsize: int = 255) -> bytes:
+def rs_decode(encoded: bytes, nsym: int = 10) -> bytes:
     """Decode + correct a stream produced by :func:`rs_encode`."""
     if nsym <= 0:
         return bytes(encoded)
     out = bytearray()
-    for i in range(0, len(encoded), nsize):
-        out += _correct_block(encoded[i : i + nsize], nsym)
+    for i in range(0, len(encoded), _NSIZE):
+        out += _correct_block(encoded[i : i + _NSIZE], nsym)
     return bytes(out)

@@ -40,11 +40,11 @@ from .text import tokens
 # ------------------------------------------------------------------ exact
 
 
-def exact_dedup_groups(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def exact_dedup_groups(docs: DataFrame) -> DataFrame:
     """Group documents by content hash; emit one row per distinct content
     with the canonical (minimum) doc_id and the duplicate count."""
     return (
-        docs.groupBy(F.md5(F.col(text_col)).alias("content_hash"))
+        docs.groupBy(F.md5(F.col("text")).alias("content_hash"))
         .agg(
             F.min("doc_id").alias("keep_doc_id"),
             F.count("*").alias("n_copies"),
@@ -68,9 +68,9 @@ def keep_least(df: DataFrame, key: str, order: str) -> DataFrame:
     )
 
 
-def exact_dedup(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def exact_dedup(docs: DataFrame) -> DataFrame:
     """Keep exactly one row per distinct content (the min-doc_id winner)."""
-    hashed = docs.select("*", F.md5(F.col(text_col)).alias("content_hash"))
+    hashed = docs.select("*", F.md5(F.col("text")).alias("content_hash"))
     return keep_least(hashed, "content_hash", "doc_id").drop("content_hash")
 
 
@@ -110,21 +110,22 @@ def word_shingles(text_col: Column, n: int = 3) -> Column:
     )[0]
 
 
-def shingle_table(docs: DataFrame, text_col: str = "text", n: int = 3) -> DataFrame:
-    """(doc_id, shingle) inverted-index rows: one per distinct shingle of a
-    document."""
+def shingle_table(docs: DataFrame, n: int = 3) -> DataFrame:
+    """(doc_id, shingle) inverted-index rows: one per distinct word
+    ``n``-gram shingle of a document's ``text``."""
     return docs.select(
-        "doc_id", F.explode(word_shingles(F.col(text_col), n)).alias("shingle")
+        "doc_id", F.explode(word_shingles(F.col("text"), n)).alias("shingle")
     )
 
 
-def _shingle_sets(docs: DataFrame, text_col: str = "text", n: int = 3) -> DataFrame:
-    """(doc_id, sh_set): each document's distinct shingles as one array, on
-    the document's own row.  NULL-text documents have no row."""
+def _shingle_sets(docs: DataFrame) -> DataFrame:
+    """(doc_id, sh_set): each document's distinct word 3-gram shingles of
+    ``text`` as one array, on the document's own row.  NULL-text documents
+    have no row."""
     # filter on the text, not on sh_set: a predicate on the alias is pushed
     # below the projection as a second copy of the whole shingle expression
-    return docs.filter(F.col(text_col).isNotNull()).select(
-        "doc_id", word_shingles(F.col(text_col), n).alias("sh_set")
+    return docs.filter(F.col("text").isNotNull()).select(
+        "doc_id", word_shingles(F.col("text")).alias("sh_set")
     )
 
 
@@ -152,10 +153,7 @@ def _pairs_sharing(rows: DataFrame, *keys: str) -> DataFrame:
 
 
 def jaccard_candidate_pairs(
-    docs: DataFrame,
-    text_col: str = "text",
-    n: int = 3,
-    max_df: int | None = None,
+    docs: DataFrame, max_df: int | None = None
 ) -> DataFrame:
     """Candidate (doc_a < doc_b) pairs sharing >= 1 shingle, generated from
     the inverted index, optionally with hot posting lists capped.
@@ -175,7 +173,7 @@ def jaccard_candidate_pairs(
     are ALL above the cutoff is missed; at dedup thresholds (>= 0.5) such
     pairs would have to consist almost entirely of corpus-wide boilerplate.
     ``max_df=None`` disables the cap (exact candidate generation)."""
-    sh = shingle_table(docs, text_col, n)
+    sh = shingle_table(docs)
     if max_df is not None:
         df_counts = sh.groupBy("shingle").agg(F.count("*").alias("df"))
         sh = (
@@ -188,8 +186,6 @@ def jaccard_candidate_pairs(
 def jaccard_pairs(
     docs: DataFrame,
     threshold: float,
-    text_col: str = "text",
-    n: int = 3,
     max_df: int | None = None,
 ) -> DataFrame:
     """All pairs (a < b) with word-shingle Jaccard >= threshold.
@@ -202,9 +198,9 @@ def jaccard_pairs(
     (``jaccard_for_pairs`` -- cost O(|pairs| * shingles/doc), independent
     of posting-list skew).  Values are always exact; see
     ``jaccard_candidate_pairs`` for the recall caveat on the cap."""
-    cands = jaccard_candidate_pairs(docs, text_col, n, max_df)
+    cands = jaccard_candidate_pairs(docs, max_df)
     return (
-        jaccard_for_pairs(docs, cands, text_col, n)
+        jaccard_for_pairs(docs, cands)
         .filter(F.col("jaccard") >= threshold)
         .select("doc_a", "doc_b", "n_common", "size_a", "size_b", "jaccard")
         .orderBy("doc_a", "doc_b")
@@ -255,12 +251,7 @@ def _minhash_bands(sets: DataFrame, num_perm: int, band_size: int) -> DataFrame:
 
 
 
-def minhash_signatures(
-    docs: DataFrame,
-    num_perm: int = 16,
-    text_col: str = "text",
-    n: int = 3,
-) -> DataFrame:
+def minhash_signatures(docs: DataFrame, num_perm: int = 16) -> DataFrame:
     """(doc_id, perm, minhash): the MinHash signatures in long format, one
     row per document and permutation (see ``_signature_sql``).
 
@@ -271,7 +262,7 @@ def minhash_signatures(
     # the signature is the generator's own input, not a ``sig`` column: a
     # generator over a column gets an inferred ``size(sig) > 0`` filter,
     # which is pushed below the projection as 16 more signature folds
-    return _shingle_sets(docs, text_col, n).selectExpr(
+    return _shingle_sets(docs).selectExpr(
         "doc_id", f"posexplode({_signature_sql(num_perm)}) AS (perm, minhash)"
     )
 
@@ -290,30 +281,20 @@ def band_signatures(signatures: DataFrame, band_size: int = 4) -> DataFrame:
     return _band_rows(sigs, band_size)
 
 
-def lsh_candidate_pairs(
-    signatures: DataFrame,
-    band_size: int = 4,
-) -> DataFrame:
+def lsh_candidate_pairs(signatures: DataFrame) -> DataFrame:
     """Candidate (doc_a < doc_b) pairs from long-format signatures: a pair
     is a candidate iff it collides in at least one band of
-    ``band_signatures``."""
-    return _pairs_sharing(
-        band_signatures(signatures, band_size), "band", "band_sig"
-    )
+    ``band_signatures`` (bands of 4)."""
+    return _pairs_sharing(band_signatures(signatures), "band", "band_sig")
 
 
-def jaccard_for_pairs(
-    docs: DataFrame,
-    pairs: DataFrame,
-    text_col: str = "text",
-    n: int = 3,
-) -> DataFrame:
+def jaccard_for_pairs(docs: DataFrame, pairs: DataFrame) -> DataFrame:
     """Exact word-shingle Jaccard computed ONLY for the given (doc_a, doc_b)
     pairs: join each side's distinct-shingle array onto the pair, intersect.
     Cost is O(|pairs| * shingles-per-doc) -- independent of how many
     unrelated documents share a hot shingle, unlike the full inverted-index
     self-join in ``jaccard_pairs``."""
-    sets = _shingle_sets(docs, text_col, n)
+    sets = _shingle_sets(docs)
     return _jaccard_from_sets(pairs, sets, sets)
 
 
@@ -346,8 +327,6 @@ def prefix_filter_pairs(
     docs: DataFrame,
     t_num: int = 6,
     t_den: int = 10,
-    text_col: str = "text",
-    n: int = 3,
 ) -> DataFrame:
     """EXACT all-pairs Jaccard join by prefix filtering (Chaudhuri,
     Ganti & Kaushik, ICDE'06 SSJoin; Xiao et al., WWW'08 ppjoin):
@@ -372,7 +351,7 @@ def prefix_filter_pairs(
     is the integer cross-product ``n_common * t_den >= t_num *
     (size_a + size_b - n_common)`` (never a float >= against a
     non-representable 0.6).  Returns the ``jaccard_pairs`` columns."""
-    sh = shingle_table(docs, text_col, n)
+    sh = shingle_table(docs)
     dfc = sh.groupBy("shingle").agg(F.count("*").alias("df"))
     ordered = sh.join(dfc, "shingle")
     wdoc = Window.partitionBy("doc_id").orderBy("df", "shingle")
@@ -393,7 +372,7 @@ def prefix_filter_pairs(
     cands = _pairs_sharing(
         pos.filter(F.col("pos") <= plen).select("doc_id", "shingle"), "shingle"
     )
-    verified = jaccard_for_pairs(docs, cands, text_col, n)
+    verified = jaccard_for_pairs(docs, cands)
     keep = F.col("n_common") * t_den >= t_num * (
         F.col("size_a") + F.col("size_b") - F.col("n_common")
     )
@@ -407,8 +386,6 @@ def prefix_filter_pairs(
 def containment_pairs(
     docs: DataFrame,
     threshold_ppm: int = 700_000,
-    text_col: str = "text",
-    n: int = 3,
     max_df: int | None = None,
 ) -> DataFrame:
     """Directed shingle CONTAINMENT (Broder 1997's c(A,B); the asymmetric
@@ -431,8 +408,8 @@ def containment_pairs(
     index (optionally ``max_df``-capped posting lists -- same recall
     caveat), then exact intersection over full shingle sets for candidate
     pairs only.  No new shuffle class."""
-    cands = jaccard_candidate_pairs(docs, text_col, n, max_df)
-    ex = jaccard_for_pairs(docs, cands, text_col, n)
+    cands = jaccard_candidate_pairs(docs, max_df)
+    ex = jaccard_for_pairs(docs, cands)
     # F.size() yields 32-bit ints: the multiply must widen FIRST or it
     # wraps at n_common >= 2148 (long-document near-dups, exactly this
     # operator's quarry) while DuckDB's BIGINT count does not
@@ -461,8 +438,6 @@ def minhash_dedup_pairs(
     threshold: float = 0.5,
     num_perm: int = 16,
     band_size: int = 4,
-    text_col: str = "text",
-    n: int = 3,
 ) -> DataFrame:
     """Full MinHash-LSH near-dup pipeline: per-row signatures -> LSH bands
     -> band self-join -> exact-Jaccard verification >= threshold.
@@ -474,7 +449,7 @@ def minhash_dedup_pairs(
     Verification runs only over the candidate pairs, never the full
     shingle self-join: at 100 TB the all-sharing-pairs product is exactly
     the blow-up LSH exists to avoid."""
-    sets = _shingle_sets(docs, text_col, n).localCheckpoint(eager=False)
+    sets = _shingle_sets(docs).localCheckpoint(eager=False)
     candidates = _pairs_sharing(
         _minhash_bands(sets, num_perm, band_size), "band", "band_sig"
     )
@@ -489,21 +464,23 @@ def minhash_dedup_pairs(
 # --------------------------------------------------------------- simhash
 
 
-def simhash_signatures(
-    docs: DataFrame, bits: int = 32, text_col: str = "text"
-) -> DataFrame:
+# Width of every simhash signature, in bits.
+SIMHASH_BITS = 32
+
+
+def simhash_signatures(docs: DataFrame) -> DataFrame:
     """(doc_id, simhash bitstring): per-bit majority vote over token md5s.
 
     Bit b of a token comes from hex digit b//4 of its md5 (portable across
     engines); the signature bit is 1 iff the +-1 vote sum over all token
     occurrences is positive.
 
-    All ``bits`` vote sums are separate aggregates of ONE groupBy(doc_id)
-    pass over the token table: the md5 is computed once per token row, each
-    bit's +-1 vote is a cheap projection of it, and every sum is map-side
-    combined -- vs the naive explode-per-bit form that shuffles ``bits`` x
-    the token volume.  Both groupBys (votes, then signature assembly)
-    collapse into one."""
+    All ``SIMHASH_BITS`` vote sums are separate aggregates of ONE
+    groupBy(doc_id) pass over the token table: the md5 is computed once per
+    token row, each bit's +-1 vote is a cheap projection of it, and every
+    sum is map-side combined -- vs the naive explode-per-bit form that
+    shuffles ``SIMHASH_BITS`` x the token volume.  Both groupBys (votes,
+    then signature assembly) collapse into one."""
 
     # expression strings, not Column chains (r15): the 32 per-bit vote
     # columns cost ~900 ms of py4j round trips per build (x3 builds per
@@ -516,11 +493,11 @@ def simhash_signatures(
         return f"sum({bit_set} * 2 - 1) AS _v{b}"
 
     tok = docs.select(
-        "doc_id", F.explode(tokens(F.col(text_col))).alias("token")
+        "doc_id", F.explode(tokens(F.col("text"))).alias("token")
     ).select("doc_id", F.md5("token").alias("h"))
-    sums = [F.expr(vote_sql(b)) for b in range(bits)]
+    sums = [F.expr(vote_sql(b)) for b in range(SIMHASH_BITS)]
     cat = ",".join(
-        f"CAST(CAST(_v{b} > 0 AS INT) AS STRING)" for b in range(bits)
+        f"CAST(CAST(_v{b} > 0 AS INT) AS STRING)" for b in range(SIMHASH_BITS)
     )
     return (
         tok.groupBy("doc_id")
@@ -529,22 +506,17 @@ def simhash_signatures(
     )
 
 
-def _hamming(bits: int) -> Column:
+def _hamming() -> Column:
     return F.size(
         F.filter(
-            F.sequence(F.lit(1), F.lit(bits)),
+            F.sequence(F.lit(1), F.lit(SIMHASH_BITS)),
             lambda i: F.substring(F.col("a.simhash"), i, 1)
             != F.substring(F.col("b.simhash"), i, 1),
         )
     )
 
 
-def simhash_pairs(
-    docs: DataFrame,
-    max_hamming: int = 6,
-    bits: int = 32,
-    text_col: str = "text",
-) -> DataFrame:
+def simhash_pairs(docs: DataFrame, max_hamming: int = 6) -> DataFrame:
     """Pairs (a < b) whose simhash Hamming distance <= max_hamming.
 
     Candidate generation is bucket-local and LOSSLESS: split every
@@ -557,11 +529,9 @@ def simhash_pairs(
     # the tokenize + 32-vote signature pass runs once, not twice (r15 --
     # the plan showed the whole signature subtree duplicated under the
     # join: 8 parquet scans for a 2-scan corpus)
-    sigs = simhash_signatures(docs, bits, text_col).localCheckpoint(
-        eager=False
-    )
+    sigs = simhash_signatures(docs).localCheckpoint(eager=False)
     nseg = max_hamming + 1
-    base, extra = divmod(bits, nseg)
+    base, extra = divmod(SIMHASH_BITS, nseg)
     bounds, start = [], 1
     for s in range(nseg):
         length = base + (1 if s < extra else 0)
@@ -592,7 +562,7 @@ def simhash_pairs(
     )
     hamming = F.size(
         F.filter(
-            F.sequence(F.lit(1), F.lit(bits)),
+            F.sequence(F.lit(1), F.lit(SIMHASH_BITS)),
             lambda i: F.substring(F.col("sim_a"), i, 1)
             != F.substring(F.col("sim_b"), i, 1),
         )
@@ -604,22 +574,17 @@ def simhash_pairs(
     )
 
 
-def simhash_pairs_allpairs(
-    docs: DataFrame,
-    max_hamming: int = 6,
-    bits: int = 32,
-    text_col: str = "text",
-) -> DataFrame:
+def simhash_pairs_allpairs(docs: DataFrame, max_hamming: int = 6) -> DataFrame:
     """Reference formulation: all-pairs theta join.  O(|docs|^2) -- kept as
     the correctness anchor for the banded version; do not use at scale."""
-    sigs = simhash_signatures(docs, bits, text_col)
+    sigs = simhash_signatures(docs)
     a, b = sigs.alias("a"), sigs.alias("b")
     return (
         a.join(b, F.col("a.doc_id") < F.col("b.doc_id"))
         .select(
             F.col("a.doc_id").alias("doc_a"),
             F.col("b.doc_id").alias("doc_b"),
-            _hamming(bits).alias("hamming"),
+            _hamming().alias("hamming"),
         )
         .filter(F.col("hamming") <= max_hamming)
         .orderBy("doc_a", "doc_b")
@@ -776,14 +741,10 @@ def _min_labels(edges) -> "pyarrow.Table":
     return pa.table({"doc_id": nodes, "cluster_id": nodes.take(root)})
 
 
-def connected_components(
-    pairs: DataFrame,
-    id_a: str = "doc_a",
-    id_b: str = "doc_b",
-    max_iter: int = 20,
-) -> DataFrame:
-    """Cluster near-dup pairs into components: (node, cluster_id) where
-    ``cluster_id`` is the minimum node id reachable through the pair graph.
+def connected_components(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
+    """Cluster near-dup ``(doc_a, doc_b)`` pairs into components:
+    (doc_id, cluster_id) where ``cluster_id`` is the minimum id reachable
+    through the pair graph.
 
     The step that turns pairwise dedup output into "keep one doc per
     duplicate CLUSTER" (A~B, B~C => drop two of {A,B,C} even though A~C was
@@ -833,7 +794,7 @@ def connected_components(
     # Duplicate pairs need no distinct(): a star round ends in DISTINCT.  The
     # filter also drops NULL ids.
     edges = (
-        pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
+        pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
         .filter(F.col("u") != F.col("v"))
         .localCheckpoint(eager=False)
     )
@@ -860,9 +821,7 @@ def connected_components(
     return members.union(roots)
 
 
-def ngram_novelty(
-    docs: DataFrame, text_col: str = "text", n: int = 8
-) -> DataFrame:
+def ngram_novelty(docs: DataFrame, n: int = 8) -> DataFrame:
     """Per-document ``n``-gram novelty: the ppm fraction of a document's
     DISTINCT token ``n``-grams that appear in no other document -- the
     curation dial for memorization risk and cross-document boilerplate
@@ -874,7 +833,7 @@ def ngram_novelty(
     table feeds both the df aggregate and the join back, so it is
     lineage-cut once."""
     grams = (
-        positional_shingles(docs, text_col, n)
+        positional_shingles(docs, n)
         .select("doc_id", "shingle")
         .distinct()
         .localCheckpoint(eager=False)
@@ -911,11 +870,7 @@ def cluster_membership(docs: DataFrame, pairs: DataFrame) -> DataFrame:
     )
 
 
-def canonical_pick(
-    docs: DataFrame,
-    pairs: DataFrame,
-    text_col: str = "text",
-) -> DataFrame:
+def canonical_pick(docs: DataFrame, pairs: DataFrame) -> DataFrame:
     """The curation DECISION on top of near-dup clustering: one survivor
     per duplicate cluster, chosen by quality.  ``pairs`` is any near-dup
     edge list (Jaccard, MinHash, containment...); clusters come from
@@ -953,7 +908,7 @@ def canonical_pick(
         F.col("quality_ppm").desc(), F.col("doc_id")
     )
     picks = (
-        cluster_membership(quality_ppm(docs, text_col), pairs)
+        cluster_membership(quality_ppm(docs), pairs)
         .withColumn(
             "is_kept",
             F.when(F.row_number().over(w) == 1, F.lit(1))
@@ -976,24 +931,21 @@ def canonical_pick(
 
 
 def embedding_dedup_pairs_lsh(
-    vectors: DataFrame,
-    threshold: float = 0.99,
-    num_planes: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    vectors: DataFrame, threshold: float = 0.99
 ) -> DataFrame:
-    """Scale path: hyperplane-LSH bucket the vectors, verify exact cosine
-    only within buckets.  Near-identical vectors (cosine ~ 1) agree on
+    """Scale path: hyperplane-LSH bucket the ``(vec_id, embedding)``
+    vectors on 8 hyperplanes, verify exact cosine only within buckets.
+    Near-identical vectors (cosine ~ 1) agree on
     (almost) every hyperplane sign, so recall at dedup thresholds is high
     while the |vectors|^2 product never materializes.  Approximate: a pair
     split by one hyperplane is missed -- use ``embedding_dedup_pairs`` when
     exactness matters more than scale."""
-    dim = infer_dim(vectors, vec_col)
-    sigs = hyperplane_signatures(vectors, num_planes, id_col, vec_col)
-    tagged = vectors.join(sigs, vectors[id_col] == sigs["vid"]).select(
-        F.col(id_col).alias("vid2"),
-        F.col(vec_col).alias("vec"),
-        scaled_norm2(F.col(vec_col), dim).alias("norm"),
+    dim = infer_dim(vectors)
+    sigs = hyperplane_signatures(vectors)
+    tagged = vectors.join(sigs, vectors["vec_id"] == sigs["vid"]).select(
+        F.col("vec_id").alias("vid2"),
+        F.col("embedding").alias("vec"),
+        scaled_norm2(F.col("embedding"), dim).alias("norm"),
         "bucket",
     )
     a = tagged.select(
@@ -1032,14 +984,13 @@ _COS_PREFILTER_DIMS = 8
 
 
 def _cosine_prefilter_side(
-    vectors: DataFrame, dim: int, id_out: str, vec_out: str,
-    id_col: str, vec_col: str,
+    vectors: DataFrame, dim: int, id_out: str, vec_out: str
 ) -> DataFrame:
     """One side of the lossless all-pairs cosine prefilter: per-row
     normalized leading components + the error-bound scalars the pair
     condition needs.  See ``embedding_dedup_pairs`` for the derivation."""
     sfx = id_out[-1]
-    v = F.col(vec_col)
+    v = F.col("embedding")
     d = scaled_norm2(v, dim)
     dd = d.cast("double")
     g = float(dim + 1)
@@ -1073,8 +1024,8 @@ def _cosine_prefilter_side(
         - F.lit(1.0)
     ).alias(f"_f{sfx}")
     return vectors.select(
-        F.col(id_col).alias(id_out),
-        F.col(vec_col).alias(vec_out),
+        F.col("vec_id").alias(id_out),
+        F.col("embedding").alias(vec_out),
         d.alias(f"norm_{sfx}"),
         small.alias(f"_small{sfx}"),
         shrink,
@@ -1084,13 +1035,11 @@ def _cosine_prefilter_side(
 
 
 def embedding_dedup_pairs(
-    vectors: DataFrame,
-    threshold: float = 0.99,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    vectors: DataFrame, threshold: float = 0.99
 ) -> DataFrame:
-    """Pairs (a < b) with canonicalized cosine >= threshold (exact,
-    all-pairs -- the correctness anchor; see the LSH variant for scale).
+    """Pairs (a < b) of ``(vec_id, embedding)`` vectors with canonicalized
+    cosine >= threshold (exact, all-pairs -- the correctness anchor; see
+    the LSH variant for scale).
 
     The pair condition runs a LOSSLESS prefilter before the exact
     fixed-point cosine (r15): the naive plan evaluates the interpreted
@@ -1120,19 +1069,19 @@ def embedding_dedup_pairs(
     cosine.  Same join/operator class as before -- the prefilter only
     reorders per-pair work so the conjunction short-circuits on two
     flat doubles instead of a 3*dim-node lambda fold."""
-    dim = infer_dim(vectors, vec_col)
+    dim = infer_dim(vectors)
     if dim is None or dim < 2 or threshold <= 0.5:
         # empty input / degenerate width / loose threshold: the bound
         # buys nothing -- keep the plain exact plan
         a = vectors.select(
-            F.col(id_col).alias("id_a"),
-            F.col(vec_col).alias("vec_a"),
-            scaled_norm2(F.col(vec_col), dim).alias("norm_a"),
+            F.col("vec_id").alias("id_a"),
+            F.col("embedding").alias("vec_a"),
+            scaled_norm2(F.col("embedding"), dim).alias("norm_a"),
         )
         b = vectors.select(
-            F.col(id_col).alias("id_b"),
-            F.col(vec_col).alias("vec_b"),
-            scaled_norm2(F.col(vec_col), dim).alias("norm_b"),
+            F.col("vec_id").alias("id_b"),
+            F.col("embedding").alias("vec_b"),
+            scaled_norm2(F.col("embedding"), dim).alias("norm_b"),
         )
         return (
             a.join(b, F.col("id_a") < F.col("id_b"))
@@ -1148,8 +1097,8 @@ def embedding_dedup_pairs(
             .orderBy("id_a", "id_b")
         )
     p = min(_COS_PREFILTER_DIMS, dim)
-    a = _cosine_prefilter_side(vectors, dim, "id_a", "vec_a", id_col, vec_col)
-    b = _cosine_prefilter_side(vectors, dim, "id_b", "vec_b", id_col, vec_col)
+    a = _cosine_prefilter_side(vectors, dim, "id_a", "vec_a")
+    b = _cosine_prefilter_side(vectors, dim, "id_b", "vec_b")
     ssq = reduce(
         Column.__add__,
         [
@@ -1195,9 +1144,6 @@ def incremental_minhash_dedup(
     threshold: float = 0.5,
     num_perm: int = 16,
     band_size: int = 4,
-    text_col: str = "text",
-    n: int = 3,
-    broadcast_new: bool = True,
 ) -> DataFrame:
     """Near-dup detection for an INCREMENTAL ingest batch: candidates form
     only across the new-vs-existing boundary, never within the (already
@@ -1207,20 +1153,20 @@ def incremental_minhash_dedup(
     computed once and kept materialized (here it is derived inline because
     the driver query is self-contained; a production pipeline reads it back
     from parquet).  Both band tables come from per-row signatures, as in
-    ``minhash_dedup_pairs``, so neither side shuffles to build them; with
-    ``broadcast_new`` (batches are small relative to the corpus) the
-    candidate join is a broadcast probe, so the corpus side never
+    ``minhash_dedup_pairs``, so neither side shuffles to build them; the
+    batch's bands broadcast (batches are small relative to the corpus), so
+    the candidate join is a broadcast probe and the corpus side never
     reshuffles at all.  Exact-Jaccard verification then touches candidate
     pairs only, looking each new id up in the batch and each existing id in
     the corpus.  Doc ids must be globally unique across both sides.
     """
-    new_sets = _shingle_sets(new_docs, text_col, n)
-    old_sets = _shingle_sets(existing_docs, text_col, n)
-    nb = _minhash_bands(new_sets, num_perm, band_size).select(
-        F.col("doc_id").alias("new_id"), "band", "band_sig"
+    new_sets = _shingle_sets(new_docs)
+    old_sets = _shingle_sets(existing_docs)
+    nb = F.broadcast(
+        _minhash_bands(new_sets, num_perm, band_size).select(
+            F.col("doc_id").alias("new_id"), "band", "band_sig"
+        )
     )
-    if broadcast_new:
-        nb = F.broadcast(nb)
     eb = _minhash_bands(old_sets, num_perm, band_size)
     pairs = (
         nb.join(eb, ["band", "band_sig"])
@@ -1245,10 +1191,8 @@ def incremental_minhash_dedup(
 def contamination_report(
     train: DataFrame,
     eval_docs: DataFrame,
-    text_col: str = "text",
     n: int = 3,
     min_overlap: int = 2,
-    max_eval_df: int | None = None,
 ) -> DataFrame:
     """Training-vs-benchmark n-gram overlap (the GPT-3/Pile-style
     decontamination check): for every (training doc, eval doc) pair sharing
@@ -1258,20 +1202,13 @@ def contamination_report(
     Scale shape: the eval set (benchmarks are small -- thousands of docs,
     not billions) builds a broadcast inverted index, so the probe is a
     broadcast hash join against the streamed training corpus: no shuffle of
-    the 100 TB side, no pairwise product.  ``max_eval_df`` optionally drops
-    eval shingles present in more than that many *eval* documents (corpus-
-    wide boilerplate matches every training doc and only inflates the
-    report); the default keeps every shingle, matching the exact oracle.
+    the 100 TB side, no pairwise product.  Every eval shingle is kept,
+    matching the exact oracle.
     """
-    tr = shingle_table(train, text_col, n)
-    ev = shingle_table(eval_docs, text_col, n).select(
+    tr = shingle_table(train, n)
+    ev = shingle_table(eval_docs, n).select(
         F.col("doc_id").alias("eval_id"), "shingle"
     )
-    if max_eval_df is not None:
-        ev_df = ev.groupBy("shingle").agg(F.count("*").alias("_df"))
-        ev = ev.join(
-            ev_df.filter(F.col("_df") <= max_eval_df), "shingle"
-        ).select("eval_id", "shingle")
     # shingle_table rows are distinct per doc, so COUNT(*) per pair IS the
     # number of distinct shared shingles
     return (
@@ -1286,28 +1223,22 @@ def contamination_report(
 def decontaminate(
     train: DataFrame,
     eval_docs: DataFrame,
-    text_col: str = "text",
-    n: int = 3,
     min_overlap: int = 2,
 ) -> DataFrame:
     """Training corpus with benchmark-contaminated documents removed: the
     anti-join of ``train`` against the contamination report's doc ids."""
     flagged = (
-        contamination_report(train, eval_docs, text_col, n, min_overlap)
+        contamination_report(train, eval_docs, min_overlap=min_overlap)
         .select("doc_id")
         .distinct()
     )
     return train.join(flagged, "doc_id", "left_anti")
 
 
-def snapshot_diff(
-    old: DataFrame,
-    new: DataFrame,
-    key: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """CDC-style corpus diff: classify every key across two snapshots as
-    ``added`` / ``removed`` / ``changed`` / ``unchanged``.
+def snapshot_diff(old: DataFrame, new: DataFrame) -> DataFrame:
+    """CDC-style corpus diff: classify every ``doc_id`` across two
+    snapshots as ``added`` / ``removed`` / ``changed`` / ``unchanged`` by
+    the md5 of its ``text``.
 
     Incremental curation at 100 TB starts here: re-running the full
     pipeline per snapshot is O(corpus), while diffing lets every
@@ -1315,22 +1246,22 @@ def snapshot_diff(
     added+changed rows.  The comparison is ONE full-outer equi-join on the
     key over md5 content fingerprints -- the fingerprint is computed in a
     narrow pass, so the join shuffles two key+hash projections, never the
-    text itself.  Output: ``key, status, old_hash, new_hash``.
+    text itself.  Output: ``doc_id, status, old_hash, new_hash``.
     """
     # Presence is carried as explicit flags, NOT inferred from hash
     # nullness: a row present with NULL text must still read as present
     # (md5(NULL) is NULL), matching the oracle's doc_id-IS-NULL keying.
     o = old.select(
-        F.col(key),
-        F.md5(F.col(text_col)).alias("old_hash"),
+        F.col("doc_id"),
+        F.md5(F.col("text")).alias("old_hash"),
         F.lit(True).alias("_in_old"),
     )
     n = new.select(
-        F.col(key),
-        F.md5(F.col(text_col)).alias("new_hash"),
+        F.col("doc_id"),
+        F.md5(F.col("text")).alias("new_hash"),
         F.lit(True).alias("_in_new"),
     )
-    joined = o.join(n, key, "full_outer")
+    joined = o.join(n, "doc_id", "full_outer")
     # NULL<=>NULL hashes on a both-sides row compare as unchanged
     status = (
         F.when(~F.coalesce(F.col("_in_old"), F.lit(False)), F.lit("added"))
@@ -1338,15 +1269,13 @@ def snapshot_diff(
         .when(F.col("old_hash").eqNullSafe(F.col("new_hash")), F.lit("unchanged"))
         .otherwise(F.lit("changed"))
     )
-    return joined.select(key, status.alias("status"), "old_hash", "new_hash")
+    return joined.select("doc_id", status.alias("status"), "old_hash", "new_hash")
 
 
 # ------------------------------------------------- sub-document span dedup
 
 
-def positional_shingles(
-    docs: DataFrame, text_col: str = "text", n: int = 8
-) -> DataFrame:
+def positional_shingles(docs: DataFrame, n: int = 8) -> DataFrame:
     """EVERY n-token shingle occurrence with its 1-based token position:
     ``(doc_id, pos, shingle)``.
 
@@ -1364,7 +1293,7 @@ def positional_shingles(
     trap measured at 6x on ``repetition_signals``; same fix as
     ``text.py`` ``_toks`` pattern)."""
     materialized = docs.select(
-        "doc_id", tokens(F.col(text_col)).alias("_toks")
+        "doc_id", tokens(F.col("text")).alias("_toks")
     )
     toks = F.col("_toks")
     empty = F.array().cast("array<struct<pos:int,shingle:string>>")
@@ -1389,7 +1318,6 @@ def positional_shingles(
 
 def repeated_spans(
     docs: DataFrame,
-    text_col: str = "text",
     n: int = 8,
     min_count: int = 2,
 ) -> DataFrame:
@@ -1415,7 +1343,7 @@ def repeated_spans(
     oracle matches exactly even in the (2^-52-scale) collision case; a
     collision could at worst merge two spans, never drop one.
     """
-    ps = positional_shingles(docs, text_col, n).select(
+    ps = positional_shingles(docs, n).select(
         "doc_id", "pos", F.substring(F.md5("shingle"), 1, 16).alias("sh_h")
     )
     rep = (
@@ -1453,10 +1381,8 @@ def _spans_from_hits(hits: DataFrame, n: int) -> DataFrame:
 def incremental_repeated_spans(
     new_docs: DataFrame,
     corpus_docs: DataFrame,
-    text_col: str = "text",
     n: int = 8,
     min_count: int = 2,
-    broadcast_new: bool = True,
 ) -> DataFrame:
     """Sub-document span dedup for an INCREMENTAL ingest batch: removal
     lists ``(doc_id, span_start, span_tokens, n_hits)`` for NEW documents
@@ -1473,58 +1399,43 @@ def incremental_repeated_spans(
     ONLY its per-shingle-hash count relation -- computed once when the
     corpus is established and, in production, read back from parquet
     (derived inline here so the driver query is self-contained, same
-    convention as ``incremental_minhash_dedup``) -- and with
-    ``broadcast_new`` the batch's distinct-shingle relation broadcasts
-    onto it, so the corpus side is a broadcast-probed scan: never
-    re-shuffled, never re-shingled per batch beyond that one count
-    relation.  Only the (small) batch shuffles per ingest.  Doc ids must
-    be globally unique across both sides."""
-    ps_new = positional_shingles(new_docs, text_col, n).select(
+    convention as ``incremental_minhash_dedup``) -- and the batch's
+    per-shingle count relation broadcasts onto it, so the corpus side is a
+    broadcast-probed scan: never re-shuffled, never re-shingled per batch
+    beyond that one count relation.  Only the (small) batch shuffles per
+    ingest.  Doc ids must be globally unique across both sides.
+
+    A LEFT-OUTER batch-to-corpus join cannot BUILD its left side
+    (unmatched probe rows could never be emitted from the streamed side),
+    so Spark drops a broadcast hint placed there and sort-merges the
+    corpus-sized count relation every batch.  The broadcast-able
+    equivalent used here: stream the corpus against the broadcast batch
+    with an INNER join (shingles present in both), and union the
+    batch-only passers (no corpus rows, so they pass iff ``_n_new`` alone
+    clears the bar); distinct collapses shingles that qualify through both
+    branches."""
+    ps_new = positional_shingles(new_docs, n).select(
         "doc_id", "pos", F.substring(F.md5("shingle"), 1, 16).alias("sh_h")
     )
     new_counts = ps_new.groupBy("sh_h").agg(F.count("*").alias("_n_new"))
     corpus_counts = (
-        positional_shingles(corpus_docs, text_col, n)
+        positional_shingles(corpus_docs, n)
         .select(F.substring(F.md5("shingle"), 1, 16).alias("sh_h"))
         .groupBy("sh_h")
         .agg(F.count("*").alias("_n_corpus"))
     )
-    if broadcast_new:
-        # A LEFT-OUTER join cannot BUILD its left side (unmatched probe
-        # rows could never be emitted from the streamed side), so Spark
-        # silently drops a broadcast hint placed there and sort-merges
-        # the corpus-sized count relation every batch -- the exact
-        # shuffle this function's contract rules out (r14 review).  The
-        # broadcast-able equivalent: stream the corpus against the
-        # broadcast batch with an INNER join (shingles present in
-        # both), and union the batch-only passers (no corpus rows, so
-        # they pass iff _n_new alone clears the bar); distinct collapses
-        # shingles that qualify through both branches.
-        matched = (
-            corpus_counts.join(F.broadcast(new_counts), "sh_h", "inner")
-            .filter(F.col("_n_new") + F.col("_n_corpus") >= min_count)
-            .select("sh_h")
-        )
-        solo = new_counts.filter(F.col("_n_new") >= min_count).select("sh_h")
-        rep = matched.unionByName(solo).distinct()
-    else:
-        rep = (
-            new_counts.join(corpus_counts, "sh_h", "left")
-            .filter(
-                F.col("_n_new") + F.coalesce(F.col("_n_corpus"), F.lit(0))
-                >= min_count
-            )
-            .select("sh_h")
-        )
+    matched = (
+        corpus_counts.join(F.broadcast(new_counts), "sh_h", "inner")
+        .filter(F.col("_n_new") + F.col("_n_corpus") >= min_count)
+        .select("sh_h")
+    )
+    solo = new_counts.filter(F.col("_n_new") >= min_count).select("sh_h")
+    rep = matched.unionByName(solo).distinct()
     hits = ps_new.join(rep, "sh_h").select("doc_id", "pos")
     return _spans_from_hits(hits, n)
 
 
-def remove_spans(
-    docs: DataFrame,
-    spans: DataFrame,
-    text_col: str = "text",
-) -> DataFrame:
+def remove_spans(docs: DataFrame, spans: DataFrame) -> DataFrame:
     """Apply a ``(doc_id, span_start, span_tokens)`` removal list (the
     output shape of ``repeated_spans``): rebuild each document's text from
     the tokens OUTSIDE the listed spans.
@@ -1558,7 +1469,7 @@ def remove_spans(
         ).alias("_spans")
     )
     toks = F.col("_toks")
-    joined = docs.withColumn("_toks", tokens(F.col(text_col))).join(
+    joined = docs.withColumn("_toks", tokens(F.col("text"))).join(
         span_arrays, "doc_id", "left"
     )
     kept = F.filter(
@@ -1581,10 +1492,10 @@ def remove_spans(
     )
     rebuilt = F.array_join(F.transform(kept, lambda st: st["t"]), " ")
     return joined.select(
-        *[c for c in docs.columns if c != text_col],
-        F.when(F.col("_spans").isNull(), F.col(text_col))
+        *[c for c in docs.columns if c != "text"],
+        F.when(F.col("_spans").isNull(), F.col("text"))
         .otherwise(rebuilt)
-        .alias(text_col),
+        .alias("text"),
     )
 
 
@@ -1602,13 +1513,10 @@ CDC_WINDOW = 8       # chars hashed per boundary decision
 CDC_THRESHOLD = "08" + "0" * 30  # md5-hex < this ~= 1/32 boundary rate
 
 
-def cdc_chunks(
-    docs: DataFrame, text_col: str = "text",
-    window: int = CDC_WINDOW, threshold: str = CDC_THRESHOLD,
-) -> DataFrame:
-    """Split each document at content-defined boundaries: a boundary
-    falls after position ``i`` iff the md5 of the ``window`` chars
-    ending at ``i`` compares below ``threshold`` (hex strings compare
+def cdc_chunks(docs: DataFrame) -> DataFrame:
+    """Split each document's ``text`` at content-defined boundaries: a
+    boundary falls after position ``i`` iff the md5 of the ``CDC_WINDOW``
+    chars ending at ``i`` compares below ``CDC_THRESHOLD`` (hex strings compare
     lexicographically == numerically, the same device as
     sampling.rate_threshold).  Output: one row per (doc, chunk) with
     ``chunk_idx, chunk, chunk_hash, chunk_len``.
@@ -1624,44 +1532,40 @@ def cdc_chunks(
     CollapseProject trap documented at ``repeated_spans``; the oracle's
     ``bnd`` CTE computes it once too).
     """
-    t = text_col
     bounds = (
-        f"CASE WHEN length({t}) < {window} THEN array() "
-        f"ELSE filter(sequence({window}, length({t})), "
-        f"i -> md5(substring({t}, i - {window - 1}, {window})) "
-        f"< '{threshold}') END"
+        f"CASE WHEN length(text) < {CDC_WINDOW} THEN array() "
+        f"ELSE filter(sequence({CDC_WINDOW}, length(text)), "
+        f"i -> md5(substring(text, i - {CDC_WINDOW - 1}, {CDC_WINDOW})) "
+        f"< '{CDC_THRESHOLD}') END"
     )
     with_bnd = docs.select(docs["*"], F.expr(bounds).alias("_bnd"))
-    return _chunks_from_bounds(with_bnd, docs.columns, t)
+    return _chunks_from_bounds(with_bnd, docs.columns)
 
 
-def _chunks_from_bounds(
-    with_bnd: DataFrame, doc_cols, text_col: str
-) -> DataFrame:
+def _chunks_from_bounds(with_bnd: DataFrame, doc_cols) -> DataFrame:
     """Shared CDC tail: turn a per-document boundary-position array
     (``_bnd``, char positions after which a chunk ends) into one row per
     (doc, chunk) with ``chunk_idx, chunk, chunk_hash, chunk_len``.
     ``_bnd`` is referenced twice in the zip (starts and ends), which is
     what keeps the boundary computation materialized."""
-    t = text_col
     expr = (
-        f"filter(zip_with("
-        f"  concat(array(0L), _bnd),"
-        f"  concat(_bnd, array(CAST(length({t}) AS LONG))),"
-        f"  (s, e) -> struct(s AS s, substring({t}, CAST(s + 1 AS INT),"
-        f"                   CAST(e - s AS INT)) AS chunk)"
-        f"), st -> length(st.chunk) > 0)"
+        "filter(zip_with("
+        "  concat(array(0L), _bnd),"
+        "  concat(_bnd, array(CAST(length(text) AS LONG))),"
+        "  (s, e) -> struct(s AS s, substring(text, CAST(s + 1 AS INT),"
+        "                   CAST(e - s AS INT)) AS chunk)"
+        "), st -> length(st.chunk) > 0)"
     )
     exploded = with_bnd.select(
         "doc_id", F.posexplode(F.expr(expr)).alias("chunk_idx", "_st"),
-        *[c for c in doc_cols if c not in ("doc_id", t)],
+        *[c for c in doc_cols if c not in ("doc_id", "text")],
     )
     return exploded.select(
         "doc_id", "chunk_idx",
         F.col("_st.chunk").alias("chunk"),
         F.md5("_st.chunk").alias("chunk_hash"),
         F.length("_st.chunk").cast("long").alias("chunk_len"),
-        *[c for c in doc_cols if c not in ("doc_id", t)],
+        *[c for c in doc_cols if c not in ("doc_id", "text")],
     )
 
 
@@ -1673,18 +1577,16 @@ CDC_ROLL_KEEP = 31    # boundary iff h % 997 < 31 (~1/32.2, matching the
                       # md5 rule's 1/32 expected chunk size)
 
 
-def cdc_chunks_rolling(
-    docs: DataFrame, text_col: str = "text", window: int = CDC_WINDOW,
-) -> DataFrame:
+def cdc_chunks_rolling(docs: DataFrame) -> DataFrame:
     """Content-defined chunking with a POLYNOMIAL rolling-window hash in
     place of ``cdc_chunks``'s per-position md5: a boundary falls after
-    position ``i`` iff the base-37 Horner value of the ``window`` chars
+    position ``i`` iff the base-37 Horner value of the ``CDC_WINDOW`` chars
     ending at ``i`` lands in the low ``CDC_ROLL_KEEP`` residues mod 997.
     Same output contract and the same insert-shift realignment property
     as the md5 rule (both are pure functions of the window's content) --
     the md5 variant stays as the labeled cross-engine anchor; this one
-    is the cheap path: ~``window`` integer multiply-adds per boundary
-    decision instead of a full md5 over a fresh ``window``-char string
+    is the cheap path: ~``CDC_WINDOW`` integer multiply-adds per boundary
+    decision instead of a full md5 over a fresh ``CDC_WINDOW``-char string
     (measured >=2x cheaper end-to-end on the dedup-stats query, and the
     gap is pure scan-stage CPU at 100 TB).
 
@@ -1698,36 +1600,31 @@ def cdc_chunks_rolling(
     each referenced twice in their consuming projections -- the
     used-once CollapseProject inlining trap would otherwise re-split
     the document once per character position."""
-    t = text_col
-    codes = (
-        f"transform(split({t}, ''), ch -> CAST(ascii(ch) AS BIGINT))"
-    )
+    codes = "transform(split(text, ''), ch -> CAST(ascii(ch) AS BIGINT))"
     # the window polynomial is unrolled to direct element_at terms
     # (weight 37^(window-1-j)) rather than slice()+aggregate(): the
     # higher-order-function fold runs interpreted and allocates a
     # window-sized array PER POSITION -- measured ~2x slower end-to-end
     # on the dedup-stats query than this flat arithmetic expression
     poly = " + ".join(
-        f"element_at(_cod, i - {window - 1 - j}) * "
-        f"{CDC_ROLL_BASE ** (window - 1 - j)}L"
-        for j in range(window)
+        f"element_at(_cod, i - {CDC_WINDOW - 1 - j}) * "
+        f"{CDC_ROLL_BASE ** (CDC_WINDOW - 1 - j)}L"
+        for j in range(CDC_WINDOW)
     )
     bounds = (
-        f"CASE WHEN size(_cod) < {window} THEN array() "
-        f"ELSE filter(sequence({window}, size(_cod)), "
+        f"CASE WHEN size(_cod) < {CDC_WINDOW} THEN array() "
+        f"ELSE filter(sequence({CDC_WINDOW}, size(_cod)), "
         f"i -> ({poly}) % {CDC_ROLL_MOD} < {CDC_ROLL_KEEP}) END"
     )
     with_cod = docs.select(docs["*"], F.expr(codes).alias("_cod"))
     with_bnd = with_cod.select(
         docs["*"], F.expr(bounds).alias("_bnd")
     )
-    return _chunks_from_bounds(with_bnd, docs.columns, t)
+    return _chunks_from_bounds(with_bnd, docs.columns)
 
 
-def cdc_dedup_stats(
-    docs: DataFrame, group_col: str = "source", chunker=None
-) -> DataFrame:
-    """Storage-dedup accounting over content-defined chunks, per group:
+def cdc_dedup_stats(docs: DataFrame, chunker=None) -> DataFrame:
+    """Storage-dedup accounting over content-defined chunks, per ``source``:
     ``n_chunks, n_distinct_chunks, total_chars, dup_chars`` where
     ``dup_chars`` is what a content-addressed store would NOT have to
     keep (every copy after the first of each distinct chunk; chars ==
@@ -1739,11 +1636,11 @@ def cdc_dedup_stats(
     """
     if chunker is None:
         chunker = cdc_chunks
-    chunks = chunker(docs.select("doc_id", "text", group_col))
-    per_hash = chunks.groupBy(group_col, "chunk_hash").agg(
+    chunks = chunker(docs.select("doc_id", "text", "source"))
+    per_hash = chunks.groupBy("source", "chunk_hash").agg(
         F.count("*").alias("cnt"), F.max("chunk_len").alias("clen")
     )
-    return per_hash.groupBy(group_col).agg(
+    return per_hash.groupBy("source").agg(
         F.sum("cnt").alias("n_chunks"),
         F.count("*").alias("n_distinct_chunks"),
         F.sum(F.col("cnt") * F.col("clen")).alias("total_chars"),
@@ -1759,8 +1656,6 @@ def sorted_neighborhood_pairs(
     docs: DataFrame,
     window: int = 8,
     max_hamming: int = 6,
-    bits: int = 32,
-    text_col: str = "text",
 ) -> DataFrame:
     """Sorted-neighborhood blocking (Hernandez-Stolfo): order the corpus
     by its simhash key and compare each record ONLY to its ``window``
@@ -1783,7 +1678,7 @@ def sorted_neighborhood_pairs(
     """
     from .windows import ordered_running_sum
 
-    sigs = simhash_signatures(docs, bits, text_col)
+    sigs = simhash_signatures(docs)
     # ranked feeds BOTH join sides; cut the lineage so the signature
     # pass + two-level global rank run once (triangle_counts' measured
     # waste class)
@@ -1806,7 +1701,7 @@ def sorted_neighborhood_pairs(
     ).withColumn("_rk_a", F.col("_rk_b") - F.col("_gap"))
     hamming = F.size(
         F.filter(
-            F.sequence(F.lit(1), F.lit(bits)),
+            F.sequence(F.lit(1), F.lit(SIMHASH_BITS)),
             lambda i: F.substring(F.col("_sim_a"), i, 1)
             != F.substring(F.col("_sim_b"), i, 1),
         )
@@ -1827,20 +1722,14 @@ def sorted_neighborhood_pairs(
 # ----------------------------------------------------- winnowing (MOSS)
 
 
-def winnow_fingerprints(
-    docs: DataFrame,
-    text_col: str = "text",
-    k: int = 4,
-    w: int = 4,
-    pos_cap: int = 65535,
-) -> DataFrame:
+def winnow_fingerprints(docs: DataFrame, pos_cap: int = 65535) -> DataFrame:
     """Robust-winnowing document fingerprints (Schleimer, Wilkerson &
     Aiken, "Winnowing: Local Algorithms for Document Fingerprinting",
-    SIGMOD'03 -- the MOSS algorithm): hash every ``k``-token gram, then
-    from each window of ``w`` consecutive gram hashes keep the minimum,
+    SIGMOD'03 -- the MOSS algorithm): hash every 4-token gram of ``text``,
+    then from each window of 4 consecutive gram hashes keep the minimum,
     ties broken by the RIGHTMOST position.  Guarantees every shared
-    token run of length >= k + w - 1 yields at least one shared
-    fingerprint, while storing only ~2/(w+1) of the gram hashes -- the
+    token run of length >= 7 yields at least one shared
+    fingerprint, while storing only ~2/5 of the gram hashes -- the
     storage/recall dial for corpus-scale plagiarism and near-dup
     detection.
 
@@ -1859,9 +1748,7 @@ def winnow_fingerprints(
     ``least(total_grams, pos_cap)``, because Spark computes it post-cap
     as max(pos) -- ADVICE r8 regression)."""
     assert pos_cap <= 65535, "enc radix is 65536; positions must fit"
-    grams = positional_shingles(docs, text_col=text_col, n=k).filter(
-        F.col("pos") <= pos_cap
-    )
+    grams = positional_shingles(docs, n=4).filter(F.col("pos") <= pos_cap)
     h = F.conv(F.substring(F.md5("shingle"), 1, 10), 16, 10).cast("long")
     grams = grams.select(
         "doc_id",
@@ -1869,7 +1756,7 @@ def winnow_fingerprints(
         (h * 65536 + (F.lit(65536) - F.col("pos"))).alias("enc"),
         F.max("pos").over(Window.partitionBy("doc_id")).alias("n_grams"),
     )
-    win = Window.partitionBy("doc_id").orderBy("pos").rowsBetween(0, w - 1)
+    win = Window.partitionBy("doc_id").orderBy("pos").rowsBetween(0, 3)
     selected = (
         grams.select(
             "doc_id",
@@ -1877,7 +1764,7 @@ def winnow_fingerprints(
             "n_grams",
             F.min("enc").over(win).alias("min_enc"),
         )
-        .filter(F.col("pos") <= F.col("n_grams") - (w - 1))
+        .filter(F.col("pos") <= F.col("n_grams") - 3)
         .select("doc_id", F.expr("min_enc div 65536").alias("fp"))
         .distinct()
     )
@@ -1886,9 +1773,6 @@ def winnow_fingerprints(
 
 def winnow_overlap_pairs(
     docs: DataFrame,
-    text_col: str = "text",
-    k: int = 4,
-    w: int = 4,
     min_shared: int = 5,
     df_cap: int = 50,
 ) -> DataFrame:
@@ -1907,8 +1791,7 @@ def winnow_overlap_pairs(
     # feeds the rarity agg and then (joined) three more consumers --
     # without the cut the per-doc window recomputes per consumer (same
     # class of waste as triangle_counts' measured 2x)
-    fps = winnow_fingerprints(docs, text_col=text_col, k=k, w=w) \
-        .localCheckpoint(eager=False)
+    fps = winnow_fingerprints(docs).localCheckpoint(eager=False)
     rare = (
         fps.groupBy("fp")
         .agg(F.count("*").alias("_df"))

@@ -52,10 +52,10 @@ def bpe_tokens(col: Column) -> Column:
     return F.regexp_extract_all(col, F.lit(BPE_PATTERN), 0)
 
 
-def token_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def token_stats(docs: DataFrame) -> DataFrame:
     """Per-document token counting (whitespace/punct tokenizer); a
     document with no token has a NULL ``avg_token_len``."""
-    toks = tokens(F.col(text_col))
+    toks = tokens(F.col("text"))
     n_chars = F.aggregate(toks, F.lit(0).cast("long"), lambda a, t: a + F.length(t))
     return docs.select(
         "doc_id",
@@ -108,11 +108,11 @@ def quality_ppm_col(text: Column) -> Column:
     return F.floor(quality_col(text) * F.lit(1_000_000.0)).cast("long")
 
 
-def quality_score(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def quality_score(docs: DataFrame) -> DataFrame:
     """Heuristic document quality: stopword ratio, punctuation density,
     unique-token ratio combined into one deterministic score
     (:func:`quality_inputs`, :func:`quality_col`)."""
-    text = F.col(text_col)
+    text = F.col("text")
     return docs.select(
         "doc_id",
         *[c.alias(name) for name, c in quality_inputs(text).items()],
@@ -120,24 +120,24 @@ def quality_score(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def quality_ppm(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def quality_ppm(docs: DataFrame) -> DataFrame:
     """``(doc_id, quality_ppm)`` by :func:`quality_ppm_col`."""
     return docs.select(
-        "doc_id", quality_ppm_col(F.col(text_col)).alias("quality_ppm")
+        "doc_id", quality_ppm_col(F.col("text")).alias("quality_ppm")
     )
 
 
-def predict_lang(docs: DataFrame, text_col: str, *cols) -> DataFrame:
+def predict_lang(docs: DataFrame, *cols) -> DataFrame:
     """``docs`` projected to ``cols`` plus one ``hits_<lang>`` marker-hit
-    count per language and their argmax ``predicted_lang`` -- the marker
-    policy's single source (lang_id here, the curation pipeline's
-    single-scan select).  Zero hits -> 'unknown', exact ties
+    count per language over ``text`` and their argmax ``predicted_lang``
+    -- the marker policy's single source (lang_id here, the curation
+    pipeline's single-scan select).  Zero hits -> 'unknown', exact ties
     break on LANG_MARKERS order.
 
     The hits are staged in their own select and the argmax reads the
     staged columns (projection boundary): inline, each language's filter
     would run once in ``greatest`` and again in every ``when`` branch."""
-    toks = tokens(F.col(text_col))
+    toks = tokens(F.col("text"))
     staged = docs.select(
         *cols,
         *[
@@ -153,34 +153,33 @@ def predict_lang(docs: DataFrame, text_col: str, *cols) -> DataFrame:
     return staged.select("*", pred.alias("predicted_lang"))
 
 
-def lang_id(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def lang_id(docs: DataFrame) -> DataFrame:
     """Marker-word language heuristic with deterministic argmax
     (:func:`predict_lang`)."""
-    return predict_lang(
-        docs, text_col, "doc_id", F.col("lang").alias("labeled_lang")
-    )
+    return predict_lang(docs, "doc_id", F.col("lang").alias("labeled_lang"))
 
 
-def fingerprint(docs: DataFrame, text_col: str = "text", k: int = 8) -> DataFrame:
-    """Document fingerprint: minimum md5 over character k-grams (the
-    min-hash member of a winnowing scheme; deterministic, portable)."""
+def fingerprint(docs: DataFrame) -> DataFrame:
+    """Document fingerprint: minimum md5 over the character 8-grams of
+    ``text`` (the min-hash member of a winnowing scheme; deterministic,
+    portable)."""
     # dynamic-start substring needs the SQL expression form
     return docs.select(
         "doc_id",
         F.array_min(
             F.expr(
-                f"transform(sequence(1, greatest(length({text_col}) - {k - 1}, 1)),"
-                f" i -> md5(substring({text_col}, i, {k})))"
+                "transform(sequence(1, greatest(length(text) - 7, 1)),"
+                " i -> md5(substring(text, i, 8)))"
             )
         ).alias("fingerprint"),
-        F.greatest(F.length(text_col) - (k - 1), F.lit(1)).alias("n_grams"),
+        F.greatest(F.length("text") - 7, F.lit(1)).alias("n_grams"),
     )
 
 
-def top_terms(docs: DataFrame, text_col: str = "text", k: int = 20) -> DataFrame:
+def top_terms(docs: DataFrame, k: int = 20) -> DataFrame:
     """Global top-k tokens by frequency (deterministic tiebreak on token)."""
     return (
-        docs.select(F.explode(tokens(F.col(text_col))).alias("token"))
+        docs.select(F.explode(tokens(F.col("text"))).alias("token"))
         .groupBy("token")
         .agg(F.count("*").alias("n"))
         .orderBy(F.col("n").desc(), F.col("token"))
@@ -188,15 +187,14 @@ def top_terms(docs: DataFrame, text_col: str = "text", k: int = 20) -> DataFrame
     )
 
 
-def bm25_scores(
-    docs: DataFrame,
-    query_terms: Sequence[str],
-    k1: float = 1.2,
-    b: float = 0.75,
-    text_col: str = "text",
-) -> DataFrame:
-    """BM25 relevance of every document against a bag of query terms:
-    ``doc_id, n_terms_hit, bm25_micro``.
+# BM25's term-frequency saturation and document-length normalization.
+BM25_K1 = 1.2
+BM25_B = 0.75
+
+
+def bm25_scores(docs: DataFrame, query_terms: Sequence[str]) -> DataFrame:
+    """BM25 relevance (``BM25_K1``, ``BM25_B``) of every document against a
+    bag of query terms: ``doc_id, n_terms_hit, bm25_micro``.
 
     Cross-engine-deterministic variant: the idf is the rational BM25 core
     ``(N - df + 0.5) / (df + 0.5)`` WITHOUT the log wrap (strictly monotone
@@ -214,7 +212,7 @@ def bm25_scores(
     """
     terms = sorted({t.lower() for t in query_terms})
     base = docs.select(
-        "doc_id", tokens(F.col(text_col)).alias("_toks")
+        "doc_id", tokens(F.col("text")).alias("_toks")
     ).select("doc_id", F.size("_toks").alias("dl"), "_toks")
     scalars = base.agg(
         F.count("*").alias("n_docs"), F.avg("dl").alias("avgdl")
@@ -233,9 +231,9 @@ def bm25_scores(
         F.broadcast(scalars)
     )
     idf = (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)
-    sat = (F.col("tf") * (k1 + 1.0)) / (
+    sat = (F.col("tf") * (BM25_K1 + 1.0)) / (
         F.col("tf")
-        + k1 * (1.0 - b + b * F.col("dl") / F.col("avgdl"))
+        + BM25_K1 * (1.0 - BM25_B + BM25_B * F.col("dl") / F.col("avgdl"))
     )
     per_term = scored.withColumn(
         "_micro", F.floor(idf * sat * 1_000_000.0).cast("long")
@@ -246,9 +244,7 @@ def bm25_scores(
     )
 
 
-def tfidf_top_terms(
-    docs: DataFrame, k: int = 3, text_col: str = "text"
-) -> DataFrame:
+def tfidf_top_terms(docs: DataFrame, k: int = 3) -> DataFrame:
     """Per-document top-k terms by a deterministic tf-idf variant.
 
     Score = tf * N / df computed as one IEEE division of exact integers
@@ -260,7 +256,7 @@ def tfidf_top_terms(
     from pyspark.sql import Window
 
     tok = docs.select(
-        "doc_id", F.explode(tokens(F.col(text_col))).alias("token")
+        "doc_id", F.explode(tokens(F.col("text"))).alias("token")
     )
     tf = tok.groupBy("doc_id", "token").agg(F.count("*").alias("tf"))
     # tf rows are already unique per (doc_id, token) -- a plain count IS the
@@ -292,14 +288,13 @@ def token_window_chunks(
     docs: DataFrame,
     size: int = 50,
     stride: int = 40,
-    text_col: str = "text",
 ) -> DataFrame:
     """Overlapping token-window chunking -- the training-data prep step
     that splits long documents into model-context-sized pieces (size-token
     windows advancing by stride, so consecutive chunks overlap by
     size-stride tokens).  Pure array expressions (sequence/posexplode/
     slice): a narrow 1->N fan-out, no Python, no shuffle."""
-    toks = tokens(F.col(text_col))
+    toks = tokens(F.col("text"))
     starts = F.sequence(
         F.lit(1), F.greatest(F.size(toks), F.lit(1)), F.lit(stride)
     )
@@ -324,7 +319,7 @@ PII_PHONE = r"\b[0-9]{3}-[0-9]{3}-[0-9]{4}\b"
 PII_IPV4 = r"\b[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\b"
 
 
-def pii_scrub(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def pii_scrub(docs: DataFrame) -> DataFrame:
     """Redact emails / phone numbers / IPv4 addresses from a text column --
     the compliance pass every training-data pipeline runs before release.
 
@@ -334,7 +329,7 @@ def pii_scrub(docs: DataFrame, text_col: str = "text") -> DataFrame:
     Order matters: IPv4 runs after email so a dotted quad inside a
     hostname-like mail domain is already masked.
     """
-    col = F.col(text_col)
+    col = F.col("text")
     scrubbed = F.regexp_replace(
         F.regexp_replace(
             F.regexp_replace(col, PII_EMAIL, "<EMAIL>"),
@@ -357,7 +352,6 @@ def pii_scrub(docs: DataFrame, text_col: str = "text") -> DataFrame:
 def pack_sequences(
     docs: DataFrame,
     budget: int = 2048,
-    text_col: str = "text",
 ) -> DataFrame:
     """Sequence packing: assign documents to fixed-token-budget training
     bins by concatenation order (the "concat then chunk into context
@@ -374,7 +368,7 @@ def pack_sequences(
     from .windows import ordered_running_sum
 
     toks = docs.select(
-        "doc_id", F.size(bpe_tokens(F.col(text_col))).alias("n_bpe_tokens")
+        "doc_id", F.size(bpe_tokens(F.col("text"))).alias("n_bpe_tokens")
     )
     cum = ordered_running_sum(
         toks, [F.col("doc_id")], "n_bpe_tokens", out_col="_cum"
@@ -397,7 +391,6 @@ def pack_bins_bfd(
     docs: DataFrame,
     budget: int = 2048,
     num_shards: int = 8,
-    text_col: str = "text",
 ) -> DataFrame:
     """Best-fit-decreasing bin packing of documents into fixed-token-budget
     training bins -- the NO-STRADDLE packing family (each document lands
@@ -429,7 +422,7 @@ def pack_bins_bfd(
 
     toks = docs.select(
         "doc_id",
-        F.size(bpe_tokens(F.col(text_col))).cast("long").alias("n_bpe_tokens"),
+        F.size(bpe_tokens(F.col("text"))).cast("long").alias("n_bpe_tokens"),
         F.pmod(F.col("doc_id"), F.lit(num_shards)).cast("int").alias("shard"),
     )
 
@@ -474,21 +467,19 @@ def pack_bins_bfd(
     )
 
 
-def line_table(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """``(doc_id, line_no, line)`` for every non-blank line: the
-    line-granular inverted-index substrate (0-based ``line_no`` preserves
-    reassembly order)."""
+def line_table(docs: DataFrame) -> DataFrame:
+    """``(doc_id, line_no, line)`` for every non-blank line of ``text``:
+    the line-granular inverted-index substrate (0-based ``line_no``
+    preserves reassembly order)."""
     return docs.select(
         "doc_id",
-        F.posexplode(F.split(F.col(text_col), "\n")).alias(
+        F.posexplode(F.split(F.col("text"), "\n")).alias(
             "line_no", "line"
         ),
     ).filter(F.length(F.trim(F.col("line"))) > 0)
 
 
-def strip_boilerplate(
-    docs: DataFrame, text_col: str = "text", min_df: int = 3
-) -> DataFrame:
+def strip_boilerplate(docs: DataFrame, min_df: int = 3) -> DataFrame:
     """Corpus-wide boilerplate-line removal (the CCNet-style cleaning
     stage, Wenzek et al. 2020: lines repeated across many documents --
     navigation chrome, cookie banners, footers -- are template, not
@@ -509,7 +500,7 @@ def strip_boilerplate(
     -> broadcast-or-shuffle semi-flag join back -> one per-doc
     reassembly agg.  Same two-hash-agg class as the n-gram novelty
     operator; no all-pairs, no Python."""
-    lines = line_table(docs, text_col)
+    lines = line_table(docs)
     dfc = lines.groupBy("line").agg(
         F.count_distinct("doc_id").alias("line_df")
     )
@@ -553,7 +544,7 @@ def strip_boilerplate(
 
 
 def repetition_signals(
-    docs: DataFrame, text_col: str = "text", gram_n: int = 2
+    docs: DataFrame
 ) -> DataFrame:
     """Gopher-rule repetition filters (Rae et al. 2021 §A1.1): the
     quality signals real curation runs apply NEXT TO dedup -- a document
@@ -562,7 +553,7 @@ def repetition_signals(
 
     Per document: ``n_lines`` / ``n_dup_lines`` (duplicate-line count over
     newline-split non-empty lines) and ``n_grams`` / ``top_gram_n`` (total
-    and most-frequent word ``gram_n``-gram occurrence count), plus the two
+    and most-frequent word 2-gram occurrence count), plus the two
     Gopher pass flags evaluated on INTEGER cross-products (10*dup <=
     3*lines, 5*top <= grams, i.e. the published 0.30 duplicate-line and
     0.20 top-2-gram thresholds) so both engines compare exact BIGINTs,
@@ -581,20 +572,20 @@ def repetition_signals(
     """
     materialized = docs.select(
         "doc_id",
-        tokens(F.col(text_col)).alias("_toks"),
+        tokens(F.col("text")).alias("_toks"),
         F.filter(
             F.transform(
-                F.split(F.col(text_col), "\n"), lambda s: F.trim(s)
+                F.split(F.col("text"), "\n"), lambda s: F.trim(s)
             ),
             lambda s: s != F.lit(""),
         ).alias("_lines"),
     )
     toks = F.col("_toks")
     grams = F.when(
-        F.size(toks) >= gram_n,
+        F.size(toks) >= 2,
         F.transform(
-            F.sequence(F.lit(1), F.size(toks) - (gram_n - 1)),
-            lambda i: F.array_join(F.slice(toks, i, gram_n), " "),
+            F.sequence(F.lit(1), F.size(toks) - 1),
+            lambda i: F.array_join(F.slice(toks, i, 2), " "),
         ),
     ).otherwise(F.array().cast("array<string>"))
     base = materialized.select(
@@ -631,12 +622,7 @@ def repetition_signals(
 GOPHER_REQ_STOPS = ["the", "be", "to", "of", "and", "that", "have", "with"]
 
 
-def gopher_quality_rules(
-    docs: DataFrame,
-    text_col: str = "text",
-    min_words: int = 50,
-    max_words: int = 100_000,
-) -> DataFrame:
+def gopher_quality_rules(docs: DataFrame) -> DataFrame:
     """Gopher document-quality filter rules (Rae et al. 2021 §A1) --
     the published heuristic gate real curation runs apply before any
     model-based scoring; complements ``repetition_signals`` (§A1.1)
@@ -646,7 +632,7 @@ def gopher_quality_rules(
     on INTEGER cross-products (never a rounded ratio -- the same exact
     device as the §A1.1 flags):
 
-    - ``r_word_count``:   ``min_words <= n_words <= max_words``
+    - ``r_word_count``:   ``50 <= n_words <= 100000``
     - ``r_mean_word_len``: mean word length in [3, 10] characters,
       i.e. ``3*n_words <= word_chars <= 10*n_words``
     - ``r_hash_ratio``: # of ``#`` chars to words < 0.1, i.e.
@@ -677,11 +663,11 @@ def gopher_quality_rules(
     documented on ``repetition_signals``)."""
     materialized = docs.select(
         "doc_id",
-        F.col(text_col).alias("_txt"),
-        tokens(F.col(text_col)).alias("_toks"),
+        F.col("text").alias("_txt"),
+        tokens(F.col("text")).alias("_toks"),
         F.filter(
             F.transform(
-                F.split(F.col(text_col), "\n"), lambda s: F.trim(s)
+                F.split(F.col("text"), "\n"), lambda s: F.trim(s)
             ),
             lambda s: s != F.lit(""),
         ).alias("_lines"),
@@ -734,8 +720,8 @@ def gopher_quality_rules(
         n_stops.alias("n_req_stopwords"),
     )
     flags = {
-        "r_word_count": (F.col("n_words") >= min_words)
-        & (F.col("n_words") <= max_words),
+        "r_word_count": (F.col("n_words") >= 50)
+        & (F.col("n_words") <= 100_000),
         "r_mean_word_len": (F.col("word_chars") >= 3 * F.col("n_words"))
         & (F.col("word_chars") <= 10 * F.col("n_words")),
         "r_hash_ratio": F.col("n_hash") * 10 < F.col("n_words"),
@@ -769,7 +755,6 @@ DEFAULT_BPE_SAMPLE_DOCS = 1_000_000
 def bpe_train_merges(
     docs: DataFrame,
     k: int = 4,
-    text_col: str = "text",
     sample_docs: int | None = DEFAULT_BPE_SAMPLE_DOCS,
 ) -> DataFrame:
     """Train the first ``k`` BPE merges on the corpus (Sennrich et al.
@@ -823,12 +808,12 @@ def bpe_train_merges(
         # scan that follows runs single-task (r11 review: the funnel
         # undercut the cap's own scale purpose exactly when it binds)
         docs = (
-            docs.orderBy(F.md5(F.col(text_col)), text_col)
+            docs.orderBy(F.md5(F.col("text")), "text")
             .limit(sample_docs)
             .repartition(spark.sparkContext.defaultParallelism)
         )
     words = (
-        docs.select(F.explode(tokens(F.col(text_col))).alias("word"))
+        docs.select(F.explode(tokens(F.col("text"))).alias("word"))
         .groupBy("word")
         .agg(F.count("*").alias("wcnt"))
         .localCheckpoint(eager=False)
@@ -879,11 +864,9 @@ def bpe_train_merges(
     )
 
 
-def bpe_segment_words(
-    words: DataFrame, merges: Sequence[tuple], word_col: str = "word"
-) -> DataFrame:
-    """Apply an ordered BPE merge list to a word relation: returns
-    ``(word_col, symbols, n_symbols)`` where ``symbols`` is the
+def bpe_segment_words(words: DataFrame, merges: Sequence[tuple]) -> DataFrame:
+    """Apply an ordered BPE merge list to a ``word`` relation: returns
+    ``(word, symbols, n_symbols)`` where ``symbols`` is the
     space-joined segmentation after every merge is applied in rank order.
 
     The merges are plan LITERALS (a trained tokenizer's vocab), so the
@@ -893,22 +876,20 @@ def bpe_segment_words(
     back onto the corpus.  Same two-pass-per-merge rewrite semantics as
     training (see ``bpe_train_merges``)."""
     w = F.concat(
-        F.lit(" "), F.array_join(F.split(F.col(word_col), ""), " "), F.lit(" ")
+        F.lit(" "), F.array_join(F.split(F.col("word"), ""), " "), F.lit(" ")
     )
     for l, r in merges:
         pat, rep = F.lit(f" {l} {r} "), F.lit(f" {l}{r} ")
         w = F.replace(F.replace(w, pat, rep), pat, rep)
     sym = F.trim(w)
     return words.select(
-        word_col,
+        "word",
         sym.alias("symbols"),
         F.size(F.split(sym, " ")).cast("long").alias("n_symbols"),
     )
 
 
-def phrase_search(
-    docs: DataFrame, phrase: Sequence[str], text_col: str = "text"
-) -> DataFrame:
+def phrase_search(docs: DataFrame, phrase: Sequence[str]) -> DataFrame:
     """Exact-phrase search over a positional posting relation:
     ``doc_id, n_hits`` for every document containing the m-token phrase
     at least once (consecutive tokens, same tokenizer as everything
@@ -932,7 +913,7 @@ def phrase_search(
 
     postings = docs.select(
         "doc_id",
-        F.posexplode(tokens(F.col(text_col))).alias("pos", "token"),
+        F.posexplode(tokens(F.col("text"))).alias("pos", "token"),
     ).filter(F.col("token").isin(list(by_token)))
     idx_expr = None
     for t, idxs in sorted(by_token.items()):
@@ -959,7 +940,6 @@ def phrase_search(
 
 def rake_keywords(
     docs: DataFrame,
-    text_col: str = "text",
     max_len: int = 4,
     topn: int = 25,
 ) -> DataFrame:
@@ -983,7 +963,7 @@ def rake_keywords(
     TakeOrderedAndProject, never a global sort.  Output:
     ``(phrase, n_occur, score_ppm)``, ties (score desc, phrase).
     """
-    toked = docs.select("doc_id", tokens(F.col(text_col)).alias("_toks"))
+    toked = docs.select("doc_id", tokens(F.col("text")).alias("_toks"))
     pos = toked.select(
         "doc_id", F.posexplode("_toks").alias("pos", "tok")
     )
@@ -1050,7 +1030,6 @@ def rake_keywords(
 def token_class_chi2(
     docs: DataFrame,
     class_expr: Column,
-    text_col: str = "text",
     min_df: int = 5,
     topn: int = 25,
 ) -> DataFrame:
@@ -1081,7 +1060,7 @@ def token_class_chi2(
     1-row corpus totals, TakeOrderedAndProject top-``topn``.  Output:
     ``(token, n_docs, chi2_milli)``, ties (chi2 desc, token)."""
     pres = (
-        docs.select("doc_id", F.explode(tokens(F.col(text_col))).alias("token"))
+        docs.select("doc_id", F.explode(tokens(F.col("text"))).alias("token"))
         .distinct()
     )
     cls = docs.select(
@@ -1129,15 +1108,9 @@ def token_class_chi2(
     return scored.orderBy(F.desc("chi2_milli"), "token").limit(topn)
 
 
-def rouge_n_overlap(
-    pairs: DataFrame,
-    n: int = 2,
-    id_col: str = "pair_id",
-    cand_col: str = "cand_text",
-    ref_col: str = "ref_text",
-) -> DataFrame:
-    """ROUGE-N overlap (Lin 2004) between candidate/reference text
-    pairs with CLIPPED n-gram counts -- the standard summarization /
+def rouge_n_overlap(pairs: DataFrame, n: int = 2) -> DataFrame:
+    """ROUGE-N overlap (Lin 2004) between the ``cand_text``/``ref_text``
+    pairs of ``pairs`` (keyed by ``pair_id``) with CLIPPED n-gram counts -- the standard summarization /
     training-data-eval metric: ``recall = sum_g min(c_cand(g),
     c_ref(g)) / sum_g c_ref(g)`` and the symmetric precision, both as
     exact ppm integers, plus ``f1_ppm = 2pr div (p + r)``.
@@ -1171,25 +1144,25 @@ def rouge_n_overlap(
 
     def side_counts(col, cname):
         return (
-            pairs.select(F.col(id_col), F.explode(grams(col)).alias("g"))
-            .groupBy(id_col, "g")
+            pairs.select(F.col("pair_id"), F.explode(grams(col)).alias("g"))
+            .groupBy("pair_id", "g")
             .agg(F.count("*").alias(cname))
         )
 
-    cc = side_counts(cand_col, "cc")
-    rc = side_counts(ref_col, "rc")
-    joined = cc.join(rc, [id_col, "g"], "full_outer").select(
-        id_col,
+    cc = side_counts("cand_text", "cc")
+    rc = side_counts("ref_text", "rc")
+    joined = cc.join(rc, ["pair_id", "g"], "full_outer").select(
+        "pair_id",
         F.coalesce("cc", F.lit(0)).alias("cc"),
         F.coalesce("rc", F.lit(0)).alias("rc"),
     )
-    per_pair = joined.groupBy(id_col).agg(
+    per_pair = joined.groupBy("pair_id").agg(
         F.sum("cc").cast("long").alias("n_cand_grams"),
         F.sum("rc").cast("long").alias("n_ref_grams"),
         F.sum(F.least("cc", "rc")).cast("long").alias("n_clipped"),
     )
-    base = pairs.select(id_col).join(per_pair, id_col, "left").select(
-        id_col,
+    base = pairs.select("pair_id").join(per_pair, "pair_id", "left").select(
+        "pair_id",
         F.coalesce("n_cand_grams", F.lit(0)).cast("long").alias("n_cand_grams"),
         F.coalesce("n_ref_grams", F.lit(0)).cast("long").alias("n_ref_grams"),
         F.coalesce("n_clipped", F.lit(0)).cast("long").alias("n_clipped"),
@@ -1203,7 +1176,7 @@ def rouge_n_overlap(
         " ELSE (n_clipped * 1000000) div n_ref_grams END"
     )
     return base.select(
-        id_col,
+        "pair_id",
         "n_cand_grams",
         "n_ref_grams",
         "n_clipped",
@@ -1216,9 +1189,7 @@ def rouge_n_overlap(
     )
 
 
-def lexical_diversity(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def lexical_diversity(docs: DataFrame) -> DataFrame:
     """Per-document lexical-diversity signals -- the vocabulary-richness
     axis the length/punctuation quality score and the repetition
     signals both miss: a doc can be long, clean, AND monotonous.
@@ -1236,17 +1207,17 @@ def lexical_diversity(
     combinable shuffles on the doc key, linear in corpus tokens."""
     from .lm import fixed_log2
 
-    tok = docs.select(F.col(id_col), F.explode(tokens(F.col(text_col))).alias("t"))
-    tc = tok.groupBy(id_col, "t").agg(F.count("*").alias("c"))
-    per = tc.groupBy(id_col).agg(
+    tok = docs.select(F.col("doc_id"), F.explode(tokens(F.col("text"))).alias("t"))
+    tc = tok.groupBy("doc_id", "t").agg(F.count("*").alias("c"))
+    per = tc.groupBy("doc_id").agg(
         F.sum("c").cast("long").alias("n_tokens"),
         F.count("*").cast("long").alias("n_types"),
         F.sum(F.when(F.col("c") == 1, 1).otherwise(0))
         .cast("long")
         .alias("n_hapax"),
     )
-    base = docs.select(id_col).join(per, id_col, "left").select(
-        id_col,
+    base = docs.select("doc_id").join(per, "doc_id", "left").select(
+        "doc_id",
         F.coalesce("n_tokens", F.lit(0)).cast("long").alias("n_tokens"),
         F.coalesce("n_types", F.lit(0)).cast("long").alias("n_types"),
         F.coalesce("n_hapax", F.lit(0)).cast("long").alias("n_hapax"),
@@ -1267,7 +1238,7 @@ def lexical_diversity(
         "_n_q8",
     )
     return base.select(
-        id_col,
+        "doc_id",
         "n_tokens",
         "n_types",
         "n_hapax",
@@ -1283,7 +1254,7 @@ def lexical_diversity(
             "CASE WHEN n_tokens < 2 THEN CAST(0 AS BIGINT)"
             " ELSE (_v_q8 * 1000) div _n_q8 END"
         ).alias("herdan_milli"),
-    ).orderBy(id_col)
+    ).orderBy("doc_id")
 
 
 # Q8 fixed-point log2(e): floor(256 / ln 2) = floor(369.33).  The ONE
@@ -1293,14 +1264,10 @@ def lexical_diversity(
 LOG2E_Q8 = 369
 
 
-def bleu_overlap(
-    pairs: DataFrame,
-    id_col: str = "pair_id",
-    cand_col: str = "cand_text",
-    ref_col: str = "ref_text",
-) -> DataFrame:
+def bleu_overlap(pairs: DataFrame) -> DataFrame:
     """Sentence-level BLEU-2 (Papineni 2002) with +1 smoothing (Lin &
-    Och 2004), exact integer fixed point -- the precision-oriented
+    Och 2004) of each ``(pair_id, cand_text, ref_text)`` row, exact
+    integer fixed point -- the precision-oriented
     complement to :func:`rouge_n_overlap`'s recall: ROUGE asks "did the
     candidate cover the reference", BLEU asks "is everything the
     candidate said actually in the reference", with the brevity penalty
@@ -1346,21 +1313,21 @@ def bleu_overlap(
 
     def side_counts(col, cname):
         return (
-            pairs.select(F.col(id_col), F.explode(tagged_grams(col)).alias("g"))
-            .groupBy(id_col, "g")
+            pairs.select(F.col("pair_id"), F.explode(tagged_grams(col)).alias("g"))
+            .groupBy("pair_id", "g")
             .agg(F.count("*").alias(cname))
         )
 
-    cc = side_counts(cand_col, "cc")
-    rc = side_counts(ref_col, "rc")
-    joined = cc.join(rc, [id_col, "g"], "full_outer").select(
-        id_col,
+    cc = side_counts("cand_text", "cc")
+    rc = side_counts("ref_text", "rc")
+    joined = cc.join(rc, ["pair_id", "g"], "full_outer").select(
+        "pair_id",
         "g",
         F.coalesce("cc", F.lit(0)).alias("cc"),
         F.coalesce("rc", F.lit(0)).alias("rc"),
     )
     is1 = F.col("g").startswith("1:")
-    per_pair = joined.groupBy(id_col).agg(
+    per_pair = joined.groupBy("pair_id").agg(
         F.sum(F.when(is1, F.col("cc")).otherwise(0)).cast("long").alias("tot1"),
         F.sum(F.when(is1, F.least("cc", "rc")).otherwise(0))
         .cast("long")
@@ -1373,8 +1340,8 @@ def bleu_overlap(
         .cast("long")
         .alias("n_ref_tokens"),
     )
-    base = pairs.select(id_col).join(per_pair, id_col, "left").select(
-        id_col,
+    base = pairs.select("pair_id").join(per_pair, "pair_id", "left").select(
+        "pair_id",
         *[
             F.coalesce(c, F.lit(0)).cast("long").alias(c)
             for c in ("tot1", "clip1", "tot2", "clip2", "n_ref_tokens")
@@ -1394,7 +1361,7 @@ def bleu_overlap(
         " div greatest(tot1, CAST(1 AS BIGINT)) END"
     )
     return base.select(
-        id_col,
+        "pair_id",
         F.col("tot1").alias("n_cand_tokens"),
         "n_ref_tokens",
         "clip1",
@@ -1405,10 +1372,10 @@ def bleu_overlap(
         F.expr(f"(_nl1_q8 + _nl2_q8) div 2 + ({bp})").alias(
             "neg_log2_bleu2_q8"
         ),
-    ).orderBy(id_col)
+    ).orderBy("pair_id")
 
 
-def readability(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def readability(docs: DataFrame) -> DataFrame:
     """Flesch-Kincaid grade level and Flesch reading ease per document,
     exact integer fixed point -- the classic readability axis of a
     quality-filter stack (Gopher/C4 filter on length and repetition;
@@ -1430,7 +1397,7 @@ def readability(docs: DataFrame, text_col: str = "text") -> DataFrame:
     for every metric).  Scale shape: one narrow projection, all
     counting inside higher-order functions -- map-only, no shuffle, no
     Python."""
-    toks = tokens(F.col(text_col))
+    toks = tokens(F.col("text"))
     syll = F.aggregate(
         toks,
         F.lit(0).cast("long"),
@@ -1445,7 +1412,7 @@ def readability(docs: DataFrame, text_col: str = "text") -> DataFrame:
         F.size(toks).cast("long").alias("n_words"),
         F.greatest(
             F.size(
-                F.regexp_extract_all(F.col(text_col), F.lit("[.!?]+"), 0)
+                F.regexp_extract_all(F.col("text"), F.lit("[.!?]+"), 0)
             ),
             F.lit(1),
         )

@@ -109,14 +109,9 @@ def ordered_running_sum(
     )
 
 
-def concurrency_peaks(
-    events: DataFrame,
-    ts_col: str = "ts",
-    id_col: str = "event_id",
-    span_minutes: int = 10,
-) -> DataFrame:
-    """Sweep-line interval concurrency: each event opens a
-    ``span_minutes`` interval; the concurrency level is the running sum
+def concurrency_peaks(events: DataFrame) -> DataFrame:
+    """Sweep-line interval concurrency: each ``(ts, event_id)`` event opens
+    a 10-minute interval; the concurrency level is the running sum
     of +1/-1 boundary deltas over the global (pt, delta, id) order, and
     the per-day peak is the max level at any boundary in the day --
     including the level carried in from the previous day's last
@@ -129,13 +124,13 @@ def concurrency_peaks(
     relation is days-sized.
     """
     starts = events.select(
-        F.col(ts_col).alias("pt"), F.lit(1).alias("delta"),
-        F.col(id_col).alias("bid"),
+        F.col("ts").alias("pt"), F.lit(1).alias("delta"),
+        F.col("event_id").alias("bid"),
     )
     ends = events.select(
-        (F.col(ts_col) + F.expr(f"INTERVAL {span_minutes} MINUTES")).alias("pt"),
+        (F.col("ts") + F.expr("INTERVAL 10 MINUTES")).alias("pt"),
         F.lit(-1).alias("delta"),
-        F.col(id_col).alias("bid"),
+        F.col("event_id").alias("bid"),
     )
     pts = starts.unionByName(ends)
     run = ordered_running_sum(

@@ -47,7 +47,6 @@ def curate_documents(
     min_quality: float = 0.15,
     langs: Optional[Sequence[str]] = None,
     token_budget: Optional[int] = None,
-    text_col: str = "text",
 ) -> DataFrame:
     """Curated training subset with per-doc analytics.
 
@@ -59,11 +58,10 @@ def curate_documents(
     # quality (no token) fails the quality floor
     base = predict_lang(
         docs,
-        text_col,
         "doc_id",
-        F.md5(F.col(text_col)).alias("content_hash"),
-        F.size(bpe_tokens(F.col(text_col))).alias("n_bpe_tokens"),
-        quality_col(F.col(text_col)).alias("quality"),
+        F.md5(F.col("text")).alias("content_hash"),
+        F.size(bpe_tokens(F.col("text"))).alias("n_bpe_tokens"),
+        quality_col(F.col("text")).alias("quality"),
     ).drop(*[f"hits_{lang}" for lang in LANG_MARKERS])
     deduped = keep_least(base, "content_hash", "doc_id").drop("content_hash")
     kept = deduped.filter(
@@ -87,12 +85,11 @@ def curate_and_pack(
     docs: DataFrame,
     eval_docs: DataFrame,
     min_tokens: int = 20,
-    decontam_min_overlap: int = 2,
     pack_budget: int = 2048,
-    text_col: str = "text",
 ) -> DataFrame:
     """The round-2 curation composition: exact dedup -> benchmark
-    decontamination -> token floor -> sequence packing.
+    decontamination (3-gram overlap >= 2) -> token floor -> sequence
+    packing.
 
     Every stage is one of the engine's scale-audited operators: hash-agg
     dedup, broadcast-eval contamination anti-join, a narrow token-count
@@ -103,14 +100,10 @@ def curate_and_pack(
     from ..operators.dedup import decontaminate, exact_dedup
     from ..operators.text import pack_sequences, bpe_tokens
 
-    deduped = exact_dedup(docs.select("doc_id", text_col), text_col)
-    clean = decontaminate(
-        deduped, eval_docs, text_col, min_overlap=decontam_min_overlap
-    )
-    kept = clean.filter(
-        F.size(bpe_tokens(F.col(text_col))) >= min_tokens
-    )
-    return pack_sequences(kept, budget=pack_budget, text_col=text_col)
+    deduped = exact_dedup(docs.select("doc_id", "text"))
+    clean = decontaminate(deduped, eval_docs, min_overlap=2)
+    kept = clean.filter(F.size(bpe_tokens(F.col("text"))) >= min_tokens)
+    return pack_sequences(kept, budget=pack_budget)
 
 
 def curate_full(
@@ -119,7 +112,6 @@ def curate_full(
     span_n: int = 8,
     min_tokens: int = 20,
     pack_budget: int = 2048,
-    text_col: str = "text",
 ) -> DataFrame:
     """The round-4 curation composition -- every stage a real large-scale
     training-data step, in the order production pipelines run them:
@@ -159,32 +151,28 @@ def curate_full(
     # registry session running many queries would otherwise carry these
     # cached blocks for its lifetime.  localCheckpoint blocks are released
     # by the ContextCleaner when the DataFrame is garbage-collected (same
-    # rationale as curate_documents()'s checkpoint above).
-    deduped = exact_dedup(
-        docs.select("doc_id", text_col), text_col
-    ).localCheckpoint(eager=False)
-    spans = repeated_spans(deduped, text_col, n=span_n, min_count=2)
-    excised = remove_spans(deduped, spans, text_col).localCheckpoint(eager=False)
-    rep = repetition_signals(excised, text_col)
+    # rationale as ordered_running_sum's input checkpoint in
+    # operators/windows.py).
+    deduped = exact_dedup(docs.select("doc_id", "text")).localCheckpoint(
+        eager=False
+    )
+    spans = repeated_spans(deduped, n=span_n, min_count=2)
+    excised = remove_spans(deduped, spans).localCheckpoint(eager=False)
+    rep = repetition_signals(excised)
     keep_ids = rep.filter(
         F.col("top_gram_n") * 5 <= F.col("n_grams")
     ).select("doc_id")
     filtered = excised.join(keep_ids, "doc_id")
-    clean = decontaminate(filtered, eval_docs, text_col, min_overlap=2)
-    kept = clean.filter(F.size(bpe_tokens(F.col(text_col))) >= min_tokens)
-    return pack_sequences(kept, budget=pack_budget, text_col=text_col)
+    clean = decontaminate(filtered, eval_docs, min_overlap=2)
+    kept = clean.filter(F.size(bpe_tokens(F.col("text"))) >= min_tokens)
+    return pack_sequences(kept, budget=pack_budget)
 
 
 def curate_incremental(
     new_docs: DataFrame,
     corpus_docs: DataFrame,
     eval_docs: DataFrame,
-    lsh_threshold: float = 0.5,
-    num_perm: int = 16,
-    band_size: int = 4,
-    span_n: int = 8,
     min_tokens: int = 20,
-    text_col: str = "text",
 ) -> DataFrame:
     """Incremental-ingest curation: every batch-vs-corpus operator
     composed in pipeline order -- how a GROWING corpus actually curates
@@ -193,11 +181,12 @@ def curate_incremental(
     1. exact dedup: within-batch keep-one (min doc_id per content hash),
        then anti-join against the corpus content-hash relation (one
        column; materialized once in production)
-    2. near-dup: ``incremental_minhash_dedup`` -- the batch broadcast-
-       probes the corpus LSH band table; flagged new docs drop
+    2. near-dup: ``incremental_minhash_dedup`` (Jaccard >= 0.5, 16
+       permutations in bands of 4) -- the batch broadcast-probes the
+       corpus LSH band table; flagged new docs drop
     3. sub-document excision: ``incremental_repeated_spans`` counts each
-       batch shingle's occurrences across batch + corpus; spans repeated
-       anywhere are excised FROM THE NEW DOCS ONLY
+       batch 8-token shingle's occurrences across batch + corpus; spans
+       repeated anywhere are excised FROM THE NEW DOCS ONLY
     4. benchmark decontamination (3-gram overlap >= 2 vs the eval set,
        broadcast eval index) over the EXCISED text
     5. token floor on BPE-ish tokens
@@ -233,55 +222,41 @@ def curate_incremental(
     # same way curate_full's boundaries do; blocks are swept by the
     # registry's residue scope / ContextCleaner.
     hashed = new_docs.select(
-        "doc_id", text_col, F.md5(F.col(text_col)).alias("_h")
+        "doc_id", "text", F.md5(F.col("text")).alias("_h")
     )
     batch1 = (
         keep_least(hashed, "_h", "doc_id")
         .join(
-            corpus_docs.select(F.md5(F.col(text_col)).alias("_h")).distinct(),
+            corpus_docs.select(F.md5(F.col("text")).alias("_h")).distinct(),
             "_h",
             "left_anti",
         )
-        .select("doc_id", text_col)
+        .select("doc_id", "text")
         .localCheckpoint(eager=False)
     )
     flagged = incremental_minhash_dedup(
-        batch1,
-        corpus_docs.select("doc_id", text_col),
-        threshold=lsh_threshold,
-        num_perm=num_perm,
-        band_size=band_size,
-        text_col=text_col,
+        batch1, corpus_docs.select("doc_id", "text"), threshold=0.5
     ).select(F.col("new_id").alias("doc_id")).distinct()
     batch2 = batch1.join(flagged, "doc_id", "left_anti").localCheckpoint(
         eager=False
     )
-    spans = incremental_repeated_spans(
-        batch2, corpus_docs, text_col, n=span_n, min_count=2
-    )
-    excised = remove_spans(batch2, spans, text_col).localCheckpoint(
-        eager=False
-    )
-    clean = decontaminate(excised, eval_docs, text_col, min_overlap=2)
-    n_tokens = F.size(bpe_tokens(F.col(text_col))).cast("long")
+    spans = incremental_repeated_spans(batch2, corpus_docs, n=8, min_count=2)
+    excised = remove_spans(batch2, spans).localCheckpoint(eager=False)
+    clean = decontaminate(excised, eval_docs, min_overlap=2)
+    n_tokens = F.size(bpe_tokens(F.col("text"))).cast("long")
     return (
         clean.select(
             "doc_id",
             n_tokens.alias("n_bpe_tokens"),
-            F.md5(text_col).alias("content_md5"),
+            F.md5("text").alias("content_md5"),
         )
         .filter(F.col("n_bpe_tokens") >= min_tokens)
     )
 
 
-def domain_cap(
-    docs: DataFrame,
-    per_source: int,
-    source_col: str = "source",
-    text_col: str = "text",
-) -> DataFrame:
+def domain_cap(docs: DataFrame, per_source: int) -> DataFrame:
     """C4/RefinedWeb-style per-domain cap: keep at most ``per_source``
-    documents per ``source_col``, chosen by quality -- the anti-
+    documents per ``source``, chosen by quality -- the anti-
     concentration rule real web-corpus curation applies so no single
     domain (a crawler trap, a mirror farm, a boilerplate-heavy site)
     dominates the training mix regardless of its raw volume.
@@ -301,27 +276,23 @@ def domain_cap(
     the partial top-N is admissible because rank <= per_source in the
     full order implies rank <= per_source within every subset.
     """
-    w = Window.partitionBy(source_col).orderBy(
+    w = Window.partitionBy("source").orderBy(
         F.col("quality_ppm").desc(), F.col("doc_id").asc()
     )
     return (
         docs.select(
             "doc_id",
-            source_col,
-            quality_ppm_col(F.col(text_col)).alias("quality_ppm"),
+            "source",
+            quality_ppm_col(F.col("text")).alias("quality_ppm"),
         )
         .withColumn("rk", F.row_number().over(w).cast("long"))
         .filter(F.col("rk") <= per_source)
-        .select("doc_id", source_col, "quality_ppm", "rk")
+        .select("doc_id", "source", "quality_ppm", "rk")
         .orderBy("doc_id")
     )
 
 
-def leakage_safe_split(
-    docs: DataFrame,
-    pairs: DataFrame,
-    fractions=None,
-) -> DataFrame:
+def leakage_safe_split(docs: DataFrame, pairs: DataFrame) -> DataFrame:
     """Near-dup-leakage-safe holdout assignment: hash-split by duplicate
     CLUSTER, not by document.  Plain per-doc splits leak -- two near-
     duplicate documents can land in train and test, and the eval then
@@ -344,21 +315,14 @@ def leakage_safe_split(
 
     return (
         hash_split(
-            cluster_membership(docs.select("doc_id"), pairs),
-            F.col("cluster_id"),
-            fractions,
+            cluster_membership(docs.select("doc_id"), pairs), F.col("cluster_id")
         )
         .select("doc_id", "cluster_id", "n_members", "split")
         .orderBy("doc_id")
     )
 
 
-def token_budget_select(
-    docs: DataFrame,
-    budget_per_source: int,
-    source_col: str = "source",
-    text_col: str = "text",
-) -> DataFrame:
+def token_budget_select(docs: DataFrame, budget_per_source: int) -> DataFrame:
     """Greedy per-source token-budget fill: rank each source's documents
     by the shared quality projection and keep documents until the
     source's token budget is reached -- the data-mixing step that turns
@@ -378,11 +342,11 @@ def token_budget_select(
     applies when a budget implies a rank bound)."""
     base = docs.select(
         "doc_id",
-        source_col,
-        F.size(tokens(F.col(text_col))).cast("long").alias("n_tokens"),
-        quality_ppm_col(F.col(text_col)).alias("quality_ppm"),
+        "source",
+        F.size(tokens(F.col("text"))).cast("long").alias("n_tokens"),
+        quality_ppm_col(F.col("text")).alias("quality_ppm"),
     )
-    w = Window.partitionBy(source_col).orderBy(
+    w = Window.partitionBy("source").orderBy(
         F.col("quality_ppm").desc(), F.col("doc_id").asc()
     )
     ranked = base.select(
@@ -398,7 +362,7 @@ def token_budget_select(
             F.col("cum_tokens") - F.col("n_tokens") < budget_per_source
         )
         .select(
-            "doc_id", source_col, "n_tokens", "quality_ppm", "rk",
+            "doc_id", "source", "n_tokens", "quality_ppm", "rk",
             "cum_tokens",
         )
         .orderBy("doc_id")

@@ -14,6 +14,18 @@ import threading
 
 from pyspark.sql import DataFrame, SparkSession
 
+# The SQL conf every session gets, whether get_spark builds it or finds it
+# active: the builder sets these, and an active session has them re-applied.
+_RUNTIME_CONF = (
+    # oracle comparisons and run reproducibility need a fixed zone
+    ("spark.sql.session.timeZone", "UTC"),
+    # the driver's events.parquet carries TIMESTAMP(NANOS); read the raw
+    # int64 and convert explicitly (sources read it via timestamp_micros)
+    ("spark.sql.legacy.parquet.nanosAsLong", "true"),
+    ("spark.sql.adaptive.enabled", "true"),
+    ("spark.sql.execution.arrow.pyspark.enabled", "true"),
+)
+
 
 def get_spark(app_name: str = "airflow-pipeline-text-processing-spark") -> SparkSession:
     """Return the active session, or build a local one with engine defaults.
@@ -31,21 +43,16 @@ def get_spark(app_name: str = "airflow-pipeline-text-processing-spark") -> Spark
         .master(f"local[{cpus}]")
         # one shuffle partition per core locally; on a cluster AQE coalesces
         .config("spark.sql.shuffle.partitions", cpus)
-        # oracle comparisons and run reproducibility need a fixed zone
-        .config("spark.sql.session.timeZone", "UTC")
-        # the driver's events.parquet carries TIMESTAMP(NANOS); read the
-        # raw int64 and convert explicitly (sources read it via timestamp_micros)
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.files.maxPartitionBytes", "128m")
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
     )
+    for key, val in _RUNTIME_CONF:
+        builder = builder.config(key, val)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
@@ -244,12 +251,7 @@ def scoped_query(fn):
 
 
 def _apply_runtime_conf(spark: SparkSession) -> None:
-    for key, val in [
-        ("spark.sql.adaptive.enabled", "true"),
-        ("spark.sql.execution.arrow.pyspark.enabled", "true"),
-        ("spark.sql.session.timeZone", "UTC"),
-        ("spark.sql.legacy.parquet.nanosAsLong", "true"),
-    ]:
+    for key, val in _RUNTIME_CONF:
         try:
             spark.conf.set(key, val)
         except Exception:

@@ -20,32 +20,28 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 
-def text_files(reader, input_dir: str, glob: str = "*.txt") -> DataFrame:
-    """The whole-file scan of a directory as ``path, text``, one row per
-    file.  ``reader`` is ``spark.read`` or ``spark.readStream`` (both take
-    ``format``/``option``/``load``), so the batch and streaming sources are
-    built, and list files, the same way."""
+def text_files(reader, input_dir: str) -> DataFrame:
+    """The whole-file scan of a directory's ``*.txt`` files as ``path,
+    text``, one row per file.  ``reader`` is ``spark.read`` or
+    ``spark.readStream`` (both take ``format``/``option``/``load``), so the
+    batch and streaming sources are built, and list files, the same way."""
     return (
         reader.format("text")
         .option("wholetext", "true")
-        .option("pathGlobFilter", glob)
+        .option("pathGlobFilter", "*.txt")
         .load(input_dir)
         .select(F.input_file_name().alias("path"), F.col("value").alias("text"))
     )
 
 
-def read_text_dir(
-    spark: SparkSession,
-    input_dir: str,
-    glob: str = "*.txt",
-) -> DataFrame:
-    """Whole-file read of a directory into the canonical documents schema:
-    ``path, filename, text, file_hash, file_size``.
+def read_text_dir(spark: SparkSession, input_dir: str) -> DataFrame:
+    """Whole-file read of a directory's ``*.txt`` files into the canonical
+    documents schema: ``path, filename, text, file_hash, file_size``.
 
     ``file_hash`` is md5 of the file's raw bytes (ref ``dags/dag.py:456``)
     and ``file_size`` their length (ref ``:457``).
     """
-    return with_descriptor(text_files(spark.read, input_dir, glob))
+    return with_descriptor(text_files(spark.read, input_dir))
 
 
 BOOTSTRAP_TEXT = (
@@ -56,7 +52,7 @@ BOOTSTRAP_TEXT = (
 )
 
 
-def bootstrap_sample(input_dir: str, filename: str = "sample_input.txt"):
+def bootstrap_sample(input_dir: str):
     """Reference op 3 (``dags/dag.py:426-443``): when the input directory has
     no ``.txt`` files yet, write a lorem-ipsum fixture so a first pipeline
     run has something to process.  Returns the created path, or None if the
@@ -68,20 +64,21 @@ def bootstrap_sample(input_dir: str, filename: str = "sample_input.txt"):
     os.makedirs(input_dir, exist_ok=True)
     if _glob.glob(os.path.join(input_dir, "*.txt")):
         return None
-    path = os.path.join(input_dir, filename)
+    path = os.path.join(input_dir, "sample_input.txt")
     with open(path, "w", encoding="utf-8") as f:
         f.write(BOOTSTRAP_TEXT)
     return path
 
 
-def with_descriptor(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Attach the reference's file-descriptor columns to any text DataFrame.
-    A string column hashes as its bytes, undecoded: the bytes Spark read."""
+def with_descriptor(df: DataFrame) -> DataFrame:
+    """Attach the reference's file-descriptor columns to any ``path, text``
+    DataFrame.  A string ``text`` hashes as its bytes, undecoded: the bytes
+    Spark read."""
     return df.select(
         "*",
         F.element_at(F.split(F.col("path"), "/"), -1).alias("filename"),
-        F.md5(F.col(text_col)).alias("file_hash"),
-        F.octet_length(F.col(text_col)).cast("long").alias("file_size"),
+        F.md5(F.col("text")).alias("file_hash"),
+        F.octet_length(F.col("text")).cast("long").alias("file_size"),
     )
 
 

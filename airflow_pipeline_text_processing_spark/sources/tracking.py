@@ -9,11 +9,13 @@ Spark-first redesign for scale:
 
 * The reference's N point lookups become ONE broadcast left-anti join
   (SURVEY.md op 13) -- zero per-row round trips.
-* Mutations are **append-only**: each batch appends new version rows; reads
-  resolve the latest version per ``file_hash`` with a window.  That gives
-  ON-CONFLICT/UPDATE semantics without rewriting a 100 TB table (on a real
-  deployment this maps 1:1 onto Delta/Iceberg ``MERGE``; plain parquet is
-  used here because the test environment ships no lake format).
+* Mutations are **append-only**: each batch appends new version rows, and
+  ``current()`` resolves the latest version per ``file_hash`` with a
+  window.  That gives ON-CONFLICT/UPDATE semantics without rewriting a
+  100 TB table (on a real deployment this maps 1:1 onto Delta/Iceberg
+  ``MERGE``; plain parquet is used here because the test environment ships
+  no lake format).  The tick's lookup, ``processed_hashes()``, reads the raw
+  version rows with no window: an anti-join needs only a hash's existence.
 * ``error_message`` is included, fixing the reference's documented-but-
   dropped column (SURVEY.md §1.3).
 * A periodic ``compact()`` folds version history down to current rows.

@@ -1042,6 +1042,42 @@ def test_incremental_repeated_spans_matches_batch_and_leaves_corpus(spark):
     assert have == want
 
 
+def test_incremental_repeated_spans_broadcasts_batch_counts(spark):
+    """The corpus side of the incremental span finder is a streamed scan:
+    its per-shingle count relation probes the broadcast batch counts in an
+    inner join that carries the batch+corpus threshold, never a shuffle
+    join of the corpus counts."""
+    import re
+
+    from airflow_pipeline_text_processing_spark.operators.dedup import (
+        incremental_repeated_spans,
+    )
+
+    passage = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    corpus = spark.createDataFrame(
+        [
+            (1, "one two three four five six seven eight nine " + passage),
+            (2, "red orange yellow green blue indigo violet cyan magenta"),
+        ],
+        "doc_id long, text string",
+    )
+    batch = spark.createDataFrame(
+        [(101, passage + " ten eleven twelve thirteen fourteen fifteen")],
+        "doc_id long, text string",
+    )
+    inc = incremental_repeated_spans(batch, corpus, n=8, min_count=2)
+    assert [(r.doc_id, r.span_start) for r in inc.collect()] == [(101, 1)]
+    plan = inc._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    joins = [
+        line for line in final.splitlines()
+        if "BroadcastHashJoin" in line
+        and re.search(r"\(\(_n_new#\d+L \+ _n_corpus#\d+L\) >= 2\)", line)
+    ]
+    assert len(joins) == 1, final
+    assert "Inner, BuildRight" in joins[0], joins[0]
+
+
 def test_repetition_signals_gopher_rules(spark):
     from airflow_pipeline_text_processing_spark.operators.text import (
         repetition_signals,

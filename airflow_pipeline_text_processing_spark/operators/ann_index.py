@@ -53,7 +53,6 @@ from .clustering import assign_top_cells, kmeans_fixed_point
 from .similarity import (
     _pq_assign_codes,
     _pq_sqdist,
-    _pq_subsplit,
     pq_train_encode,
     residual_adc_tables,
     residual_vectors,
@@ -577,7 +576,6 @@ def ivfpq_index_search(
     nprobe: int = 4,
     prefilter: int | None = None,
     k: int = 5,
-    auto_depth_cap: int | None = None,
 ) -> DataFrame:
     """Serve top-``k`` from the persisted index: route ``queries``
     ``(vec_id, q)`` against the frozen centroids, shortlist by ADC over
@@ -593,9 +591,7 @@ def ivfpq_index_search(
     the fix for the r10 fixed-25 recall footgun).  Both sidecar forms
     are accepted ({cid: count} map and the earlier sorted count list);
     an index without stats pays one <=``cells``-row count over the
-    live rows table.  Pass an int to pin it.  ``auto_depth_cap`` bounds
-    the auto rule's skew blow-up (a mega-cell drives p90 toward n --
-    see auto_rerank_depth); it never cuts below the 4*k floor.
+    live rows table.  Pass an int to pin it.
     """
     from .similarity import auto_rerank_depth
 
@@ -629,7 +625,7 @@ def ivfpq_index_search(
                 .agg(F.count("*").alias("n"))
                 .collect()
             ]
-        prefilter = auto_rerank_depth(counts, k, depth_cap=auto_depth_cap)
+        prefilter = auto_rerank_depth(counts, k)
     cand_cells = rows.select(
         F.col("vec_id").alias("cand_id"), F.explode("cells").alias("cid")
     )
@@ -690,10 +686,7 @@ def ivfpq_index_search(
     )
 
 
-def ivfpq_index_stream_add(
-    vectors: DataFrame, path: str, checkpoint_dir: str,
-    seq_col: str | None = None,
-):
+def ivfpq_index_stream_add(vectors: DataFrame, path: str, checkpoint_dir: str):
     """Keep a persisted index fresh from a STREAM of vector batches:
     ``foreachBatch`` -> :func:`ivfpq_index_add` (the same
     at-least-once + idempotent-MERGE story as streaming/cdc.py --
@@ -706,10 +699,10 @@ def ivfpq_index_stream_add(
     to one key drained in the same availableNow batch would BOTH append
     (merge_upsert anti-joins old rows, not rows within the batch),
     leaving duplicate live rows that double that candidate's summed ADC
-    distance.  Pass ``seq_col`` to keep the highest-sequence row;
-    without one, the deterministic max-``q`` row wins (arrays compare
+    distance.  The deterministic max-``q`` row wins (arrays compare
     lexicographically -- any total order works, it only breaks ties
-    between conflicting same-key updates).
+    between conflicting same-key updates), so the survivor is a
+    function of row content on replay.
 
     The frozen quantizers are NOT retrained by the stream;
     ``ivfpq_index_staleness`` / ``ivfpq_index_rebuild_if_stale`` remain
@@ -719,16 +712,7 @@ def ivfpq_index_stream_add(
     def _apply(batch: DataFrame, _batch_id: int) -> None:
         if batch.isEmpty():
             return
-        # seq ties fall through to the q order so the survivor is a
-        # function of row content on replay (same rule as
-        # streaming/cdc.py::latest_per_key); rows equal in BOTH are
-        # interchangeable downstream
-        order = (
-            [F.col(seq_col).desc(), F.col("q").desc()]
-            if seq_col
-            else [F.col("q").desc()]
-        )
-        w = Window.partitionBy("vec_id").orderBy(*order)
+        w = Window.partitionBy("vec_id").orderBy(F.col("q").desc())
         latest = (
             batch.withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") == 1)

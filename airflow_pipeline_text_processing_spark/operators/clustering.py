@@ -226,10 +226,10 @@ def kmeans_fixed_point(
     return _assign_np(base, cents_lit), cents
 
 
-def _cluster_pairwise_counts(pn: DataFrame, tau_micro: int) -> DataFrame:
+def _cluster_pairwise_counts(pn: DataFrame) -> DataFrame:
     """Per-cluster pairwise-cosine duplicate counts over
     ``(vec_id, cid, q, n2q)``: for each vector, how many LOWER-id
-    vectors in its cluster reach ``tau_micro`` cosine micro-units.
+    vectors in its cluster reach 950 000 cosine micro-units (0.95).
     Rows with zero matches are omitted (callers left-join + coalesce).
 
     One Arrow exchange on cid, then numpy inside ``applyInPandas``: the
@@ -267,7 +267,7 @@ def _cluster_pairwise_counts(pn: DataFrame, tau_micro: int) -> DataFrame:
         # n_sim[j] = |{i < j : cos >= tau}|: a strict-upper-triangle mask
         # summed per column (vectorized; the triu_indices + add.at scatter
         # this replaces was the remaining hot spot at 6k-vector clusters)
-        hit = np.triu(cos_fp >= tau_micro, k=1)
+        hit = np.triu(cos_fp >= 950_000, k=1)
         counts = hit.sum(axis=0).astype(np.int64)
         keep = counts > 0
         return pd.DataFrame({"vec_id": ids[keep], "n_sim": counts[keep]})
@@ -277,18 +277,11 @@ def _cluster_pairwise_counts(pn: DataFrame, tau_micro: int) -> DataFrame:
     )
 
 
-def semantic_dedup(
-    vecs: DataFrame,
-    k: int = 8,
-    iters: int = 3,
-    tau_micro: int = 950_000,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def semantic_dedup(vecs: DataFrame, k: int = 8) -> DataFrame:
     """SemDeDup (the published form): cluster on the unit sphere, then
     run the pairwise-cosine pass WITHIN each cluster only; a vector is
     a duplicate iff some LOWER-id vector in its cluster reaches
-    ``tau_micro`` cosine micro-units (keep-lowest-id, the repo's
+    950 000 cosine micro-units, i.e. cosine 0.95 (keep-lowest-id, the repo's
     standard deterministic survivor rule).  Output:
     ``vec_id, cid, n_sim_earlier, is_dup``.
 
@@ -301,10 +294,10 @@ def semantic_dedup(
     threshold compare is exact on every engine.
     """
     q = vecs.select(
-        F.col(id_col).alias("vec_id"),
-        unit_quantized(F.col(vec_col)).alias("q"),
+        "vec_id",
+        unit_quantized(F.col("embedding")).alias("q"),
     )
-    assigned, _cents = kmeans_fixed_point(q, k=k, iters=iters)
+    assigned, _cents = kmeans_fixed_point(q, k=k)
     n2q = F.aggregate(
         F.transform("q", lambda x: x * x),
         F.lit(0).cast("long"),
@@ -312,7 +305,7 @@ def semantic_dedup(
     )
     pn = assigned.select("vec_id", "cid", "q", n2q.alias("n2q"))
     pn = pn.localCheckpoint(eager=False)  # reused below the pairwise pass
-    sim = _cluster_pairwise_counts(pn, tau_micro)
+    sim = _cluster_pairwise_counts(pn)
     return pn.join(sim, "vec_id", "left").select(
         "vec_id",
         "cid",
@@ -385,25 +378,18 @@ def pooled_topk(
     corpus: DataFrame,
     k: int = 5,
     prefilter: int = 50,
-    rank_block: int = 2,
-    route_block: int = 4,
-    cells: int = 8,
-    iters: int = 2,
     nprobe: int = 4,
-    replicas: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Cell-routed two-stage exact-integer nearest neighbors (an IVF
     with spill, every distance a BIGINT so results replay identically on
     any engine):
 
-    1. ROUTE: fixed-point k-means builds ``cells`` centroids over the
-       corpus's ``route_block``-sum-pooled vectors; each corpus vector
-       posts into its ``replicas`` nearest cells (the spill that covers
-       boundary vectors), each query probes its ``nprobe`` nearest.
+    1. ROUTE: fixed-point k-means builds 8 cell centroids over the
+       corpus's 4-sum-pooled vectors; each corpus vector posts into its
+       2 nearest cells (the spill that covers boundary vectors), each
+       query probes its ``nprobe`` nearest.
     2. COARSE: probed-cell candidates only, ranked by squared-L2 on the
-       finer ``rank_block``-pooled vectors; ``prefilter`` survive per
+       finer 2-sum-pooled vectors; ``prefilter`` survive per
        query (ties on (cd2, cand_id)).
     3. EXACT: full-width rerank of the survivors, top ``k``.
 
@@ -412,9 +398,9 @@ def pooled_topk(
     against the query probes -- there is no nested-loop join over the
     corpus anywhere (the flat queries x corpus coarse scan this replaced
     was the repo's one quadratic stage).  A query reads ~
-    ``replicas * nprobe / cells`` of the corpus at pooled width; at
-    100 TB you grow ``cells`` to hold cell size constant and the probed
-    fraction shrinks proportionally.  ``nprobe >= cells`` degrades
+    ``2 * nprobe / 8`` of the corpus at pooled width; at
+    100 TB you grow the cell count to hold cell size constant and the probed
+    fraction shrinks proportionally.  ``nprobe >= 8`` degrades
     gracefully to an exhaustive (but still equi-join-shaped) scan --
     the recall=1 configuration the equivalence test pins.
 
@@ -433,12 +419,12 @@ def pooled_topk(
 
     def prep(df):
         return df.select(
-            F.col(id_col).alias("vec_id"),
-            quantized(F.col(vec_col)).alias("q"),
+            "vec_id",
+            quantized(F.col("embedding")).alias("q"),
         ).select(
             "vec_id", "q",
-            pooled("q", rank_block).alias("p_rank"),
-            pooled("q", route_block).alias("p_route"),
+            pooled("q", 2).alias("p_rank"),
+            pooled("q", 4).alias("p_route"),
         )
 
     qs = prep(queries).localCheckpoint(eager=False)
@@ -446,12 +432,12 @@ def pooled_topk(
 
     _, cents, cents_lit = kmeans_fixed_point(
         cs.select("vec_id", F.col("p_route").alias("q")),
-        k=cells,
-        iters=iters,
+        k=8,
+        iters=2,
         return_lit=True,
     )
     cand_cells = assign_top_cells(
-        cs.select("vec_id", F.col("p_route").alias("q")), cents, replicas,
+        cs.select("vec_id", F.col("p_route").alias("q")), cents, 2,
         cents_lit=cents_lit,
     ).select(F.col("vec_id").alias("cand_id"), "cid")
     probe_cells = assign_top_cells(

@@ -31,21 +31,15 @@ P_SCALE = 10**6
 DAMP_NUM, DAMP_DEN = 85, 100
 
 
-def transition_edges(
-    ev: DataFrame,
-    key_col: str = "user_id",
-    node_col: str = "event_type",
-    ts_col: str = "ts",
-    tiebreak_col: str = "event_id",
-) -> DataFrame:
-    """Per-key consecutive-transition counts: ``src, dst, w``.  One lag
-    window per key (total order via ``(ts, tiebreak)``) and one
-    map-side-combined groupBy -- the log-to-graph aggregation."""
-    w = Window.partitionBy(key_col).orderBy(ts_col, tiebreak_col)
+def transition_edges(ev: DataFrame) -> DataFrame:
+    """Per-user consecutive event-type transition counts: ``src, dst, w``.
+    One lag window per ``user_id`` (total order via ``(ts, event_id)``)
+    and one map-side-combined groupBy -- the log-to-graph aggregation."""
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     return (
-        ev.withColumn("src", F.lag(node_col).over(w))
+        ev.withColumn("src", F.lag("event_type").over(w))
         .filter(F.col("src").isNotNull())
-        .groupBy("src", F.col(node_col).alias("dst"))
+        .groupBy("src", F.col("event_type").alias("dst"))
         .agg(F.count("*").alias("w"))
     )
 

@@ -78,12 +78,10 @@ def range_aggregate(
     aggs: Sequence[tuple],
     min_offset_s: float,
     max_offset_s: float,
-    strict_lower: bool = True,
 ) -> DataFrame:
     """Per-row aggregates over same-key rows within
-    ``(ts + min_offset_s, ts + max_offset_s]`` (lower bound inclusive when
-    ``strict_lower=False``): the aggregate-only fast path beside
-    ``range_join_bucketed``.
+    ``(ts + min_offset_s, ts + max_offset_s]``: the aggregate-only fast
+    path beside ``range_join_bucketed``.
 
     When the caller needs per-row STATISTICS of the interval rather than
     the matching pairs themselves, materializing pairs (explode + equi-join
@@ -96,7 +94,7 @@ def range_aggregate(
     """
     on = list(on)
     d = df.withColumn("_tmicros", _ts_micros(df, ts))
-    lo = int(round(min_offset_s * 1_000_000)) + (1 if strict_lower else 0)
+    lo = int(round(min_offset_s * 1_000_000)) + 1  # exclusive lower bound
     hi = int(round(max_offset_s * 1_000_000))
     w = (
         Window.partitionBy(*on)
@@ -274,11 +272,10 @@ def range_join_bucketed(
     min_offset_s: float,
     max_offset_s: float,
     bucket_seconds: Optional[float] = None,
-    strict_lower: bool = True,
 ) -> DataFrame:
     """Inner range join: pairs where ``right_ts`` falls in
-    ``(left_ts + min_offset_s, left_ts + max_offset_s]`` (lower bound
-    inclusive when ``strict_lower=False``) for equal ``on`` keys.
+    ``(left_ts + min_offset_s, left_ts + max_offset_s]`` for equal ``on``
+    keys.
 
     The equi-join runs on (key, time-bucket) with each left interval
     exploded over the buckets it covers -- ceil(span/width)+1 rows per left
@@ -297,10 +294,9 @@ def range_join_bucketed(
     )
     lo = F.col(left_ts) + _interval_s(min_offset_s)
     hi = F.col(left_ts) + _interval_s(max_offset_s)
-    lower_ok = F.col(right_ts) > lo if strict_lower else F.col(right_ts) >= lo
     return (
         l.join(r, on + ["_bucket"])
-        .filter(lower_ok & (F.col(right_ts) <= hi))
+        .filter((F.col(right_ts) > lo) & (F.col(right_ts) <= hi))
         .drop("_bucket")
     )
 

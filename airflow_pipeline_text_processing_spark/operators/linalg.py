@@ -50,7 +50,7 @@ def quantized_milli(vec_col):
 
 
 def gram_moments(
-    vecs: DataFrame, dim: int, vec_col: str = "embedding"
+    vecs: DataFrame, dim: int
 ) -> Tuple[int, List[int], List[List[int]]]:
     """One distributed pass -> exact integer moments: ``(n, s, G)``
     with ``s[i] = sum_v q_i`` and ``G[i][j] = sum_v q_i * q_j`` over
@@ -64,7 +64,7 @@ def gram_moments(
         for pdf in it:
             if not len(pdf):
                 continue
-            X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+            X = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
             if X.shape[1] != dim:
                 # a mismatched dim would silently corrupt the flat
                 # dim*dim accumulation below -- fail loudly instead
@@ -81,7 +81,7 @@ def gram_moments(
                 }
             )
 
-    parts = vecs.select(vec_col).mapInPandas(
+    parts = vecs.select("embedding").mapInPandas(
         _moments, "n long, s array<long>, g array<long>"
     )
     n = 0
@@ -137,34 +137,26 @@ def power_iteration(
     return v
 
 
-def top_pc_projections(
-    vecs: DataFrame,
-    dim: int,
-    iters: int = 3,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
+def top_pc_projections(vecs: DataFrame, dim: int, iters: int = 3) -> DataFrame:
     """Top-principal-component scores: accumulate exact moments, run
     the fixed-point power iteration driver-side, then one broadcast-
     literal projection pass over the corpus.  Returns
     ``(vec_id, proj_fp)`` -- the signed fixed-point projection
     ``sum_i q_i * v_i`` (|proj| <= dim * 1100 * 10^6, int64-safe)."""
-    n, s, G = gram_moments(vecs, dim, vec_col)
+    n, s, G = gram_moments(vecs, dim)
     v = power_iteration(centered_moment_matrix(n, s, G), iters)
     vlit = F.array(*[F.lit(int(x)).cast("long") for x in v])
-    q = quantized_milli(F.col(vec_col))
+    q = quantized_milli(F.col("embedding"))
     proj = F.aggregate(
         F.zip_with(q, vlit, lambda a, b: a * b),
         F.lit(0).cast("long"),
         lambda acc, x: acc + x,
     )
-    return vecs.select(F.col(id_col), proj.alias("proj_fp"))
+    return vecs.select(F.col("vec_id"), proj.alias("proj_fp"))
 
 
 def jl_project(
     vecs: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     in_dim: int = 64,
     out_dim: int = 16,
     salt: str = "jl",
@@ -192,7 +184,7 @@ def jl_project(
     inside whole-stage codegen -- no runtime hashing (the first cut
     evaluated md5 inside the inner lambda: in_dim*out_dim hashes PER
     ROW, ~8x the wall at sf0.1), no UDF, no shuffle, no broadcast;
-    output is ``(id, proj array<long>)``."""
+    output is ``(vec_id, proj array<long>)``."""
     import hashlib
 
     def _sign(i: int, j: int) -> int:
@@ -229,8 +221,8 @@ def jl_project(
         for arr in sign_arrays
     )
     q_sql = (
-        f"transform(`{vec_col}`,"
+        "transform(`embedding`,"
         " x -> CAST(FLOOR(CAST(x AS DOUBLE) * 1000000.0D) AS BIGINT))"
     )
     proj = F.expr(f"transform(array({q_sql}), qv -> array({folds}))[0]")
-    return vecs.select(F.col(id_col), proj.alias("proj"))
+    return vecs.select(F.col("vec_id"), proj.alias("proj"))

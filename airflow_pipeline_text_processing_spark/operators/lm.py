@@ -158,7 +158,7 @@ def fixed_log2_sql(
     )
 
 
-def unigram_surprisal(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def unigram_surprisal(docs: DataFrame) -> DataFrame:
     """Per-document unigram cross-entropy (bits/token, milli-bit fixed
     point) under an add-one-smoothed unigram LM trained on the corpus
     itself -- the CCNet-style "LM perplexity" quality filter, exact.
@@ -176,7 +176,7 @@ def unigram_surprisal(docs: DataFrame, text_col: str = "text") -> DataFrame:
     identically in both engines (inner join on exploded tokens).
     """
     toks = docs.select(
-        "doc_id", F.explode(tokens(F.col(text_col))).alias("token")
+        "doc_id", F.explode(tokens(F.col("text"))).alias("token")
     )
     model = toks.groupBy("token").agg(F.count("*").alias("c"))
     scal = model.agg(
@@ -236,7 +236,6 @@ def char_trigrams(col):
 def nb_classify(
     docs: DataFrame,
     label_col: str = "lang",
-    text_col: str = "text",
     feature_fn=None,
     top_k_features: int | None = None,
 ) -> DataFrame:
@@ -281,7 +280,7 @@ def nb_classify(
     """
     feats = feature_fn if feature_fn is not None else tokens
     base = docs.select(
-        "doc_id", F.col(label_col).alias("label_actual"), F.col(text_col)
+        "doc_id", F.col(label_col).alias("label_actual"), F.col("text")
     )
     # the exploded feature stream feeds TWO derivations -- the training
     # grid (class_tok) and the per-document scoring join -- so cut the
@@ -291,7 +290,7 @@ def nb_classify(
     toks = base.select(
         "doc_id",
         "label_actual",
-        F.explode(feats(F.col(text_col))).alias("token"),
+        F.explode(feats(F.col("text"))).alias("token"),
     ).localCheckpoint(eager=False)
     cond_scores, prior_scores = nb_train_model(toks, base, top_k_features)
     return nb_score_with_model(toks, cond_scores, prior_scores)
@@ -432,7 +431,7 @@ BACKOFF_PENALTY_Q8 = 338
 
 
 def bigram_surprisal_backoff(
-    train: DataFrame, eval_docs: DataFrame, text_col: str = "text"
+    train: DataFrame, eval_docs: DataFrame
 ) -> DataFrame:
     """Stupid-Backoff bigram LM (the web-scale scheme of Brants et al.
     2007: score-based backoff instead of normalized interpolation --
@@ -464,23 +463,19 @@ def bigram_surprisal_backoff(
     )
 
     def _pairs(docs: DataFrame) -> DataFrame:
-        base = docs.select(
-            "doc_id", tokens(F.col(text_col)).alias("_tk")
-        )
+        base = docs.select("doc_id", tokens(F.col("text")).alias("_tk"))
         return base.select(
             "doc_id", F.explode(F.expr(pair_expr)).alias("p")
         ).select("doc_id", F.col("p.prev").alias("prev"), F.col("p.cur").alias("cur"))
 
     def _firsts(docs: DataFrame) -> DataFrame:
-        base = docs.select(
-            "doc_id", tokens(F.col(text_col)).alias("_tk")
-        )
+        base = docs.select("doc_id", tokens(F.col("text")).alias("_tk"))
         return base.filter(F.size("_tk") >= 1).select(
             "doc_id", F.expr("element_at(_tk, 1)").alias("cur")
         )
 
     train_toks = train.select(
-        F.explode(tokens(F.col(text_col))).alias("token")
+        F.explode(tokens(F.col("text"))).alias("token")
     )
     uni = train_toks.groupBy("token").agg(F.count("*").alias("c"))
     scal = uni.agg(F.sum("c").alias("n_total"), F.count("*").alias("v_size"))
@@ -555,9 +550,7 @@ def bigram_surprisal_backoff(
     )
 
 
-def cooccurrence_pmi(
-    docs: DataFrame, text_col: str = "text", top_n: int = 20
-) -> DataFrame:
+def cooccurrence_pmi(docs: DataFrame, top_n: int = 20) -> DataFrame:
     """Top positively-associated token pairs by document-level pointwise
     mutual information: ``PMI(a,b) = log2(df_ab * N / (df_a * df_b))``
     over document frequencies, in the exact Q8 fixed-point bits of
@@ -573,7 +566,7 @@ def cooccurrence_pmi(
     """
     post = docs.select(
         "doc_id",
-        F.explode(F.array_distinct(tokens(F.col(text_col)))).alias("tok"),
+        F.explode(F.array_distinct(tokens(F.col("text")))).alias("tok"),
     )
     post = post.localCheckpoint(eager=False)  # both pair sides + df counts
     dfreq = post.groupBy("tok").agg(F.count("*").alias("df"))
@@ -616,7 +609,7 @@ def cooccurrence_pmi(
     ).limit(top_n)
 
 
-def token_entropy(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def token_entropy(docs: DataFrame) -> DataFrame:
     """Per-document Shannon entropy of the document's OWN token
     distribution (milli-bits/token) -- the lexical-diversity quality
     signal: boilerplate and keyword-stuffed spam score low, natural
@@ -636,7 +629,7 @@ def token_entropy(docs: DataFrame, text_col: str = "text") -> DataFrame:
     Zero-token documents drop out identically in both engines.
     """
     toks = docs.select(
-        "doc_id", F.explode(tokens(F.col(text_col))).alias("token")
+        "doc_id", F.explode(tokens(F.col("text"))).alias("token")
     )
     cnt = toks.groupBy("doc_id", "token").agg(F.count("*").alias("c"))
     perdoc = cnt.groupBy("doc_id").agg(
@@ -673,8 +666,6 @@ def dsir_weights(
     docs: DataFrame,
     target: DataFrame,
     n_buckets: int = 256,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """DSIR data selection (Xie et al. 2023, "Data Selection for
     Language Models via Importance Resampling"): score every raw
@@ -705,7 +696,7 @@ def dsir_weights(
 
     def bucket_counts(df: DataFrame) -> DataFrame:
         return (
-            df.select(F.explode(tokens(F.col(text_col))).alias("item"))
+            df.select(F.explode(tokens(F.col("text"))).alias("item"))
             .select(bucket.alias("b"))
             .groupBy("b")
             .agg(F.count("*").alias("c"))
@@ -735,21 +726,19 @@ def dsir_weights(
         "b", (F.col("s_raw") - F.col("s_tgt")).alias("w_b")
     )
     doc_b = (
-        docs.select(id_col, F.explode(tokens(F.col(text_col))).alias("item"))
-        .select(id_col, bucket.alias("b"))
-        .groupBy(id_col, "b")
+        docs.select("doc_id", F.explode(tokens(F.col("text"))).alias("item"))
+        .select("doc_id", bucket.alias("b"))
+        .groupBy("doc_id", "b")
         .agg(F.count("*").alias("c"))
     )
     return (
         doc_b.join(F.broadcast(scores), "b")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.sum(F.col("c") * F.col("w_b")).cast("long").alias("weight_q8"))
     )
 
 
-def zipf_loglog_slope(
-    docs: DataFrame, text_col: str = "text", topn: int = 100
-) -> DataFrame:
+def zipf_loglog_slope(docs: DataFrame, topn: int = 100) -> DataFrame:
     """Zipf exponent of the corpus: the OLS slope of ``log2(freq)`` on
     ``log2(rank)`` over the top-``topn`` terms -- the classic
     power-law diagnostic (natural prose reads ~ -1; templated or
@@ -770,7 +759,7 @@ def zipf_loglog_slope(
     row: ``(n_terms, slope_ppm)``; fewer than 2 distinct terms yields
     ``slope_ppm = 0``."""
     tf = (
-        docs.select(F.explode(tokens(F.col(text_col))).alias("token"))
+        docs.select(F.explode(tokens(F.col("text"))).alias("token"))
         .groupBy("token")
         .agg(F.count("*").cast("long").alias("cnt"))
     )

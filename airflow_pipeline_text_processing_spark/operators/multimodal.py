@@ -45,20 +45,20 @@ FEATURE_SCHEMA = StructType(
 )
 
 
-def attach_payload(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def attach_payload(docs: DataFrame) -> DataFrame:
     """Demo multimodal table from the documents corpus: the UTF-8 bytes act
     as the opaque payload; kind is sniffed deterministically from the first
     byte (stand-in for magic-number sniffing)."""
     kind = F.element_at(
         F.array(*[F.lit(k) for k in MEDIA_KINDS]),
-        (F.ascii(F.substring(text_col, 1, 1)) % 3) + 1,
+        (F.ascii(F.substring("text", 1, 1)) % 3) + 1,
     )
     return docs.select(
         "doc_id",
-        F.encode(F.col(text_col), "UTF-8").alias("payload"),
+        F.encode(F.col("text"), "UTF-8").alias("payload"),
         kind.alias("kind"),
         F.struct(
-            F.octet_length(text_col).cast("long").alias("n_bytes"),
+            F.octet_length("text").cast("long").alias("n_bytes"),
             F.lit("utf-8-demo").alias("codec"),
         ).alias("media_meta"),
     )
@@ -683,10 +683,10 @@ def image_dhash(media: DataFrame) -> DataFrame:
     return src.mapInPandas(_hash, DHASH_SCHEMA)
 
 
-def dhash_near_dups(media: DataFrame, max_hamming: int = 3) -> DataFrame:
-    """Image near-duplicate pairs by dHash hamming distance, EXACT for
-    ``max_hamming <= 3`` without an all-pairs join: a pair within
-    hamming 3 differs in at most 3 of the four 16-bit bands, so by
+def dhash_near_dups(media: DataFrame) -> DataFrame:
+    """Image near-duplicate pairs within dHash hamming distance 3, EXACT
+    without an all-pairs join: a pair within hamming 3 differs in at
+    most 3 of the four 16-bit bands, so by
     pigeonhole it agrees exactly on at least one band -- band equality
     is a complete blocking key (the image-domain mirror of the SimHash
     pigeonhole banding in ``dedup.py``).  Candidates from the
@@ -700,10 +700,6 @@ def dhash_near_dups(media: DataFrame, max_hamming: int = 3) -> DataFrame:
     ``doc_a, doc_b, hamming`` with ``doc_a < doc_b``, deduplicated
     across bands.
     """
-    if max_hamming > 3:
-        raise ValueError(
-            "band blocking guarantees completeness only for max_hamming <= 3"
-        )
     hashes = image_dhash(media).filter(F.col("err").isNull()).select(
         "doc_id", "b0", "b1", "b2", "b3"
     )
@@ -734,7 +730,7 @@ def dhash_near_dups(media: DataFrame, max_hamming: int = 3) -> DataFrame:
                 for j in range(4)
             ).cast("long").alias("hamming"),
         )
-        .filter(F.col("hamming") <= max_hamming)
+        .filter(F.col("hamming") <= 3)
         .distinct()
     )
     return cand
@@ -865,17 +861,12 @@ def spectral_fingerprints(media: DataFrame) -> DataFrame:
     return media.select("doc_id", "payload").mapInPandas(_fp, FP_SCHEMA)
 
 
-def fingerprint_matches(
-    probe_fps: DataFrame,
-    corpus_fps: DataFrame,
-    gram: int = FP_GRAM,
-    min_votes: int = FP_MIN_VOTES,
-) -> DataFrame:
-    """Offset-consistent fingerprint matching: ``gram`` consecutive
+def fingerprint_matches(probe_fps: DataFrame, corpus_fps: DataFrame) -> DataFrame:
+    """Offset-consistent fingerprint matching: ``FP_GRAM`` consecutive
     frame codes pack base-64 into one BIGINT signature (a posting key,
     exactly the banded-LSH economics -- candidates meet only inside a
     signature bucket, never corpus x corpus); a (probe, clip) pair is a
-    match when >= ``min_votes`` signatures agree at ONE frame offset,
+    match when >= ``FP_MIN_VOTES`` signatures agree at ONE frame offset,
     the consistency test that kills coincidental bin collisions.
     Output: ``probe_id, corpus_id, offset_frames, n_votes``."""
     from pyspark.sql import Window
@@ -883,7 +874,7 @@ def fingerprint_matches(
     def sigs(fps: DataFrame, prefix: str) -> DataFrame:
         w = Window.partitionBy("doc_id").orderBy("frame_idx")
         sig = F.col("peak_code")
-        for i in range(1, gram):
+        for i in range(1, FP_GRAM):
             sig = sig * 64 + F.lead("peak_code", i).over(w)  # null past end
         return fps.select(
             F.col("doc_id").alias(f"{prefix}_id"),
@@ -901,7 +892,7 @@ def fingerprint_matches(
             (F.col("probe_f") - F.col("corpus_f")).alias("offset_frames"),
         )
         .agg(F.count("*").alias("n_votes"))
-        .filter(F.col("n_votes") >= min_votes)
+        .filter(F.col("n_votes") >= FP_MIN_VOTES)
     )
 
 

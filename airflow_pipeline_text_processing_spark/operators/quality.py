@@ -16,7 +16,7 @@ columns to one aggregate, never extra scans.
 
 from __future__ import annotations
 
-from typing import Optional, Sequence, Tuple
+from typing import Sequence, Tuple
 
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
@@ -36,19 +36,15 @@ def _check_names(kind: str, names: Sequence[str]) -> None:
             )
 
 
-def profile_table(
-    df: DataFrame,
-    cols: Optional[Sequence[str]] = None,
-    exact: bool = False,
-) -> DataFrame:
-    """Per-column profile: ``column_name, n_rows, n_nonnull, n_nulls,
+def profile_table(df: DataFrame, exact: bool = False) -> DataFrame:
+    """Profile of every column: ``column_name, n_rows, n_nonnull, n_nulls,
     n_distinct, min_value, max_value`` (min/max rendered as strings so one
     schema fits every column type).
 
     One aggregation over the table computes all columns' statistics; the
     wide single-row result is then unpivoted driver-free via ``stack``.
     """
-    cols = list(cols or df.columns)
+    cols = df.columns
     _check_names("column", cols)
     aggs = [F.count("*").alias("__n")]
     for c in cols:

@@ -20,7 +20,7 @@ arithmetic needed, and DuckDB/Trino/Spark all agree byte for byte.
 
 from __future__ import annotations
 
-from typing import Dict, Mapping
+from typing import Mapping
 
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
@@ -42,11 +42,10 @@ def stratified_sample(
     stratum_col: str,
     rates: Mapping[str, float],
     key: Column,
-    default_rate: float = 0.0,
 ) -> DataFrame:
     """Per-stratum deterministic sampling: stratum s keeps ~rates[s] of its
-    rows.  Strata missing from ``rates`` keep ``default_rate``."""
-    thresh: Column = F.lit(rate_threshold(default_rate))
+    rows.  Strata missing from ``rates`` keep no rows."""
+    thresh: Column = F.lit(rate_threshold(0.0))
     for stratum, rate in sorted(rates.items()):
         thresh = F.when(
             F.col(stratum_col) == stratum, F.lit(rate_threshold(rate))
@@ -54,12 +53,7 @@ def stratified_sample(
     return df.filter(F.md5(key.cast("string")) < thresh)
 
 
-def temperature_targets(
-    df,
-    domain_col: str,
-    total_budget_expr: str = "n_total div 2",
-    alpha_sqrt: bool = True,
-):
+def temperature_targets(df, domain_col: str):
     """Per-domain target sizes under temperature resampling
     (``target_d`` proportional to ``count_d^0.5``) -- the standard
     up-weighting of low-resource domains in multilingual / multi-source
@@ -68,7 +62,8 @@ def temperature_targets(
     Exactness: ``sqrt`` is IEEE-754 correctly rounded (unlike libm
     ``log``/``pow``), so ``w_fp = floor(sqrt(c_d) * 2^20)`` is the same
     BIGINT on every engine; all downstream arithmetic -- the weight sum,
-    the budget split ``(budget * w_fp) div w_sum``, the ``c_d`` cap --
+    the split of a half-corpus budget ``((n_total div 2) * w_fp) div
+    w_sum``, the ``c_d`` cap --
     is integer, so targets are bit-reproducible in any aggregation
     order.  The relation is domain-sized (tiny); the corpus never
     shuffles here.
@@ -89,9 +84,9 @@ def temperature_targets(
         "domain",
         "c_d",
         "w_fp",
-        F.expr(
-            f"least((({total_budget_expr}) * w_fp) div w_sum, c_d)"
-        ).alias("target_n"),
+        F.expr("least(((n_total div 2) * w_fp) div w_sum, c_d)").alias(
+            "target_n"
+        ),
     )
 
 
@@ -161,12 +156,11 @@ def weighted_bottom_k(
     key_col: str,
     weight_col: str,
     k: int,
-    salt: str = "wbk",
 ) -> DataFrame:
     """Deterministic weighted sample of ``k`` rows per group -- the
     integer form of priority sampling (Duffield, Lund & Thorup 2007):
     every row gets priority ``h div w`` where ``h`` is the first 13 hex
-    digits of ``md5(salt || '|' || key)`` (52 uniform bits, exact
+    digits of ``md5('wbk|' || key)`` (52 uniform bits, exact
     BIGINT) and ``w`` its positive integer weight; the ``k`` SMALLEST
     priorities per group win, ties broken on the key.  Heavier rows
     draw proportionally smaller priorities, so inclusion probability
@@ -182,8 +176,7 @@ def weighted_bottom_k(
 
     h = F.conv(
         F.substring(
-            F.md5(F.concat(F.lit(salt + "|"),
-                           F.col(key_col).cast("string"))),
+            F.md5(F.concat(F.lit("wbk|"), F.col(key_col).cast("string"))),
             1, 13,
         ),
         16, 10,

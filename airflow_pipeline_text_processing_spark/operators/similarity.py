@@ -72,14 +72,6 @@ def scaled_norm2(a: Column, dim: Optional[int] = None) -> Column:
     return scaled_dot(a, a, dim)
 
 
-def scaled_cosine(a: Column, b: Column, dim: Optional[int] = None) -> Column:
-    """Deterministic cosine from fixed-point components."""
-    return scaled_dot(a, b, dim).cast("double") / (
-        F.sqrt(scaled_norm2(a, dim).cast("double"))
-        * F.sqrt(scaled_norm2(b, dim).cast("double"))
-    )
-
-
 def cosine_from_norms(
     a: Column, b: Column, norm_a: Column, norm_b: Column, dim: Optional[int] = None
 ) -> Column:
@@ -93,10 +85,10 @@ def cosine_from_norms(
     )
 
 
-def infer_dim(vectors: DataFrame, vec_col: str = "embedding") -> Optional[int]:
+def infer_dim(vectors: DataFrame) -> Optional[int]:
     """Embedding width from the first row (one tiny driver action); None on
     an empty input, which safely selects the generic dot-product form."""
-    row = vectors.select(F.size(F.col(vec_col)).alias("d")).first()
+    row = vectors.select(F.size(F.col("embedding")).alias("d")).first()
     return int(row.d) if row is not None else None
 
 
@@ -104,20 +96,18 @@ def brute_force_topk(
     queries: DataFrame,
     candidates: DataFrame,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Exact cosine top-k neighbors per query (excluding self)."""
-    dim = infer_dim(candidates, vec_col)
+    dim = infer_dim(candidates)
     q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qvec"),
-        scaled_norm2(F.col(vec_col), dim).alias("qnorm"),
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("qvec"),
+        scaled_norm2(F.col("embedding"), dim).alias("qnorm"),
     )
     c = candidates.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cvec"),
-        scaled_norm2(F.col(vec_col), dim).alias("cnorm"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("cvec"),
+        scaled_norm2(F.col("embedding"), dim).alias("cnorm"),
     )
     scored = (
         q.crossJoin(c)
@@ -147,8 +137,6 @@ def mmr_rerank(
     pool: int = 20,
     lam_num: int = 7,
     lam_den: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Maximal Marginal Relevance re-ranking (Carbonell & Goldstein,
     SIGIR'98): greedily pick ``k`` results per query maximizing
@@ -179,16 +167,16 @@ def mmr_rerank(
     only corpus-sized job, and it is the same plan as
     :func:`brute_force_topk` (swap in an ANN route for the scored pass
     when the corpus demands it)."""
-    dim = infer_dim(candidates, vec_col)
+    dim = infer_dim(candidates)
     q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qvec"),
-        scaled_norm2(F.col(vec_col), dim).alias("qnorm"),
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("qvec"),
+        scaled_norm2(F.col("embedding"), dim).alias("qnorm"),
     )
     c = candidates.select(
-        F.col(id_col).alias("cand_id"),
-        F.col(vec_col).alias("cvec"),
-        scaled_norm2(F.col(vec_col), dim).alias("cnorm"),
+        F.col("vec_id").alias("cand_id"),
+        F.col("embedding").alias("cvec"),
+        scaled_norm2(F.col("embedding"), dim).alias("cnorm"),
     )
     scored = (
         q.crossJoin(c)
@@ -362,8 +350,6 @@ def mmr_rerank(
 def hyperplane_signatures(
     vectors: DataFrame,
     num_planes: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Random-hyperplane LSH signature per vector.
 
@@ -373,8 +359,8 @@ def hyperplane_signatures(
     bit p; the ``num_planes`` bits concatenate into the bucket key.
     """
     comp = vectors.select(
-        F.col(id_col).alias("vid"),
-        F.posexplode(F.col(vec_col)).alias("d", "x"),
+        F.col("vec_id").alias("vid"),
+        F.posexplode(F.col("embedding")).alias("d", "x"),
     ).select(
         "vid",
         "d",
@@ -424,8 +410,6 @@ def hyperplane_signatures_multi(
     vectors: DataFrame,
     num_planes: int = 8,
     num_tables: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """``num_tables`` independent hyperplane signature families per vector:
     ``(vid, table, bucket)`` -- the OR-amplification side of LSH.
@@ -445,8 +429,8 @@ def hyperplane_signatures_multi(
     one map-side-combinable groupBy forms the bits, one more packs buckets.
     """
     comp = vectors.select(
-        F.col(id_col).alias("vid"),
-        F.posexplode(F.col(vec_col)).alias("d", "x"),
+        F.col("vec_id").alias("vid"),
+        F.posexplode(F.col("embedding")).alias("d", "x"),
     ).select(
         "vid",
         "d",
@@ -506,8 +490,6 @@ def hyperplane_signatures_multi(
 def ivf_centroids(
     candidates: DataFrame,
     num_centroids: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> list:
     """Deterministic coarse centroids for IVF: the ``num_centroids`` vectors
     with the smallest ``md5(id)`` -- an engine-portable pseudo-random sample
@@ -519,7 +501,7 @@ def ivf_centroids(
     distributed top-C, not a global sort -- so selection scales to any
     candidate count."""
     rows = (
-        candidates.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("vec"))
+        candidates.select(F.col("vec_id").alias("vid"), F.col("embedding").alias("vec"))
         .orderBy(F.md5(F.col("vid").cast("string")), "vid")
         .limit(num_centroids)
         .collect()
@@ -550,9 +532,7 @@ def _cent_dots() -> Column:
     return F.transform(F.col("_cents"), lambda c: scaled_dot(c, F.col("_vec")))
 
 
-def with_ivf_cell(
-    df: DataFrame, vec_col: str, centroids: list, out_col: str = "cell"
-) -> DataFrame:
+def with_ivf_cell(df: DataFrame, vec_col: str, centroids: list) -> DataFrame:
     """Adds the 1-based nearest-centroid id (ties -> lowest id).  Narrow:
     the only "join" is the single-row centroid broadcast."""
     return (
@@ -563,7 +543,7 @@ def with_ivf_cell(
             *df.columns,
             F.array_position(F.col("_dots"), F.array_max("_dots"))
             .cast("int")
-            .alias(out_col),
+            .alias("cell"),
         )
     )
 
@@ -573,7 +553,6 @@ def with_ivf_probes(
     vec_col: str,
     centroids: list,
     nprobe: int,
-    out_col: str = "probe_cells",
 ) -> DataFrame:
     """Adds the ``nprobe`` nearest centroid ids, best first (ties -> lowest
     id), via the same single-row centroid broadcast."""
@@ -589,7 +568,7 @@ def with_ivf_probes(
             *df.columns,
             F.transform(
                 F.slice(F.array_sort(pairs), 1, nprobe), lambda s: s["cid"]
-            ).alias(out_col),
+            ).alias("probe_cells"),
         )
     )
 
@@ -600,8 +579,6 @@ def ivf_topk(
     k: int = 3,
     num_centroids: int = 8,
     nprobe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF approximate top-k: coarse-quantize candidates into cells, probe
     the query's ``nprobe`` nearest cells, exact cosine rerank inside them.
@@ -611,13 +588,13 @@ def ivf_topk(
     candidate assignment is a narrow map (centroids are plan literals) and
     the probe is an equi-join on ``cell`` -- the all-pairs product never
     materializes."""
-    cents = ivf_centroids(candidates, num_centroids, id_col, vec_col)
+    cents = ivf_centroids(candidates, num_centroids)
     dim = len(cents[0][1]) if cents else None
     c = with_ivf_cell(
         candidates.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("cvec"),
-            scaled_norm2(F.col(vec_col), dim).alias("cnorm"),
+            F.col("vec_id").alias("neighbor_id"),
+            F.col("embedding").alias("cvec"),
+            scaled_norm2(F.col("embedding"), dim).alias("cnorm"),
         ),
         "cvec",
         cents,
@@ -625,9 +602,9 @@ def ivf_topk(
     q = (
         with_ivf_probes(
             queries.select(
-                F.col(id_col).alias("query_id"),
-                F.col(vec_col).alias("qvec"),
-                scaled_norm2(F.col(vec_col), dim).alias("qnorm"),
+                F.col("vec_id").alias("query_id"),
+                F.col("embedding").alias("qvec"),
+                scaled_norm2(F.col("embedding"), dim).alias("qnorm"),
             ),
             "qvec",
             cents,
@@ -664,8 +641,6 @@ def lsh_topk(
     k: int = 3,
     num_planes: int = 8,
     num_tables: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Approximate top-k: exact cosine ranking within the query's LSH
     bucket(s).
@@ -691,26 +666,24 @@ def lsh_topk(
     the exact-cosine rerank, so a pair colliding in many tables is
     scored once."""
     if num_tables > 1:
-        return _lsh_topk_multi(
-            queries, candidates, k, num_planes, num_tables, id_col, vec_col
-        )
-    dim = infer_dim(candidates, vec_col)
-    cand_sigs = hyperplane_signatures(candidates, num_planes, id_col, vec_col)
-    query_sigs = hyperplane_signatures(queries, num_planes, id_col, vec_col)
+        return _lsh_topk_multi(queries, candidates, k, num_planes, num_tables)
+    dim = infer_dim(candidates)
+    cand_sigs = hyperplane_signatures(candidates, num_planes)
+    query_sigs = hyperplane_signatures(queries, num_planes)
     q = (
         queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("qvec"),
-            scaled_norm2(F.col(vec_col), dim).alias("qnorm"),
+            F.col("vec_id").alias("query_id"),
+            F.col("embedding").alias("qvec"),
+            scaled_norm2(F.col("embedding"), dim).alias("qnorm"),
         )
         .join(
             query_sigs.select(F.col("vid").alias("query_id"), "bucket"), "query_id"
         )
     )
     c = candidates.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cvec"),
-        scaled_norm2(F.col(vec_col), dim).alias("cnorm"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("cvec"),
+        scaled_norm2(F.col("embedding"), dim).alias("cnorm"),
     ).join(cand_sigs.select(F.col("vid").alias("neighbor_id"), "bucket"), "neighbor_id")
     scored = (
         q.join(c, "bucket")
@@ -740,18 +713,12 @@ def _lsh_topk_multi(
     k: int,
     num_planes: int,
     num_tables: int,
-    id_col: str,
-    vec_col: str,
 ) -> DataFrame:
     """Multi-table body of ``lsh_topk`` (``num_tables > 1``): collect the
     distinct candidate set across L tables, then exact-rerank once."""
-    dim = infer_dim(candidates, vec_col)
-    cand_sigs = hyperplane_signatures_multi(
-        candidates, num_planes, num_tables, id_col, vec_col
-    )
-    query_sigs = hyperplane_signatures_multi(
-        queries, num_planes, num_tables, id_col, vec_col
-    )
+    dim = infer_dim(candidates)
+    cand_sigs = hyperplane_signatures_multi(candidates, num_planes, num_tables)
+    query_sigs = hyperplane_signatures_multi(queries, num_planes, num_tables)
     pairs = (
         query_sigs.select(
             F.col("vid").alias("query_id"), "table", "bucket"
@@ -767,14 +734,14 @@ def _lsh_topk_multi(
         .agg(F.count("*").alias("n_tables_hit"))
     )
     q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qvec"),
-        scaled_norm2(F.col(vec_col), dim).alias("qnorm"),
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("qvec"),
+        scaled_norm2(F.col("embedding"), dim).alias("qnorm"),
     )
     c = candidates.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cvec"),
-        scaled_norm2(F.col(vec_col), dim).alias("cnorm"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("cvec"),
+        scaled_norm2(F.col("embedding"), dim).alias("cnorm"),
     )
     scored = (
         pairs.join(q, "query_id")
@@ -830,11 +797,7 @@ def _sq8_dequant(codes, vmin, vmax):
     )
 
 
-def quantize_int8(
-    vectors: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def quantize_int8(vectors: DataFrame) -> DataFrame:
     """Per-vector scalar quantization of float embeddings to 8-bit codes --
     the 4x storage/bandwidth cut ANN serving systems apply before indexing
     (FAISS ``SQ8``-style: per-vector min/max affine scale).
@@ -846,7 +809,7 @@ def quantize_int8(
     sum, canonicalized to fixed point) hash-match any engine.  All array
     HOFs: a narrow map over the corpus, no shuffle, no Python.
     """
-    v = F.col(vec_col)
+    v = F.col("embedding")
     vmin = F.array_min(v).cast("double")
     vmax = F.array_max(v).cast("double")
     codes = _sq8_codes(v, vmin, vmax)
@@ -861,7 +824,7 @@ def quantize_int8(
         lambda acc, e: acc + e,
     )
     return vectors.select(
-        F.col(id_col),
+        F.col("vec_id"),
         vmin.alias("qmin"),
         vmax.alias("qmax"),
         F.md5(
@@ -876,8 +839,6 @@ def sq8_topk(
     candidates: DataFrame,
     k: int = 5,
     shortlist: int = 20,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Asymmetric top-k search over SQ8-quantized candidates with exact
     rerank -- the scalar-quantization complement to the PQ/ADC path:
@@ -899,7 +860,7 @@ def sq8_topk(
     (ivf_topk / the persisted IVF-PQ index), where only probed cells
     are scored -- the byte cut then applies to exactly the data the
     search actually touches."""
-    v = F.col(vec_col)
+    v = F.col("embedding")
     vmin = F.array_min(v).cast("double")
     vmax = F.array_max(v).cast("double")
     # store codes + scale params; dequantize lazily at scoring time.
@@ -910,13 +871,13 @@ def sq8_topk(
     # whole point of the 4x byte cut is that the dominant exchange
     # carries codes, not floats (r14 review).
     cand = candidates.select(
-        F.col(id_col).alias("neighbor_id"),
+        F.col("vec_id").alias("neighbor_id"),
         vmin.alias("_qmin"),
         vmax.alias("_qmax"),
         _sq8_codes(v, vmin, vmax).alias("_codes"),
     )
     q = queries.select(
-        F.col(id_col).alias("query_id"), v.alias("_qvec")
+        F.col("vec_id").alias("query_id"), v.alias("_qvec")
     )
     dequant = _sq8_dequant(
         F.col("_codes"), F.col("_qmin"), F.col("_qmax")
@@ -940,11 +901,11 @@ def sq8_topk(
     )
     rerank = short.join(
         candidates.select(
-            F.col(id_col).alias("neighbor_id"), v.alias("_cvec")
+            F.col("vec_id").alias("neighbor_id"), v.alias("_cvec")
         ),
         "neighbor_id",
     ).join(
-        queries.select(F.col(id_col).alias("query_id"), v.alias("_qvec")),
+        queries.select(F.col("vec_id").alias("query_id"), v.alias("_qvec")),
         "query_id",
     )
     we = Window.partitionBy("query_id").orderBy(
@@ -967,9 +928,6 @@ def mine_triplets(
     queries: DataFrame,
     candidates: DataFrame,
     k_neg: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
 ) -> DataFrame:
     """Contrastive-training pair mining: per anchor, the top-1
     same-label neighbor (the positive) and the ``k_neg`` most-similar
@@ -982,21 +940,21 @@ def mine_triplets(
     batch per step); at full-corpus scale the scored relation drops in
     via the IVF or multi-table LSH candidate generators above, with
     identical downstream typing/ranking.  Cosine is the repo's
-    fixed-point deterministic form (scaled_cosine), so ranks are
+    fixed-point deterministic form (``cosine_from_norms``), so ranks are
     engine-portable.
     """
-    dim = infer_dim(candidates, vec_col)
+    dim = infer_dim(candidates)
     q = queries.select(
-        F.col(id_col).alias("anchor_id"),
-        F.col(label_col).alias("anchor_label"),
-        F.col(vec_col).alias("qvec"),
-        scaled_norm2(F.col(vec_col), dim).alias("qnorm"),
+        F.col("vec_id").alias("anchor_id"),
+        F.col("label").alias("anchor_label"),
+        F.col("embedding").alias("qvec"),
+        scaled_norm2(F.col("embedding"), dim).alias("qnorm"),
     )
     c = candidates.select(
-        F.col(id_col).alias("pair_id"),
-        F.col(label_col).alias("pair_label"),
-        F.col(vec_col).alias("cvec"),
-        scaled_norm2(F.col(vec_col), dim).alias("cnorm"),
+        F.col("vec_id").alias("pair_id"),
+        F.col("label").alias("pair_label"),
+        F.col("embedding").alias("cvec"),
+        scaled_norm2(F.col("embedding"), dim).alias("cnorm"),
     )
     scored = (
         q.crossJoin(c)
@@ -1320,7 +1278,6 @@ def range_search(
     corpus: DataFrame,
     r2: int,
     cells: int = 8,
-    cell_iters: int = 2,
 ) -> DataFrame:
     """EXACT-COMPLETE radius search: every corpus vector within squared
     quantized-L2 distance ``r2`` of each query -- the radius complement
@@ -1350,7 +1307,7 @@ def range_search(
     queries = queries.select("vec_id", "q").localCheckpoint(eager=False)
 
     _, cents, cents_lit = kmeans_fixed_point(
-        corpus, k=cells, iters=cell_iters, return_lit=True
+        corpus, k=cells, iters=2, return_lit=True
     )
     cents = cents.localCheckpoint(eager=False)
     members = assign_top_cells(corpus, cents, 1, cents_lit=cents_lit)
@@ -1443,11 +1400,7 @@ def ivfpq_topk(
     queries: DataFrame,
     corpus: DataFrame,
     dim: int,
-    m: int = 8,
-    k_codebook: int = 16,
-    pq_iters: int = 2,
     cells: int = 8,
-    cell_iters: int = 2,
     nprobe: int = 4,
     replicas: int = 2,
     prefilter: int | None = None,
@@ -1462,7 +1415,7 @@ def ivfpq_topk(
        the full-width vectors; each corpus vector posts into its
        ``replicas`` nearest cells, each query probes ``nprobe``.
     2. SHORTLIST (PQ/ADC): probed-cell candidates only, scored by
-       asymmetric distance over the corpus's m-code rows (per-query
+       asymmetric distance over the corpus's 8-code rows (per-query
        lookup tables); ``prefilter`` survive per query, ties on
        (ad2, cand_id).
     3. EXACT: full-width rerank of the survivors, top ``k`` by (d2, id).
@@ -1471,15 +1424,15 @@ def ivfpq_topk(
     ``q - centroid(primary cell)``, not ``q``, so the codebook spans
     the within-cell spread instead of the whole corpus spread.  The ADC
     lookup table becomes per-(query, cell): ``||q_sub - cent_sub(pcell)
-    - book(cid)||^2`` -- still Q x cells x m x k_codebook rows of
+    - book(cid)||^2`` -- still Q x cells x 8 x 16 rows of
     broadcast metadata.
 
     Measured on a 25-cluster corpus (tools/recall_bench.py): cell
     ROUTING recall is 1.0 and ADC separates clusters cleanly, but
-    ranking WITHIN a 200-member cluster is below any m=8 code's
+    ranking WITHIN a 200-member cluster is below any 8-subspace code's
     resolution -- so recall@10 is governed by the rerank depth:
     prefilter 25 -> 0.12, 100 -> 0.53, 200 (the cluster size) -> 1.00
-    (k_codebook 16 -> 256 at prefilter 25 only reaches 0.54).  At scale
+    (a 256- instead of 16-entry codebook at prefilter 25 only reaches 0.54).  At scale
     the rule is FAISS practice verbatim: set ``prefilter`` to a small
     multiple of the expected same-cell candidate density per query;
     rerank cost stays prefilter x dim per query.
@@ -1498,7 +1451,7 @@ def ivfpq_topk(
     shuffle-free membership map, the PQ encode, and an EQUI-join of its
     code rows against the query probes -- no nested-loop join anywhere.
     A query reads ~``replicas * nprobe / cells`` of the corpus at CODE
-    width (m BIGINTs/vector), full vectors only for ``prefilter`` rows.
+    width (8 BIGINTs/vector), full vectors only for ``prefilter`` rows.
 
     ``queries``/``corpus`` are ``(vec_id, q array<long>)`` already
     quantized.  Output: ``(query_id, neighbor_id, d2, rk)``.
@@ -1509,7 +1462,7 @@ def ivfpq_topk(
     queries = queries.select("vec_id", "q").localCheckpoint(eager=False)
 
     _, cents, cents_lit = kmeans_fixed_point(
-        corpus, k=cells, iters=cell_iters, return_lit=True
+        corpus, k=cells, iters=2, return_lit=True
     )
     cents = cents.localCheckpoint(eager=False)
     # ONE assignment pass serves both the replica memberships and the
@@ -1529,7 +1482,7 @@ def ivfpq_topk(
         .distinct()
     )
 
-    sub_dim = dim // m
+    sub_dim = dim // 8  # pq_train_encode's 8 subspaces
     pcells = memberships.filter(F.col("rank") == 1).select(
         "vec_id", F.col("cid").alias("pcell")
     )
@@ -1541,10 +1494,8 @@ def ivfpq_topk(
             depth_cap=auto_depth_cap,
         )
     rcorpus = residual_vectors(corpus, pcells, cents)
-    codes, pq_cents = pq_train_encode(
-        rcorpus, dim=dim, m=m, k=k_codebook, iters=pq_iters
-    )
-    tables = residual_adc_tables(queries, cents, pq_cents, m, sub_dim)
+    codes, pq_cents = pq_train_encode(rcorpus, dim=dim)
+    tables = residual_adc_tables(queries, cents, pq_cents, 8, sub_dim)
     adc = (
         pairs.join(codes.withColumnRenamed("vec_id", "cand_id"), "cand_id")
         .join(

@@ -21,7 +21,7 @@ forms in tests/test_skew.py.
 
 from __future__ import annotations
 
-from typing import Dict, Optional, Sequence, Tuple
+from typing import Dict, Sequence, Tuple
 
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
@@ -35,19 +35,27 @@ _COMBINE = {
 }
 
 
+def _salt(df: DataFrame, keys: Sequence[str], num_salts: int) -> Column:
+    """Salt in ``[0, num_salts)``: a deterministic hash of every non-key
+    column, so one key's rows spread evenly over the salt space."""
+    non_keys = [c for c in df.columns if c not in keys]
+    return F.pmod(
+        F.xxhash64(*[F.col(c) for c in non_keys] or [F.lit(0)]), F.lit(num_salts)
+    )
+
+
 def salted_agg(
     df: DataFrame,
     keys: Sequence[str],
     specs: Dict[str, Tuple[str, str]],
     num_salts: int = 32,
-    salt_on: Optional[Column] = None,
 ) -> DataFrame:
     """Two-phase (salted) aggregation: ``specs`` maps output column ->
     (input column, agg) with agg in {sum, count, min, max} -- the
     algebraic aggregates whose partials combine losslessly.
 
-    ``salt_on`` (default: a deterministic hash of every non-key column)
-    spreads each key's rows across ``num_salts`` partial groups; the final
+    A deterministic hash of every non-key column spreads each key's rows
+    across ``num_salts`` partial groups; the final
     combine touches ``num_salts`` rows per key regardless of how hot the
     key is.  avg is deliberately absent: express it as sum/count and
     divide after the final phase.
@@ -56,10 +64,7 @@ def salted_agg(
     for agg in (a for _c, a in specs.values()):
         if agg not in _COMBINE:
             raise ValueError(f"non-combinable aggregate: {agg}")
-    if salt_on is None:
-        non_keys = [c for c in df.columns if c not in keys]
-        salt_on = F.xxhash64(*[F.col(c) for c in non_keys] or [F.lit(0)])
-    salted = df.withColumn("_salt", F.pmod(salt_on, F.lit(num_salts)))
+    salted = df.withColumn("_salt", _salt(df, keys, num_salts))
     partial = salted.groupBy(*keys, "_salt").agg(
         *[
             (F.count(col) if agg == "count" else getattr(F, agg)(col)).alias(out)
@@ -79,7 +84,6 @@ def salted_join(
     dim: DataFrame,
     keys: Sequence[str],
     num_salts: int = 32,
-    salt_on: Optional[Column] = None,
     how: str = "inner",
 ) -> DataFrame:
     """Skew-safe equi-join: salt the (large, possibly skewed) ``fact`` side
@@ -96,10 +100,7 @@ def salted_join(
     if how not in ("inner", "left"):
         raise ValueError(f"salted_join supports inner/left, got: {how}")
     keys = list(keys)
-    if salt_on is None:
-        non_keys = [c for c in fact.columns if c not in keys]
-        salt_on = F.xxhash64(*[F.col(c) for c in non_keys] or [F.lit(0)])
-    f = fact.withColumn("_salt", F.pmod(salt_on, F.lit(num_salts)))
+    f = fact.withColumn("_salt", _salt(fact, keys, num_salts))
     d = dim.withColumn(
         "_salt",
         F.explode(F.sequence(F.lit(0), F.lit(num_salts - 1)).cast("array<long>")),

@@ -78,14 +78,15 @@ def bloom_bitmap(keys: DataFrame, key_col: str, m_bits: int) -> DataFrame:
     return spark.createDataFrame([(dense,)], "bloom array<long>")
 
 
-def bloom_might_contain(key: str, m_bits: int, bitmap_col: str = "bloom"):
-    """Predicate: all _BLOOM_K probe bits set in the broadcast bitmap.
+def bloom_might_contain(key: str, m_bits: int):
+    """Predicate: all _BLOOM_K probe bits set in the broadcast ``bloom``
+    bitmap column.
     ``key`` is a column name (the probe is a pure SQL expression so the
     whole test stays inside whole-stage codegen)."""
     tests = []
     for i in range(_BLOOM_K):
         pos = f"pmod(xxhash64(cast({key} as bigint), {i}), {m_bits}L)"
-        word = f"element_at({bitmap_col}, cast({pos} div 64 as int) + 1)"
+        word = f"element_at(bloom, cast({pos} div 64 as int) + 1)"
         bit = f"shiftleft(1L, cast({pos} % 64 as int))"
         tests.append(f"(({word} & {bit}) != 0)")
     return F.expr(" AND ".join(tests))

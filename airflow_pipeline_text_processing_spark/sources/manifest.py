@@ -572,7 +572,6 @@ def optimize_zorder(
     path: str,
     key_col: str,
     col_b: str,
-    bits: int = 12,
     n_files: int = 8,
 ) -> Tuple[int, int]:
     """OPTIMIZE ZORDER (Delta's ``OPTIMIZE ... ZORDER BY (a, b)``): rewrite
@@ -619,11 +618,12 @@ def optimize_zorder(
 
         def norm(col: str, lo: int, hi: int) -> str:
             span = max(int(hi) - int(lo), 0) + 1
-            return f"(({col} - {int(lo)}) * {1 << bits}L) div {span}"
+            # into [0, 2^12): zorder_key's 12 bits per column
+            return f"(({col} - {int(lo)}) * {1 << 12}L) div {span}"
 
         keyed = df.withColumn(
             "_zkey",
-            zorder_key(norm(key_col, lo_a, hi_a), norm(col_b, lo_b, hi_b), bits),
+            zorder_key(norm(key_col, lo_a, hi_a), norm(col_b, lo_b, hi_b)),
         )
         # Deterministic file split: equal-width z-ranges, NOT the sampled
         # boundaries of repartitionByRange (whose sampling made the file count
@@ -635,7 +635,7 @@ def optimize_zorder(
         # reproducible.
         keyed = keyed.withColumn(
             "_zbucket",
-            F.expr(f"CAST((_zkey * {n_files}) div {1 << (2 * bits)}L AS INT)"),
+            F.expr(f"CAST((_zkey * {n_files}) div {1 << 24}L AS INT)"),
         )
         laid_out = (
             keyed.repartition(n_files, "_zbucket")

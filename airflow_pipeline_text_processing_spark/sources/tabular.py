@@ -54,16 +54,15 @@ def write_table(
     df: DataFrame,
     path: str,
     format: str = "parquet",
-    mode: str = "overwrite",
     partition_by: Optional[list] = None,
     **options: str,
 ) -> None:
-    """Write a DataFrame out; ``partition_by`` produces hive-style
-    directory partitioning (the scale path for selective reads: partition
-    pruning skips whole directories)."""
+    """Write a DataFrame out, replacing ``path``; ``partition_by``
+    produces hive-style directory partitioning (the scale path for
+    selective reads: partition pruning skips whole directories)."""
     if format not in _READ_FORMATS:
         raise ValueError(f"unsupported format: {format}")
-    writer = df.write.format(format).mode(mode)
+    writer = df.write.format(format).mode("overwrite")
     if format == "csv":
         writer = writer.option("header", "true")
     if partition_by:
@@ -80,12 +79,11 @@ def write_bucketed(
     n_buckets: int,
     sort_cols: Optional[list] = None,
     path: Optional[str] = None,
-    mode: str = "overwrite",
-    format: str = "parquet",
 ) -> None:
-    """Write ``df`` as a BUCKETED table: rows are hash-partitioned into
-    ``n_buckets`` files per task-output by ``bucket_cols`` (optionally
-    sorted within each bucket by ``sort_cols``).
+    """Write ``df`` as a BUCKETED parquet table, replacing ``table``:
+    rows are hash-partitioned into ``n_buckets`` files per task-output
+    by ``bucket_cols`` (optionally sorted within each bucket by
+    ``sort_cols``).
 
     This is the 100 TB co-location primitive: two tables bucketed by the
     same key with the same bucket count join WITHOUT any Exchange -- the
@@ -96,7 +94,7 @@ def write_bucketed(
     (``SelectedBucketsCount`` in the scan).  Bucketing requires the table
     catalog (``saveAsTable``); pass ``path`` to keep the data external.
     """
-    writer = df.write.format(format).mode(mode).bucketBy(
+    writer = df.write.format("parquet").mode("overwrite").bucketBy(
         n_buckets, *bucket_cols
     )
     if sort_cols:
@@ -133,7 +131,6 @@ def write_zordered(
     col_b: str,
     bits: int = 12,
     num_files: int = 8,
-    mode: str = "overwrite",
     **options: str,
 ) -> None:
     """Write ``df`` as parquet laid out in Z-order over two numeric
@@ -177,7 +174,7 @@ def write_zordered(
         keyed.repartitionByRange(num_files, "_zkey")
         .sortWithinPartitions("_zkey")
         .drop("_zkey")
-        .write.mode(mode)
+        .write.mode("overwrite")
         .options(**options)
         .parquet(path)
     )
@@ -207,10 +204,9 @@ def compact_files(
     in_path: str,
     out_path: str,
     target_bytes: int = 128 * 1024 * 1024,
-    format: str = "parquet",
 ) -> int:
-    """Small-file compaction: rewrite a dataset into files of roughly
-    ``target_bytes`` each; returns the output file count.
+    """Small-file compaction: rewrite a parquet dataset into files of
+    roughly ``target_bytes`` each; returns the output file count.
 
     Long-running ingest (streaming micro-batches, per-task commits at high
     parallelism) strews datasets with tiny files whose per-file open/footer
@@ -223,7 +219,7 @@ def compact_files(
     """
     import math
 
-    df = read_table(spark, in_path, format=format)
+    df = read_table(spark, in_path)
     files = df.inputFiles()
     # Hadoop FileSystem status works on every Spark-supported filesystem
     # (local, HDFS, S3A, ...) -- os.path.getsize would silently read 0 on
@@ -242,6 +238,6 @@ def compact_files(
         # count matches the input file count -- never collapse to 1.
         total = len(files) * target_bytes
     n_out = max(1, math.ceil(total / target_bytes))
-    write_table(df.repartition(n_out), out_path, format=format)
-    out = read_table(spark, out_path, format=format)
+    write_table(df.repartition(n_out), out_path)
+    out = read_table(spark, out_path)
     return len(out.inputFiles())

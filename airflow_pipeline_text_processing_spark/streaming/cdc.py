@@ -49,19 +49,16 @@ def apply_changes_to_table(
     key_col: str,
     seq_col: str,
     checkpoint_dir: str,
-    drop_seq: bool = True,
 ):
-    """Start a streaming query that upserts ``changes`` into the
-    manifest table at ``path``.  Returns the StreamingQuery (caller
-    awaits/stops).  ``availableNow`` semantics are the caller's choice
-    via the source; this sink works with any trigger."""
+    """Start a streaming query that upserts ``changes``, without their
+    ``seq_col``, into the manifest table at ``path``.  The query drains
+    what the source holds (``availableNow``) and stops; returns the
+    StreamingQuery (caller awaits/stops)."""
 
     def _apply(batch: DataFrame, _batch_id: int) -> None:
         if batch.isEmpty():
             return
-        collapsed = latest_per_key(batch, key_col, seq_col)
-        if drop_seq:
-            collapsed = collapsed.drop(seq_col)
+        collapsed = latest_per_key(batch, key_col, seq_col).drop(seq_col)
         merge_upsert(batch.sparkSession, path, collapsed, key_col)
 
     return (

@@ -47,20 +47,17 @@ def _ensure_event_time(df: DataFrame, ts_col: str = "ts") -> DataFrame:
     return df
 
 
-def watermarked_hourly_counts(
-    events: DataFrame,
-    watermark: str = "2 hours",
-    window: str = "1 hour",
-) -> DataFrame:
-    """Tumbling event-time window counts with bounded lateness.
+def watermarked_hourly_counts(events: DataFrame) -> DataFrame:
+    """Tumbling 1-hour event-time window counts with 2 hours of bounded
+    lateness.
 
     Works on a streaming OR batch DataFrame (same plan both ways -- the
     batch form is what the DuckDB oracle checks via events_hourly_rollup).
     """
     return (
         _ensure_event_time(events)
-        .withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), "event_type")
+        .withWatermark("ts", "2 hours")
+        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(
             F.count("*").alias("n_events"),
             F.sum(F.floor(F.col("value") * 100).cast("long")).alias("value_cents"),
@@ -148,26 +145,23 @@ def stateful_user_totals(events: DataFrame) -> DataFrame:
     )
 
 
-def session_windows(
-    events: DataFrame,
-    gap: str = "30 minutes",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Native gap-merged session windows (``F.session_window``): one row
-    per (user, session) with the session's event count and value sum.
+def session_windows(events: DataFrame) -> DataFrame:
+    """Native gap-merged session windows (``F.session_window``, 30-minute
+    gap, 2-hour watermark): one row per (user, session) with the
+    session's event count and value sum.
 
     The streaming-native twin of the batch lag/running-sum sessionization
     (``plans/queries.py::events_sessionize``): Spark merges an event into
-    the open session iff its timestamp is within ``gap`` OF THE SESSION'S
+    the open session iff its timestamp is within the gap OF THE SESSION'S
     LAST EVENT (boundary inclusive -- a gap of exactly 30:00 still merges,
-    verified empirically), and ``session_end = last_ts + gap``.  State is
-    per (user, open-session) and the watermark closes sessions whose end
-    falls behind it, so state is bounded on an unbounded stream.
+    verified empirically), and ``session_end = last_ts + 30 minutes``.
+    State is per (user, open-session) and the watermark closes sessions
+    whose end falls behind it, so state is bounded on an unbounded stream.
     """
     return (
         _ensure_event_time(events)
-        .withWatermark("ts", watermark)
-        .groupBy("user_id", F.session_window("ts", gap).alias("w"))
+        .withWatermark("ts", "2 hours")
+        .groupBy("user_id", F.session_window("ts", "30 minutes").alias("w"))
         .agg(
             F.count("*").alias("n_events"),
             F.sum(F.floor(F.col("value") * 100).cast("long")).alias(
@@ -273,7 +267,7 @@ def _update_totals_with_ttl(
     )
 
 
-_TTL_MS = 500  # test-scale TTL; production passes hours
+_TTL_MS = 500  # processing-time TTL: short, so a test sees keys expire
 
 
 def stateful_user_totals_with_ttl(events: DataFrame) -> DataFrame:
@@ -283,12 +277,7 @@ def stateful_user_totals_with_ttl(events: DataFrame) -> DataFrame:
     and go); a custom stateful operator MUST expire idle state or the
     store grows forever -- this is the ``GroupStateTimeout.
     ProcessingTimeTimeout`` pattern the built-in watermarked aggregations
-    get for free.
-
-    LEGACY-API ANCHOR: the ``applyInPandasWithState`` formulation, kept
-    as the correctness reference for the ``transformWithStateInPandas``
-    port below (``stateful_user_totals_with_ttl_v2``), which replaces the
-    hand-rolled timeout plumbing with first-class timers."""
+    get for free."""
     out = StructType(
         _TOTALS_OUTPUT.fields + [StructField("expired", BooleanType())]
     )
@@ -306,16 +295,16 @@ def stateful_user_totals_with_ttl(events: DataFrame) -> DataFrame:
 # Spark 4's arbitrary-state API (transformWithStateInPandas) replaces the
 # single-tuple GroupState of applyInPandasWithState with named, typed
 # state variables (value/list/map), native per-entry TTL, and first-class
-# timers.  The operators below are the ports of the two custom-state
-# operators above; the legacy forms stay as labeled anchors and both are
-# asserted equal to the same batch ground truth in tests.
+# timers.  The operator below ports ``stateful_user_totals``; the legacy
+# form stays as the labeled anchor, and tests assert both equal to the
+# same batch ground truth.
 #
 # CAPABILITY GATE: the new API's Python<->JVM state-server protocol is
 # protobuf-encoded (pyspark/sql/streaming/proto/StateMessage_pb2), so it
 # needs the `protobuf` package at RUNTIME -- present on any real Spark
 # cluster (it is a Spark distribution dependency) but not in this test
-# container.  Callers pick the API via HAS_TWS_PROTOBUF; the operators
-# themselves are real, not stubs, and run wherever protobuf exists.
+# container.  Callers pick the API via HAS_TWS_PROTOBUF; the operator
+# itself is real, not a stub, and runs wherever protobuf exists.
 
 import importlib  # noqa: E402
 
@@ -337,7 +326,6 @@ except ImportError as _tws_err:
     )
 
 from pyspark.sql.streaming.stateful_processor import (  # noqa: E402
-    ExpiredTimerInfo,
     StatefulProcessor,
     StatefulProcessorHandle,
     TimerValues,
@@ -384,85 +372,4 @@ def stateful_user_totals_v2(events: DataFrame) -> DataFrame:
         outputStructType=_TOTALS_OUTPUT,
         outputMode="update",
         timeMode="none",
-    )
-
-
-class _UserTotalsTTLProcessor(StatefulProcessor):
-    """TTL variant on the transformWithState API: first-class timers
-    replace the legacy ``setTimeoutDuration`` plumbing.  Each input batch
-    re-arms a processing-time timer (deleting the previous one, tracked in
-    a second ValueState); when the timer fires the final row is emitted
-    ``expired=True`` and both states are cleared -- the GC that keeps
-    custom state bounded under an unbounded key space."""
-
-    def __init__(self, ttl_ms: int) -> None:
-        self._ttl_ms = ttl_ms
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._handle = handle
-        self._totals = handle.getValueState("totals", _TOTALS_STATE)
-        self._timer_at = handle.getValueState("timer_at", "expiry_ms long")
-
-    def handleInputRows(
-        self, key: Tuple[Any, ...], rows, timer_values: TimerValues
-    ) -> Iterator[pd.DataFrame]:
-        prev = tuple(self._totals.get()) if self._totals.exists() else (0, 0, None)
-        n, cents, last = _accumulate_totals(prev, rows)
-        self._totals.update((n, cents, last))
-        if self._timer_at.exists():
-            self._handle.deleteTimer(self._timer_at.get()[0])
-        expiry = timer_values.getCurrentProcessingTimeInMs() + self._ttl_ms
-        self._handle.registerTimer(expiry)
-        self._timer_at.update((expiry,))
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]],
-                "n_events": [n],
-                "total_value": [cents / 100.0],
-                "last_event_type": [last],
-                "expired": [False],
-            }
-        )
-
-    def handleExpiredTimer(
-        self,
-        key: Tuple[Any, ...],
-        timer_values: TimerValues,
-        expired_timer_info: ExpiredTimerInfo,
-    ) -> Iterator[pd.DataFrame]:
-        if not self._totals.exists():
-            return
-        n, cents, last = tuple(self._totals.get())
-        self._totals.clear()
-        self._timer_at.clear()
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]],
-                "n_events": [n],
-                "total_value": [cents / 100.0],
-                "last_event_type": [last],
-                "expired": [True],
-            }
-        )
-
-    def close(self) -> None:
-        pass
-
-
-def stateful_user_totals_with_ttl_v2(
-    events: DataFrame, ttl_ms: int = _TTL_MS
-) -> DataFrame:
-    """``stateful_user_totals_with_ttl`` through
-    ``transformWithStateInPandas`` with native timers: same emission
-    contract as the legacy form (update rows ``expired=False``, a final
-    ``expired=True`` row when a key idles past the TTL, state removed so
-    a reappearing key restarts from zero)."""
-    out = StructType(
-        _TOTALS_OUTPUT.fields + [StructField("expired", BooleanType())]
-    )
-    return events.groupBy("user_id").transformWithStateInPandas(
-        _UserTotalsTTLProcessor(ttl_ms),
-        outputStructType=out,
-        outputMode="update",
-        timeMode="processingTime",
     )

@@ -1,40 +1,21 @@
 """Dead-code guards over the repository's Python.
 
-* Every top-level function and class of the package is named somewhere
-  besides its own definition -- in the package, the query registry, the
-  tests, the tools or the benchmark.  A name that appears exactly once in
-  the repository's Python is code nothing calls.
-* Every defaulted parameter of a public function or method in the modules
-  the cron tick and the curate flow import is passed by some call: by
-  keyword, or by position.  A parameter no call passes is a constant
-  spelled as an option."""
+* Every top-level function and class of the package is used by some code
+  -- in the package, the query registry, the tests, the tools or the
+  benchmark: a name read, an attribute taken or an import.  A definition
+  only prose (a comment, a docstring) mentions is code nothing calls.
+* Every defaulted parameter of a public function or method of the package
+  is passed by some call: by keyword, or by position.  A parameter no
+  call passes is a constant spelled as an option."""
 
 from __future__ import annotations
 
 import ast
-import re
-from collections import Counter, defaultdict
+from collections import defaultdict
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
 PACKAGE = ROOT / "airflow_pipeline_text_processing_spark"
-
-# The modules the cron tick and the curate flow import.
-FLOW_MODULES = (
-    "operators/dedup.py",
-    "operators/text.py",
-    "operators/windows.py",
-    "plans/curation.py",
-    "plans/pipeline.py",
-    "sources/text_dir.py",
-    "sources/tracking.py",
-    "streaming/ingest.py",
-    "functions/codec_udfs.py",
-    "codec/chunker.py",
-    "codec/goldman.py",
-    "codec/reed_solomon.py",
-    "session.py",
-)
 
 # Parameters kept although no call in the repository passes them.
 UNPASSED_ALLOWED = {
@@ -57,23 +38,45 @@ def _python_files() -> list[Path]:
     return [p for d in dirs for p in d.rglob("*.py")] + sorted(ROOT.glob("*.py"))
 
 
+def _names_used(tree) -> set:
+    """Names the code of ``tree`` reads, takes as an attribute or imports."""
+    used = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Name):
+            used.add(node.id)
+        elif isinstance(node, ast.Attribute):
+            used.add(node.attr)
+        elif isinstance(node, ast.alias):
+            used.update(node.name.split("."))
+    return used
+
+
 def test_every_package_definition_is_named_elsewhere():
-    sources = {p: p.read_text(encoding="utf-8") for p in _python_files()}
-    words = Counter(w for s in sources.values() for w in re.findall(r"\w+", s))
+    trees = {p: ast.parse(p.read_text(encoding="utf-8")) for p in _python_files()}
+    used = set().union(*map(_names_used, trees.values()))
     dead = [
         f"{path.relative_to(ROOT)}:{node.lineno} {node.name}"
-        for path, src in sources.items()
+        for path, tree in trees.items()
         if path.is_relative_to(PACKAGE)
-        for node in ast.parse(src).body
+        for node in tree.body
         if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
-        and words[node.name] <= 1
+        and node.name not in used
     ]
-    assert not dead, "defined but named nowhere else: " + ", ".join(dead)
+    assert not dead, "defined but used by no code: " + ", ".join(dead)
 
 
 def _calls_by_name(trees) -> dict:
     """Callee name -> ``(positional count, has *args, keyword names)`` of
-    every call to a function or method of that name."""
+    every call to a function or method of that name; a call through an
+    ``import f as g`` alias counts as a call to ``f``."""
+    aliases = {
+        a.asname: a.name
+        for tree in trees
+        for node in ast.walk(tree)
+        if isinstance(node, ast.ImportFrom)
+        for a in node.names
+        if a.asname
+    }
     calls = defaultdict(list)
     for tree in trees:
         for node in ast.walk(tree):
@@ -81,7 +84,7 @@ def _calls_by_name(trees) -> dict:
                 continue
             f = node.func
             name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
-            calls[name].append((
+            calls[aliases.get(name, name)].append((
                 sum(not isinstance(a, ast.Starred) for a in node.args),
                 any(isinstance(a, ast.Starred) for a in node.args),
                 {k.arg for k in node.keywords if k.arg},
@@ -117,12 +120,14 @@ def _defaulted_params(tree):
     yield from visit(tree.body, "", False)
 
 
-def test_every_flow_parameter_is_passed_somewhere():
-    trees = [ast.parse(p.read_text(encoding="utf-8")) for p in _python_files()]
-    calls = _calls_by_name(trees)
+def test_every_package_parameter_is_passed_somewhere():
+    trees = {p: ast.parse(p.read_text(encoding="utf-8")) for p in _python_files()}
+    calls = _calls_by_name(list(trees.values()))
     unpassed, seen = [], set()
-    for rel in FLOW_MODULES:
-        tree = ast.parse((PACKAGE / rel).read_text(encoding="utf-8"))
+    for path, tree in trees.items():
+        if not path.is_relative_to(PACKAGE):
+            continue
+        rel = path.relative_to(PACKAGE)
         for qual, fn, pos, name in _defaulted_params(tree):
             key = f"{qual}.{name}"
             seen.add(key)

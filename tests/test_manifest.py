@@ -163,6 +163,7 @@ def test_streaming_cdc_apply_upserts_batches(spark, tmp_path):
 
     full = read_live(spark, path)
     rows = {r.k: r.v for r in full.collect()}
+    assert full.columns == ["k", "v"]  # the sequence column is not upserted
     assert full.count() == 101  # 100 original + 1 new key
     assert rows[5] == -40       # last write across batches
     assert rows[7] == -50

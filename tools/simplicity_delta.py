@@ -12,6 +12,10 @@ tree (untracked new modules included), prints:
   default of public functions and methods, plus the fields of
   dataclasses.
 
+After the table, one package-wide line gives the code-only lines and
+settable parameters summed over every package module, changed or not,
+at ``BASE`` and now.
+
 Usage:
     python tools/simplicity_delta.py          # against HEAD
     python tools/simplicity_delta.py BASE     # any git revision
@@ -132,6 +136,22 @@ def changed_modules(base: str) -> list:
     return sorted(out)
 
 
+def package_modules(base: str) -> list:
+    """Every package module at ``base``, or in the working tree when
+    ``base`` is None (untracked new modules included, deleted ones not)."""
+    if base is not None:
+        names = _git("ls-tree", "-r", "--name-only", base, "--", PKG)
+    else:
+        names = _git(
+            "ls-files", "--cached", "--others", "--exclude-standard", "--", PKG
+        )
+    return sorted(
+        rel for rel in set(names.splitlines())
+        if rel.endswith(".py")
+        and (base is not None or os.path.exists(os.path.join(REPO, rel)))
+    )
+
+
 def main(argv: list) -> int:
     base = argv[1] if len(argv) > 1 else "HEAD"
     rows = changed_modules(base)
@@ -153,6 +173,13 @@ def main(argv: list) -> int:
               f"{figures[3]:>9} {figures[4]:>12} {figures[5]:>11}")
     print(f"{'total':<48} {totals[0]:>7} {totals[1]:>7} {totals[2]:>10} "
           f"{totals[3]:>9} {totals[4]:>12} {totals[5]:>11}")
+    package = [
+        [f(_source_at(b, rel)) for rel in package_modules(b)]
+        for b in (base, None) for f in (code_lines, settable_params)
+    ]
+    code_base, params_base, code_now, params_now = map(sum, package)
+    print(f"{'package-wide, all modules':<48} {'':>7} {'':>7} {code_base:>10} "
+          f"{code_now:>9} {params_base:>12} {params_now:>11}")
     print(f"net package lines: {totals[0] - totals[1]:+d}")
     return 0
 
